@@ -1024,7 +1024,7 @@ def bench_textindex_1m(spark, sf_dir: str,
         # steady-state descent round count — if the credit-inflation
         # bound bites, it shows up HERE as a high fraction / full_read
         idx.search(d1, k=10, block_max=True).collect()
-        thr1 = idx.last_blockmax["thr"][TERMS[0]]
+        thr1 = idx.last_blockmax_batch["thr"][0][TERMS[0]]
         post = spark.read.schema("token string, imp double").parquet(
             os.path.join(d, "ti", "seg_0", "postings"))
         n_term = post.where(F.col("token") == TERMS[0]).count()
@@ -1033,12 +1033,12 @@ def bench_textindex_1m(spark, sf_dir: str,
         out["bm25_blockmax_dense1_read_fraction"] = round(
             n_kept / max(1, n_term), 4)
         idx.search(TERMS, k=10, block_max=True).collect()
-        bm3 = idx.last_blockmax
-        if bm3 and "thr" in bm3:
+        bm3 = idx.last_blockmax_batch
+        if bm3 and 0 not in bm3["split_served"]:
             cond = None
             for t in TERMS:
                 c = (F.col("token") == t) & \
-                    (F.col("imp") >= bm3["thr"].get(t, 0.0))
+                    (F.col("imp") >= bm3["thr"][0].get(t, 0.0))
                 cond = c if cond is None else (cond | c)
             n_all = post.where(F.col("token").isin(*TERMS)).count()
             n_kept3 = post.where(cond).count()
@@ -1046,7 +1046,7 @@ def bench_textindex_1m(spark, sf_dir: str,
                 n_kept3 / max(1, n_all), 4)
             out["bm25_blockmax_dense3_rounds"] = float(bm3["rounds"])
             out["bm25_blockmax_dense3_full_read"] = float(
-                bool(bm3["full_read"]))
+                bm3["full_read"][0])
 
         # r16 (VERDICT r15 item 6): the MaxScore split's phase-B
         # candidate fetch scans the DENSE terms' postings once — the
@@ -1055,17 +1055,17 @@ def bench_textindex_1m(spark, sf_dir: str,
         # rows(dense terms) / rows(total postings): the quantity a
         # (token, doc_id)-sorted companion projection would have had to
         # reduce.  Measured with the real candidate set (51 docs,
-        # examples/exp_phaseb_companion_r16.py) it would NOT — the
+        # in r16) it would NOT — the
         # writer's 16 MB groups hold ~773k posting rows, each dense
         # term spans 1-2 groups, min/max doc_id stats admitted 2 of 3;
         # 50% skipping needs ~10.5k-row groups (73x smaller).
         # Companion DECLINED (SCALE.md §3); deterministic layout
         # fraction, like bm25_indexed_1m_bytes_fraction.
         idx.search(mixed, k=10, block_max=True).collect()
-        bmx = idx.last_blockmax
-        if isinstance(bmx, dict) and bmx.get("mode") == "maxscore":
+        bmx = idx.last_blockmax_batch
+        if isinstance(bmx, dict) and 0 in bmx["split_served"]:
             dense_t = [t for t in mixed
-                       if t not in set(bmx["essential"])]
+                       if t not in set(bmx["essential"][0])]
             n_dense = post.where(F.col("token").isin(*dense_t)).count()
             out["bm25_split_phaseb_rows_fraction"] = round(
                 n_dense / max(1, post.count()), 4)
@@ -1117,21 +1117,21 @@ def bench_textindex_1m(spark, sf_dir: str,
         # triple.  Measured r16 (3 cold draws at 1M): rounds = 4, and
         # ONLY the dense3 member descends past round 1 (7/8 prove in
         # round 1 even cold); the warm repeat is 1 round under the
-        # batch memo AND under the single-query winners-impact-refined
-        # memo with an IDENTICAL union read (2,270,000 rows both ways
-        # — the dense3 member's frontier binds the shared-term min,
-        # and the refinement provably cannot lift dense3: its 2^m
-        # subset check fails on exactly the credit-inflation shapes
-        # that descend).  So the batch winners-impact refinement is
-        # DECLINED on evidence (SCALE.md §1b); this key keeps the tail
-        # measured so that decision can't silently rot.
+        # batch memo AND under the (since removed) winners-impact-
+        # refined memo with an IDENTICAL union read (2,270,000 rows
+        # both ways — the dense3 member's frontier binds the
+        # shared-term min, and the refinement provably cannot lift
+        # dense3: its 2^m subset check fails on exactly the
+        # credit-inflation shapes that descend).  So the winners-impact
+        # refinement is DECLINED on evidence (SCALE.md §1b); this key
+        # keeps the tail measured so that decision can't silently rot.
         b8cold = {0: (TERMS[0],), 1: (TERMS[1],), 2: (TERMS[2],),
                   3: (TERMS[0], TERMS[1]), 4: (TERMS[0], TERMS[2]),
                   5: (TERMS[1], TERMS[2]),
                   6: (TERMS[0], TERMS[1], TERMS[2]), 7: (TERMS[1],)}
 
         def _cold_tail():
-            for attr in ("_thr_cache", "_thr_refined", "_ts_cache"):
+            for attr in ("_thr_cache", "_ts_cache"):
                 c = getattr(idx, attr, None)
                 if c is not None:
                     c.clear()
@@ -1213,15 +1213,15 @@ def bench_textindex_1m(spark, sf_dir: str,
         out["bm25_dirty_dense1_classic_1m"] = round(med, 4)
         variance["bm25_dirty_dense1_classic_1m"] = round(sp, 2)
         idx.search(d1, k=10, block_max=True).collect()
-        bmd = idx.last_blockmax
-        if bmd and "thr" in bmd:
-            thr_d = bmd["thr"].get(TERMS[0], 0.0)
+        bmd = idx.last_blockmax_batch
+        if bmd:
+            thr_d = bmd["thr"][0].get(TERMS[0], 0.0)
             n_kept_d = post.where((F.col("token") == TERMS[0])
                                   & (F.col("imp") >= thr_d)).count()
             out["bm25_blockmax_dirty_read_fraction"] = round(
                 n_kept_d / max(1, n_term), 4)
             out["bm25_blockmax_dirty_full_read"] = float(
-                bool(bmd["full_read"]))
+                bmd["full_read"][0])
 
         # the MIXED (selective anchor + stop words) shape in the dirty
         # state — the r15 measure-first probe: the MaxScore split is
@@ -1241,16 +1241,16 @@ def bench_textindex_1m(spark, sf_dir: str,
         out["bm25_dirty_mixed_blockmax_1m"] = round(med, 4)
         variance["bm25_dirty_mixed_blockmax_1m"] = round(sp, 2)
         idx.search(mixed, k=10, block_max=True).collect()
-        bmm = idx.last_blockmax
-        if bmm and "thr" in bmm:
+        bmm = idx.last_blockmax_batch
+        if bmm and 0 not in bmm["split_served"]:
             out["bm25_dirty_mixed_rounds"] = float(bmm["rounds"])
             out["bm25_dirty_mixed_full_read"] = float(
-                bool(bmm["full_read"]))
+                bmm["full_read"][0])
         if bmm:
             # r15: the dirty MaxScore split serves this shape (the r14
             # full-read verdict was re-opened by the eager-timing fix)
             out["bm25_dirty_mixed_split"] = float(
-                bmm.get("mode") == "maxscore")
+                0 in bmm["split_served"])
     finally:
         shutil.rmtree(d, ignore_errors=True)
     return out

@@ -2140,7 +2140,7 @@ class BinaryVectorDB:
           versa (two anti-join counts),
         - physical bucket placement: every row actually lives in the
           ``bucket=pmod(doc_id, buckets)`` directory it is routed to at
-          read time (input_file_name vs the recomputed residue — a
+          read time (the scan's file path vs the recomputed residue — a
           misplaced file would silently drop rows from pruned point
           reads)."""
         from binaryvectordb_spark.operators.expectations import (
@@ -2156,10 +2156,12 @@ class BinaryVectorDB:
         if idx is None or docs is None:
             return {}
         words = (self.dim + 63) // 64
-        # input_file_name() is nondeterministic, so it may not appear inside
-        # an aggregate — PROJECT the placement flag first, aggregate the
-        # projected column
-        bucket_residue = F.regexp_extract(F.input_file_name(),
+        # the scan's _metadata.file_path, not input_file_name(): once a
+        # search has cached the tiers, the cache manager substitutes the
+        # in-memory relation for these reads and input_file_name() turns
+        # '' — the hidden metadata column forces a real file scan, so
+        # the audit always sees the physical paths
+        bucket_residue = F.regexp_extract(F.col("_metadata.file_path"),
                                           r"bucket=(\d+)", 1).cast("long")
         misplaced = (bucket_residue.isNotNull()
                      & (bucket_residue

@@ -261,8 +261,9 @@ def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
     3.3s vs 5.8s for the two-pass histogram-threshold expression plan this
     replaces (Arrow transfer of the cached index costs 0.66s of that).
     Queries are collected driver-side (a serving batch is small by
-    construction) and broadcast to the kernel; for very large query batches
-    shard and union (``cascade_search_batch_sharded``).
+    construction) and broadcast to the kernel; kernel memory is
+    O(n_queries x arrow_batch_rows), so a very large query batch is split
+    by the caller into several ``cascade_search_batch`` calls.
     """
     import numpy as np
     import pyarrow as pa
@@ -470,47 +471,3 @@ def cascade_search_batch(index_df: DataFrame, doc_df: DataFrame, dim: int,
     return (p3s.withColumn("rn", F.row_number().over(w3))
             .where(F.col("rn") <= k).drop("rn")
             .orderBy("qid", F.desc("score_cossim"), F.asc("doc_id")))
-
-
-def cascade_search_batch_sharded(index_df: DataFrame, doc_df: DataFrame,
-                                 dim: int, queries_df: DataFrame,
-                                 shard_size: int = 256,
-                                 k: int = DEFAULT_K,
-                                 binary_oversample: int = DEFAULT_BINARY_OVERSAMPLE,
-                                 int8_oversample: int = DEFAULT_INT8_OVERSAMPLE
-                                 ) -> DataFrame:
-    """Serving batches beyond what one kernel broadcast should carry
-    (kernel scoring memory is O(n_queries x arrow_batch_rows); the running
-    candidate merge is O(n_queries x binary_k)): split the query set
-    into shards of ``shard_size`` and union the per-shard cascades.  Each
-    shard is one full index pass, so cost is linear in shard count — that
-    is inherent to brute-force scoring; IVF/LSH pruning (operators/
-    mllib_ann.py, queries/similarity.py) is the sub-linear path.
-
-    Queries are collected once (they are collected per-shard by the kernel
-    anyway); shard membership is by position, results are identical to the
-    unsharded call for any shard_size.
-    """
-    qrows = queries_df.select("qid", "qvec").collect()
-    spark = queries_df.sparkSession
-    if not qrows:  # empty serving batch -> empty result, not a crash
-        schema = ("qid bigint, doc_id bigint, score_hamming int, "
-                  "score_binary double, score_cossim double, doc string")
-        if "doc_kind" in doc_df.columns:
-            schema += ", doc_kind string"
-        return spark.createDataFrame([], schema)
-    shards = [qrows[i:i + shard_size] for i in range(0, len(qrows), shard_size)]
-    parts = []
-    for shard in shards:
-        qdf = spark.createDataFrame(
-            [(r[0], [float(x) for x in r[1]]) for r in shard],
-            "qid: long, qvec: array<float>")
-        parts.append(cascade_search_batch(index_df, doc_df, dim, qdf, k=k,
-                                          binary_oversample=binary_oversample,
-                                          int8_oversample=int8_oversample))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # union row-order is undefined; re-impose the global serving order so
-    # the result is identical (not just set-equal) to the unsharded call
-    return out.orderBy("qid", F.desc("score_cossim"), F.asc("doc_id"))

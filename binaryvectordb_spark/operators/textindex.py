@@ -675,14 +675,39 @@ class TextIndex:
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        return self._minus_tombstones(df)
+
+    def _minus_tombstones(self, df: DataFrame) -> DataFrame:
+        """Anti-join the tombstones against rows carrying a segment
+        ordinal ``seg``."""
         tomb = self._tomb()
-        if tomb is not None:
-            df = df.join(
-                F.broadcast(tomb),
-                (df["doc_id"] == tomb["doc_id"])
-                & (tomb["upto_seg"] >= df["seg"]),
-                "left_anti")
-        return df
+        if tomb is None:
+            return df
+        return df.join(
+            F.broadcast(tomb),
+            (df["doc_id"] == tomb["doc_id"])
+            & (tomb["upto_seg"] >= df["seg"]),
+            "left_anti")
+
+    def _live_terms(self, terms: list, seg0_pred=None) -> DataFrame:
+        """(token, doc_id, tf, dl, seg) live postings of ``terms``:
+        every segment token-pruned — the bootstrap segment by
+        ``seg0_pred`` instead when given (the descent's imp
+        threshold) — minus scope-correct tombstoned rows."""
+        parts = []
+        for i, nm in enumerate(self.meta["segments"]):
+            cols = "token string, doc_id long, tf double, dl double"
+            pred = F.col("token").isin(*terms)
+            if i == 0 and seg0_pred is not None:
+                cols, pred = cols + ", imp double", seg0_pred
+            parts.append(self.spark.read.schema(cols)
+                         .parquet(os.path.join(self.folder, nm, "postings"))
+                         .where(pred).select("token", "doc_id", "tf", "dl")
+                         .withColumn("seg", F.lit(i)))
+        df = parts[0]
+        for p in parts[1:]:
+            df = df.unionByName(p)
+        return self._minus_tombstones(df)
 
     def live_postings(self) -> DataFrame:
         return self._live("postings")
@@ -867,595 +892,6 @@ class TextIndex:
         break the CASE literal or silently mis-match)."""
         return t.replace("\\", "\\\\").replace("'", "\\'")
 
-    def _search_maxscore_split(self, present, stats, idf, base,
-                               k: int) -> DataFrame | None:
-        """MaxScore essential/non-essential partitioning (Turtle &
-        Flood 1995), the other classic early-termination next to the
-        block-max descent — and the one that wins on the REALISTIC
-        query shape, selective terms mixed with stop words: score the
-        SELECTIVE terms' postings in full (tiny by definition), bound
-        every other doc by the dense terms' maximum impacts, and fetch
-        dense postings only for the candidate docs.  Exactness proof:
-
-        - theta_E = k-th best essential-only partial; slack = sum over
-          dense terms of floor(idf * max_imp * 1e10);
-        - a doc with NO essential posting totals <= slack < theta_E
-          <= final k-th score — excluded, strictly;
-        - a doc with essential partial < theta_E - slack totals
-          < theta_E — excluded, strictly;
-        - every remaining doc is a candidate and is scored EXACTLY
-          (all its postings for all query terms are read in phase B).
-
-        Three bounded jobs, no iteration.  Returns None when the query
-        has no selective/dense mix, the bound does not separate, or
-        the candidate set is not small — the threshold descent takes
-        over."""
-        ess = [t for t in present
-               if stats[t][0] <= self._ESSENTIAL_FRAC
-               * max(1.0, self._meta_n_docs())]
-        dense = [t for t in present if t not in ess]
-        if not ess or not dense:
-            return None
-        if sum(stats[t][0] for t in ess) > 1_000_000:
-            return None  # "essential" side too heavy — descend instead
-        slack = sum(self._ub_py(idf[t], stats[t][1]) for t in dense)
-        s_case_e = ("CAST(floor((CASE token "
-                    + " ".join(
-                        f"WHEN '{self._sql_str(t)}'"
-                        f" THEN {idf[t]!r}D" for t in ess)
-                    + " ELSE 0.0D END) * imp * 1e10) AS BIGINT)")
-        g_e = (base.where(F.col("token").isin(*ess))
-               .select("doc_id", F.expr(s_case_e).alias("s"))
-               .groupBy("doc_id").agg(F.sum("s").alias("pe")))
-        top_e = (g_e.orderBy(F.desc("pe"), F.asc("doc_id"))
-                 .limit(k).collect())
-        if len(top_e) < k:
-            return None  # fewer essential docs than k: can't separate
-        theta_e = int(top_e[-1]["pe"])
-        if theta_e <= slack + 1:
-            return None  # dense mass could outrank: no separation
-        cand = (g_e.where(F.col("pe") >= theta_e - slack)
-                .select("doc_id").limit(100_001).collect())
-        if len(cand) > 100_000:
-            return None
-        ids = [int(r["doc_id"]) for r in cand]
-        s_case = ("CAST(floor((CASE token "
-                  + " ".join(
-                      f"WHEN '{self._sql_str(t)}'"
-                      f" THEN {idf[t]!r}D" for t in present)
-                  + " ELSE 0.0D END) * imp * 1e10) AS BIGINT)")
-        hit = base.where(F.col("token").isin(*present))
-        if len(ids) <= self._PROBE_LITERAL_IDS:
-            hit = hit.where(F.col("doc_id").isin(ids))
-        else:
-            # past the literal-list cap, membership goes through a
-            # broadcast semi-join (r13 review: same plan-size policy as
-            # the tombstone probe tiers)
-            hit = hit.join(F.broadcast(self.spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long")),
-                "doc_id", "left_semi")
-        top = (hit
-               .select("doc_id", F.expr(s_case).alias("s"))
-               .groupBy("doc_id").agg(F.sum("s").alias("bm25_e10"))
-               .orderBy(F.desc("bm25_e10"), F.asc("doc_id"))
-               .limit(k).collect())
-        self.last_blockmax = {"mode": "maxscore",
-                              "essential": list(ess),
-                              "n_candidates": len(ids)}
-        rows = [(int(r["doc_id"]), int(r["bm25_e10"]), i + 1)
-                for i, r in enumerate(top)]
-        return self.spark.createDataFrame(
-            rows, "doc_id long, bm25_e10 long, kw_rank int")
-
-    def _search_maxscore_split_dirty(self, present, stats, idf, k,
-                                     c_drift, live_df, n_docs,
-                                     avgdl) -> DataFrame | None:
-        """The MaxScore essential/dense split in the MUTATED state
-        (r15).  The r14 close rejected this on a measured "zero wall
-        gap" — an artifact of the collect-only timing defect fixed this
-        round: timed end-to-end, the dirty-mixed descent falls to the
-        full read (~1.5 s at 1M) while the clean split serves the same
-        shape at ~0.85 s.  Same three bounded jobs as the clean split
-        (_search_maxscore_split), with the dirty machinery of the
-        descent tier:
-
-        - essential/dense classification and idf from LIVE df/n_docs;
-        - both phases read the live frame (all segments, tombstones
-          broadcast anti-joined) and re-derive exact scores from tf/dl
-          with the live avgdl literal — bit-identical to the classic
-          live-set plan;
-        - the dense slack bounds a posting ANYWHERE in the index: the
-          bootstrap's write-time max_imp drift-inflated by c_drift,
-          capped below by the universal tf-part supremum _TF_SUP when
-          micro segments exist (a micro posting is bounded by no footer
-          stat), plus the relative float margin — the _seen_ub bound of
-          the descent tier.  Inflated slack only shrinks the separation
-          window and widens the candidate set; the proof inequalities
-          are unchanged from the clean split's docstring.
-
-        Returns None when the shape/separation refuses — the dirty
-        descent takes over."""
-        ess = [t for t in present
-               if live_df[t] <= self._ESSENTIAL_FRAC * max(1.0, n_docs)]
-        dense = [t for t in present if t not in ess]
-        if not ess or not dense:
-            return None
-        if sum(live_df[t] for t in ess) > 1_000_000:
-            return None  # "essential" side too heavy — descend instead
-        multi = len(self.meta["segments"]) > 1
-        slack = sum(self._dense_seen_ub(t, stats, idf[t], c_drift,
-                                        multi, True) for t in dense)
-        val = (f"((tf * 2.2D) / (tf + (1.2D * (0.25D + "
-               f"(0.75D * (dl / {avgdl!r}D))))))")
-
-        def live(terms_subset):
-            # full live read of these terms' postings: every segment
-            # token-pruned, tombstones anti-joined with scope semantics
-            segs = self.meta["segments"]
-            parts = []
-            for i, nm in enumerate(segs):
-                parts.append(
-                    self.spark.read
-                    .schema("token string, doc_id long, tf double, "
-                            "dl double")
-                    .parquet(os.path.join(self.folder, nm, "postings"))
-                    .where(F.col("token").isin(*terms_subset))
-                    .withColumn("seg", F.lit(i)))
-            dfr = parts[0]
-            for p in parts[1:]:
-                dfr = dfr.unionByName(p)
-            tomb = self._tomb()
-            if tomb is not None:
-                dfr = dfr.join(
-                    F.broadcast(tomb),
-                    (dfr["doc_id"] == tomb["doc_id"])
-                    & (tomb["upto_seg"] >= dfr["seg"]),
-                    "left_anti")
-            return dfr
-
-        s_case_e = ("CAST(floor((CASE token "
-                    + " ".join(
-                        f"WHEN '{self._sql_str(t)}'"
-                        f" THEN {idf[t]!r}D" for t in ess)
-                    + " ELSE 0.0D END) * " + val + " * 1e10) AS BIGINT)")
-        g_e = (live(ess)
-               .select("doc_id", F.expr(s_case_e).alias("s"))
-               .groupBy("doc_id").agg(F.sum("s").alias("pe")))
-        top_e = (g_e.orderBy(F.desc("pe"), F.asc("doc_id"))
-                 .limit(k).collect())
-        if len(top_e) < k:
-            return None  # fewer essential docs than k: can't separate
-        theta_e = int(top_e[-1]["pe"])
-        if theta_e <= slack + 1:
-            return None  # dense mass could outrank: no separation
-        cand = (g_e.where(F.col("pe") >= theta_e - slack)
-                .select("doc_id").limit(100_001).collect())
-        if len(cand) > 100_000:
-            return None
-        ids = [int(r["doc_id"]) for r in cand]
-        s_case = ("CAST(floor((CASE token "
-                  + " ".join(
-                      f"WHEN '{self._sql_str(t)}'"
-                      f" THEN {idf[t]!r}D" for t in present)
-                  + " ELSE 0.0D END) * " + val + " * 1e10) AS BIGINT)")
-        hit = live(present)
-        if len(ids) <= self._PROBE_LITERAL_IDS:
-            hit = hit.where(F.col("doc_id").isin(ids))
-        else:
-            hit = hit.join(F.broadcast(self.spark.createDataFrame(
-                [(i,) for i in ids], "doc_id long")),
-                "doc_id", "left_semi")
-        top = (hit
-               .select("doc_id", F.expr(s_case).alias("s"))
-               .groupBy("doc_id").agg(F.sum("s").alias("bm25_e10"))
-               .orderBy(F.desc("bm25_e10"), F.asc("doc_id"))
-               .limit(k).collect())
-        self.last_blockmax = {"mode": "maxscore", "dirty": True,
-                              "essential": list(ess),
-                              "n_candidates": len(ids)}
-        rows = [(int(r["doc_id"]), int(r["bm25_e10"]), i + 1)
-                for i, r in enumerate(top)]
-        return self.spark.createDataFrame(
-            rows, "doc_id long, bm25_e10 long, kw_rank int")
-
-    def _search_blockmax(self, terms: list, k: int,
-                         forced: bool) -> DataFrame | None:
-        """Exact top-k with block skipping over the IMPACT-ORDERED
-        postings — Block-Max WAND (Ding & Suel, SIGIR'11) re-shaped for
-        a batch engine.  Each round reads only the per-term HIGH-IMPACT
-        PREFIX ``imp >= I_t``: the fmt-3 layout sorts each term's
-        postings imp-descending, so the parquet footer max(imp) stats
-        descend through the term's row groups and the pushdown
-        physically skips every block below the threshold — the footers
-        ARE the block-max table.  The prefix is scored exactly
-        (score_e10 = floor(idf * imp * 1e10), bit-identical to the
-        classic tree), and the answer is PROVEN:
-
-        - a doc read in every query term it contains is EXACT
-          (miss_ub == 0);
-        - a doc read in only some terms is bounded by partial +
-          Sum_missing U_t where U_t = floor(idf_t * I_t * 1e10) — any
-          unseen posting of t scores <= U_t by monotonicity;
-        - a doc read in no term is bounded by Sum U_t.
-
-        If the k-th exact score strictly beats both bounds, the answer
-        is provably identical to the full read.  Otherwise the next
-        thresholds come from theta itself when one exists (the largest
-        I_t whose outside-bound still clears the running k-th score)
-        or halve, and I_t == 0 IS the full read — the descent
-        terminates exact unconditionally.  Returns None when no query
-        term has enough mass (caller falls through to the classic
-        single-read plan)."""
-        if k <= 0:
-            return None  # classic path returns the empty frame (r13
-            # review: rows_k[-1] would IndexError on k == 0)
-        terms = list(dict.fromkeys(terms))
-        dirty = self._blockmax_dirty()
-        stats = self._term_stats_lookup(terms)
-        if not dirty:
-            present = [t for t in terms if t in stats]
-            if not present:
-                return None  # classic path returns the empty frame
-            if not forced and sum(stats[t][0] for t in present) < \
-                    self._BLOCKMAX_MIN_POSTINGS:
-                return None  # sparse query: single pruned read is optimal
-            n_docs = float(self._meta_n_docs())
-            idf = {t: ((n_docs - stats[t][0]) + 0.5) / (stats[t][0] + 0.5)
-                   for t in present}
-            c_drift = 1.0
-            avgdl = None
-        else:
-            # MUTATED state (r14): micro segments and/or tombstones.
-            # Auto mode only pays the per-round full micro reads while
-            # they are a small fraction of the thresholdable bootstrap
-            # (forced ignores the gate — exactness never depends on it).
-            if not forced and self._micro_frac() > \
-                    self._BLOCKMAX_MICRO_FRAC:
-                return None
-            # LIVE semantics, same as the classic plan and the oracle:
-            # df/n_docs/avgdl of the live corpus.  A term whose live df
-            # is 0 contributes nothing in the classic plan (df comes
-            # from the matched live postings) — drop it; a term present
-            # ONLY in micro segments has no impact stratum to threshold
-            # (thr pinned at 0.0, no unseen mass, U_t = 0) but scores
-            # exactly through the full micro read.
-            live_df = self._live_df(terms)
-            present = [t for t in terms if live_df[t] > 0]
-            if not present:
-                return None
-            if not forced and sum(live_df[t] for t in present) < \
-                    self._BLOCKMAX_MIN_POSTINGS:
-                return None
-            n_docs, avgdl = self._live_corpus_scalars()
-            if n_docs <= 0:
-                return None  # fully-deleted index: classic path
-            idf = {t: ((n_docs - live_df[t]) + 0.5) / (live_df[t] + 0.5)
-                   for t in present}
-            # avgdl DRIFT factor for the unseen-posting bound: stored
-            # imp was computed with the bootstrap's write-time avgdl
-            # a_w; the true tf-part with live avgdl a_l satisfies
-            # g_live <= max(1, a_l/a_w) * imp  (the denominator
-            # tf + 0.3 + 0.9*dl/a is decreasing in a, and
-            # D(a_w)/D(a_l) <= a_l/a_w for a_l > a_w).
-            ss0 = (self.meta.get("seg_stats") or {}).get(
-                self.meta["segments"][0]) or {}
-            n0, s0 = int(ss0.get("n_docs", 0)), float(ss0.get("sum_dl", 0))
-            a_w = (s0 / n0) if n0 else 0.0
-            if a_w <= 0:
-                # bootstrap write-time stats unusable (missing/zero
-                # sum_dl or n_docs): no sound drift bound can be
-                # derived, and a 1.0 fallback defends in the WRONG
-                # direction whenever live avgdl exceeds the true
-                # write-time avgdl — serve classic (ADVICE r14).
-                # Unreachable via build/compact (they always store full
-                # {n_docs, sum_dl}); this guards hand-edited or
-                # partially-migrated metas.
-                return None
-            c_drift = max(1.0, avgdl / a_w)
-        seg = self.meta["segments"][0]
-        base = (self.spark.read
-                .schema("token string, doc_id long, imp double")
-                .parquet(os.path.join(self.folder, seg, "postings")))
-        # the MaxScore split: the clean form replays stored impacts,
-        # the dirty form (r15) re-derives live scores with the descent
-        # tier's drift-inflated dense bounds; both refuse (None) when
-        # the shape/separation doesn't hold and the descent takes over
-        if dirty:
-            out = self._search_maxscore_split_dirty(
-                present, stats, idf, k, c_drift, live_df, n_docs, avgdl)
-        else:
-            out = self._search_maxscore_split(present, stats, idf,
-                                              base, k)
-        if out is not None:
-            return out
-        # start HIGH in the impact order (the round cost is dominated by
-        # how many postings enter the doc_id aggregation, so a cheap
-        # high-prefix probe beats a safe low one), then descend through
-        # the theta-capped ladder.  PROVEN thresholds are memoized per
-        # (meta version, terms, k): a repeated serving query re-proves
-        # from the known-good frontier in ONE round.
-        m = len(present)
-        tkey = (self.meta.get("v", 0), tuple(sorted(present)), int(k))
-        tc = getattr(self, "_thr_cache", None)
-        if tc is None:
-            tc = self._thr_cache = {}
-        thr = dict(tc.get(tkey) or
-                   {t: (stats[t][1] * 0.8 if t in stats else 0.0)
-                    for t in present})
-
-        esc = self._sql_str
-
-        _margin = self._rel_margin
-
-        def _ub(t, imp_v):
-            """Unseen-posting bound at threshold imp_v for term t.
-            Clean: the exact driver-side replay floor(idf*I*1e10).
-            Dirty: the true tf-part can exceed the stored imp by the
-            avgdl drift factor (g_live <= c_drift * imp, see above),
-            plus the relative float margin (_margin).  Conservative
-            bounds only deepen the descent, never break the proof."""
-            if imp_v <= 0.0:
-                return 0  # threshold 0 == everything read: no unseen mass
-            if not dirty:
-                return self._ub_py(idf[t], imp_v)
-            v = idf[t] * (c_drift * imp_v) * 1e10
-            return int(math.floor(v)) + _margin(v)
-
-        def _seen_ub(t):
-            """Bound on any single posting's contribution for term t —
-            the refinement's 'best possible partial' arm.  Clean: the
-            term's stored max impact.  Dirty: drift-inflate it, and
-            with micro segments present cap at the tf-part's universal
-            supremum _TF_SUP = K1+1 (a micro posting is bounded by no footer
-            stat)."""
-            base_imp = stats[t][1] if t in stats else 0.0
-            if not dirty:
-                return self._ub_py(idf[t], base_imp)
-            cap = c_drift * base_imp
-            if len(self.meta["segments"]) > 1:
-                cap = max(cap, self._TF_SUP)
-            v = idf[t] * cap * 1e10
-            return int(math.floor(v)) + _margin(v)
-
-        def _live_frame(pred):
-            """Dirty-state round frame: the imp-thresholded bootstrap
-            stratum + the micro segments IN FULL, minus scope-correct
-            tombstoned rows (the _live anti-join) — tf/dl carried so
-            the score is re-derived exactly with the live stats."""
-            segs = self.meta["segments"]
-            s0 = (self.spark.read
-                  .schema("token string, doc_id long, tf double, "
-                          "dl double, imp double")
-                  .parquet(os.path.join(self.folder, segs[0], "postings"))
-                  .where(pred).select("token", "doc_id", "tf", "dl")
-                  .withColumn("seg", F.lit(0)))
-            parts = [s0]
-            for i, nm in enumerate(segs[1:], 1):
-                parts.append(
-                    self.spark.read
-                    .schema("token string, doc_id long, tf double, "
-                            "dl double")
-                    .parquet(os.path.join(self.folder, nm, "postings"))
-                    .where(F.col("token").isin(*present))
-                    .withColumn("seg", F.lit(i)))
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            tomb = self._tomb()
-            if tomb is not None:
-                df = df.join(
-                    F.broadcast(tomb),
-                    (df["doc_id"] == tomb["doc_id"])
-                    & (tomb["upto_seg"] >= df["seg"]),
-                    "left_anti")
-            return df
-
-        self.last_blockmax = None
-        top, rounds, theta = [], 0, None
-        while True:
-            rounds += 1
-            full_read = all(thr[t] <= 0.0 for t in present)
-            # per-term literals: idf (exact score factor) and U_t (the
-            # unseen-posting bound at the current threshold) — injected
-            # as CASE expressions, not a per-round broadcast join
-            u = {t: _ub(t, thr[t]) for t in present}
-            if not dirty:
-                val = "imp"
-            else:
-                # exact score re-derivation from tf/dl with the LIVE
-                # avgdl literal — the classic _TERM_SCORE tree with the
-                # per-term idf folded in as a literal (same IEEE ops,
-                # same association, bit-identical)
-                val = (f"((tf * 2.2D) / (tf + (1.2D * (0.25D + "
-                       f"(0.75D * (dl / {avgdl!r}D))))))")
-            s_case = ("CAST(floor((CASE token "
-                      + " ".join(f"WHEN '{esc(t)}' THEN {idf[t]!r}D"
-                                 for t in present)
-                      + " ELSE 0.0D END) * " + val
-                      + " * 1e10) AS BIGINT)")
-            u_case = ("(CASE token "
-                      + " ".join(f"WHEN '{esc(t)}' THEN "
-                                 f"CAST({int(u[t])} AS BIGINT)"
-                                 for t in present)
-                      + " ELSE CAST(0 AS BIGINT) END)")
-            pred = None
-            for t in present:
-                c = (F.col("token") == t) & (F.col("imp") >= thr[t])
-                pred = c if pred is None else (pred | c)
-            # ONE job per round: rank candidates by key = partial +
-            # miss_ub (== the exact score for fully-covered docs, an
-            # upper bound otherwise) and TakeOrdered the top k.  The
-            # key ordering makes a separate verification pass
-            # unnecessary: every non-returned candidate d has
-            # true(d) <= key(d) <= key_k, and if it TIES key_k its
-            # doc_id is larger by the sort order — it loses the
-            # tie-break exactly as in the classic plan.  So the answer
-            # is proven by (a) all k returned rows exact, (b) the
-            # never-read outside bound strictly below key_k.
-            src = _live_frame(pred) if dirty else base.where(pred)
-            g = (src
-                 .select("doc_id", F.expr(s_case).alias("s"),
-                         F.expr(u_case).alias("t_u"))
-                 .groupBy("doc_id")
-                 .agg(F.sum("s").alias("partial"),
-                      F.sum("t_u").alias("cov_u"))
-                 .select("doc_id", "partial", "cov_u",
-                         (F.lit(int(sum(u.values())))
-                          - F.col("cov_u")).alias("miss_ub"))
-                 .withColumn("key", F.col("partial") + F.col("miss_ub")))
-            # collect a deeper window than k: when the strict top keys
-            # are credit-inflated partial docs, the exact rows further
-            # down anchor the theta estimate for the next round's cap
-            # (a few hundred extra collected rows, one job either way)
-            rows_big = (g.orderBy(F.desc("key"), F.asc("doc_id"))
-                        .limit(max(k, 256)).collect())
-            rows_k = rows_big[:k]
-            if full_read:
-                top = rows_k  # u == 0 everywhere: keys ARE exact scores
-                break
-            if len(rows_k) == k and \
-                    all(r["miss_ub"] == 0 for r in rows_k):
-                theta = int(rows_k[-1]["key"])
-                ub_out = sum(u.values())
-                # +1 slack on the driver-side bound (the mirrored ops
-                # agree bit-for-bit anyway); strict <: an unseen doc
-                # tying theta could carry a smaller doc_id
-                if ub_out + 1 < theta:
-                    top = rows_k
-                    break
-            # descent heuristic only (correctness is re-proven every
-            # round): the LARGEST exact key seen — the strongest score
-            # the round verified — estimates the final k-th score; the
-            # cap derived from it aims the next round at the provable
-            # frontier instead of far below it
-            # theta estimate for the next round's cap (heuristic only —
-            # correctness is re-proven every round): the best EXACT key
-            # seen, or the k-th best partial (partial <= true score, so
-            # any k partials lower-bound the final k-th) when heavy
-            # duplication floods the window with credit-inflated rows
-            exact_keys = [int(r["key"]) for r in rows_big
-                          if r["miss_ub"] == 0]
-            partials = sorted((int(r["partial"]) for r in rows_big),
-                              reverse=True)
-            theta = max(
-                max(exact_keys, default=0),
-                partials[k - 1] if len(partials) >= k else 0) or None
-            if rounds >= 6:
-                thr = {t: 0.0 for t in present}  # full read, terminate
-                continue
-            # BLOCKER-GUIDED per-term descent: each non-exact row's
-            # cov_u is a subset sum of the per-term U literals, so it
-            # DECODES which terms that row is missing (ambiguous sums
-            # decode to the union — conservative).  Only the terms that
-            # actually blocked the proof (missing in a top-k row)
-            # descend; the others hold their prefix — the batch
-            # analogue of WAND advancing one cursor.  From round 3 on
-            # every term descends (ping-pong guard across templates).
-            decode: dict[int, set] = {}
-            # 2^m enumeration is driver-side: cap it (r13 review —
-            # a ~30-term query would hang here); past the cap every
-            # term descends (the geometric ladder still terminates)
-            for mask in range(1 << m if m <= 12 else 0):
-                ssum = sum(u[present[i]] for i in range(m)
-                           if not (mask >> i) & 1)
-                decode.setdefault(ssum, set()).update(
-                    present[i] for i in range(m) if not (mask >> i) & 1)
-            blockers: set = set()
-            for r in rows_k:
-                if r["miss_ub"] != 0:
-                    blockers |= decode.get(int(r["miss_ub"]),
-                                           set(present))
-            if not blockers or rounds >= 3:
-                blockers = set(present)  # ub_out / short-fill / guard
-            for t in present:
-                if t not in blockers:
-                    continue
-                cand = thr[t] * 0.6
-                if theta is not None and idf[t] > 0:
-                    # theta-informed cap: the largest threshold whose
-                    # outside-bound still clears theta (0.9 margin).
-                    # Jump TO the cap when it sits between the
-                    # geometric step and the current threshold — going
-                    # below the provable frontier reads more than the
-                    # proof needs; the geometric step only takes over
-                    # when the cap itself already failed.
-                    want = 0.9 * theta / (m * idf[t] * 1e10)
-                    if cand < want < thr[t] * 0.98:
-                        cand = want
-                    elif want < cand:
-                        cand = want
-                thr[t] = cand if cand * 1e10 * idf[t] >= 1.0 else 0.0
-        if len(tc) > 256:
-            tc.clear()
-        tc[tkey] = dict(thr)  # proven frontier for the next identical call
-        if not full_read and \
-                tkey not in getattr(self, "_thr_refined", set()):
-            # one-time REFINEMENT of the memo: the winners are known, so
-            # the tightest useful thresholds are their own per-term
-            # impacts (epsilon below the smallest winner imp per term).
-            # If the outside-bound still clears theta there, memoize
-            # THAT frontier — the next identical query re-proves it in
-            # one round reading only the winners' stratum.  Driver-side
-            # arithmetic only; a wrong guess just fails that round's
-            # proof and descends, so exactness is never at stake.
-            refined = getattr(self, "_thr_refined", None)
-            if refined is None:
-                refined = self._thr_refined = set()
-            if len(refined) > 256:
-                # same bound as _thr_cache/_ts_cache: stale meta versions
-                # never re-prove, so the marker set would otherwise grow
-                # one tuple per distinct query forever in a long-lived
-                # serving process (r14 ADVICE)
-                refined.clear()
-            refined.add(tkey)
-            ids = [int(r["doc_id"]) for r in top]
-            if ids:
-                # winners' own impacts, from the bootstrap segment only
-                # (a dirty winner's posting may live in a micro segment
-                # and carry no imp — the current threshold stands in;
-                # the guess is memo-only either way: a wrong frontier
-                # just fails the next call's round-1 proof and descends)
-                win = (base.where(F.col("token").isin(*present)
-                                  & F.col("doc_id").isin(ids))
-                       .select("token", "imp").collect())
-                mins: dict = {}
-                for r in win:
-                    v = float(r["imp"])
-                    t = r["token"]
-                    mins[t] = min(mins.get(t, v), v)
-                cand = {t: mins.get(t, thr[t]) * 0.999 for t in present}
-                theta_f = int(top[k - 1]["partial"]) if len(top) >= k \
-                    else None
-                if theta_f is not None and m <= 12 and \
-                        all(cand[t] >= thr[t] for t in present):
-                    # the refinement must survive CREDIT INFLATION: a
-                    # non-winner covered only in subset S carries at
-                    # most Sum_S idf*max_imp (its best possible
-                    # partial) + Sum_notS U(cand) — if any subset's
-                    # bound reaches theta, a raised threshold would
-                    # push partial-coverage keys above the winners and
-                    # fail every re-proof round.  Check all 2^m
-                    # subsets driver-side (m is query-sized).
-                    ok = True
-                    for mask in range(1 << m):
-                        s_bound = sum(
-                            _seen_ub(present[i])
-                            if (mask >> i) & 1 else
-                            _ub(present[i], cand[present[i]])
-                            for i in range(m))
-                        if mask != (1 << m) - 1 and \
-                                s_bound + 1 >= theta_f:
-                            ok = False
-                            break
-                    if ok:
-                        tc[tkey] = cand
-        self.last_blockmax = {"thr": dict(thr), "full_read": full_read,
-                              "rounds": rounds, "dirty": dirty}
-        rows = [(int(r["doc_id"]), int(r["partial"]), i + 1)
-                for i, r in enumerate(top)]
-        return self.spark.createDataFrame(
-            rows, "doc_id long, bm25_e10 long, kw_rank int")
-
     _LIT_PLAN_CAP = 1024  # inline-literal table size bound: past it the
     # analyzer pays more for the expression tree than py4j costs
 
@@ -1504,23 +940,37 @@ class TextIndex:
 
     def _split_batch(self, split_q: dict, k: int, idf: dict,
                      stats: dict, dirty: bool, c_drift: float,
-                     multi: bool, avgdl, base) -> dict:
-        """Batched MaxScore essential/dense split (r15): phase A scores
-        the UNION of the split members' essential terms in ONE read
-        (per-(qid, doc) partials via the broadcast membership table,
-        per-qid top-k under a WindowGroupLimit), phase B fetches the
-        union of the kept members' FULL term sets for the bounded
+                     multi: bool, avgdl, base) -> tuple[dict, dict]:
+        """MaxScore essential/dense split (Turtle & Flood 1995), the
+        other classic early-termination next to the block-max descent —
+        and the one that wins on the REALISTIC query shape, selective
+        terms mixed with stop words: score the SELECTIVE (essential)
+        terms' postings in full (tiny by definition), bound every other
+        doc by the dense terms' maximum impacts, and fetch dense
+        postings only for the candidate docs.  Per-member proof:
+
+        - theta_E = k-th best essential-only partial; slack = Sum over
+          dense terms of the per-posting bound (_dense_seen_ub: the
+          replayed max impact, drift-inflated + _TF_SUP-capped +
+          margined in dirty states);
+        - a doc with NO essential posting totals <= slack < theta_E
+          <= final k-th score — excluded, strictly;
+        - a doc with essential partial < theta_E - slack totals
+          < theta_E — excluded, strictly;
+        - every remaining doc is a candidate and is scored EXACTLY
+          (all its postings for all the member's terms are read in
+          phase B).
+
+        Phase A scores the UNION of the members' essential terms in ONE
+        read (per-(qid, doc) partials via the broadcast membership
+        table, per-qid top-k under a WindowGroupLimit), phase B fetches
+        the union of the kept members' FULL term sets for the bounded
         (qid, doc) candidate PAIRS — three jobs for all members
-        together instead of three per member.  Per-member proof is the
-        single split's verbatim (theta_E = k-th essential partial;
-        slack = Sum dense per-posting bounds, drift-inflated +
-        _TF_SUP-capped + margined in dirty states via _dense_seen_ub;
-        a doc with no essential posting totals <= slack < theta_E, one
-        below the candidate cut totals < theta_E — both strictly under
-        the k-th final score).  Any refusal — short essential fill, no
-        separation, global 100k candidate-cap overflow — drops the
-        member (or all members, for the global cap) back to the
-        descent, which is also exact.  Returns {qid: top rows}."""
+        together.  Any refusal — short essential fill, no separation,
+        global 100k candidate-cap overflow — drops the member (or all
+        members, for the global cap) back to the descent, which is
+        also exact.  Returns ({qid: top rows}, {qid: n candidates})
+        for the served members."""
         esc = self._sql_str
         val = ("imp" if not dirty else
                f"((tf * 2.2D) / (tf + (1.2D * (0.25D + "
@@ -1538,27 +988,8 @@ class TextIndex:
                         .where(F.col("token").isin(*terms_subset))
                         .select("token", "doc_id",
                                 F.col("imp").alias("g")))
-            segs = self.meta["segments"]
-            parts = []
-            for i, nm in enumerate(segs):
-                parts.append(
-                    self.spark.read
-                    .schema("token string, doc_id long, tf double, "
-                            "dl double")
-                    .parquet(os.path.join(self.folder, nm, "postings"))
-                    .where(F.col("token").isin(*terms_subset))
-                    .withColumn("seg", F.lit(i)))
-            dfr = parts[0]
-            for p in parts[1:]:
-                dfr = dfr.unionByName(p)
-            tomb = self._tomb()
-            if tomb is not None:
-                dfr = dfr.join(
-                    F.broadcast(tomb),
-                    (dfr["doc_id"] == tomb["doc_id"])
-                    & (tomb["upto_seg"] >= dfr["seg"]),
-                    "left_anti")
-            return dfr.selectExpr("token", "doc_id", f"{val} AS g")
+            return (self._live_terms(terms_subset)
+                    .selectExpr("token", "doc_id", f"{val} AS g"))
 
         def s_case(terms):
             return ("CAST(floor((CASE token "
@@ -1598,7 +1029,7 @@ class TextIndex:
             theta[q] = th
             keep.append(q)
         if not keep:
-            return {}
+            return {}, {}
         cut_case = ("(CASE qid " + " ".join(
             f"WHEN {int(q)} THEN CAST({int(theta[q] - slack[q])}"
             f" AS BIGINT)" for q in keep)
@@ -1608,8 +1039,11 @@ class TextIndex:
                 .select("qid", "doc_id")
                 .limit(100_001).collect())                    # job 2
         if len(cand) > 100_000:
-            return {}  # conservative: every member to the descent
+            return {}, {}  # conservative: every member to the descent
         pairs = [(int(r["qid"]), int(r["doc_id"])) for r in cand]
+        n_cand = dict.fromkeys(keep, 0)
+        for q, _ in pairs:
+            n_cand[q] += 1
         all_union = sorted({t for q in keep
                             for t in split_q[q][0] + split_q[q][1]})
         qt_all = self._lit_qid_tok(
@@ -1620,9 +1054,9 @@ class TextIndex:
         # duplicate every posting row per member sharing the term —
         # exactly the classic batch's cost (measured: the unfiltered
         # order ran the mixed batch at classic parity, 3.94 vs 3.91 s
-        # at 1M).  The doc filter mirrors the single split's hit
-        # construction (literal isin under the probe cap, broadcast
-        # semi-join past it) and cuts the frame to |candidates| x terms
+        # at 1M).  The doc filter (literal isin under the probe cap,
+        # broadcast semi-join past it — the plan-size policy of the
+        # tombstone probe tiers) cuts the frame to |candidates| x terms
         # rows before any duplication.
         doc_ids = sorted({p[1] for p in pairs})
         hit_f = frame(all_union)
@@ -1648,7 +1082,7 @@ class TextIndex:
         out: dict = {}
         for r in sorted(fin, key=lambda r: (r["qid"], r["rn"])):
             out.setdefault(int(r["qid"]), []).append(r)
-        return out
+        return out, n_cand
 
     def _dense_seen_ub(self, t, stats, idf_t, c_drift, multi,
                        dirty) -> int:
@@ -1670,11 +1104,11 @@ class TextIndex:
 
     @staticmethod
     def _memo_batch_frontier(tc: dict, tkey, terms, thr_eff) -> None:
-        """Batch-side threshold-memo write: per-term MAX of the read
+        """Threshold-memo write: per-term MAX of the read
         thresholds the member's proof held at and any existing memo
         entry.  Writing thr_eff alone would let a full-read batch mate
         (thr_eff dragged to 0 on shared terms) CLOBBER a mate's hot
-        single-query frontier for the rest of the index version — the
+        frontier for the rest of the index version — the
         memo is a guess re-proven at every use, so keeping the higher
         value is always sound (a too-high guess fails the next round-1
         proof and descends), while a lowered one silently costs every
@@ -1709,48 +1143,59 @@ class TextIndex:
 
     def _search_blockmax_batch(self, qmap: dict, k: int,
                                forced: bool) -> DataFrame | None:
-        """Batched Block-Max early termination — the N-query twin of
-        _search_blockmax (r15, VERDICT r14 item 4: `search_batch` was
-        classic-only, so an N-query batch paid the pruned-but-full
-        postings read even when every member would early-terminate).
-        ONE thresholded postings read serves every still-unproven query
-        per round:
+        """Exact top-k with block skipping over the IMPACT-ORDERED
+        postings — Block-Max WAND (Ding & Suel, SIGIR'11) re-shaped for
+        a batch engine, for N queries at once (a single ``search`` is a
+        batch of one).  Each round reads only the per-term HIGH-IMPACT
+        PREFIX ``imp >= I_t``: the fmt-3 layout sorts each term's
+        postings imp-descending, so the parquet footer max(imp) stats
+        descend through the term's row groups and the pushdown
+        physically skips every block below the threshold — the footers
+        ARE the block-max table.  The prefix is scored exactly
+        (score_e10 = floor(idf * imp * 1e10), bit-identical to the
+        classic tree), and each member's answer is PROVEN:
+
+        - a doc read in every query term it contains is EXACT
+          (miss_ub == 0);
+        - a doc read in only some terms is bounded by partial +
+          Sum_missing U_t where U_t = floor(idf_t * I_t * 1e10) — any
+          unseen posting of t scores <= U_t by monotonicity;
+        - a doc read in no term is bounded by Sum U_t.
+
+        If the k-th exact score strictly beats both bounds, the answer
+        is provably identical to the full read (excluded ties lose the
+        doc_id tie-break by the sort order).  Otherwise the member
+        descends: the next thresholds come from theta itself when one
+        exists (the largest I_t whose outside-bound still clears the
+        running k-th score) or shrink geometrically, and I_t == 0 IS
+        the full read — by round 6 every member terminates exact
+        unconditionally.
+
+        ONE thresholded postings read serves every still-unproven
+        member per round:
 
         - the per-term READ threshold is the min over the active
-          queries' ladder/memo thresholds (the union of their
-          frontiers), so a shared term is read once at the deepest
-          frontier any member needs;
-        - idf and the unseen bound U_t at the read threshold are
-          per-TERM facts (they do not depend on the query), so one CASE
-          expression pair scores the whole batch; the tiny (qid, token)
-          membership table broadcasts in, and a qid-partitioned rank
-          window (Spark 4 WindowGroupLimit — per-partition top-window
-          pruned before the exchange) bounds the collect at
-          N * max(k, 256) rows;
-        - each query's proof is the single-query proof verbatim (all k
-          rows fully covered + the never-read outside bound strictly
-          under the k-th key; excluded ties lose the doc_id tie-break
-          by the sort order), carried at the READ thresholds — valid
-          because any unseen posting of t has imp < thr_eff[t] <= the
-          member's own threshold, and a LOWER read threshold only
-          tightens U_t;
-        - proven queries exit; the rest descend their own ladders
-          exactly as the single-query path does (blocker-guided,
-          theta-capped, full read by round 6 — unconditional exactness).
+          members' ladder/memo thresholds, so a shared term is read
+          once at the deepest frontier any member needs — the proof
+          holds at the READ thresholds because any unseen posting of t
+          has imp < thr_eff[t] <= the member's own threshold, and a
+          LOWER read threshold only tightens U_t;
+        - idf and U_t are per-TERM facts, so one CASE expression pair
+          scores the whole batch; the tiny (qid, token) membership
+          table broadcasts in, and a qid-partitioned rank window (Spark
+          4 WindowGroupLimit — per-partition top-window pruned before
+          the exchange) bounds the collect at N * max(k, 256) rows.
 
-        The threshold memo is SHARED with the single-query path per
-        (version, sorted terms, k) — single and batch serving warm each
-        other, and the frontier memoized for a member is the per-term
-        MAX of thr_eff at its proof and any existing memo entry
+        Selective+dense members go to the MaxScore split first
+        (_split_batch) and leave the descent set.  PROVEN thresholds
+        are memoized per (version, sorted terms, k) as the per-term MAX
+        of thr_eff at the member's proof and any existing entry
         (_memo_batch_frontier — a full-read mate must not clobber a hot
-        frontier).  Steady
-        state (warm memos — the serving shape) proves every member in
-        round 1: ONE job per batch instead of one per query.  Dirty
-        states ride the same live-stats score re-derivation and
-        drift-inflated bounds as the single-query dirty mode; the
-        MaxScore split and the winners-impact refinement stay
-        single-query features.  Returns None when the state/cost gates
-        refuse (the classic batch read serves)."""
+        frontier); steady state (warm memos — the serving shape) proves
+        every member in round 1.  MUTATED states (micro segments,
+        tombstones) re-derive scores from tf/dl with live corpus stats
+        and drift-inflate the unseen bounds.  Returns None when the
+        state/cost gates refuse (the classic plan serves)."""
         if k <= 0:
             return None
         window = max(k, 256)
@@ -1771,9 +1216,19 @@ class TextIndex:
                    for t in present_all}
             c_drift, avgdl = 1.0, None
         else:
+            # MUTATED state: auto mode only pays the per-round full
+            # micro reads while they are a small fraction of the
+            # thresholdable bootstrap (forced ignores the gate —
+            # exactness never depends on it).
             if not forced and self._micro_frac() > \
                     self._BLOCKMAX_MICRO_FRAC:
                 return None
+            # LIVE semantics, same as the classic plan and the oracle:
+            # df/n_docs/avgdl of the live corpus.  A term whose live df
+            # is 0 contributes nothing in the classic plan — drop it; a
+            # term present ONLY in micro segments has no impact stratum
+            # to threshold (thr pinned at 0.0, U_t = 0) but scores
+            # exactly through the full micro read.
             live_df = self._live_df(union_terms)
             present_all = [t for t in union_terms if live_df[t] > 0]
             if not present_all:
@@ -1786,13 +1241,24 @@ class TextIndex:
                 return None
             idf = {t: ((n_docs - live_df[t]) + 0.5) / (live_df[t] + 0.5)
                    for t in present_all}
+            # avgdl DRIFT factor for the unseen-posting bound: stored
+            # imp was computed with the bootstrap's write-time avgdl
+            # a_w; the true tf-part with live avgdl a_l satisfies
+            # g_live <= max(1, a_l/a_w) * imp  (the denominator
+            # tf + 0.3 + 0.9*dl/a is decreasing in a, and
+            # D(a_w)/D(a_l) <= a_l/a_w for a_l > a_w).
             ss0 = (self.meta.get("seg_stats") or {}).get(
                 self.meta["segments"][0]) or {}
             n0, s0 = int(ss0.get("n_docs", 0)), float(ss0.get("sum_dl", 0))
             a_w = (s0 / n0) if n0 else 0.0
             if a_w <= 0:
-                return None  # unusable bootstrap stats: same guard as
-                # the single-query path (no sound drift bound)
+                # bootstrap write-time stats unusable (missing/zero
+                # sum_dl or n_docs): no sound drift bound exists, and a
+                # 1.0 fallback defends in the WRONG direction whenever
+                # live avgdl exceeds the true write-time avgdl — serve
+                # classic.  Unreachable via build/compact; this guards
+                # hand-edited or partially-migrated metas.
+                return None
             c_drift = max(1.0, avgdl / a_w)
         pres = set(present_all)
         # per-query present terms (an absent term contributes nothing in
@@ -1818,45 +1284,17 @@ class TextIndex:
                for q in active}
 
         def _ub(t, imp_v):
+            # unseen-posting bound at threshold imp_v.  Clean: the exact
+            # driver-side replay floor(idf*I*1e10).  Dirty: the true
+            # tf-part can exceed the stored imp by the drift factor,
+            # plus the relative float margin.  Conservative bounds only
+            # deepen the descent, never break the proof.
             if imp_v <= 0.0:
-                return 0
+                return 0  # threshold 0 == everything read
             if not dirty:
                 return self._ub_py(idf[t], imp_v)
             v = idf[t] * (c_drift * imp_v) * 1e10
             return int(math.floor(v)) + self._rel_margin(v)
-
-        def _live_frame(pred, act_terms):
-            # the single-query dirty frame with the batch's active-term
-            # union: thresholded bootstrap + micro segments in full,
-            # minus scope-correct tombstoned rows
-            segs = self.meta["segments"]
-            s0f = (self.spark.read
-                   .schema("token string, doc_id long, tf double, "
-                           "dl double, imp double")
-                   .parquet(os.path.join(self.folder, segs[0],
-                                         "postings"))
-                   .where(pred).select("token", "doc_id", "tf", "dl")
-                   .withColumn("seg", F.lit(0)))
-            parts = [s0f]
-            for i, nm in enumerate(segs[1:], 1):
-                parts.append(
-                    self.spark.read
-                    .schema("token string, doc_id long, tf double, "
-                            "dl double")
-                    .parquet(os.path.join(self.folder, nm, "postings"))
-                    .where(F.col("token").isin(*act_terms))
-                    .withColumn("seg", F.lit(i)))
-            dfr = parts[0]
-            for p in parts[1:]:
-                dfr = dfr.unionByName(p)
-            tomb = self._tomb()
-            if tomb is not None:
-                dfr = dfr.join(
-                    F.broadcast(tomb),
-                    (dfr["doc_id"] == tomb["doc_id"])
-                    & (tomb["upto_seg"] >= dfr["seg"]),
-                    "left_anti")
-            return dfr
 
         self.last_blockmax_batch = None
         proved_round: dict = {}
@@ -1881,15 +1319,16 @@ class TextIndex:
             dns = [t for t in qterms[q] if t not in ess]
             if ess and dns and sum(df_of(t) for t in ess) <= 1_000_000:
                 split_q[q] = (ess, dns)
-        split_served: list = []
+        served: dict = {}
+        n_cand: dict = {}
         if split_q:
-            served = self._split_batch(split_q, k, idf, stats, dirty,
-                                       c_drift, multi, avgdl, base)
+            served, n_cand = self._split_batch(split_q, k, idf, stats,
+                                               dirty, c_drift, multi,
+                                               avgdl, base)
             for q, rows_q in served.items():
                 results[q] = rows_q
                 proved_round[q] = 0  # split phases, not descent rounds
                 full_read_info[q] = False
-            split_served = sorted(served)
             active = active - set(served)
         round_no = 0
         while active:
@@ -1919,7 +1358,9 @@ class TextIndex:
             for t in act_terms:
                 c = (F.col("token") == t) & (F.col("imp") >= thr_eff[t])
                 pred = c if pred is None else (pred | c)
-            src = (_live_frame(pred, act_terms) if dirty
+            # dirty rounds: the thresholded bootstrap + micro segments
+            # in full, minus tombstoned rows
+            src = (self._live_terms(act_terms, pred) if dirty
                    else base.where(pred))
             qt = self._lit_qid_tok(
                 (q, t) for q in sorted(active) for t in qterms[q])
@@ -1963,6 +1404,8 @@ class TextIndex:
                 if len(rows_k) == k and \
                         all(r["miss_ub"] == 0 for r in rows_k):
                     theta = int(rows_k[-1]["key"])
+                    # +1 slack on the driver-side bound; strict <: an
+                    # unseen doc tying theta could carry a smaller doc_id
                     if utot_q[q] + 1 < theta:
                         results[q] = rows_k
                         full_read_info[q] = False
@@ -1971,7 +1414,11 @@ class TextIndex:
                         self._memo_batch_frontier(tc, keys[q],
                                                   qterms[q], thr_eff)
                         continue
-                # descend q's ladder — the single-query logic scoped to q
+                # descend q's ladder.  Heuristic only (correctness is
+                # re-proven every round): theta estimates the final k-th
+                # score from the best EXACT key seen, or the k-th best
+                # partial (partial <= true score) when credit-inflated
+                # rows flood the window
                 exact_keys = [int(r["key"]) for r in rq
                               if r["miss_ub"] == 0]
                 partials = sorted((int(r["partial"]) for r in rq),
@@ -1982,6 +1429,14 @@ class TextIndex:
                 if rq_round[q] >= 6:
                     thr[q] = {t: 0.0 for t in qterms[q]}
                     continue
+                # BLOCKER-GUIDED per-term descent: a non-exact row's
+                # cov_u is a subset sum of the per-term U literals, so
+                # it DECODES which terms that row is missing (ambiguous
+                # sums decode to the union — conservative).  Only the
+                # blocking terms descend — the batch analogue of WAND
+                # advancing one cursor; from round 3 on every term does
+                # (ping-pong guard).  The 2^m decode is capped at 12
+                # terms; past it every term descends.
                 m_q = len(qterms[q])
                 decode: dict = {}
                 for mask in range(1 << m_q if m_q <= 12 else 0):
@@ -2002,6 +1457,10 @@ class TextIndex:
                         continue
                     cand = min(thr[q][t], thr_eff[t]) * 0.6
                     if theta is not None and idf[t] > 0:
+                        # theta-informed cap: the largest threshold whose
+                        # outside-bound still clears theta (0.9 margin);
+                        # jump TO it when it sits between the geometric
+                        # step and the current threshold
                         want = 0.9 * theta / (m_q * idf[t] * 1e10)
                         if cand < want < thr_eff[t] * 0.98:
                             cand = want
@@ -2020,7 +1479,9 @@ class TextIndex:
             "full_read": {q: bool(full_read_info.get(q, False))
                           for q in qmap},
             "proved_round": dict(proved_round),
-            "split_served": split_served,
+            "split_served": sorted(served),
+            "essential": {q: list(split_q[q][0]) for q in served},
+            "n_candidates": {q: n_cand[q] for q in served},
             "thr": {q: dict(tc.get(keys[q]) or {}) for q in keys}}
         return self.spark.createDataFrame(
             out_rows, "qid long, doc_id long, bm25_e10 long, kw_rank int")
@@ -2035,12 +1496,13 @@ class TextIndex:
         ANY corpus size; the doclen tables are touched only for the
         tombstone-path corpus stats.
 
-        ``block_max``: the fmt-3 EARLY-TERMINATION tier (Block-Max WAND
-        re-expressed for a batch engine — _search_blockmax) for dense
+        ``block_max``: the fmt-3 EARLY-TERMINATION tier for dense
         (stop-word) terms, where "matching postings" IS a large corpus
-        fraction.  None (default) auto-engages on large maintained
-        indexes; True forces it whenever the index state allows
-        (compacted, term_stats present); False disables.  Every mode is
+        fraction — the query runs as a batch of one through
+        _search_blockmax_batch (MaxScore split, then the Block-Max
+        descent).  None (default) auto-engages on large maintained
+        indexes; True forces it whenever the index state allows (fmt 3,
+        term_stats present); False disables.  Every mode is
         bit-identical — the tier either PROVES its answer exact via
         upper bounds or descends to the full read."""
         terms = [str(t) for t in terms]
@@ -2056,10 +1518,10 @@ class TextIndex:
             want = (block_max is True
                     or self._meta_n_docs() >= self._BLOCKMAX_MIN_DOCS)
             if want:
-                out = self._search_blockmax(terms, k,
-                                            forced=block_max is True)
+                out = self._search_blockmax_batch(
+                    {0: terms}, k, forced=block_max is True)
                 if out is not None:
-                    return out
+                    return out.drop("qid")
         tf = (self.live_postings()
               .where(F.col("token").isin(*terms))
               .select("token", "doc_id", "tf", "dl"))
@@ -2103,8 +1565,8 @@ class TextIndex:
         maintained indexes, True forces (state permitting), False
         disables; every mode is bit-identical (per-query exactness
         proofs or descent to the full read)."""
-        # a repeated term within one query contributes once (the single-
-        # query path's isin() set semantics)
+        # a repeated term within one query contributes once (``search``'s
+        # isin() set semantics)
         qmap = {int(q): list(dict.fromkeys(str(t) for t in ts))
                 for q, ts in queries.items()}
         if not qmap:

@@ -215,7 +215,7 @@ def search_bm25_indexed_blockmax(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """The same top-10 BM25 query through the fmt-3 BLOCK-MAX
     EARLY-TERMINATION tier, FORCED on (operators/textindex.py
-    _search_blockmax — the Block-Max WAND idea on impact-ordered
+    _search_blockmax_batch — the Block-Max WAND idea on impact-ordered
     parquet: per-term high-impact prefixes `imp >= I` pruned by the
     row-group footer max(imp) stats (imp is the stored per-posting
     impact; tf-ordering is only the non-impact micro-batch layout),
@@ -274,7 +274,7 @@ def search_bm25_maxscore_split(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Top-10 BM25 for the SELECTIVE+dense term mix, FORCED through the
     fmt-3 early-termination tier where the MaxScore essential/dense
-    split engages (operators/textindex.py _search_maxscore_split,
+    split engages (operators/textindex.py _split_batch,
     Turtle & Flood '95): the selective term's postings are read in full
     (tiny by definition), every no-essential doc is excluded by the
     dense terms' max-impact slack, and dense postings are fetched ONLY
@@ -413,7 +413,7 @@ WHERE kw_rank <= 10
 def search_bm25_maxscore_split_mutated(spark: SparkSession,
                                        sf_dir: str) -> DataFrame:
     """The dirty MaxScore split's driver gate (r15,
-    operators/textindex.py _search_maxscore_split_dirty): the
+    operators/textindex.py _split_batch in a mutated state): the
     selective-anchor + stop-word shape (SPLIT_TERMS — 'dup' sits in 5%
     of fixture docs) against the SAME mutated shared index as
     search_bm25_indexed_mutated.  The r14 close had this shape falling

@@ -214,27 +214,6 @@ def test_batch_phase1_paths_agree_large_multibatch(spark):
     assert len(a) == 200
 
 
-def test_sharded_batch_matches_unsharded(spark):
-    from binaryvectordb_spark.operators.cascade import (
-        cascade_search_batch,
-        cascade_search_batch_sharded,
-    )
-
-    rng = np.random.RandomState(11)
-    V = rng.uniform(-1, 1, (60, DIM)).astype(np.float32)
-    rows = [(int(i), v.tolist()) for i, v in enumerate(V)]
-    emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
-    index, store = build_index(emb, DIM), build_doc_store(emb)
-    qs = spark.createDataFrame([(int(i), V[i].tolist()) for i in range(9)],
-                               "qid: long, qvec: array<float>")
-    whole = cascade_search_batch(index, store, DIM, qs, k=5).collect()
-    # no re-sort: the sharded union itself re-imposes the global serving
-    # order, so collect() output is row-for-row identical
-    sharded = cascade_search_batch_sharded(index, store, DIM, qs,
-                                           shard_size=4, k=5).collect()
-    assert sharded == whole
-
-
 def test_nonfinite_query_rejected(spark):
     from binaryvectordb_spark.operators.cascade import cascade_search_batch
 

@@ -450,7 +450,6 @@ def test_empty_query_batch_returns_empty_frames(spark):
         build_doc_store,
         build_index,
         cascade_search_batch,
-        cascade_search_batch_sharded,
     )
 
     rng = np.random.RandomState(5)
@@ -460,7 +459,6 @@ def test_empty_query_batch_returns_empty_frames(spark):
     index, store = build_index(emb, 16), build_doc_store(emb)
     empty = spark.createDataFrame([], "qid: long, qvec: array<float>")
     assert cascade_search_batch(index, store, 16, empty).count() == 0
-    assert cascade_search_batch_sharded(index, store, 16, empty).count() == 0
 
 
 def test_add_batch_df_distributed_pre_embedded(spark, tmp_path):

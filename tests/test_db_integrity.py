@@ -25,6 +25,12 @@ def test_integrity_clean_through_mutations(spark, tmp_path):
     assert "index.unique(doc_id)" in rep
     assert "docs.docs_bucket_placement" in rep
     assert "index.foreign_key(doc_id->doc_id)" in rep
+    # a search caches both tiers and the cache manager then serves the
+    # audit's reads from memory; the placement check must still read
+    # the real file paths (it raised CAST_INVALID_INPUT on the empty
+    # file name of the cached relation)
+    db.search("d e f", k=2)
+    assert db.verify_integrity() == rep
 
 
 def test_integrity_empty_db(spark, tmp_path):
@@ -65,6 +71,12 @@ def test_integrity_detects_misplaced_bucket_file(spark, tmp_path):
     assert rep["docs.docs_bucket_placement"] > 0, rep
     assert rep["docs.unique(doc_id)"] > 0, rep    # duplicated keys
     assert rep["index.foreign_key(doc_id->doc_id)"] == 0, rep
+    # a search caches the tiers; the audit must still read the physical
+    # file paths and find the misplaced file
+    db2.search("doc 1 text", k=3)
+    rep2 = db2.verify_integrity()
+    assert rep2["docs.docs_bucket_placement"] == \
+        rep["docs.docs_bucket_placement"], rep2
 
 
 @pytest.mark.slow

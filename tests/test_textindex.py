@@ -642,9 +642,9 @@ def test_blockmax_identical_and_skips_groups(spark, tmp_path):
     classic = _rows(idx.search(["hot"], k=10, block_max=False))
     fast = _rows(idx.search(["hot"], k=10, block_max=True))
     assert fast == classic and len(fast) == 10
-    info = idx.last_blockmax
-    assert info is not None and not info["full_read"]
-    thr = info["thr"]["hot"]
+    info = idx.last_blockmax_batch
+    assert info is not None and not info["full_read"][0]
+    thr = info["thr"][0]["hot"]
     assert thr > 0.0
 
     # groups-skipped, from the real footers: row groups whose token
@@ -689,17 +689,18 @@ def test_blockmax_multiterm_and_state_gates(spark, tmp_path):
     idx.add_documents(_docs(spark).limit(3))
     assert idx._blockmax_ready() and idx._blockmax_dirty()
     mutated = _rows(idx.search(TERMS, k=10, block_max=True))
-    info = idx.last_blockmax
-    assert info is not None and info.get("dirty") is True, info
+    info = idx.last_blockmax_batch
+    assert info is not None and info["dirty"] is True, info
     assert mutated == _rows(idx.search(TERMS, k=10, block_max=False))
 
     # maintenance folds restore the clean mode (compact writes
     # term_stats and a fresh impact layout)
     idx.compact()
     assert idx._blockmax_ready() and not idx._blockmax_dirty()
+    idx.last_blockmax_batch = None
     assert _rows(idx.search(TERMS, k=10, block_max=True)) == mutated
-    assert idx.last_blockmax is None or \
-        idx.last_blockmax.get("dirty") is not True
+    info = idx.last_blockmax_batch
+    assert info is not None and info["dirty"] is False, info
 
 
 @pytest.mark.slow
@@ -761,9 +762,9 @@ def test_blockmax_dirty_state_identity_soak(spark, tmp_path):
     check("newword-dead")
     # engagement pin in the dirty state
     idx.search(["hot"], k=10, block_max=True).collect()
-    info = idx.last_blockmax
+    info = idx.last_blockmax_batch
     assert info is not None and info["dirty"] is True, info
-    assert not info["full_read"] and info["thr"]["hot"] > 0.0, info
+    assert not info["full_read"][0] and info["thr"][0]["hot"] > 0.0, info
     # maintenance converges the state back; answers never move
     idx.compact_tail()
     check("tiered-merge")
@@ -843,10 +844,12 @@ def test_blockmax_dirty_auto_cost_gate(spark, tmp_path):
         docs.where((F.col("doc_id") >= 100) & (F.col("doc_id") < 160))
         .withColumn("doc_id", F.col("doc_id") + 10_000))
     assert idx._micro_frac() > idx._BLOCKMAX_MICRO_FRAC
-    assert idx._search_blockmax(list(TERMS), 10, forced=False) is None
+    assert idx._search_blockmax_batch({0: list(TERMS)}, 10,
+                                      forced=False) is None
     forced = _rows(idx.search(TERMS, k=10, block_max=True))
     assert forced == _rows(idx.search(TERMS, k=10, block_max=False))
-    assert idx.last_blockmax and idx.last_blockmax["dirty"] is True
+    info = idx.last_blockmax_batch
+    assert info and info["dirty"] is True, info
 
 
 def test_maxscore_split_engages_and_is_exact(spark, tmp_path):
@@ -874,15 +877,15 @@ def test_maxscore_split_engages_and_is_exact(spark, tmp_path):
     classic = _rows(idx.search(q, k=10, block_max=False))
     fast = _rows(idx.search(q, k=10, block_max=True))
     assert fast == classic
-    info = idx.last_blockmax
-    assert info is not None and info.get("mode") == "maxscore", info
-    assert info["essential"] == ["r7"]
+    info = idx.last_blockmax_batch
+    assert info is not None and info["split_served"] == [0], info
+    assert info["essential"][0] == ["r7"]
     # candidates are the docs the essential bound could not exclude —
     # a small superset of the docs carrying the selective term
     n_rare = sum(1 for _, t in rows if "r7" in t.split(" "))
     assert n_rare >= 20  # corpus premise: essential docs >> k
-    assert info["n_candidates"] <= 40 * n_rare + 10, \
-        (n_rare, info["n_candidates"])
+    assert info["n_candidates"][0] <= 40 * n_rare + 10, \
+        (n_rare, info["n_candidates"][0])
 
 
 def test_driver_row_maxscore_split_engages_on_fixture(spark):
@@ -902,9 +905,9 @@ def test_driver_row_maxscore_split_engages_on_fixture(spark):
     # call wraps the cached path in a fresh handle, so probe explicitly)
     ti = _shared_text_index(spark, SF_SMOKE)
     ti.search(SPLIT_TERMS, k=10, block_max=True).collect()
-    info = ti.last_blockmax
-    assert info is not None and info.get("mode") == "maxscore", info
-    assert info["essential"] == ["dup"]
+    info = ti.last_blockmax_batch
+    assert info is not None and info["split_served"] == [0], info
+    assert info["essential"][0] == ["dup"]
     # and the answer is the corpus-scan answer for the same terms
     import binaryvectordb_spark.queries.hybrid as H
     orig = H.TERMS
@@ -933,12 +936,14 @@ def test_blockmax_dirty_refuses_broken_bootstrap_stats(spark, tmp_path):
     # corrupt: a partially-migrated meta with zero sum_dl
     idx.meta["seg_stats"][seg0]["sum_dl"] = 0
     idx._write_meta()
-    assert idx._search_blockmax(list(TERMS), 10, forced=True) is None
+    assert idx._search_blockmax_batch({0: list(TERMS)}, 10,
+                                      forced=True) is None
     assert _rows(idx.search(TERMS, k=10, block_max=True)) == good
     # restore the true bootstrap entry -> the tier engages again
     idx.meta["seg_stats"][seg0]["sum_dl"] = orig_sum_dl
     idx._write_meta()
-    assert idx._search_blockmax(list(TERMS), 10, forced=True) is not None
+    assert idx._search_blockmax_batch({0: list(TERMS)}, 10,
+                                      forced=True) is not None
     assert _rows(idx.search(TERMS, k=10, block_max=True)) == good
 
 
@@ -982,12 +987,30 @@ def test_search_batch_blockmax_identity_and_memo(spark, tmp_path):
     got2 = _batch_rows(idx.search_batch(B, k=10, block_max=True))
     assert got2 == want
     assert idx.last_blockmax_batch["rounds"] == 1
-    # memo sharing: the single-query path at the same (terms, k) starts
-    # from the batch-proven frontier and answers identically
+    # memo sharing: a single search at the same (terms, k) starts from
+    # the batch-proven frontier and answers identically
     single = sorted(
         (0, int(r["doc_id"]), int(r["bm25_e10"]), int(r["kw_rank"]))
         for r in idx.search(["w0"], k=10, block_max=True).collect())
     assert single == [r for r in want if r[0] == 0]
+    # a single search IS a batch of one: its rows are the one-member
+    # batch's rows without qid, and a warm repeat proves in round 1
+    for t in (["w3"], ["w0", "w5"], ["r7", "w1", "w2"]):
+        df = idx.search(t, k=10, block_max=True)
+        assert "qid" not in df.columns
+        one = _rows(df)
+        batch_one = _batch_rows(idx.search_batch({0: t}, k=10,
+                                                 block_max=True))
+        assert one == [r[1:] for r in batch_one], t
+        assert len(one) == 10, t
+        idx.search(t, k=10, block_max=True).collect()
+        info = idx.last_blockmax_batch
+        if info["split_served"] == [0]:
+            # the selective+dense member is served by the split's
+            # bounded jobs — no descent round at all
+            assert info["rounds"] == 0 and "r7" in info["essential"][0]
+        else:
+            assert info["rounds"] == 1 and info["proved_round"][0] == 1
 
 
 @pytest.mark.slow
@@ -1059,9 +1082,9 @@ def test_maxscore_split_dirty_engages_and_is_exact(spark, tmp_path):
     classic = _rows(idx.search(q, k=10, block_max=False))
     got = _rows(idx.search(q, k=10, block_max=True))
     assert got == classic and len(got) == 10
-    info = idx.last_blockmax
-    assert info is not None and info.get("mode") == "maxscore", info
-    assert info["dirty"] is True and info["essential"] == ["r7"]
+    info = idx.last_blockmax_batch
+    assert info is not None and info["split_served"] == [0], info
+    assert info["dirty"] is True and info["essential"][0] == ["r7"]
     # fully tombstone the essential term: live df(r7) -> 0, so r7 drops
     # from the present set, the shape turns dense-only, the split
     # refuses, and the descent serves — still exact
@@ -1071,8 +1094,8 @@ def test_maxscore_split_dirty_engages_and_is_exact(spark, tmp_path):
     idx.remove(r7_docs)
     got2 = _rows(idx.search(q, k=10, block_max=True))
     assert got2 == _rows(idx.search(q, k=10, block_max=False))
-    info2 = idx.last_blockmax
-    assert info2 is not None and info2.get("mode") != "maxscore"
+    info2 = idx.last_blockmax_batch
+    assert info2 is not None and info2["split_served"] == [], info2
 
 
 def test_memo_batch_frontier_no_clobber():
@@ -1106,9 +1129,9 @@ def test_driver_row_maxscore_split_mutated_engages(spark):
     assert len(got) == 10
     ti = _shared_mutated_text_index(spark, SF_SMOKE)
     ti.search(SPLIT_TERMS, k=10, block_max=True).collect()
-    info = ti.last_blockmax
-    assert info is not None and info.get("mode") == "maxscore", info
-    assert info["dirty"] is True and info["essential"] == ["dup"]
+    info = ti.last_blockmax_batch
+    assert info is not None and info["split_served"] == [0], info
+    assert info["dirty"] is True and info["essential"][0] == ["dup"]
 
 
 @pytest.mark.slow
