@@ -91,9 +91,8 @@ def _host_probe(n: int = 9) -> dict[str, float]:
     the repo: quiet sessions measure a ~15-35 ms median (3 sessions
     sampled r12), while the r12 attribution session — minutes after an
     interleaved gate/knn A/A on byte-identical code had degraded 2-3x in
-    lockstep across all four arms (examples/ab_r11_hotkeys.py) — read
-    the SAME matmul at 249-1124 ms over 12 s with load avg 2.6 and no
-    visible process.  A bench record whose pre/post probes sit well
+    lockstep across all four arms — read the SAME matmul at 249-1124 ms
+    over 12 s with load avg 2.6 and no visible process.  A bench record whose pre/post probes sit well
     above the quiet floor was taken on a contended session; read its
     per-key band breaches against the (probe / floor) ratio before
     blaming any plan."""

@@ -43,6 +43,13 @@ from binaryvectordb_spark.operators.cascade import (
     DEFAULT_K,
     cascade_search,
 )
+from binaryvectordb_spark.operators.local_serve import (
+    LocalCascadeSearcher,
+    LocalHybridServer,
+    ShardedLocalCascadeSearcher,
+    rerank_maxsim,
+    rrf_fuse,
+)
 
 _META = "_meta.json"
 _UNSET = object()
@@ -787,12 +794,6 @@ class BinaryVectorDB:
         return (self.spark.read.option("basePath", p).parquet(*dirs)
                 .drop("bucket"))
 
-    # within-bucket doc_id sort at write (round 8, commit a9d3985's
-    # change) — a REAL knob only so the A/B harness can isolate its
-    # ingest cost against the r7 unsorted shape in one session
-    # (examples/ab_r8_1m_family.py); production leaves it True
-    _SORT_BUCKETS_AT_WRITE = True
-
     def _stage(self, df: DataFrame, name: str, nparts: int,
                sort_cols: Sequence[str] = (),
                writer_opts: dict | None = None) -> dict[str, list[str]]:
@@ -829,7 +830,7 @@ class BinaryVectorDB:
         if sort_cols:
             staged = (staged.sortWithinPartitions(*part_cols, *sort_cols)
                       .drop(*sort_cols))
-        elif self._SORT_BUCKETS_AT_WRITE and "doc_id" in df.columns:
+        elif "doc_id" in df.columns:
             staged = staged.sortWithinPartitions(*part_cols, "doc_id")
         w = staged.write.mode("overwrite")
         for k, v in (writer_opts or {}).items():
@@ -1835,8 +1836,6 @@ class BinaryVectorDB:
             h["doc"] = payloads.get(h["doc_id"])
         return hits
 
-    RRF_K = 60
-
     def search_hybrid(self, terms: Sequence[str], query,
                       k: int = DEFAULT_K, depth: int = 100,
                       maxsim_rerank: bool = False) -> list[dict]:
@@ -1868,41 +1867,12 @@ class BinaryVectorDB:
         else:
             vec = {h["doc_id"]: i + 1
                    for i, h in enumerate(self.search(query, k=depth))}
-        fused = []
-        for doc_id in set(kw) | set(vec):
-            score = 0.0
-            if doc_id in kw:
-                score += 1.0 / (self.RRF_K + kw[doc_id])
-            if doc_id in vec:
-                score += 1.0 / (self.RRF_K + vec[doc_id])
-            fused.append((doc_id, score))
-        fused.sort(key=lambda t: (-t[1], t[0]))
-        top = fused[:k]
+        hits = rrf_fuse(kw, vec, k)
         payloads = (loc[2] if loc is not None
-                    else self.get_docs([d for d, _ in top]))
-        hits = [{"doc_id": d, "rrf": s,
-                 "kw_rank": kw.get(d), "vec_rank": vec.get(d),
-                 "doc": payloads.get(d)} for d, s in top]
-        if maxsim_rerank:
-            from binaryvectordb_spark.queries.lateinteraction import (
-                _emb_ints,
-            )
-            qembs = [_emb_ints(str(t)) for t in terms]
-
-            def maxsim(doc) -> int:
-                if not isinstance(doc, str) or not doc:
-                    return 0  # typed payloads carry no text to interact with
-                tembs = [_emb_ints(t) for t in set(doc.split(" "))]
-                return sum(max(sum(a * b for a, b in zip(q, te))
-                               for te in tembs) for q in qembs)
-
-            for i, h in enumerate(hits):
-                h["maxsim"] = maxsim(h["doc"])
-                h["_rrf_pos"] = i
-            hits.sort(key=lambda h: (-h["maxsim"], h["_rrf_pos"]))
-            for h in hits:
-                del h["_rrf_pos"]
-        return hits
+                    else self.get_docs([h["doc_id"] for h in hits]))
+        for h in hits:
+            h["doc"] = payloads.get(h["doc_id"])
+        return rerank_maxsim(hits, terms) if maxsim_rerank else hits
 
     def search_text_batch(self, terms_batch: Sequence[Sequence[str]],
                           k: int = DEFAULT_K) -> list[list[dict]]:
@@ -1968,28 +1938,16 @@ class BinaryVectorDB:
         for r in kw_rows:
             kw_by_q.setdefault(r["qid"], {})[r["doc_id"]] = r["kw_rank"]
         vec_lists = self.search_batch(queries, k=depth)
-        fused_all, want_ids = [], set()
-        for i in range(len(terms_batch)):
-            kw = kw_by_q.get(i, {})
-            vec = {h["doc_id"]: j + 1
-                   for j, h in enumerate(vec_lists[i])}
-            fused = []
-            for doc_id in set(kw) | set(vec):
-                score = 0.0
-                if doc_id in kw:  # kw add first — search_hybrid's order
-                    score += 1.0 / (self.RRF_K + kw[doc_id])
-                if doc_id in vec:
-                    score += 1.0 / (self.RRF_K + vec[doc_id])
-                fused.append((doc_id, score))
-            fused.sort(key=lambda t: (-t[1], t[0]))
-            top = fused[:k]
-            fused_all.append((top, kw, vec))
-            want_ids.update(d for d, _ in top)
-        payloads = self.get_docs(sorted(want_ids))
-        return [[{"doc_id": d, "rrf": s,
-                  "kw_rank": kw.get(d), "vec_rank": vec.get(d),
-                  "doc": payloads.get(d)} for d, s in top]
-                for top, kw, vec in fused_all]
+        fused_all = [rrf_fuse(kw_by_q.get(i, {}),
+                              {h["doc_id"]: j + 1
+                               for j, h in enumerate(vec_lists[i])}, k)
+                     for i in range(len(terms_batch))]
+        payloads = self.get_docs(sorted({h["doc_id"] for hits in fused_all
+                                         for h in hits}))
+        for hits in fused_all:
+            for h in hits:
+                h["doc"] = payloads.get(h["doc_id"])
+        return fused_all
 
     def expect(self, checks, record: bool = True) -> dict[str, int]:
         """User-declared pre-publish expectations on the documents table
@@ -2380,18 +2338,13 @@ class BinaryVectorDB:
         attached.  Stale memos (any committed mutation) rebuild here."""
         if self._local_serve_shards is None:
             return None
+        # flush first, so the memo key is the version to_local_searcher
+        # (which flushes too) materializes
+        self._flush_pending()
         v = self._manifest_version()
         if self._local_serve is not None and self._local_serve[0] == v:
             return self._local_serve[1:]
-        from binaryvectordb_spark.operators.local_serve import (
-            LocalCascadeSearcher,
-            ShardedLocalCascadeSearcher,
-        )
-        idx = self.index_df()
-        if idx is None or not idx.take(1):
-            raise Exception("Index is empty; add documents first")
-        base = LocalCascadeSearcher.from_dataframes(
-            idx, self.docs_df(), self.dim, embed_fn=self.embed_fn)
+        base = self.to_local_searcher()
         # the in-RAM doc map (the reference keeps payloads in RocksDB and
         # reads them per hit; here they're already collected for Phase III,
         # so point lookups are a dict get) — decoded identically to
@@ -2416,10 +2369,6 @@ class BinaryVectorDB:
         one node's RAM: one searcher per shard, phase-wise fan-out + global
         merge, still bit-identical.  The Spark cascade remains the
         batch/throughput path."""
-        from binaryvectordb_spark.operators.local_serve import (
-            LocalCascadeSearcher,
-            ShardedLocalCascadeSearcher,
-        )
         self._flush_pending()
         idx = self.index_df()
         if idx is None or not idx.take(1):
@@ -2435,15 +2384,12 @@ class BinaryVectorDB:
         """Materialize the RAM-tier router and persist its shards to disk
         for CROSS-PROCESS serving: each ``shard_<i>/`` dir under the
         returned path is independently loadable on a different host
-        (LocalCascadeSearcher.load — numpy + json only, no Spark), and
+        (LocalCascadeSearcher.load — numpy + json, no SparkSession), and
         ``router.json`` stamps the DB's committed manifest version so a
         serving fleet can verify every node holds a disjoint shard of the
         SAME snapshot.  Default path is ``<folder>/_serving/v<version>`` —
         version-suffixed, so a re-export after new commits lands beside the
         old one and traffic flips atomically by path."""
-        from binaryvectordb_spark.operators.local_serve import (
-            ShardedLocalCascadeSearcher,
-        )
         self._flush_pending()
         # from_searcher handles n_shards=1 (a single-shard router), so both
         # cases reduce to one construction
@@ -2465,9 +2411,6 @@ class BinaryVectorDB:
         """Load a persisted serving export (export_serving_shards).  By
         default the export must match the DB's CURRENT manifest version —
         pass allow_stale=True to serve a superseded snapshot knowingly."""
-        from binaryvectordb_spark.operators.local_serve import (
-            ShardedLocalCascadeSearcher,
-        )
         v = self._manifest_version()
         p = path or os.path.join(self.folder, "_serving", f"v{v}")
         if path is None and not os.path.isdir(p):
@@ -2500,9 +2443,6 @@ class BinaryVectorDB:
         LocalHybridServer answers search/search_text/search_hybrid with no
         Spark involvement — and any process can load the same directory
         via LocalHybridServer.load directly."""
-        from binaryvectordb_spark.operators.local_serve import (
-            LocalHybridServer,
-        )
         v = self._manifest_version()
         p = path or os.path.join(self.folder, "_serving", f"v{v}")
         if path is None and not os.path.isdir(p):

@@ -34,9 +34,11 @@ are reserved for logic expressions cannot express (multimodal decode).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from binaryvectordb_spark.functions import kernels
 from binaryvectordb_spark.functions.vector import (
     NUM_LANES,
     binary_dot,
@@ -108,6 +110,45 @@ def _query_df(spark_source: DataFrame, query_vec, dim: int):
     return q.select("qvec", pack_bits("qvec", dim).alias("qbits"))
 
 
+def _resolve_query(index_df: DataFrame, dim: int, query_vec,
+                   query_df: DataFrame | None) -> DataFrame:
+    """The 1-row (qvec, qbits) query frame from either calling form."""
+    if query_df is None:
+        return _query_df(index_df, query_vec, dim)
+    if "qbits" in query_df.columns:
+        return query_df
+    return query_df.select("qvec", pack_bits("qvec", dim).alias("qbits"))
+
+
+def _phase1(index_df: DataFrame, q: DataFrame, dim: int) -> DataFrame:
+    """Phase I scored scan (doc_id, vec, qvec, score_hamming); callers add
+    the top-k (TakeOrderedAndProject; no shuffle of the scan)."""
+    return (index_df.join(F.broadcast(q))
+            .select("doc_id", "vec", "qvec",
+                    hamming("qbits", "vec", NUM_LANES(dim)).alias("score_hamming")))
+
+
+def _phases23(p1: DataFrame, doc_df: DataFrame, dim: int,
+              rescore_k: int, k: int) -> DataFrame:
+    """Phases II and III over the Phase-I candidates ``p1``."""
+    # Phase II — rescore all Phase-I candidates (tiny), truncate
+    p2 = (p1.select("doc_id", "qvec", "score_hamming",
+                    binary_dot("qvec", "vec", dim).alias("score_binary"))
+          .orderBy(F.desc("score_binary"), F.asc("doc_id"))
+          .limit(rescore_k))
+
+    # Phase III — broadcast candidates against the documents table (late
+    # materialization: payload + int8 read only for survivors, :236-241).
+    # doc_kind (typed-payload tag, db.py) rides along when the store has it.
+    extra = [c for c in doc_df.columns if c == "doc_kind"]
+    return (F.broadcast(p2).join(doc_df, "doc_id")
+            .select("doc_id", "score_hamming", "score_binary",
+                    int8_cosine("qvec", "emb_int8").alias("score_cossim"),
+                    "doc", *extra)
+            .orderBy(F.desc("score_cossim"), F.asc("doc_id"))
+            .limit(k))
+
+
 def cascade_search(index_df: DataFrame, doc_df: DataFrame, dim: int,
                    query_vec=None, query_df: DataFrame | None = None,
                    k: int = DEFAULT_K,
@@ -120,40 +161,13 @@ def cascade_search(index_df: DataFrame, doc_df: DataFrame, dim: int,
     ``query_df`` must be a 1-row frame with a float-array column ``qvec``
     (and optionally precomputed ``qbits``); otherwise pass ``query_vec``.
     """
-    if query_df is None:
-        q = _query_df(index_df, query_vec, dim)
-    else:
-        q = query_df
-        if "qbits" not in q.columns:
-            q = q.select("qvec", pack_bits("qvec", dim).alias("qbits"))
-
+    q = _resolve_query(index_df, dim, query_vec, query_df)
     binary_k = k * binary_oversample       # LIMIT clamps to ntotal implicitly (:204)
     rescore_k = k * int8_oversample        # NOT ntotal-clamped, as in :230
-
-    # Phase I — scored scan + top-k (TakeOrderedAndProject; no shuffle of the scan)
-    p1 = (index_df.join(F.broadcast(q))
-          .select("doc_id", "vec", "qvec",
-                  hamming("qbits", "vec", NUM_LANES(dim)).alias("score_hamming"))
+    p1 = (_phase1(index_df, q, dim)
           .orderBy(F.asc("score_hamming"), F.asc("doc_id"))
           .limit(binary_k))
-
-    # Phase II — rescore all Phase-I candidates (tiny), truncate
-    p2 = (p1.select("doc_id", "qvec", "score_hamming",
-                    binary_dot("qvec", "vec", dim).alias("score_binary"))
-          .orderBy(F.desc("score_binary"), F.asc("doc_id"))
-          .limit(rescore_k))
-
-    # Phase III — broadcast candidates against the documents table (late
-    # materialization: payload + int8 read only for survivors, :236-241).
-    # doc_kind (typed-payload tag, db.py) rides along when the store has it.
-    extra = [c for c in doc_df.columns if c == "doc_kind"]
-    p3 = (F.broadcast(p2).join(doc_df, "doc_id")
-          .select("doc_id", "score_hamming", "score_binary",
-                  int8_cosine("qvec", "emb_int8").alias("score_cossim"),
-                  "doc", *extra)
-          .orderBy(F.desc("score_cossim"), F.asc("doc_id"))
-          .limit(k))
-    return p3
+    return _phases23(p1, doc_df, dim, rescore_k, k)
 
 
 def cascade_search_filtered_adaptive(
@@ -194,17 +208,10 @@ def cascade_search_filtered_adaptive(
             query_vec=query_vec, query_df=query_df, k=k)
         return hits.withColumn("strategy", F.lit("prefilter"))
 
-    if query_df is None:
-        q = _query_df(index_df, query_vec, dim)
-    else:
-        q = query_df
-        if "qbits" not in q.columns:
-            q = q.select("qvec", pack_bits("qvec", dim).alias("qbits"))
+    q = _resolve_query(index_df, dim, query_vec, query_df)
     binary_k = k * DEFAULT_BINARY_OVERSAMPLE * overfetch
     rescore_k = k * DEFAULT_INT8_OVERSAMPLE
-    p1 = (index_df.join(F.broadcast(q))
-          .select("doc_id", "vec", "qvec",
-                  hamming("qbits", "vec", NUM_LANES(dim)).alias("score_hamming"))
+    p1 = (_phase1(index_df, q, dim)
           .orderBy(F.asc("score_hamming"), F.asc("doc_id"))
           .limit(binary_k))
     # Materialize the over-fetched pool's ids ONCE: Spark does not reuse
@@ -222,36 +229,23 @@ def cascade_search_filtered_adaptive(
     surv_ids = [r[0] for r in
                 eligible.where(F.col("doc_id").isin(pool_ids))
                 .select("doc_id").collect()] if pool_ids else []
-    p1f = (index_df.where(F.col("doc_id").isin(surv_ids)
-                          if surv_ids else F.lit(False))
-           .join(F.broadcast(q))
-           .select("doc_id", "vec", "qvec",
-                   hamming("qbits", "vec", NUM_LANES(dim))
-                   .alias("score_hamming")))
-    p2 = (p1f.select("doc_id", "qvec", "score_hamming",
-                     binary_dot("qvec", "vec", dim).alias("score_binary"))
-          .orderBy(F.desc("score_binary"), F.asc("doc_id"))
-          .limit(rescore_k))
-    extra = [c for c in doc_df.columns if c == "doc_kind"]
-    p3 = (F.broadcast(p2).join(doc_df, "doc_id")
-          .select("doc_id", "score_hamming", "score_binary",
-                  int8_cosine("qvec", "emb_int8").alias("score_cossim"),
-                  "doc", *extra)
-          .orderBy(F.desc("score_cossim"), F.asc("doc_id"))
-          .limit(k))
-    return p3.withColumn("strategy", F.lit("postfilter"))
+    p1f = _phase1(index_df.where(F.col("doc_id").isin(surv_ids)
+                                 if surv_ids else F.lit(False)), q, dim)
+    return (_phases23(p1f, doc_df, dim, rescore_k, k)
+            .withColumn("strategy", F.lit("postfilter")))
 
 
 def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
                        binary_k: int) -> DataFrame:
     """One-pass batched Phase I+II scoring: an Arrow kernel computes, per
-    index partition, the exact local top-``binary_k`` per query (SWAR
-    popcount on the packed uint64 lanes) AND the Phase-II score
-    ``q_float . (2b-1)`` for those survivors — so the big scan happens ONCE,
-    only ~binary_k x n_queries slim rows per partition enter the global rank
-    window, and no second index pass is needed to re-attach vectors.
+    index partition, the exact local top-``binary_k`` per query (±1 GEMM
+    hamming over the unpacked sign bits, functions/kernels.py) AND the
+    Phase-II score ``q_float . (2b-1)`` for those survivors — so the big
+    scan happens ONCE, only ~binary_k x n_queries slim rows per partition
+    enter the global rank window, and no second index pass is needed to
+    re-attach vectors.
 
-    Selection inside a batch uses the composite key (score, doc_id-rank), so
+    Selection inside a batch uses the composite key (score, doc_id), so
     tie-breaking matches the global (score asc, doc_id asc) order exactly.
     score_binary is folded left-to-right over ascending dimension in float64
     — bit-identical to functions/vector.py binary_dot and to the DuckDB
@@ -265,7 +259,6 @@ def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
     O(n_queries x arrow_batch_rows), so a very large query batch is split
     by the caller into several ``cascade_search_batch`` calls.
     """
-    import numpy as np
     import pyarrow as pa
 
     qrows = (queries_df.select("qid", F.col("qvec").cast("array<float>"))
@@ -288,43 +281,10 @@ def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
     bc = index_df.sparkSession.sparkContext.broadcast(
         (qids, qmat.astype(np.float64), binary_k, NUM_LANES(dim)))
 
-    def _local_topk(d, ids, kk, nq, nbins):
-        """Exact per-query top-kk row indices by (score asc, doc_id asc):
-        a per-query score histogram (hamming has only dim+1 values) gives
-        the cutoff score; ties AT the cutoff resolve by smallest doc_id.
-        Row scans are single global nonzero passes — measured ~5x over
-        argpartition on a (score, rank) composite key."""
-        import numpy as np
-        cum = (np.bincount(
-            (d + (np.arange(nq, dtype=np.int32) * nbins)[:, None]).ravel(),
-            minlength=nq * nbins).reshape(nq, nbins).cumsum(axis=1))
-        cut = (cum >= kk).argmax(axis=1)
-        below_mask = d < cut[:, None]
-        n_below = below_mask.sum(axis=1)
-        _, bcol = np.nonzero(below_mask)
-        boffs = np.concatenate(([0], np.cumsum(n_below)))
-        tr, tcol = np.nonzero(d == cut[:, None])
-        n_tie = np.bincount(tr, minlength=nq)
-        toffs = np.concatenate(([0], np.cumsum(n_tie)))
-        sel_rows = []
-        for i in range(nq):
-            tie = tcol[toffs[i]:toffs[i + 1]]
-            need = kk - n_below[i]
-            if need < len(tie):
-                tie = tie[np.argpartition(ids[tie], need - 1)[:need]]
-            sel_rows.append(np.concatenate(
-                (bcol[boffs[i]:boffs[i + 1]], tie)))
-        return np.stack(sel_rows)                                  # (nq, kk)
-
     def kernel(batches):
         np_qids, np_qf, bk, lanes = bc.value
         nq = len(np_qids)
-        dim_ = np_qf.shape[1]
-        nbins = dim_ + 1
-        # ±1 query matrix (float32): hamming(q, d) = (dim - qpm·dpm)/2, and
-        # the GEMM sum of ±1 terms is integer-valued => EXACT in float32 up
-        # to dim 2^24, independent of BLAS fold order.
-        qpm = np.where(np_qf >= 0, np.float32(1), np.float32(-1))
+        qpm = kernels.sign_pm1(np_qf)
 
         def merge(q1, d1, s1, v1, q2, d2, s2, v2):
             """Exact running top-bk merge of two candidate sets: order by
@@ -355,15 +315,10 @@ def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
             b = len(ids)
             if b == 0:
                 continue
-            # unpack LSB-first lanes (little-endian platform => uint8 view
-            # preserves dimension order) to a ±1 matrix, score via GEMM
-            bits = np.unpackbits(vec.view(np.uint8), axis=1,
-                                 bitorder="little")[:, :dim_]
-            dpm = bits.astype(np.float32) * 2 - 1
-            d = ((dim_ - qpm @ dpm.T) * 0.5).astype(np.int32)     # (nq, b)
-
+            d = kernels.hamming_pm1(qpm, kernels.unpack_pm1(vec, dim))
             kk = min(bk, b)
-            part = _local_topk(d, ids, kk, nq, nbins)
+            part = np.stack([kernels.select_topk(d[i], ids, kk)
+                             for i in range(nq)])                 # (nq, kk)
             flat = part.ravel()
             qs, ds, ss, vs = merge(
                 qs, ds, ss, vs,
@@ -374,19 +329,8 @@ def _phase1_arrow_topk(index_df: DataFrame, dim: int, queries_df: DataFrame,
 
         if len(qs) == 0:
             return
-
-        # Phase-II score: signed contribution matrix (±q_d per set bit),
-        # folded left-to-right over dimensions — the F-contiguous layout
-        # makes each of the dim_ column adds a contiguous vector op while
-        # preserving the EXACT sequential fold order of the SQL expression
-        # and the DuckDB oracle
-        sel_bits = np.unpackbits(vs.view(np.uint8), axis=1,
-                                 bitorder="little")[:, :dim_]
-        signed = np.asfortranarray(
-            (sel_bits.astype(np.float64) * 2 - 1) * np_qf[qs])
-        acc = np.zeros(len(qs), dtype=np.float64)
-        for dd in range(dim_):
-            acc += signed[:, dd]
+        # Phase-II score of the survivors
+        acc = kernels.fold_dot(np_qf[qs], kernels.unpack_pm1(vs, dim))
         yield pa.record_batch(
             [pa.array(np_qids[qs]),
              pa.array(ds),

@@ -16,8 +16,13 @@ Semantics replicated exactly (operators/cascade.py, functions/vector.py):
 Float folds are strict left-to-right over ascending dimension in float64 —
 the same fold the SQL expressions and the DuckDB oracles use, so scores are
 bit-identical, not merely close.  Hamming uses the ±1 GEMM identity
-(dim − qpm·dpm)/2, integer-exact in float32 for dim < 2^24 (the same kernel
-trick as _phase1_arrow_topk).
+(dim − qpm·dpm)/2, integer-exact in float32 for dim < 2^24.  Every step
+runs on functions/kernels.py, the same kernels as the Arrow batch scan of
+cascade_search_batch; one phase-wise ``_cascade`` serves both searchers
+(the single searcher is its one-shard case).
+
+Serving hosts need no SparkSession or JVM, but pyspark must be importable
+(this module imports operators/cascade.py for the phase defaults).
 
 Scale position: this is a SERVING tier, not a query engine — memory is
 O(n_shard × dim).  At 100 TB you run one searcher per cached shard behind a
@@ -31,6 +36,7 @@ import json
 
 import numpy as np
 
+from binaryvectordb_spark.functions import kernels
 from binaryvectordb_spark.operators.cascade import (
     DEFAULT_BINARY_OVERSAMPLE,
     DEFAULT_INT8_OVERSAMPLE,
@@ -46,6 +52,79 @@ def _arrow_column_matrix(tbl, name: str, dtype, width: int) -> np.ndarray:
     return flat.reshape(len(tbl), width)
 
 
+def _query_vector(query, embed_fn, dim: int) -> np.ndarray:
+    """A text (embedded by ``embed_fn``) or vector query as a validated
+    float32 ``(dim,)`` vector."""
+    if isinstance(query, str):
+        if embed_fn is None:
+            raise ValueError("text query needs an embed_fn")
+        query = embed_fn([query])[0]
+    qf = np.asarray(query, dtype=np.float32)
+    if qf.shape != (dim,):
+        raise ValueError(f"query shape {qf.shape} != dim {dim}")
+    if not np.isfinite(qf).all():
+        raise ValueError("query vectors must be finite (got NaN/Inf)")
+    return qf
+
+
+def _cascade(shards: list, qf: np.ndarray, k: int, binary_oversample: int,
+             int8_oversample: int, pool) -> list[dict]:
+    """The phase-wise cascade over disjoint doc_id shards (one shard is the
+    single searcher's case).  Phase I runs on every shard (on ``pool`` when
+    given — the GEMM releases the GIL, so shards scan concurrently), then
+    the merged candidates are re-selected GLOBALLY by (hamming asc, doc_id
+    asc); Phases II/III score that set on the owning shards and truncate
+    by (score desc, doc_id asc).  See ShardedLocalCascadeSearcher for why
+    this is exact."""
+    binary_k = min(k * binary_oversample, sum(s.n for s in shards))
+    rescore_k = k * int8_oversample      # NOT clamped, as in :230
+    qpm = kernels.sign_pm1(qf)
+    q64 = qf.astype(np.float64)
+
+    def phase1(si):
+        s = shards[si]
+        h = kernels.hamming_pm1(qpm, s.dpm)
+        cand = kernels.select_topk(h, s.doc_ids, binary_k)
+        return (np.full(len(cand), si, dtype=np.int32),
+                cand, h[cand], s.doc_ids[cand])
+
+    parts = (list(pool.map(phase1, range(len(shards)))) if pool
+             else [phase1(si) for si in range(len(shards))])
+    sh, rows, hs, ids = (np.concatenate([p[j] for p in parts])
+                         for j in range(4))
+    keep = np.lexsort((ids, hs))[:binary_k]
+    sh, rows, hs, ids = sh[keep], rows[keep], hs[keep], ids[keep]
+
+    def on_shards(score):
+        out = np.empty(len(rows), dtype=np.float64)
+        for si, s in enumerate(shards):
+            m = sh == si
+            if m.any():
+                out[m] = score(s, rows[m])
+        return out
+
+    # Phase II — ±q contribution fold, global top-rescore_k
+    s2 = on_shards(lambda s, r: kernels.fold_dot(q64, s.dpm[r]))
+    o2 = np.lexsort((ids, -s2))[:rescore_k]
+    sh, rows, hs, ids, s2 = (a[o2] for a in (sh, rows, hs, ids, s2))
+
+    # Phase III — doc-side-norm int8 cosine, global top-k
+    def int8_cosine(s, r):
+        i8 = s.emb_int8[r].astype(np.float64)
+        nrm = np.sqrt(kernels.fold_dot(np.ones(s.dim), i8 * i8))
+        return np.where(nrm > 0, kernels.fold_dot(q64, i8)
+                        / np.where(nrm > 0, nrm, 1.0), 0.0)
+
+    s3 = on_shards(int8_cosine)
+    o3 = np.lexsort((ids, -s3))[:k]
+    return [{"doc_id": int(ids[i]),
+             "score_hamming": int(hs[i]),
+             "score_binary": float(s2[i]),
+             "score_cossim": float(s3[i]),
+             "doc": shards[sh[i]].payloads[rows[i]]}
+            for i in o3]
+
+
 class LocalCascadeSearcher:
     """In-process cascade over a materialized index shard.
 
@@ -56,8 +135,8 @@ class LocalCascadeSearcher:
     def __init__(self, doc_ids: np.ndarray, dpm: np.ndarray,
                  emb_int8: np.ndarray, payloads: list, dim: int,
                  embed_fn=None):
-        order = np.argsort(doc_ids)          # doc_id asc == row order, so a
-        self.doc_ids = doc_ids[order]        # row index is a tie-break rank
+        order = np.argsort(doc_ids)          # rows in doc_id order
+        self.doc_ids = doc_ids[order]
         self.dpm = dpm[order]                # (n, dim) float32 ±1 doc bits
         self.emb_int8 = emb_int8[order]      # (n, dim) int8
         self.payloads = [payloads[i] for i in order]
@@ -70,13 +149,9 @@ class LocalCascadeSearcher:
                         ) -> "LocalCascadeSearcher":
         from binaryvectordb_spark.functions.vector import NUM_LANES
 
-        lanes = NUM_LANES(dim)
         itbl = index_df.select("doc_id", "vec").toArrow()
         ids = itbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-        packed = _arrow_column_matrix(itbl, "vec", np.int64, lanes).view(np.uint64)
-        bits = np.unpackbits(packed.view(np.uint8), axis=1,
-                             bitorder="little")[:, :dim]
-        dpm = bits.astype(np.float32) * 2 - 1
+        packed = _arrow_column_matrix(itbl, "vec", np.int64, NUM_LANES(dim))
 
         cols = ["doc_id", "doc", "emb_int8"]
         has_kind = "doc_kind" in doc_df.columns
@@ -92,93 +167,14 @@ class LocalCascadeSearcher:
         # align the doc store to the index rows by doc_id
         pos = {int(i): p for p, i in enumerate(dids)}
         sel = np.array([pos[int(i)] for i in ids], dtype=np.int64)
-        return cls(ids, dpm, i8[sel], [payloads[p] for p in sel], dim,
-                   embed_fn=embed_fn)
-
-    def _fold_dot(self, q64: np.ndarray, mat64: np.ndarray) -> np.ndarray:
-        """acc += q[d] * mat[:, d] over ascending d — the exact sequential
-        fold of functions/vector.py dot/binary_dot (never a BLAS dot, whose
-        pairwise fold drifts ULPs)."""
-        acc = np.zeros(mat64.shape[0], dtype=np.float64)
-        for d in range(self.dim):
-            acc += q64[d] * mat64[:, d]
-        return acc
-
-    # -- phase kernels (shared by single-shard search and the sharded
-    #    router, which does the GLOBAL selection between phases itself) -----
-    def _validate_query(self, query) -> np.ndarray:
-        if isinstance(query, str):
-            if self.embed_fn is None:
-                raise ValueError("text query needs an embed_fn")
-            qf = np.asarray(self.embed_fn([query])[0], dtype=np.float32)
-        else:
-            qf = np.asarray(query, dtype=np.float32)
-        if qf.shape != (self.dim,):
-            raise ValueError(f"query shape {qf.shape} != dim {self.dim}")
-        if not np.isfinite(qf).all():
-            raise ValueError("query vectors must be finite (got NaN/Inf)")
-        return qf
-
-    def _hamming_all(self, qf: np.ndarray) -> np.ndarray:
-        """Phase I scores for every row — GEMM hamming via the ±1 identity."""
-        qpm = np.where(qf >= 0, np.float32(1), np.float32(-1))
-        return ((self.dim - self.dpm @ qpm) * 0.5).astype(np.int32)
-
-    def _phase1_select(self, h: np.ndarray, binary_k: int) -> np.ndarray:
-        """Histogram-cutoff top-binary_k row indices (hamming has only dim+1
-        values; ~5x faster than an argpartition composite key at 1M rows —
-        same selection trick as _phase1_arrow_topk).  The selected SET is
-        exactly the (h asc, doc_id asc) top-binary_k: everything below the
-        cutoff score, plus the smallest-row ties AT it (rows are
-        doc_id-ordered); later phases re-sort by their own keys, so no
-        ordering of the set itself is needed."""
-        if binary_k < self.n:
-            cum = np.bincount(h, minlength=self.dim + 1).cumsum()
-            c = int(np.searchsorted(cum, binary_k))
-            below = np.flatnonzero(h < c)
-            ties = np.flatnonzero(h == c)[:binary_k - len(below)]
-            return np.concatenate((below, ties))
-        return np.arange(self.n)
-
-    def _binary_scores(self, q64: np.ndarray, rows: np.ndarray) -> np.ndarray:
-        """Phase II — ±q contribution fold on the given rows."""
-        return self._fold_dot(q64, self.dpm[rows].astype(np.float64))
-
-    def _int8_scores(self, q64: np.ndarray, rows: np.ndarray) -> np.ndarray:
-        """Phase III — doc-side-norm int8 cosine on the given rows."""
-        i8 = self.emb_int8[rows].astype(np.float64)
-        d3 = self._fold_dot(q64, i8)
-        nrm = np.sqrt(self._fold_dot(np.ones(self.dim), i8 * i8))
-        return np.where(nrm > 0, d3 / np.where(nrm > 0, nrm, 1.0), 0.0)
+        return cls(ids, kernels.unpack_pm1(packed, dim), i8[sel],
+                   [payloads[p] for p in sel], dim, embed_fn=embed_fn)
 
     def search(self, query, k: int = DEFAULT_K,
                binary_oversample: int = DEFAULT_BINARY_OVERSAMPLE,
                int8_oversample: int = DEFAULT_INT8_OVERSAMPLE) -> list[dict]:
-        qf = self._validate_query(query)
-        binary_k = min(k * binary_oversample, self.n)
-        rescore_k = k * int8_oversample      # NOT clamped, as in :230
-
-        # Phase I
-        h = self._hamming_all(qf)
-        cand = self._phase1_select(h, binary_k)
-
-        # Phase II — tie-break by row index == doc_id asc (rows are sorted)
-        q64 = qf.astype(np.float64)
-        s2 = self._binary_scores(q64, cand)
-        o2 = np.lexsort((cand, -s2))[:rescore_k]
-        cand2, s2 = cand[o2], s2[o2]
-
-        # Phase III
-        s3 = self._int8_scores(q64, cand2)
-        o3 = np.lexsort((cand2, -s3))[:k]
-
-        h2 = h[cand2]
-        return [{"doc_id": int(self.doc_ids[cand2[i]]),
-                 "score_hamming": int(h2[i]),
-                 "score_binary": float(s2[i]),
-                 "score_cossim": float(s3[i]),
-                 "doc": self.payloads[cand2[i]]}
-                for i in o3]
+        return _cascade([self], _query_vector(query, self.embed_fn, self.dim),
+                        k, binary_oversample, int8_oversample, None)
 
     def search_batch(self, queries, **kw) -> list[list[dict]]:
         return [self.search(q, **kw) for q in queries]
@@ -187,7 +183,7 @@ class LocalCascadeSearcher:
     # A materialized shard saves to a plain directory: one .npz with the
     # numeric arrays (doc bits re-PACKED 8-per-byte — 8x smaller than the
     # ±1 float32 working form) plus JSON payloads/meta.  Any process — a
-    # serving node with no Spark at all — loads it back bit-identical.
+    # serving node with no SparkSession or JVM — loads it back bit-identical.
 
     def save(self, path: str) -> None:
         import os
@@ -217,12 +213,10 @@ class LocalCascadeSearcher:
             meta = json.load(f)
         dim = int(meta["dim"])
         arrs = np.load(os.path.join(path, "arrays.npz"))
-        bits = np.unpackbits(arrs["packed_bits"], axis=1,
-                             bitorder="little")[:, :dim]
         with open(os.path.join(path, "payloads.json")) as f:
             payloads = json.load(f)
         return cls(arrs["doc_ids"].astype(np.int64),
-                   bits.astype(np.float32) * 2 - 1,
+                   kernels.unpack_pm1(arrs["packed_bits"], dim),
                    arrs["emb_int8"].astype(np.int8), payloads, dim,
                    embed_fn=embed_fn)
 
@@ -299,60 +293,10 @@ class ShardedLocalCascadeSearcher:
     def search(self, query, k: int = DEFAULT_K,
                binary_oversample: int = DEFAULT_BINARY_OVERSAMPLE,
                int8_oversample: int = DEFAULT_INT8_OVERSAMPLE) -> list[dict]:
-        ref = self.shards[0]
-        qf = (ref._validate_query(query) if not isinstance(query, str)
-              else self._embed(query))
-        binary_k = min(k * binary_oversample, self.n)
-        rescore_k = k * int8_oversample
-        q64 = qf.astype(np.float64)
-
-        # Phase I on every shard (threaded fan-out — the GEMM releases the
-        # GIL, so shards scan concurrently), then GLOBAL re-select by
-        # (h, doc_id)
-        def _p1(args):
-            si, s = args
-            h = s._hamming_all(qf)
-            cand = s._phase1_select(h, min(binary_k, s.n))
-            return (np.full(len(cand), si, dtype=np.int32),
-                    cand, h[cand], s.doc_ids[cand])
-
-        pool = self._phase1_pool()
-        parts = (list(pool.map(_p1, enumerate(self.shards))) if pool
-                 else [_p1(a) for a in enumerate(self.shards)])
-        sh, rows, hs, ids = (np.concatenate([p[j] for p in parts])
-                             for j in range(4))
-        keep = np.lexsort((ids, hs))[:binary_k]
-        sh, rows, hs, ids = sh[keep], rows[keep], hs[keep], ids[keep]
-
-        # Phase II scores from the owning shards, global top-rescore_k
-        s2 = np.empty(len(rows), dtype=np.float64)
-        for si, s in enumerate(self.shards):
-            m = sh == si
-            if m.any():
-                s2[m] = s._binary_scores(q64, rows[m])
-        o2 = np.lexsort((ids, -s2))[:rescore_k]
-        sh, rows, hs, ids, s2 = (a[o2] for a in (sh, rows, hs, ids, s2))
-
-        # Phase III scores from the owning shards, global top-k
-        s3 = np.empty(len(rows), dtype=np.float64)
-        for si, s in enumerate(self.shards):
-            m = sh == si
-            if m.any():
-                s3[m] = s._int8_scores(q64, rows[m])
-        o3 = np.lexsort((ids, -s3))[:k]
-
-        return [{"doc_id": int(ids[i]),
-                 "score_hamming": int(hs[i]),
-                 "score_binary": float(s2[i]),
-                 "score_cossim": float(s3[i]),
-                 "doc": self.shards[sh[i]].payloads[rows[i]]}
-                for i in o3]
-
-    def _embed(self, query: str) -> np.ndarray:
-        if self.embed_fn is None:
-            raise ValueError("text query needs an embed_fn")
-        qf = np.asarray(self.embed_fn([query])[0], dtype=np.float32)
-        return self.shards[0]._validate_query(qf)
+        return _cascade(self.shards,
+                        _query_vector(query, self.embed_fn, self.dim),
+                        k, binary_oversample, int8_oversample,
+                        self._phase1_pool())
 
     def search_batch(self, queries, **kw) -> list[list[dict]]:
         return [self.search(q, **kw) for q in queries]
@@ -441,32 +385,77 @@ class ShardedLocalCascadeSearcher:
              for i in range(int(meta["n_shards"]))], embed_fn=embed_fn)
 
 
+RRF_K = 60
+
+
+def rrf_fuse(kw: dict, vec: dict, k: int) -> list[dict]:
+    """Reciprocal-rank fusion of two {doc_id: rank} lists -> the top-k
+    hits [{doc_id, rrf, kw_rank, vec_rank}] by (rrf desc, doc_id asc).
+    Every score is the same fixed two-add expression, keyword term first,
+    so every host that fuses (db.search_hybrid, its batch form and
+    LocalHybridServer) produces the same floats and the same order."""
+    fused = []
+    for doc_id in set(kw) | set(vec):
+        score = 0.0
+        if doc_id in kw:
+            score += 1.0 / (RRF_K + kw[doc_id])
+        if doc_id in vec:
+            score += 1.0 / (RRF_K + vec[doc_id])
+        fused.append((doc_id, score))
+    fused.sort(key=lambda t: (-t[1], t[0]))
+    return [{"doc_id": d, "rrf": s, "kw_rank": kw.get(d),
+             "vec_rank": vec.get(d)} for d, s in fused[:k]]
+
+
+def _emb_ints(token: str) -> list[int]:
+    """Inlined copy of queries/lateinteraction._emb_ints (md5-derived
+    8-dim integer token embedding) — copied rather than imported, because
+    importing that module loads the whole query registry; a test pins the
+    two implementations equal token-for-token."""
+    import hashlib
+
+    h = hashlib.md5(token.encode("utf-8")).hexdigest()
+    return [int(h[4 * j: 4 * j + 4], 16) % 13 - 6 for j in range(8)]
+
+
+def rerank_maxsim(hits: list[dict], terms) -> list[dict]:
+    """Re-order ``hits`` in place by exact-integer late-interaction MaxSim
+    between the query terms and each hit's str ``doc`` (the two-stage
+    ColBERT architecture; the distributed twin is search_maxsim_rerank).
+    Each hit gains ``maxsim``; the stable sort keeps the incoming (RRF)
+    order among ties.  Typed payloads carry no text and score 0."""
+    qembs = [_emb_ints(str(t)) for t in terms]
+
+    def maxsim(doc) -> int:
+        if not isinstance(doc, str) or not doc:
+            return 0
+        tembs = [_emb_ints(t) for t in set(doc.split(" "))]
+        return sum(max(sum(a * b for a, b in zip(q, te))
+                       for te in tembs) for q in qembs)
+
+    for h in hits:
+        h["maxsim"] = maxsim(h["doc"])
+    hits.sort(key=lambda h: -h["maxsim"])
+    return hits
+
+
 class LocalHybridServer:
     """Cross-process HYBRID serving node: the sharded vector cascade plus
     the lexical BM25 searcher, fused by the same RRF as db.search_hybrid —
-    numpy + json only, NO Spark on the serving host.  Load a directory
-    written by ``db.export_serving_shards()`` on a DB with a text index
-    (the bm25/ tier stages into the same atomic export swap).
+    numpy + json, no SparkSession or JVM on the serving host (pyspark
+    must be importable).  Load a directory written by
+    ``db.export_serving_shards()`` on a DB with a text index (the bm25/
+    tier stages into the same atomic export swap).
 
     Result contract: ``search_hybrid`` returns exactly what
     ``db.search_hybrid`` returns with local serving attached — the kw side
     replays the indexed BM25 float64 tree bit-for-bit, the vector side is
-    the bit-identical RAM-tier cascade, and the RRF score is the same
-    fixed two-add expression (kw term first), so the fused order matches
-    across process boundaries (pinned by subprocess-reload test)."""
+    the bit-identical RAM-tier cascade, and fusion and MaxSim rerank are
+    the same functions (rrf_fuse, rerank_maxsim), so the fused order
+    matches across process boundaries (pinned by subprocess-reload test).
+    """
 
-    RRF_K = 60
-
-    @staticmethod
-    def _emb_ints(token: str) -> list[int]:
-        """Inlined copy of queries/lateinteraction._emb_ints (md5-derived
-        8-dim integer token embedding) — copied rather than imported so a
-        serving host needs no pyspark install; a test pins the two
-        implementations equal token-for-token."""
-        import hashlib
-
-        h = hashlib.md5(token.encode("utf-8")).hexdigest()
-        return [int(h[4 * j: 4 * j + 4], 16) % 13 - 6 for j in range(8)]
+    _emb_ints = staticmethod(_emb_ints)   # the token embedding rerank uses
 
     def __init__(self, vec, bm25, embed_fn=None):
         self.vec = vec
@@ -494,39 +483,10 @@ class LocalHybridServer:
               for h in self.bm25.search(terms, k=depth)}
         vec = {h["doc_id"]: i + 1
                for i, h in enumerate(self.vec.search(query, k=depth))}
-        fused = []
-        for doc_id in set(kw) | set(vec):
-            score = 0.0
-            if doc_id in kw:  # kw add first — db.search_hybrid's exact
-                score += 1.0 / (self.RRF_K + kw[doc_id])   # two-add order
-            if doc_id in vec:
-                score += 1.0 / (self.RRF_K + vec[doc_id])
-            fused.append((doc_id, score))
-        fused.sort(key=lambda t: (-t[1], t[0]))
-        hits = [{"doc_id": d, "rrf": s,
-                 "kw_rank": kw.get(d), "vec_rank": vec.get(d),
-                 "doc": self.payloads.get(d)} for d, s in fused[:k]]
-        if maxsim_rerank:
-            # exact-integer MaxSim over the k payload strings — the same
-            # md5-derived token embeddings and tie-break (RRF position)
-            # as db.search_hybrid(maxsim_rerank=True), so the exported
-            # server re-orders identically (pinned in tests)
-            qembs = [self._emb_ints(str(t)) for t in terms]
-
-            def maxsim(doc) -> int:
-                if not isinstance(doc, str) or not doc:
-                    return 0
-                tembs = [self._emb_ints(t) for t in set(doc.split(" "))]
-                return sum(max(sum(a * b for a, b in zip(q, te))
-                               for te in tembs) for q in qembs)
-
-            for i, h in enumerate(hits):
-                h["maxsim"] = maxsim(h["doc"])
-                h["_rrf_pos"] = i
-            hits.sort(key=lambda h: (-h["maxsim"], h["_rrf_pos"]))
-            for h in hits:
-                del h["_rrf_pos"]
-        return hits
+        hits = rrf_fuse(kw, vec, k)
+        for h in hits:
+            h["doc"] = self.payloads.get(h["doc_id"])
+        return rerank_maxsim(hits, terms) if maxsim_rerank else hits
 
     @classmethod
     def load(cls, path: str, embed_fn=None,

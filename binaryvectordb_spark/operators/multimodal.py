@@ -35,13 +35,11 @@ def _spread(ids_df: DataFrame) -> DataFrame:
     on a cluster), not a tuned constant.
 
     Applied ONLY where the codec is expensive enough to beat the
-    shuffle + per-task overhead, measured interleaved on a quiet host
-    (examples/exp_multimodal_r16.py): jpeg 9.50 → 2.04 s (entropy
-    decode dominates), png parity at fixture scale (B/A 0.92–1.05,
-    median 0.99 over 7 interleaved rounds — kept: the zlib+filter codec
-    is the heavier kind that wins as soon as rows grow); ppm 0.56 →
-    1.30 s and bmp
-    0.50 → 0.95 s REGRESSED (raw byte-slicing codecs — the task
+    shuffle + per-task overhead, measured interleaved on a quiet host:
+    jpeg 9.50 → 2.04 s (entropy decode dominates), png parity at fixture
+    scale (B/A 0.92–1.05, median 0.99 over 7 interleaved rounds — kept:
+    the zlib+filter codec is the heavier kind that wins as soon as rows
+    grow); ppm 0.56 → 1.30 s and bmp 0.50 → 0.95 s REGRESSED (raw byte-slicing codecs — the task
     overhead exceeds the serial compute), so those generators keep the
     scan's own partitioning."""
     sc = ids_df.sparkSession.sparkContext

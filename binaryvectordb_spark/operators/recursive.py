@@ -57,8 +57,7 @@ def _next_level(frontier: DataFrame, edges: DataFrame,
     the anti-join while it is small (its LogicalRDD stats are unknown,
     so the planner never does it on its own) was parity-to-worse at
     sf0.1 — the per-level broadcast build costs what the tiny shuffle
-    anti-join costs — and ships O(V) per level at scale; declined
-    (examples/exp_recursion_r16.py session 2)."""
+    anti-join costs — and ships O(V) per level at scale; declined."""
     f_side = F.broadcast(frontier) if do_broadcast else frontier
     return (f_side.join(edges, F.col(node) == F.col(src))
             .select(F.col(dst).alias(node)).distinct()

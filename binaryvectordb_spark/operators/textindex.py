@@ -1785,7 +1785,7 @@ class LocalBM25Searcher:
 
     # -- persistence (cross-process lexical serving) -------------------------
     # Mirrors LocalCascadeSearcher.save/load: a plain directory any process
-    # (numpy + json, no Spark) loads back bit-identical — the lexical half
+    # (numpy + json, no SparkSession) loads back bit-identical — the lexical half
     # of a hybrid serving node.
 
     def save(self, path: str) -> None:

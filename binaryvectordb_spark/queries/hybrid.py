@@ -114,9 +114,8 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches at least one term.
 
     dl joins PLAIN (no candidates-only semi-join prune): the round-8
-    interleaved A/B (examples/ab_r7_regressions.py, NOTES.md) measured
-    the r7 prune (distinct + broadcast semi before the join) 24-31%
-    SLOWER at sf0.1 — dl's corpus-wide aggregation is unavoidable anyway
+    interleaved A/B (NOTES.md) measured the r7 prune (distinct +
+    broadcast semi before the join) 24-31% SLOWER at sf0.1 — dl's corpus-wide aggregation is unavoidable anyway
     (avgdl needs it).  r17 goes further the same direction: dl is not
     joined at all, it rides the per-doc frame (see _bm25_perdoc)."""
     perdoc = _bm25_perdoc(spark, sf_dir, TERMS)

@@ -227,18 +227,13 @@ def recursive_reachability_semi_naive(spark: SparkSession,
                  .cast("long").alias("dst"))))
     roots = (cust.where(F.col("c_custkey") < _REACH_ROOTS)
              .select(F.col("c_custkey").cast("long").alias("node")))
+    # the edge list is DERIVED (two customer scans + a max() stats agg +
+    # union), and without materialization that derivation re-executes in
+    # every level's job — 6 levels deep.  One lazy localCheckpoint of the
+    # ~2|V|-row projected edge frame amortizes it to once per invocation
+    # (r16 interleaved A/B: 4.166 s -> 3.512 s median, -16%).
     return semi_naive_closure(edges, roots, max_depth=_REACH_DEPTH,
-                              materialize_edges=_REACH_MATERIALIZE_EDGES)
-
-
-# r16 optimization (measured, examples/exp_recursion_r16.py): the edge
-# list here is DERIVED (two customer scans + a max() stats agg + union),
-# and without materialization that derivation re-executes in every
-# level's job — 6 levels deep.  One lazy localCheckpoint of the ~2|V|-row
-# projected edge frame amortizes it to once per invocation.  Module-level
-# so the A/B experiment can flip it; the committed value is the measured
-# winner.
-_REACH_MATERIALIZE_EDGES = True
+                              materialize_edges=True)
 
 
 register("recursive_reachability_semi_naive",

@@ -123,32 +123,37 @@ def test_cascade_quality_retention(spark):
     from binaryvectordb_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").cache()
-    index, store = build_index(emb, 64), build_doc_store(emb)
-    queries = (emb.where(F.col("vec_id") < 30)
-               .select(F.col("vec_id").alias("qid"),
-                       F.col("embedding").alias("qvec")))
-    w = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("doc_id"))
-    exact = (emb.join(F.broadcast(queries.select("qid", F.col("qvec").alias("qv"))))
-             .select("qid", F.col("vec_id").alias("doc_id"),
-                     cosine("qv", "embedding").alias("s"))
-             .withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 10))
-    truth: dict[int, set] = {}
-    for r in exact.collect():
-        truth.setdefault(r.qid, set()).add(r.doc_id)
+    # unpersisted at the end: a cached fixture table would change the
+    # physical plans (InMemoryTableScan) of later tests in the session
+    try:
+        index, store = build_index(emb, 64), build_doc_store(emb)
+        queries = (emb.where(F.col("vec_id") < 30)
+                   .select(F.col("vec_id").alias("qid"),
+                           F.col("embedding").alias("qvec")))
+        w = Window.partitionBy("qid").orderBy(F.desc("s"), F.asc("doc_id"))
+        exact = (emb.join(F.broadcast(queries.select("qid", F.col("qvec").alias("qv"))))
+                 .select("qid", F.col("vec_id").alias("doc_id"),
+                         cosine("qv", "embedding").alias("s"))
+                 .withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= 10))
+        truth: dict[int, set] = {}
+        for r in exact.collect():
+            truth.setdefault(r.qid, set()).add(r.doc_id)
 
-    def recall(bo, io):
-        hits = cascade_search_batch(index, store, 64, queries, k=10,
-                                    binary_oversample=bo, int8_oversample=io
-                                    ).collect()
-        got: dict[int, set] = {}
-        for r in hits:
-            got.setdefault(r.qid, set()).add(r.doc_id)
-        return sum(len(truth[q] & got[q]) for q in truth) / (10 * len(truth))
+        def recall(bo, io):
+            hits = cascade_search_batch(index, store, 64, queries, k=10,
+                                        binary_oversample=bo, int8_oversample=io
+                                        ).collect()
+            got: dict[int, set] = {}
+            for r in hits:
+                got.setdefault(r.qid, set()).add(r.doc_id)
+            return sum(len(truth[q] & got[q]) for q in truth) / (10 * len(truth))
 
-    r_default = recall(10, 3)
-    r_double = recall(20, 5)
-    assert r_default >= 0.55, f"default-oversample recall {r_default}"
-    assert r_double >= r_default - 0.02, (r_default, r_double)
+        r_default = recall(10, 3)
+        r_double = recall(20, 5)
+        assert r_default >= 0.55, f"default-oversample recall {r_default}"
+        assert r_double >= r_default - 0.02, (r_default, r_double)
+    finally:
+        emb.unpersist()
 
 
 def test_cascade_k_exceeds_corpus(spark):

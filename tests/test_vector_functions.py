@@ -113,11 +113,12 @@ def test_int8_quantize(vec_df):
 
 def test_pack_unpack_roundtrip_property():
     """SURVEY §7 risk 1 mitigation: pack∘unpack == sign-bits identity at
-    ARBITRARY dims (partial lanes, multi-lane), little-endian unpack matching
-    the kernel's np.unpackbits path."""
+    ARBITRARY dims (partial lanes, multi-lane), unpacked by
+    kernels.unpack_pm1 — the unpack every numpy cascade kernel runs."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from binaryvectordb_spark.functions.kernels import unpack_pm1
     from binaryvectordb_spark.functions.vector import pack_bits_np
 
     @settings(max_examples=50, deadline=None)
@@ -127,9 +128,7 @@ def test_pack_unpack_roundtrip_property():
         rng = np.random.RandomState(seed)
         v = rng.uniform(-1, 1, (3, dim)).astype(np.float32)
         v[0, 0] = 0.0  # boundary: zero counts as bit set (x >= 0)
-        packed = pack_bits_np(v)
-        bits = np.unpackbits(packed.view(np.uint8), axis=1,
-                             bitorder="little")[:, :dim]
-        assert (bits == (v >= 0)).all(), (dim, seed)
+        pm = unpack_pm1(pack_bits_np(v), dim)
+        assert (pm == np.where(v >= 0, 1, -1)).all(), (dim, seed)
 
     check()
