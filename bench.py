@@ -697,7 +697,7 @@ def bench_gate_serving(spark, sf_dir: str,
 
         # maintenance amortization (GateIndex.compact_tail, r12): over
         # one FULL threshold cycle under the DB's REAL policy
-        # (db._gi_bound_state — tiered segment fold + tombstone-pile
+        # (db._bound_state — tiered segment fold + tombstone-pile
         # fold + row-budget vacuum; the r12 review caught an earlier
         # draft that omitted the tombstone half), the COMPACTION
         # component only — the upsert writes are identical under both
@@ -712,7 +712,7 @@ def bench_gate_serving(spark, sf_dir: str,
         #   rewrites O(corpus), so the fraction FALLS as the corpus
         #   grows while the old policy's stays 1.0 by definition.
         from binaryvectordb_spark.db import BinaryVectorDB
-        thresh = BinaryVectorDB._GI_COMPACT_SEGMENTS
+        thresh = BinaryVectorDB._COMPACT_SEGMENTS
 
         def _mb(i: int):
             rows = [(20_000_000 + i * 100 + j,
@@ -724,7 +724,7 @@ def bench_gate_serving(spark, sf_dir: str,
         def _cycle(i0: int) -> tuple[float, int]:
             """(compaction wall-sec, folded segment rows) over one
             16-batch cycle of the DB policy (the real hook:
-            BinaryVectorDB._gi_bound_state) starting at micro-batch
+            BinaryVectorDB._bound_state) starting at micro-batch
             i0.  A row-budget vacuum inside the cycle would show up in
             both outputs — at bench scale the synthetic churn is ~1% of
             the corpus, so it never trips, which IS the claim."""
@@ -733,7 +733,7 @@ def bench_gate_serving(spark, sf_dir: str,
                 gi.upsert_batch(_mb(i))
                 pre = set(gi.meta["segments"])
                 t0 = time.perf_counter()
-                BinaryVectorDB._gi_bound_state(gi)
+                BinaryVectorDB._bound_state(gi)
                 t_fold += time.perf_counter() - t0
                 rows_fold += sum(
                     n for s, n in gi.meta["seg_stats"].items()

@@ -176,21 +176,21 @@ class BinaryVectorDB:
                 self.retain_versions = int(meta.get("retain_versions", 0))
             elif int(retain_versions) != int(meta.get("retain_versions", 0)):
                 meta["retain_versions"] = int(retain_versions)
-                self._write_meta(meta_path, meta)
+                self._write_json(meta_path, meta)
         elif os.listdir(folder):
             # mirrors :43-45 — refuse a non-empty folder without config
             raise Exception(
                 f"Folder {folder} has files but no {_META}; not a BinaryVectorDB")
         else:
             self.model = model
-            self._write_meta(meta_path, {
+            self._write_json(meta_path, {
                 "version": "1.0", "model": model, "dim": dim,
                 "buckets": buckets, "index_type": index_type,
                 "index_args": self.index_args,
                 "retain_versions": self.retain_versions})
 
     @staticmethod
-    def _write_meta(meta_path: str, meta: dict) -> None:
+    def _write_json(meta_path: str, meta: dict) -> None:
         # pid-suffixed tmp: two processes racing to create the same DB would
         # otherwise interleave writes into ONE tmp file and rename a torn
         # meta; with distinct tmps the last rename wins atomically
@@ -587,7 +587,7 @@ class BinaryVectorDB:
         sj = schema.json()
         if meta.get("docs_schema") != sj:
             meta["docs_schema"] = sj
-            self._write_meta(meta_path, meta)
+            self._write_json(meta_path, meta)
 
     def _read_df(self, name: str) -> DataFrame | None:
         t = self._manifest_tables()
@@ -667,7 +667,7 @@ class BinaryVectorDB:
 
     def _write_stats(self, version: int, stats: dict) -> None:
         os.makedirs(os.path.join(self.folder, self._STATS_DIR), exist_ok=True)
-        self._write_meta(self._stats_path(version), stats)
+        self._write_json(self._stats_path(version), stats)
         self._stats_mem = (int(version), stats)
 
     def _compute_stats(self) -> dict:
@@ -767,12 +767,11 @@ class BinaryVectorDB:
         old = self._tables_at(version)  # validates existence + files
         self._commit({name: dict(old.get(name) or {})
                       for name in self._DATA_TABLES}, expect=expect)
-        # the lexical index is derived from the doc store's forward
-        # history; after a rollback it would be wrong in both directions —
-        # drop it (rebuild with build_text_index() if wanted)
-        self._ti_drop()
-        # same argument for the gate index (derived from forward history)
-        self._gi_drop()
+        # the side indexes are derived from the doc store's forward
+        # history; after a rollback they would be wrong in both
+        # directions — drop them (rebuild with build_text_index() /
+        # build_gate_index() if wanted)
+        self._drop_side_indexes()
 
     def _read_buckets(self, name: str, touched: list[int]) -> DataFrame | None:
         """Scan ONLY the touched buckets — the partial-rewrite read path.
@@ -1017,7 +1016,7 @@ class BinaryVectorDB:
         meta_path = os.path.join(self.folder, _META)
         meta = self._meta_read()
         meta.update(kv)
-        self._write_meta(meta_path, meta)
+        self._write_json(meta_path, meta)
 
     def _note_ivf_mutation(self, n_keys: int | None) -> None:
         """Accumulate churn after a mutation on a built IVF DB, and rebuild
@@ -1211,9 +1210,10 @@ class BinaryVectorDB:
         # localCheckpoint pins the exact committed rows in block storage
         # (batch-sized), and the observed metrics fold the str/non-str
         # counts into the SAME job — the hook then needs zero take(1)
-        # probes.  Only paid when a text index exists.
+        # probes.  Only paid when a side index exists.
         incoming = incoming_counts = None
-        if self._text_index() is not None or self._gate_index() is not None:
+        sides = self._side_indexes()
+        if sides:
             from pyspark.sql import Observation
             obs = Observation()
             incoming = (new_docs
@@ -1270,8 +1270,7 @@ class BinaryVectorDB:
         elif had_ivf_model:
             self._note_ivf_mutation(n_keys)
         if incoming is not None:
-            self._ti_after_upsert(incoming, incoming_counts)
-            self._gi_after_upsert(incoming, incoming_counts)
+            self._after_upsert(sides, incoming, incoming_counts)
 
     def _enqueue(self, doc_ids: list[int], docs: list[str], kinds: list[str],
                  emb: np.ndarray, save: bool) -> None:
@@ -1444,8 +1443,7 @@ class BinaryVectorDB:
                     "documents", touched)}, expect=expect)
             if self.index_type == "ivf" and self._ivf_model() is not None:
                 self._note_ivf_mutation(len(doc_ids))
-            self._ti_after_remove(doc_ids)
-            self._gi_after_remove(doc_ids)
+            self._after_remove(doc_ids)
             return
         idx = self.index_df()
         missing = keys.join(idx, "doc_id", "left_anti").count()
@@ -1459,8 +1457,7 @@ class BinaryVectorDB:
                 "documents")}, expect=expect)
         if self.index_type == "ivf" and self._ivf_model() is not None:
             self._note_ivf_mutation(len(doc_ids))
-        self._ti_after_remove(doc_ids)
-        self._gi_after_remove(doc_ids)
+        self._after_remove(doc_ids)
 
     def remove_doc(self, doc_id: int) -> None:
         self.remove_docs([doc_id])
@@ -1579,122 +1576,63 @@ class BinaryVectorDB:
                                             writer_opts=opts)}
         self._commit(updates, expect=expect)
 
-    # -- optional lexical index (hybrid serving) ----------------------------
-    # A persisted inverted index (operators/textindex.py) over the str-kind
-    # doc payloads, living at <folder>/text_index with its own segment
-    # metadata.  DERIVED state: it is updated after each successful commit
-    # (a crash in between leaves it one batch stale — rebuild with
-    # build_text_index()), and restore() drops it rather than guess.
+    # -- derived side indexes ------------------------------------------------
+    # Two optional indexes over the str-kind doc payloads, each a segment
+    # store (operators/segments.py) in its own dir under <folder>:
+    # - text_index: the persisted inverted index (operators/textindex.py)
+    #   behind search_text / search_hybrid;
+    # - gate_index: the near-dup gate's corpus shingle/band tables
+    #   (operators/ingest_gate.py) behind gated_add_documents_df.
+    # DERIVED state: each is updated after every successful commit (a
+    # crash in between leaves it one batch stale — rebuild with
+    # build_text_index() / build_gate_index()), and restore() drops both
+    # rather than guess.
 
     _TEXT_INDEX_DIR = "text_index"
-    # auto-compact the lexical index when an upsert pushes it to this many
-    # segments (one micro-batch = one segment; unbounded growth makes the
-    # query-side union and the tombstone anti-join creep)
-    _TI_COMPACT_SEGMENTS = 16
+    _GATE_INDEX_DIR = "gate_index"
+    # fold a side index when an upsert pushes it to this many segments
+    # (one micro-batch = one segment) or tombstone files (unbounded
+    # growth makes the query-side union and the tombstone anti-join creep)
+    _COMPACT_SEGMENTS = 16
+
+    def _open_index(self, sub: str, cls):
+        p = os.path.join(self.folder, sub)
+        if not os.path.exists(os.path.join(p, "meta.json")):
+            return None
+        return cls(self.spark, p)
 
     def _text_index(self):
         from binaryvectordb_spark.operators.textindex import TextIndex
-        p = os.path.join(self.folder, self._TEXT_INDEX_DIR)
-        if not os.path.exists(os.path.join(p, "meta.json")):
-            return None
-        return TextIndex(self.spark, p)
+        return self._open_index(self._TEXT_INDEX_DIR, TextIndex)
+
+    def _gate_index(self):
+        from binaryvectordb_spark.operators.ingest_gate import GateIndex
+        return self._open_index(self._GATE_INDEX_DIR, GateIndex)
+
+    def _side_indexes(self) -> list:
+        """The side indexes that exist, text index first."""
+        return [ix for ix in (self._text_index(), self._gate_index())
+                if ix is not None]
+
+    def _str_docs(self) -> DataFrame:
+        """The current str-kind payloads as (doc_id, text) — what both side
+        indexes are built from; typed payloads (json/bytes) are not text,
+        never match a keyword query and are never near-dup candidates."""
+        self._flush_pending()
+        docs = self.docs_df()
+        if docs is None:
+            raise Exception("Index is empty; add documents first")
+        if "doc_kind" in docs.columns:
+            docs = docs.where(F.col("doc_kind") == "str")
+        return docs.select("doc_id", F.col("doc").alias("text"))
 
     def build_text_index(self) -> None:
         """(Re)build the lexical index from the current doc store.  Only
         str-kind payloads are text; typed payloads (json/bytes) are not
         indexed and never match a keyword query."""
         from binaryvectordb_spark.operators.textindex import TextIndex
-
-        self._flush_pending()
-        docs = self.docs_df()
-        if docs is None:
-            raise Exception("Index is empty; add documents first")
-        d = docs
-        if "doc_kind" in d.columns:
-            d = d.where(F.col("doc_kind") == "str")
-        TextIndex(self.spark,
-                  os.path.join(self.folder, self._TEXT_INDEX_DIR)).build(
-            d.select("doc_id", F.col("doc").alias("text")), text_col="text")
-
-    def _ti_after_upsert(self, incoming: DataFrame, counts) -> None:
-        """Incremental text-index maintenance after an upsert commit: the
-        batch's str-kind rows become one new segment; EVERY incoming id is
-        killed in earlier segments by ONE scoped tombstone (str rows'
-        old postings die, their new postings live in the new segment;
-        non-str rows — payloads updated away from text — just die).
-        ``incoming`` is the checkpointed batch projection and ``counts``
-        its observed {n_str, n_other} from the same job (_merge_and_swap),
-        so this hook runs zero probe jobs: segment + doclen + tombstone
-        writes only (jobs pinned in tests/test_db_textindex.py)."""
-        ti = self._text_index()
-        if ti is None:
-            return
-        n_str = int(counts["n_str"])
-        if int(counts["n_other"]) + n_str == 0:
-            return  # empty batch — legitimate streaming no-op
-        str_df = (incoming.where(F.col("doc_kind") == "str")
-                  .select("doc_id", F.col("doc").alias("text"))
-                  if n_str else None)
-        ti.upsert_batch(str_df, incoming.select("doc_id"), text_col="text")
-        self._ti_bound_state(ti)
-
-    @classmethod
-    def _ti_bound_state(cls, ti) -> None:
-        """Bounded text-index state under micro-batch mutation — the
-        same discipline as _gi_bound_state (r12 review: the two indexes
-        claim one segment/tombstone design, so they share one policy):
-        tiered segment fold past the threshold (bootstrap never
-        rewritten by small-batch arrivals; full compact only if the tier
-        finds no run), tombstone PILE folded into one file (O(churn)),
-        and the full compact demoted to a row-budget VACUUM — only once
-        TRUE dead rows (existence-filtered tombstones) reach ~half the
-        stored rows, i.e. amortized O(1) rewrite per churned doc.  The
-        old ADVICE-r8 file-count compact fired a full O(index) rewrite
-        every ~16 remove batches; the upsert side previously had NO
-        tombstone bound at all."""
-        ran_tail = False
-        if len(ti.meta["segments"]) >= cls._TI_COMPACT_SEGMENTS:
-            ti.compact_tail()
-            ran_tail = True
-            if len(ti.meta["segments"]) >= cls._TI_COMPACT_SEGMENTS:
-                ti.compact()
-                return
-        # compact_tail already folds the tombstone pile itself — don't
-        # run a second tiered merge in the same hook invocation (r13
-        # ADVICE: one maintenance call must not pay multiple rewrites)
-        if (not ran_tail
-                and len(ti.meta["tombstones"]) >= cls._TI_COMPACT_SEGMENTS):
-            ti.compact_tail()  # remove-heavy stream: fold files only
-        tr = ti.tomb_rows()
-        if tr is not None and 2 * tr >= max(1, ti.doc_rows()):
-            ti.compact()
-
-    def _ti_after_remove(self, doc_ids: Sequence[int]) -> None:
-        ti = self._text_index()
-        if ti is None:
-            return
-        ti.remove([int(i) for i in doc_ids])
-        self._ti_bound_state(ti)
-
-    def _ti_drop(self) -> None:
-        p = os.path.join(self.folder, self._TEXT_INDEX_DIR)
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-
-    # -- near-dup gate index (derived state, same lifecycle discipline as
-    # the text index: updated after each successful commit; a crash in
-    # between leaves it one batch stale — rebuild with build_gate_index();
-    # restore() drops it rather than guess) ------------------------------
-
-    _GATE_INDEX_DIR = "gate_index"
-    _GI_COMPACT_SEGMENTS = 16
-
-    def _gate_index(self):
-        from binaryvectordb_spark.operators.ingest_gate import GateIndex
-        p = os.path.join(self.folder, self._GATE_INDEX_DIR)
-        if not os.path.exists(os.path.join(p, "meta.json")):
-            return None
-        return GateIndex(self.spark, p)
+        TextIndex(self.spark, os.path.join(
+            self.folder, self._TEXT_INDEX_DIR)).build(self._str_docs())
 
     def build_gate_index(self) -> None:
         """(Re)build the persisted near-dup gate artifacts (corpus
@@ -1705,87 +1643,75 @@ class BinaryVectorDB:
         the artifacts incrementally.  Only str-kind payloads participate
         — typed payloads are never near-dup candidates."""
         from binaryvectordb_spark.operators.ingest_gate import GateIndex
+        GateIndex(self.spark, os.path.join(
+            self.folder, self._GATE_INDEX_DIR)).build(self._str_docs())
 
-        self._flush_pending()
-        docs = self.docs_df()
-        if docs is None:
-            raise Exception("Index is empty; add documents first")
-        d = docs
-        if "doc_kind" in d.columns:
-            d = d.where(F.col("doc_kind") == "str")
-        GateIndex(self.spark,
-                  os.path.join(self.folder, self._GATE_INDEX_DIR)).build(
-            d.select("doc_id", F.col("doc").alias("text")))
-
-    def _gi_after_upsert(self, incoming: DataFrame, counts) -> None:
-        """Incremental gate-index maintenance after an upsert commit:
-        str-kind batch rows become one new segment; every incoming id is
-        killed in earlier segments by one scoped tombstone (non-str rows
-        — payloads updated away from text — just die).  Mirrors
-        _ti_after_upsert: zero probe jobs, bounded segment growth."""
-        gi = self._gate_index()
-        if gi is None:
-            return
+    def _after_upsert(self, sides: list, incoming: DataFrame,
+                      counts) -> None:
+        """Incremental side-index maintenance after an upsert commit: the
+        batch's str-kind rows become one new segment; EVERY incoming id is
+        killed in earlier segments by ONE scoped tombstone (str rows' old
+        entries die, their new ones live in the new segment; non-str rows
+        — payloads updated away from text — just die).  ``incoming`` is
+        the checkpointed batch projection and ``counts`` its observed
+        {n_str, n_other} from the same job (_merge_and_swap), so this
+        hook runs zero probe jobs: segment + tombstone writes only (jobs
+        pinned in tests/test_db_textindex.py)."""
         n_str = int(counts["n_str"])
         if int(counts["n_other"]) + n_str == 0:
-            return
+            return  # empty batch — legitimate streaming no-op
         str_df = (incoming.where(F.col("doc_kind") == "str")
                   .select("doc_id", F.col("doc").alias("text"))
                   if n_str else None)
-        gi.upsert_batch(str_df, incoming.select("doc_id"))
-        self._gi_bound_state(gi)
+        for ix in sides:
+            ix.upsert_batch(str_df, incoming.select("doc_id"))
+            self._bound_state(ix)
+
+    def _after_remove(self, doc_ids: Sequence[int]) -> None:
+        for ix in self._side_indexes():
+            ix.remove([int(i) for i in doc_ids])
+            self._bound_state(ix)
 
     @classmethod
-    def _gi_bound_state(cls, gi) -> None:
-        """Bounded gate-index state under micro-batch mutation, the
-        textindex discipline (VERDICT r11 item 3 + the r12 review fix):
+    def _bound_state(cls, ix) -> None:
+        """Bounded side-index state under micro-batch mutation:
 
         - SEGMENT files: past the threshold, fold the trailing run of
           small segments (tiered merge — amortized O(batch·log); the
-          bootstrap corpus segment is never rewritten just because 16
-          small batches arrived); full compact() only if the tier
-          policy finds no mergeable run.
+          bootstrap segment is never rewritten just because 16 small
+          batches arrived); full compact() only if the tier policy finds
+          no mergeable run.
         - TOMBSTONE files: compact_tail also folds the pile into one
-          file (O(churn)), so file count never forces a full rewrite —
-          the r12 review found the old ``len(tombstones) >= 16`` full
-          compact() fired every ~16 gated batches and negated the
-          tiered merge entirely.
+          file (O(churn)), so file count never forces a full rewrite (a
+          ``len(tombstones) >= 16`` full compact() would fire every ~16
+          batches and negate the tiered merge).
         - TOMBSTONE rows (dead data in segments): row-budget VACUUM —
-          full compact() only once dead ids reach ~half the stored
-          rows, i.e. amortized O(1) rewrite per churned doc.  Legacy
-          pre-stats state falls back to the old file-count backstop."""
+          full compact() only once TRUE dead rows (existence-filtered
+          tombstones) reach ~half the stored rows, i.e. amortized O(1)
+          rewrite per churned doc.  tomb_rows() is None only for a
+          <2-file legacy pile (any fold stats it), which is trivially
+          bounded."""
         ran_tail = False
-        if len(gi.meta["segments"]) >= cls._GI_COMPACT_SEGMENTS:
-            gi.compact_tail()
+        if len(ix.meta["segments"]) >= cls._COMPACT_SEGMENTS:
+            ix.compact_tail()
             ran_tail = True
-            if len(gi.meta["segments"]) >= cls._GI_COMPACT_SEGMENTS:
-                gi.compact()
+            if len(ix.meta["segments"]) >= cls._COMPACT_SEGMENTS:
+                ix.compact()
                 return
-        # compact_tail already folds the tombstone pile itself — skip
-        # the tombstone-file branch when it just ran (r13 ADVICE: a
-        # single hook invocation must not pay two tiered merges)
+        # compact_tail already folds the tombstone pile itself — one
+        # maintenance call must not pay two tiered merges
         if (not ran_tail
-                and len(gi.meta["tombstones"]) >= cls._GI_COMPACT_SEGMENTS):
-            gi.compact_tail()  # remove-heavy stream: fold files only
-        # tomb_rows() is None only for a <2-file legacy pile (any fold
-        # above stats it), which is trivially bounded — no fallback
-        # needed (r12 review: the old file-count fallback here was
-        # unreachable dead code)
-        tr = gi.tomb_rows()
-        if tr is not None and 2 * tr >= max(1, gi.seg_rows()):
-            gi.compact()
+                and len(ix.meta["tombstones"]) >= cls._COMPACT_SEGMENTS):
+            ix.compact_tail()  # remove-heavy stream: fold files only
+        tr = ix.tomb_rows()
+        if tr is not None and 2 * tr >= max(1, ix.seg_rows()):
+            ix.compact()
 
-    def _gi_after_remove(self, doc_ids: Sequence[int]) -> None:
-        gi = self._gate_index()
-        if gi is None:
-            return
-        gi.remove([int(i) for i in doc_ids])
-        self._gi_bound_state(gi)
-
-    def _gi_drop(self) -> None:
-        p = os.path.join(self.folder, self._GATE_INDEX_DIR)
-        if os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
+    def _drop_side_indexes(self) -> None:
+        for sub in (self._TEXT_INDEX_DIR, self._GATE_INDEX_DIR):
+            p = os.path.join(self.folder, sub)
+            if os.path.isdir(p):
+                shutil.rmtree(p, ignore_errors=True)
 
     def search_text(self, terms: Sequence[str], k: int = DEFAULT_K
                     ) -> list[dict]:
@@ -2271,15 +2197,7 @@ class BinaryVectorDB:
             from binaryvectordb_spark.operators.cascade import (
                 cascade_search_filtered_adaptive,
             )
-            if isinstance(filter, dict):
-                unknown = [c for c in filter if c not in docs.columns]
-                if unknown:
-                    raise ValueError(
-                        f"filter columns {unknown} not in the doc store "
-                        f"(have {sorted(docs.columns)}); ingest metadata "
-                        "with add_batch_df(meta_cols=...)")
-            eligible = docs.where(self._filter_predicate(filter)) \
-                           .select("doc_id")
+            eligible = self._eligible_ids(docs, filter)
             if selectivity is None:
                 selectivity = self._estimate_selectivity(filter)
             hits_df = cascade_search_filtered_adaptive(
@@ -2291,6 +2209,20 @@ class BinaryVectorDB:
                                      binary_oversample=binary_oversample,
                                      int8_oversample=int8_oversample)
         return [self._decode_hit(r.asDict()) for r in hits_df.collect()]
+
+    @classmethod
+    def _eligible_ids(cls, docs: DataFrame, filter: dict | str) -> DataFrame:
+        """(doc_id) of the docs matching a search filter — the eligibility
+        set of search and search_batch.  A dict filter naming a column
+        the doc store lacks is refused."""
+        if isinstance(filter, dict):
+            unknown = [c for c in filter if c not in docs.columns]
+            if unknown:
+                raise ValueError(
+                    f"filter columns {unknown} not in the doc store "
+                    f"(have {sorted(docs.columns)}); ingest metadata "
+                    "with add_batch_df(meta_cols=...)")
+        return docs.where(cls._filter_predicate(filter)).select("doc_id")
 
     @staticmethod
     def _filter_predicate(filter: dict | str):
@@ -2478,16 +2410,8 @@ class BinaryVectorDB:
         if not nonempty:
             raise Exception("Index is empty; add documents first")
         if filter is not None:
-            if isinstance(filter, dict):
-                unknown = [c for c in filter if c not in docs.columns]
-                if unknown:
-                    raise ValueError(
-                        f"filter columns {unknown} not in the doc store "
-                        f"(have {sorted(docs.columns)}); ingest metadata "
-                        "with add_batch_df(meta_cols=...)")
-            eligible = docs.where(self._filter_predicate(filter)) \
-                           .select("doc_id")
-            idx = idx.join(eligible, "doc_id", "left_semi")
+            idx = idx.join(self._eligible_ids(docs, filter), "doc_id",
+                           "left_semi")
         texts = [q for q in queries if isinstance(q, str)]
         if texts:
             emb_out = list(self.embed_fn(texts))

@@ -18,7 +18,9 @@ corpus scan being the token/band projection only (narrow columns).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import os
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from binaryvectordb_spark.functions.text import (
@@ -26,6 +28,7 @@ from binaryvectordb_spark.functions.text import (
     shingles,
     token_hash31,
 )
+from binaryvectordb_spark.operators.segments import SegmentStore
 
 N_HASHES = 12
 N_BANDS = 4
@@ -222,7 +225,7 @@ def gated_add_documents_df(db, docs_df: DataFrame, *,
     The record is localCheckpoint-materialized BEFORE the upsert commits —
     both it and the admitted slice derive from the pre-commit docs table,
     and the commit garbage-collects superseded files (the db.py
-    _ti_after_upsert re-execution hazard, ADVICE r8)."""
+    _after_upsert re-execution hazard, ADVICE r8)."""
     batch = docs_df.select(F.col(id_col).cast("long").alias("doc_id"),
                            F.col(text_col).alias("text"))
     corpus_df = db.docs_df()
@@ -260,7 +263,7 @@ def gated_add_documents_df(db, docs_df: DataFrame, *,
     return rec
 
 
-class GateIndex:
+class GateIndex(SegmentStore):
     """Persisted corpus shingle/band tables for the near-dup gate — the
     TextIndex maintenance discipline applied to the gate's derived state
     (VERDICT r10 item 3: ``near_dup_gate`` recomputes the corpus
@@ -269,14 +272,16 @@ class GateIndex:
     its own pruned read cost).
 
     Layout (all state under ``folder``):
-        meta.json          {segments, tombstones, tomb_upto, v}  atomic swap
+        meta.json          {segments, tombstones, tomb_upto, v, ...}
         seg_<n>/shingles/  (doc_id, shs)       range-sorted by doc_id
         seg_<n>/bands/     (doc_id, band_idx, bh)  range-sorted by bh
         tomb_<n>/          (doc_id, upto_seg)  deletes/replacements
 
-    - A batch of new/updated docs is ONE new segment plus a tombstone
-      scoped to every earlier segment (delete-then-insert, the same
-      discipline as TextIndex/upsert_batch).  O(batch) write cost.
+    - Segments, tombstones, meta and compaction are the segment store
+      shared with TextIndex (operators/segments.py): a batch of
+      new/updated docs is ONE new segment plus a tombstone scoped to
+      every earlier segment (delete-then-insert).  O(batch) write cost.
+      The segment-stats entry is the segment's integer doc count.
     - ``gate`` probes with the incoming batch's band keys: the bands scan
       carries an ``In(bh)`` filter (pushed to parquet row-group stats —
       the segments are range-sorted on bh), candidate ids are a bounded
@@ -284,18 +289,15 @@ class GateIndex:
       pruned row groups.  No corpus text is re-shingled, no corpus table
       is shuffled — plan- and job-pinned in tests/test_ingest_gate.py.
     - ``compact()`` folds live rows into one segment and clears
-      tombstones; ``compact_tail()`` is the tiered merge the DB hooks
-      prefer (the textindex ``compact_tail`` discipline, VERDICT r11
-      item 3): fold only the trailing run of comparably-small segments,
-      so micro-batch ingest costs amortized O(batch·log) and the
-      bootstrap segment is never rewritten just because 16 small
-      batches arrived.  ``compact_tail`` ALSO folds the tombstone PILE
-      into one file (per-row effective scopes materialized), so the
-      tombstone FILE count stays bounded without a full rewrite; the
-      tombstone ROW count is bounded separately by the DB hook's
-      row-budget vacuum — a full ``compact()`` only once the dead rows
-      reach ~half the table (amortized O(1) rewrite per churned doc,
-      a vacuum, not a cadence).
+      tombstones; ``compact_tail()`` is the tiered merge the DB hook
+      (``db._bound_state``) prefers: fold only the trailing run of
+      comparably-small segments and the tombstone pile, so micro-batch
+      ingest costs amortized O(batch·log) and the bootstrap segment is
+      never rewritten just because 16 small batches arrived.  The
+      tombstone ROW count is bounded separately by the hook's row-budget
+      vacuum — a full ``compact()`` only once the dead rows reach ~half
+      the table (amortized O(1) rewrite per churned doc, a vacuum, not a
+      cadence).
 
     100 TB: both tables are O(corpus) on disk but a probe touches
     O(probe bands + candidates) row groups; segments are immutable files
@@ -303,487 +305,91 @@ class GateIndex:
 
     _SCHEMAS = {"shingles": "doc_id long, shs array<string>",
                 "bands": "doc_id long, band_idx int, bh string"}
+    # the existence probe reads the doc_id-sorted shingle tables
+    _PROBE = "shingles"
 
-    def __init__(self, spark, folder: str):
-        import json
-        import os
-        self.spark = spark
-        self.folder = folder
-        os.makedirs(folder, exist_ok=True)
-        self._meta_path = os.path.join(folder, "meta.json")
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                self.meta = json.load(f)
-        else:
-            self.meta = {"segments": [], "tombstones": [], "tomb_upto": {},
-                         "seg_stats": {}}
+    def _fresh_meta(self, v: int = 0) -> dict:
+        return dict(super()._fresh_meta(v), tomb_upto={}, tomb_stats={})
 
-    # -- layout ---------------------------------------------------------
+    @staticmethod
+    def _seg_size(n: int) -> int:
+        return int(n)
 
-    def _write_meta(self) -> None:
-        import json
-        import os
-        # optimistic-concurrency guard (the TextIndex discipline): a stale
-        # handle fails loudly instead of last-write-wins dropping segments
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                on_disk = json.load(f).get("v", 0)
-            if on_disk != self.meta.get("v", 0):
-                raise Exception(
-                    "concurrent GateIndex writer detected: meta version "
-                    f"moved {self.meta.get('v', 0)} -> {on_disk}; re-open "
-                    "the index and retry")
-        self.meta["v"] = self.meta.get("v", 0) + 1
-        tmp = self._meta_path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-        os.replace(tmp, self._meta_path)
+    def _backfill(self, name: str, have: int | None) -> int | None:
+        """Doc count of a legacy segment lacking a stats entry (None when
+        it has one)."""
+        if have is not None:
+            return None
+        return int(self.spark.read.schema(self._SCHEMAS["shingles"])
+                   .parquet(os.path.join(self.folder, name, "shingles"))
+                   .count())
 
-    def _next_name(self, prefix: str) -> str:
-        existing = self.meta["segments"] + self.meta["tombstones"]
-        n = 0
-        while f"{prefix}_{n}" in existing:
-            n += 1
-        return f"{prefix}_{n}"
-
-    def _write_segment(self, docs: DataFrame, name: str) -> int:
-        """Write one segment's shingle + band tables; returns n_docs.
-        Bands are derived from the WRITTEN shingle table (one text pass,
-        the doclen-from-written-postings pattern); both tables are
+    def _write_tables(self, name: str, shingles: DataFrame,
+                      bands) -> int:
+        """Write one segment's shingle table and, when it holds rows, its
+        band table from ``bands()``; returns n_docs.  Both tables are
         range-sorted so probe-time In() filters prune row groups."""
-        import os
-
-        from pyspark.sql import Observation
         seg = os.path.join(self.folder, name)
         # the Observation sits ABOVE the range exchange: the range
         # partitioner's boundary-sampling pass re-executes only the
         # exchange's CHILD, so a below-exchange observe double-counts
-        # (r12 review follow-up: seg_stats carried a ~2x bias; harmless
-        # for the relative tier policy, wrong for the row-budget
+        # (seg_stats carried a ~2x bias — wrong for the row-budget
         # vacuum) while this placement is exact AND free — no read-back
         # job, no sampling bias (verified empirically: child 2000 vs
         # above-exchange 1000 on a 1000-row write)
         obs = Observation()
-        (_shingle_sets(docs)
+        (shingles
          .repartitionByRange("doc_id")
          .observe(obs, F.count(F.lit(1)).alias("n"))
          .sortWithinPartitions("doc_id")
          .write.mode("overwrite").parquet(os.path.join(seg, "shingles")))
         n_docs = int(obs.get["n"])
-        if n_docs == 0:
-            import shutil
-            shutil.rmtree(seg, ignore_errors=True)
-            return 0
-        sh = (self.spark.read.schema(self._SCHEMAS["shingles"])
-              .parquet(os.path.join(seg, "shingles")))
-        ex = (sh.select("doc_id", F.explode("shs").alias("s"))
-              .select("doc_id", F.expr(token_hash31("s")).alias("h")))
-        m = ex.groupBy("doc_id").agg(*minhash_min_exprs("h", N_HASHES))
-        bands = m.select("doc_id", F.array(*[
-            F.concat_ws("|", *[f"sig_{b * ROWS_PER_BAND + r}"
-                               for r in range(ROWS_PER_BAND)])
-            for b in range(N_BANDS)]).alias("bands")).select(
-            "doc_id", F.posexplode("bands").alias("band_idx", "bh"))
-        (bands.repartitionByRange("bh")
-         .sortWithinPartitions("bh", "doc_id")
-         .write.mode("overwrite").parquet(os.path.join(seg, "bands")))
+        if n_docs:
+            (bands().repartitionByRange("bh")
+             .sortWithinPartitions("bh", "doc_id")
+             .write.mode("overwrite").parquet(os.path.join(seg, "bands")))
         return n_docs
+
+    def _write_segment(self, docs: DataFrame, name: str) -> int:
+        """A batch of (doc_id, text) rows as one segment.  Bands are
+        derived from the WRITTEN shingle table (one text pass, the
+        doclen-from-written-postings pattern)."""
+        docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
+        return self._write_tables(
+            name, _shingle_sets(docs),
+            lambda: _band_table_from(
+                self.spark.read.schema(self._SCHEMAS["shingles"])
+                .parquet(os.path.join(self.folder, name, "shingles"))))
+
+    def _merge_run(self, name: str, lo: int) -> int:
+        """The live rows of segments[lo:] as one segment."""
+        return self._write_tables(name, self._live_run("shingles", lo),
+                                  lambda: self._live_run("bands", lo))
 
     # -- mutation -------------------------------------------------------
 
     def build(self, docs: DataFrame) -> "GateIndex":
         """(Re)build from scratch: one corpus pass, single segment."""
-        import os
-        import shutil
-        for name in self.meta["segments"] + self.meta["tombstones"]:
-            shutil.rmtree(os.path.join(self.folder, name),
-                          ignore_errors=True)
-        self.meta = {"segments": [], "tombstones": [], "tomb_upto": {},
-                     "seg_stats": {}, "tomb_stats": {},
-                     "v": self.meta.get("v", 0)}
-        docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
+        self._clear()
         n = self._write_segment(docs, "seg_0")
-        if n:
-            self.meta["segments"] = ["seg_0"]
-            self.meta["seg_stats"] = {"seg_0": n}
-        self._write_meta()
+        self._swap_in("seg_0" if n else None, n)
         return self
-
-    def upsert_batch(self, docs: DataFrame | None,
-                     dead_ids_df: DataFrame | None = None) -> None:
-        """One mutation round trip: ``docs`` rows become a new segment;
-        every touched id (docs' ids, or ``dead_ids_df`` when the caller
-        tracks a wider dead set) that ACTUALLY EXISTS in an earlier
-        segment is killed there by ONE scoped tombstone — the existence
-        probe is a bounded In(doc_id)-pruned read (r12: ids that were
-        never stored write no tombstone rows, so tombstone mass = true
-        dead rows).  Empty batches and all-new batches are rolled back
-        to segment-only commits without a tombstone.  The probe +
-        tombstone write is the shared three-tier implementation
-        (operators/segprobe.py)."""
-        if not self.meta["segments"]:
-            if docs is not None:
-                live = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-                name = self._next_name("seg")
-                n = self._write_segment(live, name)
-                if n:
-                    self.meta["segments"].append(name)
-                    self.meta.setdefault("seg_stats", {})[name] = n
-                    self._write_meta()
-            return
-        upto = len(self.meta["segments"]) - 1
-        seg_name = None
-        if docs is not None:
-            live = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-            seg_name = self._next_name("seg")
-            n_new = self._write_segment(live, seg_name)
-            if not n_new:
-                seg_name = None
-            else:
-                self.meta.setdefault("seg_stats", {})[seg_name] = n_new
-        dead = None
-        if docs is not None and dead_ids_df is None:
-            dead = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
-        elif dead_ids_df is not None:
-            dead = dead_ids_df.select(
-                F.col("doc_id").cast("long").alias("doc_id"))
-        tomb_name, n_tomb = None, 0
-        if dead is not None:
-            # EXISTENCE-FILTERED tombstones (r12 review): only ids that
-            # actually live in an earlier segment die.  A brand-new id
-            # (or a typed-payload doc that never entered the text gate)
-            # writes NO tombstone row — insert-only streams carry zero
-            # tombstones, and the row-budget vacuum counts TRUE dead
-            # rows, so it can never fire on reclaim-nothing state.
-            # Three tiers by batch-id cardinality (r13 ADVICE — the
-            # collect itself must be BOUNDED, so the probe starts with a
-            # limit()-capped collect, never a full one):
-            #   ≤ _PROBE_LITERAL_IDS: In(doc_id)-pruned segment reads
-            #     (range-sorted → footer row-group pruning; plan tree
-            #     stays small at this literal count);
-            #   ≤ _BULK_IDS: broadcast LeftSemi probe — one doc_id-only
-            #     corpus scan, O(1) plan size, no giant literal list;
-            #   > _BULK_IDS (bulk load/remove): skip the probe and write
-            #     the dead set FULLY DISTRIBUTED (observe above the range
-            #     exchange for the exact count) — the id set never
-            #     round-trips through the driver.
-            from binaryvectordb_spark.operators.segprobe import (
-                write_existence_filtered_tombstone,
-            )
-            tomb_name = self._next_name("tomb")
-            n_tomb = write_existence_filtered_tombstone(
-                self.spark, self.folder, self.meta["segments"], upto,
-                self._SCHEMAS["shingles"], "shingles", dead, tomb_name,
-                literal_cap=self._PROBE_LITERAL_IDS,
-                bulk_cap=self._BULK_IDS)
-            if not n_tomb:
-                tomb_name = None
-        if seg_name is None and tomb_name is None:
-            return
-        if seg_name is not None:
-            self.meta["segments"].append(seg_name)
-        if tomb_name is not None:
-            self.meta["tombstones"].append(tomb_name)
-            self.meta.setdefault("tomb_upto", {})[tomb_name] = upto
-            self.meta.setdefault("tomb_stats", {})[tomb_name] = n_tomb
-        self._write_meta()
-
-    # existence-probe tiers — one shared implementation for both derived
-    # indexes (operators/segprobe.py, r13 review: the "unified policy"
-    # must be unified in CODE); the caps are re-exported for tests
-    from binaryvectordb_spark.operators.segprobe import (
-        BULK_CAP as _BULK_IDS,
-        LITERAL_CAP as _PROBE_LITERAL_IDS,
-    )
-
-    def remove_df(self, ids_df: DataFrame) -> None:
-        self.upsert_batch(None, ids_df)
-
-    def remove(self, doc_ids) -> None:
-        if not doc_ids or not self.meta["segments"]:
-            return
-        self.remove_df(self.spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id: long"))
 
     def compact(self) -> None:
         """Fold live rows into one fresh segment; clear tombstones."""
-        import os
-        import shutil
-
-        from pyspark.sql import Observation
         if not self.meta["segments"]:
             return
         name = self._next_name("seg")
-        seg = os.path.join(self.folder, name)
-        obs = Observation()
-        (self.live_shingles()
-         .repartitionByRange("doc_id")
-         .observe(obs, F.count(F.lit(1)).alias("n"))  # above the
-         .sortWithinPartitions("doc_id")  # exchange: exact, no extra job
-         .write.mode("overwrite").parquet(os.path.join(seg, "shingles")))
-        n_docs = int(obs.get["n"])
-        (self.live_bands()
-         .repartitionByRange("bh").sortWithinPartitions("bh", "doc_id")
-         .write.mode("overwrite").parquet(os.path.join(seg, "bands")))
-        old = self.meta["segments"] + self.meta["tombstones"]
-        self.meta["segments"] = [name] if n_docs else []
-        self.meta["seg_stats"] = {name: n_docs} if n_docs else {}
-        if not n_docs:
-            shutil.rmtree(seg, ignore_errors=True)
-        self.meta["tombstones"] = []
-        self.meta["tomb_upto"] = {}
-        self.meta["tomb_stats"] = {}
-        self._write_meta()
-        for n in old:
-            shutil.rmtree(os.path.join(self.folder, n), ignore_errors=True)
-
-    # geometric tier ratio (the textindex policy): extend the trailing
-    # merge run while the next (older) segment is no more than this
-    # multiple of the run's accumulated size
-    _TIER_RATIO = 8
-
-    def compact_tail(self) -> None:
-        """Tiered (log-structured) merge — the textindex ``compact_tail``
-        discipline applied to the gate's shingle/band tables (VERDICT r11
-        item 3: the 16-segment threshold used to trigger a full O(corpus)
-        ``compact()`` rewrite): fold the maximal TRAILING run of
-        comparably-small segments into one, leaving large old segments —
-        the bootstrap corpus segment above all — untouched.  Micro-batch
-        ingest maintenance becomes amortized O(batch·log) instead of
-        O(corpus) every 16 batches.
-
-        Correctness with scoped tombstones: the merged segment holds the
-        LIVE rows of its sources (tombstones' within-run effect is
-        materialized), and any tombstone whose scope reached into the run
-        is re-scoped to the last untouched segment via meta's tomb_upto
-        override — its parquet is never rewritten, and its remaining job
-        (killing docs in segments OLDER than the run) is preserved
-        exactly.  When the run reaches segment 0 this degenerates to
-        ``compact()``, which also drops the tombstones."""
-        import os
-        import shutil
-
-        from pyspark.sql import Observation
-        segs = self.meta["segments"]
-        if len(segs) < 2:
-            self._fold_tombstones()
-            return
-        stats = dict(self.meta.get("seg_stats") or {})
-        backfilled = False
-        for s in segs:
-            if s not in stats:
-                # legacy pre-stats segment: one-time count backfill,
-                # persisted — defaulting its size to 0 would absorb a
-                # huge legacy bootstrap into the trailing run and
-                # degrade this tiered merge to a full O(corpus)
-                # compact() (r13 ADVICE)
-                stats[s] = int(
-                    self.spark.read.schema(self._SCHEMAS["shingles"])
-                    .parquet(os.path.join(self.folder, s, "shingles"))
-                    .count())
-                backfilled = True
-        if backfilled:
-            self.meta["seg_stats"] = stats
-            self._write_meta()
-        sizes = [int(stats[s]) for s in segs]
-        i = len(segs) - 1
-        acc = sizes[i]
-        while i - 1 >= 0 and sizes[i - 1] <= self._TIER_RATIO * max(acc, 1):
-            i -= 1
-            acc += sizes[i]
-        if i == len(segs) - 1:
-            # no mergeable segment run (the tail dwarfs its elder) —
-            # still bound the tombstone read fan-in
-            self._fold_tombstones()
-            return
-        if i == 0:
-            self.compact()
-            return
-        name = self._next_name("seg")
-        seg = os.path.join(self.folder, name)
-        obs = Observation()
-        (self._live_run("shingles", i)
-         .repartitionByRange("doc_id")
-         .observe(obs, F.count(F.lit(1)).alias("n"))  # ABOVE the range
-         .sortWithinPartitions("doc_id")  # exchange: exact AND free — a
-         # BELOW-exchange observe double-counts (the range partitioner's
-         # boundary-sampling pass re-executes the exchange's CHILD); see
-         # _write_segment (r13 ADVICE: the old comment here claimed the
-         # opposite and paid a read-back count() job for it)
-         .write.mode("overwrite").parquet(os.path.join(seg, "shingles")))
-        n_docs = int(obs.get["n"])
-        if n_docs:
-            (self._live_run("bands", i)
-             .repartitionByRange("bh").sortWithinPartitions("bh", "doc_id")
-             .write.mode("overwrite").parquet(os.path.join(seg, "bands")))
-        else:
-            shutil.rmtree(seg, ignore_errors=True)
-        over = dict(self.meta.get("tomb_upto") or {})
-        for t in self.meta["tombstones"]:
-            u = over.get(t)
-            if u is None:
-                # tombstone born before scopes were recorded in meta:
-                # read its written scope (one tiny job) — guessing a
-                # default could WIDEN a narrow tombstone after re-scoping
-                u = int(self.spark.read
-                        .schema("doc_id long, upto_seg int")
-                        .parquet(os.path.join(self.folder, t))
-                        .agg(F.max("upto_seg")).first()[0])
-            if u >= i:
-                u = i - 1  # in-run effect materialized in the merge
-            over[t] = u
-        old_sources = segs[i:]
-        self.meta["segments"] = segs[:i] + ([name] if n_docs else [])
-        self.meta["seg_stats"] = {
-            s: stats[s] for s in segs[:i] if s in stats}
-        if n_docs:
-            self.meta["seg_stats"][name] = n_docs
-        self.meta["tomb_upto"] = over
-        self._write_meta()
-        for stale in old_sources:
-            shutil.rmtree(os.path.join(self.folder, stale),
-                          ignore_errors=True)
-        self._fold_tombstones()
-
-    def _fold_tombstones(self) -> None:
-        """Fold the tombstone PILE into ONE file (the other half of the
-        tiered discipline — r12 review finding: without it, tombstone
-        files accumulate one per micro-batch and the DB hook's old
-        file-count backstop forced the full O(corpus) ``compact()``
-        every ~16 batches, negating ``compact_tail``).  Per-row
-        effective scopes are materialized (``least`` of the written
-        scope and the meta override), repeated kills of the same doc
-        collapse to its widest scope, and empty-scope rows
-        (upto_seg < 0) drop — so tombstone ROWS ≈ distinct churned ids
-        since the last full compact, and the fold is O(churn), never
-        O(corpus).  The row count itself is bounded by the DB hook's
-        row-budget vacuum (full compact at ~50% churn: amortized O(1)
-        rewrite per churned doc)."""
-        import os
-        import shutil
-
-        from pyspark.sql import Observation
-        tombs = self.meta["tombstones"]
-        if len(tombs) < 2:
-            return
-        name = self._next_name("tomb")
-        obs = Observation()
-        (self._tomb()
-         .where(F.col("upto_seg") >= 0)
-         .groupBy("doc_id")
-         .agg(F.max("upto_seg").alias("upto_seg"))
-         .observe(obs, F.count(F.lit(1)).alias("n"))
-         .coalesce(1).sortWithinPartitions("doc_id")  # In(doc_id)
-         .write.mode("overwrite")                     # footer pruning
-         .parquet(os.path.join(self.folder, name)))
-        n = int(obs.get["n"])
-        if not n:
-            shutil.rmtree(os.path.join(self.folder, name),
-                          ignore_errors=True)
-        old = list(tombs)
-        self.meta["tombstones"] = [name] if n else []
-        self.meta["tomb_upto"] = {}
-        self.meta["tomb_stats"] = {name: n} if n else {}
-        self._write_meta()
-        for t in old:
-            shutil.rmtree(os.path.join(self.folder, t),
-                          ignore_errors=True)
-
-    def tomb_rows(self) -> int | None:
-        """Total tombstone rows from write-time stats (zero jobs); None
-        when a pre-stats legacy tombstone lacks one — callers fall back
-        to the file-count policy."""
-        st = self.meta.get("tomb_stats") or {}
-        if any(t not in st for t in self.meta["tombstones"]):
-            return None
-        return sum(int(st[t]) for t in self.meta["tombstones"])
-
-    def seg_rows(self) -> int:
-        """Total stored segment rows (live + not-yet-vacuumed dead) from
-        write-time stats — the row-budget vacuum's denominator."""
-        st = self.meta.get("seg_stats") or {}
-        return sum(int(st.get(s, 0)) for s in self.meta["segments"])
+        n = self._merge_run(name, 0)
+        self._swap_in(name if n else None, n)
 
     # -- read -----------------------------------------------------------
-
-    def _tomb(self) -> DataFrame | None:
-        import os
-        if not self.meta["tombstones"]:
-            return None
-        # a tiered merge (compact_tail) re-scopes tombstones whose range
-        # reached into the merged run WITHOUT rewriting their parquet:
-        # meta's tomb_upto override NARROWS the written column (least,
-        # never replace — a folded tombstone file holds heterogeneous
-        # per-row scopes, and a replace would WIDEN its narrow rows)
-        over = self.meta.get("tomb_upto") or {}
-        parts = []
-        for t in self.meta["tombstones"]:
-            df = (self.spark.read.schema("doc_id long, upto_seg int")
-                  .parquet(os.path.join(self.folder, t)))
-            if t in over:
-                df = df.withColumn(
-                    "upto_seg",
-                    F.least("upto_seg", F.lit(int(over[t]))))
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _raw_run(self, sub: str, lo: int = 0,
-                 prune_ids=None) -> DataFrame:
-        """Stored rows of segments[lo:] with their global segment
-        ordinal as ``seg`` — NO tombstone filtering.  ``prune_ids``
-        adds an In(doc_id) filter to every segment read (footer
-        row-group pruning; the segments are range-sorted)."""
-        import os
-        if not self.meta["segments"]:
-            raise Exception("empty GateIndex; build() first")
-        parts = []
-        for i, name in enumerate(self.meta["segments"]):
-            if i < lo:
-                continue
-            df = (self.spark.read.schema(self._SCHEMAS[sub])
-                  .parquet(os.path.join(self.folder, name, sub)))
-            if prune_ids is not None:
-                df = df.where(F.col("doc_id").isin(prune_ids))
-            parts.append(df.withColumn("seg", F.lit(i)))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _live_run(self, sub: str, lo: int = 0,
-                  prune_ids=None) -> DataFrame:
-        """Live rows of segments[lo:] (global segment ordinals — the
-        tombstone scopes are global), without the seg column.
-        ``prune_ids`` prunes BOTH sides — the segment reads and the
-        tombstone read (all range-sorted on doc_id) — so a bounded-id
-        caller pays bounded cost regardless of the tombstone pile.  No
-        forced broadcast on the anti-join (r12 review: the pile is
-        bounded by the row-budget vacuum at ~half the stored rows,
-        which can exceed the broadcast limit at corpus scale — AQE
-        picks the strategy from actual sizes)."""
-        df = self._raw_run(sub, lo, prune_ids)
-        tomb = self._tomb()
-        if tomb is not None:
-            if prune_ids is not None:
-                tomb = tomb.where(F.col("doc_id").isin(prune_ids))
-            df = df.join(
-                tomb,
-                (df["doc_id"] == tomb["doc_id"])
-                & (tomb["upto_seg"] >= df["seg"]),
-                "left_anti")
-        return df.drop("seg")
-
-    def _live(self, sub: str) -> DataFrame:
-        return self._live_run(sub, 0)
 
     def live_shingles(self, prune_ids=None) -> DataFrame:
         return self._live_run("shingles", 0, prune_ids)
 
     def live_bands(self) -> DataFrame:
-        return self._live("bands")
+        return self._live_run("bands")
 
     # -- serve ----------------------------------------------------------
 

@@ -1,0 +1,459 @@
+"""One segment store for the derived indexes (TextIndex, GateIndex).
+
+The reference leaves segment, tombstone and compaction work to a single
+store, RocksDB (BinaryVectorDB/BinaryVectorDB.py:64).  Both derived
+indexes here keep their state the same way — immutable parquet segments
+plus scoped tombstones, committed by an atomic meta swap — and this
+module holds every part of that store they share, once:
+
+    <folder>/meta.json   {segments, tombstones, seg_stats, tomb_upto,
+                          tomb_stats, v, ...}  the only commit point
+    <folder>/seg_<n>/    one segment (its tables are index-specific)
+    <folder>/tomb_<n>/   (doc_id, upto_seg)    kills doc_id in every
+                                               segment up to ordinal
+                                               upto_seg
+
+- ``upsert_batch``: a batch of new/updated docs is ONE new segment plus
+  ONE existence-filtered tombstone scoped to every earlier segment, so an
+  upsert kills the old rows without touching the new ones.  No existing
+  segment file is ever rewritten — mutation cost is O(batch).
+- ``compact_tail``: the tiered (log-structured) merge — fold the
+  trailing run of comparably-small segments, then fold the tombstone
+  pile into one file.  ``compact``: the full fold into one segment, with
+  the tombstones dropped and orphan dirs swept (``_swap_in``).
+- Reads: the union of the segment tables minus the tombstones
+  (``_live_run``), scope-correct per segment ordinal.
+
+A subclass says what a segment holds: ``_SCHEMAS`` (its tables' read
+schemas), ``_PROBE`` (the doc_id-sorted table the existence probe
+reads), ``_write_segment`` (a batch of (doc_id, text) rows -> one
+segment), ``_merge_run`` (the live rows of segments[lo:] -> one segment),
+``_seg_size``/``_backfill`` (its segment-stats entry) and ``build`` /
+``compact`` (which end in ``_swap_in``).
+
+Existence probe (``_write_tombstone``), three tiers by batch-id
+cardinality — the collect is limit()-capped, never unbounded:
+
+- <= LITERAL_CAP ids: In(doc_id)-pruned reads of the probe table (it is
+  doc_id-sorted, so footer stats prune row groups — O(batch row groups),
+  not O(index));
+- <= BULK_CAP: broadcast LeftSemi probe — one doc_id-column scan against
+  a broadcast hash of the batch ids (O(1) plan size vs a 10k+-literal In
+  list); the probe side is rebuilt from the COLLECTED ids, never by
+  re-executing the caller's dead lineage (a nondeterministic upstream
+  could desync the probe from the id set actually being tombstoned);
+- >  BULK_CAP (bulk load/remove): the probe is skipped and the dead set
+  is written fully DISTRIBUTED (observe ABOVE the range exchange for the
+  exact count) — a bulk remove never round-trips its id set through the
+  driver.
+
+Only ids actually stored in an earlier segment die, so insert-only
+streams carry zero tombstones and the tombstone row mass equals TRUE dead
+rows — what the DB hook's row-budget vacuum (db._bound_state) counts.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+LITERAL_CAP = 10_000
+BULK_CAP = 100_000
+_TOMB_SCHEMA = "doc_id long, upto_seg int"
+
+
+class SegmentStore:
+    """Open-or-create a segment store at ``folder`` (see the module
+    docstring for what a subclass supplies)."""
+
+    _SCHEMAS: dict[str, str] = {}
+    _PROBE = ""
+    # existence-probe tier caps (class attributes so tests can pin them)
+    _PROBE_LITERAL_IDS = LITERAL_CAP
+    _BULK_IDS = BULK_CAP
+    # geometric tier ratio: extend the trailing merge run while the next
+    # (older) segment is no more than this multiple of the run's size
+    _TIER_RATIO = 8
+
+    def __init__(self, spark: SparkSession, folder: str):
+        self.spark = spark
+        self.folder = folder
+        os.makedirs(folder, exist_ok=True)
+        self._meta_path = os.path.join(folder, "meta.json")
+        if os.path.exists(self._meta_path):
+            with open(self._meta_path) as f:
+                self.meta = json.load(f)
+        else:
+            self.meta = self._fresh_meta()
+
+    # -- meta ----------------------------------------------------------------
+
+    def _fresh_meta(self, v: int = 0) -> dict:
+        return {"segments": [], "tombstones": [], "seg_stats": {}, "v": v}
+
+    def _write_meta(self) -> None:
+        # optimistic-concurrency guard: meta carries a version counter; a
+        # handle whose view is stale (another writer committed since we
+        # read) fails loudly instead of last-write-wins dropping that
+        # writer's segments.  (DB-maintained indexes are already
+        # serialized by the DB's own commit flow; this protects direct
+        # multi-handle use.)
+        if os.path.exists(self._meta_path):
+            with open(self._meta_path) as f:
+                on_disk = json.load(f).get("v", 0)
+            if on_disk != self.meta.get("v", 0):
+                raise Exception(
+                    f"concurrent {type(self).__name__} writer detected: "
+                    f"meta version moved {self.meta.get('v', 0)} -> "
+                    f"{on_disk}; re-open the index and retry")
+        self.meta["v"] = self.meta.get("v", 0) + 1
+        tmp = self._meta_path + f".tmp{os.getpid()}"
+        with open(tmp, "w") as f:
+            json.dump(self.meta, f)
+        os.replace(tmp, self._meta_path)
+
+    def _next_name(self, prefix: str) -> str:
+        existing = self.meta["segments"] + self.meta["tombstones"]
+        n = 0
+        while f"{prefix}_{n}" in existing:
+            n += 1
+        return f"{prefix}_{n}"
+
+    def _rm(self, name: str) -> None:
+        shutil.rmtree(os.path.join(self.folder, name), ignore_errors=True)
+
+    def _clear(self) -> None:
+        """Start of a (re)build: drop every committed segment and
+        tombstone dir and reset meta (the version counter carries on)."""
+        for name in self.meta["segments"] + self.meta["tombstones"]:
+            self._rm(name)
+        self.meta = self._fresh_meta(self.meta.get("v", 0))
+
+    def _swap_in(self, name: str | None, stat) -> None:
+        """Commit ``name`` as the only segment (None: nothing live) with
+        no tombstones, then delete every other seg_*/tomb_* dir — the
+        replaced ones and any a crashed writer staged but never committed
+        into meta (same role as the DB commit's stray sweep)."""
+        self.meta = self._fresh_meta(self.meta.get("v", 0))
+        if name is not None:
+            self.meta["segments"] = [name]
+            self.meta["seg_stats"] = {name: stat}
+        self._write_meta()
+        for entry in os.listdir(self.folder):
+            if entry.startswith(("seg_", "tomb_")) and entry != name:
+                self._rm(entry)
+
+    # -- mutation ------------------------------------------------------------
+
+    def upsert_batch(self, docs: DataFrame | None,
+                     dead_ids_df: DataFrame | None = None) -> None:
+        """One mutation round trip for a mixed batch: ``docs`` rows
+        (doc_id, text) become ONE new segment; every touched id — docs'
+        ids, or the `doc_id` column of ``dead_ids_df`` when the caller
+        tracks a wider dead set (the DB hook passes every upserted id:
+        str rows re-index, non-str rows just die) — that actually exists
+        in an earlier segment is killed there by ONE scoped tombstone.
+        Empty batches roll back to no state change, all-new batches
+        commit without a tombstone, and a fresh index is just a build."""
+        if not self.meta["segments"]:
+            # nothing earlier to tombstone (dead ids have nothing to kill)
+            if docs is not None:
+                self.build(docs)
+            return
+        upto = len(self.meta["segments"]) - 1
+        seg_name = tomb_name = None
+        if docs is not None:
+            seg_name = self._next_name("seg")
+            st = self._write_segment(docs, seg_name)
+            if self._seg_size(st):
+                self.meta.setdefault("seg_stats", {})[seg_name] = st
+            else:
+                # empty batch (streaming sinks deliver them routinely):
+                # roll the staged segment back — the write-time stats
+                # already told us, no extra count job
+                self._rm(seg_name)
+                seg_name = None
+        dead = docs if dead_ids_df is None else dead_ids_df
+        if dead is not None:
+            tomb_name = self._next_name("tomb")
+            n_tomb = self._write_tombstone(
+                dead.select(F.col("doc_id").cast("long").alias("doc_id")),
+                upto, tomb_name)
+            if not n_tomb:
+                tomb_name = None
+        if seg_name is None and tomb_name is None:
+            return  # fully empty batch: no state change, no meta bump
+        if seg_name is not None:
+            self.meta["segments"].append(seg_name)
+        if tomb_name is not None:
+            self.meta["tombstones"].append(tomb_name)
+            # effective scope recorded in meta from birth, so compact_tail
+            # can re-scope without rewriting the tombstone parquet
+            self.meta.setdefault("tomb_upto", {})[tomb_name] = upto
+            self.meta.setdefault("tomb_stats", {})[tomb_name] = n_tomb
+        self._write_meta()
+
+    def _write_tombstone(self, dead: DataFrame, upto: int,
+                         name: str) -> int:
+        """Write ``folder/name`` holding the ids of ``dead`` that exist in
+        a stored segment (or, past _BULK_IDS, the full distributed set),
+        scoped ``upto_seg = upto`` — the three tiers of the module
+        docstring.  Returns the row count; 0 means nothing was written
+        (the caller must not register the name)."""
+        path = os.path.join(self.folder, name)
+        dead = dead.dropDuplicates(["doc_id"])
+        head = dead.limit(self._BULK_IDS + 1).collect()
+        if len(head) > self._BULK_IDS:
+            obs = Observation()
+            (dead.withColumn("upto_seg", F.lit(upto).cast("int"))
+             .repartitionByRange("doc_id")
+             .observe(obs, F.count(F.lit(1)).alias("n"))
+             .sortWithinPartitions("doc_id")
+             .write.mode("overwrite").parquet(path))
+            n = int(obs.get["n"])
+            if not n:
+                self._rm(name)
+            return n
+        ids = sorted({int(r[0]) for r in head})
+        if not ids:
+            return 0
+        if len(ids) <= self._PROBE_LITERAL_IDS:
+            probe = (self._raw_run(self._PROBE, prune_ids=ids)
+                     .select("doc_id"))
+        else:
+            ids_df = self.spark.createDataFrame([(i,) for i in ids],
+                                                "doc_id long")
+            probe = (self._raw_run(self._PROBE).select("doc_id")
+                     .join(F.broadcast(ids_df), "doc_id", "left_semi"))
+        exist = {int(r[0]) for r in probe.distinct().collect()}
+        dead_ids = [i for i in ids if i in exist]
+        if not dead_ids:
+            return 0
+        (self.spark.createDataFrame([(i,) for i in dead_ids], "doc_id long")
+         .withColumn("upto_seg", F.lit(upto))
+         .coalesce(1).sortWithinPartitions("doc_id")
+         .write.mode("overwrite").parquet(path))
+        return len(dead_ids)
+
+    def remove(self, doc_ids) -> None:
+        """Delete ids: one tombstone covering every current segment."""
+        if not doc_ids or not self.meta["segments"]:
+            return
+        self.remove_df(self.spark.createDataFrame(
+            [(int(i),) for i in doc_ids], "doc_id: long"))
+
+    def remove_df(self, ids_df: DataFrame) -> None:
+        """remove() from a DataFrame of doc_ids — the distributed form
+        mutation hooks use.  Bulk sets (> _BULK_IDS) never round-trip
+        through the driver; smaller sets pay one bounded limit()-capped
+        collect for the existence probe."""
+        self.upsert_batch(None, ids_df)
+
+    def compact_tail(self) -> None:
+        """Tiered (log-structured) merge — Lucene's real merge policy tier:
+        fold the maximal TRAILING run of comparably-small segments into
+        one, leaving large old segments — the bootstrap segment above
+        all — untouched.  Under micro-batch ingest this makes maintenance
+        amortized O(batch·log) instead of compact()'s O(index) full
+        rewrite.
+
+        Correctness with scoped tombstones: the merged segment holds the
+        LIVE rows of its sources, so every tombstone's within-run effect
+        is materialized; a tombstone whose scope reached into the run is
+        then re-scoped to the last untouched segment via meta's tomb_upto
+        override — its parquet is untouched, and its remaining job
+        (killing docs in segments OLDER than the run) is preserved
+        exactly.  When the run reaches segment 0 this degenerates to
+        compact(), which also drops the tombstones.  Every other outcome
+        ends by folding the tombstone pile."""
+        segs = self.meta["segments"]
+        if len(segs) < 2:
+            self._fold_tombstones()
+            return
+        stats = dict(self.meta.get("seg_stats") or {})
+        backfilled = False
+        for s in segs:
+            # legacy pre-stats segment: one-time backfill, persisted — a
+            # default size of 0 would absorb a huge legacy bootstrap into
+            # the trailing run and degrade this tiered merge to a full
+            # compact()
+            got = self._backfill(s, stats.get(s))
+            if got is not None:
+                stats[s] = got
+                backfilled = True
+        if backfilled:
+            self.meta["seg_stats"] = stats
+            self._write_meta()
+        sizes = [self._seg_size(stats[s]) for s in segs]
+        i = len(segs) - 1
+        acc = sizes[i]
+        while i - 1 >= 0 and sizes[i - 1] <= self._TIER_RATIO * max(acc, 1):
+            i -= 1
+            acc += sizes[i]
+        if i == len(segs) - 1:
+            # no mergeable segment run (the tail dwarfs its elder) —
+            # still bound the tombstone read fan-in
+            self._fold_tombstones()
+            return
+        if i == 0:
+            self.compact()
+            return
+        name = self._next_name("seg")
+        st = self._merge_run(name, i)
+        if not self._seg_size(st):
+            self._rm(name)
+            name = None
+        over = dict(self.meta.get("tomb_upto") or {})
+        for t in self.meta["tombstones"]:
+            u = over.get(t)
+            if u is None:
+                # tombstone born before scopes were recorded in meta:
+                # read its written scope (one tiny job) — guessing a
+                # default could WIDEN a narrow tombstone after re-scoping
+                u = int(self.spark.read.schema(_TOMB_SCHEMA)
+                        .parquet(os.path.join(self.folder, t))
+                        .agg(F.max("upto_seg")).first()[0])
+            # in-run effect materialized in the merge
+            over[t] = min(u, i - 1)
+        self.meta["segments"] = segs[:i] + ([name] if name else [])
+        self.meta["seg_stats"] = {s: stats[s] for s in segs[:i]}
+        if name:
+            self.meta["seg_stats"][name] = st
+        self.meta["tomb_upto"] = over
+        self._write_meta()
+        for stale in segs[i:]:
+            self._rm(stale)
+        self._fold_tombstones()
+
+    def _fold_tombstones(self) -> None:
+        """Fold the tombstone PILE into ONE doc_id-sorted file — the other
+        half of the tiered discipline: without it, tombstone files pile
+        up one per micro-batch.  Per-row effective scopes are
+        materialized (``least`` of the written scope and the meta
+        override), repeated kills of one doc collapse to the widest
+        scope, and empty-scope rows (upto_seg < 0) drop — so tombstone
+        ROWS ≈ distinct churned ids since the last full compact, and the
+        fold is O(churn), never O(index).  The row count itself is
+        bounded by the DB hook's row-budget vacuum (full compact at ~50%
+        churn: amortized O(1) rewrite per churned doc)."""
+        tombs = self.meta["tombstones"]
+        if len(tombs) < 2:
+            return
+        name = self._next_name("tomb")
+        obs = Observation()
+        (self._tomb()
+         .where(F.col("upto_seg") >= 0)
+         .groupBy("doc_id")
+         .agg(F.max("upto_seg").alias("upto_seg"))
+         .observe(obs, F.count(F.lit(1)).alias("n"))
+         .coalesce(1).sortWithinPartitions("doc_id")  # In(doc_id)
+         .write.mode("overwrite")                     # footer pruning
+         .parquet(os.path.join(self.folder, name)))
+        n = int(obs.get["n"])
+        if not n:
+            self._rm(name)
+        self.meta["tombstones"] = [name] if n else []
+        self.meta["tomb_upto"] = {}
+        self.meta["tomb_stats"] = {name: n} if n else {}
+        self._write_meta()
+        for t in tombs:
+            self._rm(t)
+
+    # -- row counts (write-time stats, zero jobs) ----------------------------
+
+    def tomb_rows(self) -> int | None:
+        """Total tombstone rows from write-time stats; None when a
+        pre-stats legacy tombstone lacks one (trivially bounded: any
+        >=2-file pile is folded by compact_tail, which stats it)."""
+        st = self.meta.get("tomb_stats") or {}
+        if any(t not in st for t in self.meta["tombstones"]):
+            return None
+        return sum(int(st[t]) for t in self.meta["tombstones"])
+
+    def seg_rows(self) -> int:
+        """Total stored doc rows (live + not-yet-vacuumed dead) — the
+        row-budget vacuum's denominator."""
+        st = self.meta.get("seg_stats") or {}
+        return sum(self._seg_size(st[s]) for s in self.meta["segments"]
+                   if s in st)
+
+    doc_rows = seg_rows
+
+    # -- reads ---------------------------------------------------------------
+
+    def _tomb(self) -> DataFrame | None:
+        if not self.meta["tombstones"]:
+            return None
+        # a tiered merge (compact_tail) re-scopes tombstones whose range
+        # reached into the merged run WITHOUT rewriting their parquet:
+        # meta's tomb_upto override NARROWS the written column (least,
+        # never replace — a folded tombstone file holds heterogeneous
+        # per-row scopes, and a replace would WIDEN its narrow rows)
+        over = self.meta.get("tomb_upto") or {}
+        parts = []
+        for t in self.meta["tombstones"]:
+            df = (self.spark.read.schema(_TOMB_SCHEMA)
+                  .parquet(os.path.join(self.folder, t)))
+            if t in over:
+                df = df.withColumn(
+                    "upto_seg", F.least("upto_seg", F.lit(int(over[t]))))
+            parts.append(df)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def _raw_run(self, sub: str, lo: int = 0,
+                 prune_ids=None) -> DataFrame:
+        """Stored rows of table ``sub`` in segments[lo:], with their
+        global segment ordinal as ``seg`` — NO tombstone filtering.
+        ``prune_ids`` adds an In(doc_id) filter to every segment read
+        (footer row-group pruning on doc_id-sorted tables)."""
+        if not self.meta["segments"]:
+            raise Exception(f"empty {type(self).__name__}; build() first")
+        parts = []
+        for i, name in enumerate(self.meta["segments"]):
+            if i < lo:
+                continue
+            df = (self.spark.read.schema(self._SCHEMAS[sub])
+                  .parquet(os.path.join(self.folder, name, sub)))
+            if prune_ids is not None:
+                df = df.where(F.col("doc_id").isin(prune_ids))
+            parts.append(df.withColumn("seg", F.lit(i)))
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
+
+    def _minus_tombstones(self, df: DataFrame,
+                          prune_ids=None) -> DataFrame:
+        """Anti-join the tombstones against rows carrying a segment
+        ordinal ``seg`` (non-equi: a tombstone kills rows of every
+        segment up to its ``upto_seg``).  No forced broadcast: the pile
+        is bounded by the row-budget vacuum at ~half the stored rows,
+        which can exceed the broadcast limit at corpus scale — the
+        planner picks the strategy from actual sizes.  ``prune_ids``
+        prunes the tombstone read too, so a bounded-id caller pays
+        bounded cost regardless of the pile."""
+        tomb = self._tomb()
+        if tomb is None:
+            return df
+        if prune_ids is not None:
+            tomb = tomb.where(F.col("doc_id").isin(prune_ids))
+        return df.join(
+            tomb,
+            (df["doc_id"] == tomb["doc_id"])
+            & (tomb["upto_seg"] >= df["seg"]),
+            "left_anti")
+
+    def _live_run(self, sub: str, lo: int = 0,
+                  prune_ids=None) -> DataFrame:
+        """Live rows of table ``sub`` in segments[lo:] (global segment
+        ordinals — the tombstone scopes are global), without the seg
+        column."""
+        return self._minus_tombstones(
+            self._raw_run(sub, lo, prune_ids), prune_ids).drop("seg")

@@ -21,15 +21,16 @@ Architecture (Lucene's segment model on plain parquet):
                                  seeds, build/compact only
     <folder>/seg_<n>/doclen/     (doc_id, dl)  — stats + local serving
     <folder>/tomb_<n>/           (doc_id, upto_seg)    deletes/replacements
-    <folder>/meta.json           {segments, tombstones} — atomic swap
+    <folder>/meta.json           {segments, tombstones, ...} — atomic swap
 
-- A batch of new/updated docs is ONE new segment plus tombstones marking
-  the incoming ids dead in every EARLIER segment (``upto_seg`` scopes the
-  tombstone, so an upsert kills the old postings without touching the new
-  ones).  No existing segment file is ever rewritten — mutation cost is
-  O(batch), not O(index).
+- Segments, tombstones, meta and compaction are the segment store shared
+  with GateIndex (operators/segments.py): a batch of new/updated docs is
+  ONE new segment plus tombstones marking the incoming ids dead in every
+  EARLIER segment (``upto_seg`` scopes the tombstone, so an upsert kills
+  the old postings without touching the new ones).  No existing segment
+  file is ever rewritten — mutation cost is O(batch), not O(index).
 - ``compact()`` folds live postings into a single fresh segment and drops
-  the tombstones (Lucene's merge).
+  the tombstones (Lucene's merge); ``compact_tail()`` is the tiered merge.
 - Postings are written ``repartitionByRange(token)`` + sorted by token, so
   a query's ``token IN (...)`` predicate prunes FILES and ROW GROUPS from
   the parquet footer stats alone — a 3-term query against a 100 TB corpus
@@ -43,10 +44,13 @@ Architecture (Lucene's segment model on plain parquet):
 Scale notes: in the compacted steady state n_docs/avgdl come from exact
 write-time per-segment stats in meta — ZERO jobs; with live tombstones
 they aggregate the slim doclen tables (1 row per live doc — at 100 TB a
-few GB, not the corpus).  The tombstone table is broadcast (deletes since
-last compact).  The reference
-engine has no lexical index (vector-only, BinaryVectorDB/README.md:1-40);
-this is part of the hybrid-retrieval surface a production corpus needs.
+few GB, not the corpus).  The tombstone anti-join carries no broadcast
+hint: the pile (deletes since the last full compact) is bounded by the
+row-budget vacuum at ~half the stored rows, which can outgrow the
+broadcast limit, so the planner picks the join from actual sizes.  The
+reference engine has no lexical index (vector-only,
+BinaryVectorDB/README.md:1-40); this is part of the hybrid-retrieval
+surface a production corpus needs.
 """
 
 from __future__ import annotations
@@ -54,14 +58,14 @@ from __future__ import annotations
 import json
 import math
 import os
-import shutil
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-_META = "meta.json"
+from binaryvectordb_spark.operators.segments import SegmentStore
+
 # on-disk layout format: 2 = postings rows carry the denormalized doc
 # length (dl) so BM25 reads ONLY pruned postings — no O(corpus) doclen
 # join per query (the 1M-corpus bench measured that join dominating:
@@ -80,43 +84,44 @@ _META = "meta.json"
 _FMT = 3
 
 
-class TextIndex:
-    """Open-or-create a persisted inverted index at ``folder``."""
+class TextIndex(SegmentStore):
+    """Open-or-create a persisted inverted index at ``folder``.  Segments,
+    tombstones, meta and compaction are the shared segment store
+    (operators/segments.py); this class says what a segment holds
+    (postings/doclen/term_stats) and serves BM25 over it."""
 
-    def __init__(self, spark: SparkSession, folder: str):
-        self.spark = spark
-        self.folder = folder
-        os.makedirs(folder, exist_ok=True)
-        self._meta_path = os.path.join(folder, _META)
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                self.meta = json.load(f)
-        else:
-            self.meta = {"segments": [], "tombstones": [], "seg_stats": {},
-                         "fmt": _FMT}
+    # fixed table schemas, supplied to every read: parquet schema
+    # inference over a multi-file dir runs a footer-reading Spark job,
+    # which would tax every query AND the maintenance job budget
+    _SCHEMAS = {
+        "postings": "token string, doc_id long, tf double, "
+                    "positions array<int>, dl double",
+        "doclen": "doc_id long, dl double",
+    }
+    # the existence probe reads the doc_id-sorted doclen tables
+    _PROBE = "doclen"
 
-    # -- layout ------------------------------------------------------------
+    def _fresh_meta(self, v: int = 0) -> dict:
+        return dict(super()._fresh_meta(v), fmt=_FMT)
 
-    def _write_meta(self) -> None:
-        # optimistic-concurrency guard: meta carries a version counter; a
-        # handle whose view is stale (another writer committed since we
-        # read) fails loudly instead of last-write-wins dropping that
-        # writer's segments.  (DB-maintained indexes are already
-        # serialized by the DB's own commit flow; this protects direct
-        # multi-handle use.)
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                on_disk = json.load(f).get("v", 0)
-            if on_disk != self.meta.get("v", 0):
-                raise Exception(
-                    "concurrent TextIndex writer detected: meta version "
-                    f"moved {self.meta.get('v', 0)} -> {on_disk}; re-open "
-                    "the index and retry")
-        self.meta["v"] = self.meta.get("v", 0) + 1
-        tmp = self._meta_path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-        os.replace(tmp, self._meta_path)
+    @staticmethod
+    def _seg_size(st: dict) -> int:
+        return int(st.get("n_docs", 0))
+
+    def _backfill(self, name: str, have: dict | None) -> dict | None:
+        """Segment-stats entry for a legacy segment lacking one (None when
+        ``have`` is complete).  BOTH stats come from the one doclen read:
+        an n_docs-only entry would leave _corpus_stats' zero-job fast
+        path to KeyError on sum_dl after a merge."""
+        have = have or {}
+        if "n_docs" in have and "sum_dl" in have:
+            return None
+        got = (self.spark.read.schema(self._SCHEMAS["doclen"])
+               .parquet(os.path.join(self.folder, name, "doclen"))
+               .agg(F.count(F.lit(1)).alias("n"),
+                    F.sum("dl").alias("s")).first())
+        return dict(have, n_docs=int(got["n"]),
+                    sum_dl=float(got["s"] or 0.0))
 
     @staticmethod
     def _tokens(docs_df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -156,13 +161,12 @@ class TextIndex:
             and ("(%rD * " % _K1) in _IMP_EXPR), \
         "_IMP_EXPR literals diverged from _K1/_TF_SUP"
 
-    def _write_segment(self, docs_df: DataFrame, id_col: str,
-                       text_col: str, name: str,
+    def _write_segment(self, docs: DataFrame, name: str,
                        with_imp: bool = False) -> dict:
         # postings carry POSITIONAL lists (sorted, 1-based) — tf is their
         # size, and the positions power phrase queries (search_phrase);
         # the extra ints cost ~the text itself once, at build time
-        postings = (self._tokens_pos(docs_df, id_col, text_col)
+        postings = (self._tokens_pos(docs, "doc_id", "text")
                     .groupBy("token", "doc_id")
                     .agg(F.array_sort(F.collect_list("pos"))
                          .alias("positions"))
@@ -186,7 +190,6 @@ class TextIndex:
         postings = postings.withColumn(
             "dl", F.sum("tf").over(Window.partitionBy("doc_id")))
         seg = os.path.join(self.folder, name)
-        order = ["token", F.desc("tf"), "dl", "doc_id"]
         if with_imp:
             # fmt-3 IMPACT layout (build/compact only — the extra stats
             # job stays off the pinned per-upsert budget; the block-max
@@ -196,23 +199,34 @@ class TextIndex:
             # steady state that literal IS the query-time avgdl
             # (fold-order-free sum / int count, same IEEE division), so
             # floor(idf * imp * 1e10) replays the classic score
-            # bit-for-bit.  Sorting tokens by imp DESC makes the parquet
-            # row-group max(imp) stats a DESCENDING ladder through each
-            # term's blocks: the footers ARE the Block-Max WAND table,
-            # and an `imp >= I` pushdown physically skips every block
-            # below the running top-k threshold.
+            # bit-for-bit.
             per_doc = (postings.groupBy("doc_id")
                        .agg(F.first("dl").alias("dl"))
                        .agg(F.count(F.lit(1)).alias("n"),
                             F.sum("dl").alias("s")).first())
-            # empty corpus build: zero postings (sum is NULL) — any
-            # literal works, the imp projection runs over zero rows
-            avgdl = (float(per_doc["s"]) / float(per_doc["n"])
-                     if per_doc["n"] else 1.0)
-            postings = postings.withColumn(
-                "imp", F.expr(self._IMP_EXPR.replace(
-                    "avgdl", repr(avgdl) + "D")))
-            order = ["token", F.desc("imp"), "doc_id"]
+            postings = self._with_imp(postings, per_doc)
+        self._write_postings(postings, seg, with_imp)
+        return self._doclen_from_postings(seg)
+
+    def _with_imp(self, postings: DataFrame, srow) -> DataFrame:
+        """``postings`` plus the fmt-3 `imp` column, with the avgdl of the
+        stats row ``srow`` (n, s) as a literal."""
+        # empty corpus (zero postings, sum is NULL): any literal works,
+        # the imp projection runs over zero rows
+        avgdl = float(srow["s"]) / float(srow["n"]) if srow["n"] else 1.0
+        return postings.withColumn("imp", F.expr(self._IMP_EXPR.replace(
+            "avgdl", repr(avgdl) + "D")))
+
+    def _write_postings(self, postings: DataFrame, seg: str,
+                        with_imp: bool) -> None:
+        # impact layout: sorting tokens by imp DESC makes the parquet
+        # row-group max(imp) stats a DESCENDING ladder through each
+        # term's blocks — the footers ARE the Block-Max WAND table, and
+        # an `imp >= I` pushdown physically skips every block below the
+        # running top-k threshold.  Micro-batch segments keep tf DESC /
+        # dl ASC.
+        order = (["token", F.desc("imp"), "doc_id"] if with_imp
+                 else ["token", F.desc("tf"), "dl", "doc_id"])
         (postings.repartitionByRange("token")
          .sortWithinPartitions(*order)
          .write.mode("overwrite")
@@ -223,6 +237,8 @@ class TextIndex:
          # tasks x the 128 MB default was most of a 2g heap at 1M docs
          .options(**self._postings_block_opt())
          .parquet(os.path.join(seg, "postings")))
+
+    def _doclen_from_postings(self, seg: str) -> dict:
         # doclen from the WRITTEN postings (dl = sum of tf, identical to a
         # token count: tf doubles are integer-valued, so the sum is exact
         # and fold-order-free) — reads the compact segment back instead of
@@ -283,31 +299,23 @@ class TextIndex:
             return {}
         return {"parquet.block.size": str(16 << 20)}
 
-    def _next_name(self, prefix: str) -> str:
-        existing = self.meta["segments"] + self.meta["tombstones"]
-        n = 0
-        while f"{prefix}_{n}" in existing:
-            n += 1
-        return f"{prefix}_{n}"
-
     # -- mutation ----------------------------------------------------------
 
     def build(self, docs_df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> "TextIndex":
         """(Re)build from scratch: one corpus pass, single segment."""
-        for name in self.meta["segments"] + self.meta["tombstones"]:
-            shutil.rmtree(os.path.join(self.folder, name),
-                          ignore_errors=True)
-        self.meta = {"segments": [], "tombstones": [], "seg_stats": {},
-                     "v": self.meta.get("v", 0), "fmt": _FMT}
-        st = self._write_segment(docs_df, id_col, text_col, "seg_0",
-                                 with_imp=True)
+        self._clear()
+        st = self._write_segment(self._docs(docs_df, id_col, text_col),
+                                 "seg_0", with_imp=True)
         self._write_term_stats(os.path.join(self.folder, "seg_0"))
         st["ts"] = True
-        self.meta["segments"] = ["seg_0"]
-        self.meta["seg_stats"] = {"seg_0": st}
-        self._write_meta()
+        self._swap_in("seg_0", st)
         return self
+
+    @staticmethod
+    def _docs(docs_df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        return docs_df.select(F.col(id_col).alias("doc_id"),
+                              F.col(text_col).alias("text"))
 
     def add_documents(self, docs_df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text") -> None:
@@ -319,109 +327,20 @@ class TextIndex:
     def upsert_batch(self, docs_df: DataFrame | None,
                      dead_ids_df: DataFrame | None,
                      id_col: str = "doc_id", text_col: str = "text") -> None:
-        """One mutation round-trip for a mixed batch: ``docs_df`` rows get
-        new postings (one fresh segment); ``dead_ids_df`` doc_ids (a
-        `doc_id` column) are additionally killed in every earlier segment
-        WITHOUT re-indexing — the DB's upsert hook passes ALL touched ids
-        here (str rows re-index, non-str rows just die) so one scoped
-        tombstone covers both, instead of a tombstone write plus a
-        remove_df write.
+        """SegmentStore.upsert_batch over ``docs_df``'s (id_col,
+        text_col) rows.  Spark-job budget (the streaming-sink cost):
+        postings write + doclen write (stats folded in via observed
+        metrics) + one bounded In(doc_id)-pruned existence probe of the
+        doclen tables + one tombstone write; an all-new batch skips the
+        tombstone entirely.  Zero per-batch STATS jobs — pinned by
+        tests/test_textindex.py job counting."""
+        super().upsert_batch(
+            None if docs_df is None
+            else self._docs(docs_df, id_col, text_col), dead_ids_df)
 
-        Spark-job budget (the streaming-sink cost): postings write + doclen
-        write (stats folded in via observed metrics) + one bounded
-        In(doc_id)-pruned existence probe + one tombstone write; an
-        all-new batch skips the tombstone entirely.  The existence probe
-        (r12, mirroring GateIndex): only ids that actually have a doclen
-        row in an earlier segment die — so insert-only streams carry ZERO
-        tombstones and the tombstone mass equals TRUE dead rows, which is
-        what the DB hook's row-budget vacuum counts.  Zero per-batch
-        STATS jobs — pinned by tests/test_textindex.py job counting."""
-        if not self.meta["segments"]:
-            # nothing earlier to tombstone: a fresh index is just a build
-            # over the new postings (dead ids have nothing to kill)
-            if docs_df is not None:
-                self.build(docs_df, id_col, text_col)
-            return
-        upto = len(self.meta["segments"]) - 1
-        seg_name = None
-        if docs_df is not None:
-            seg_name = self._next_name("seg")
-            st = self._write_segment(docs_df, id_col, text_col, seg_name)
-            if st["n_docs"] == 0:
-                # empty batch: roll the staged segment back rather than
-                # registering a useless dir (streaming sinks deliver empty
-                # micro-batches routinely) — the write-time stats already
-                # told us, no extra count job
-                shutil.rmtree(os.path.join(self.folder, seg_name),
-                              ignore_errors=True)
-                seg_name = None
-            else:
-                self.meta.setdefault("seg_stats", {})[seg_name] = st
-        dead = None
-        if docs_df is not None and dead_ids_df is None:
-            dead = docs_df.select(F.col(id_col).cast("long").alias("doc_id"))
-        elif dead_ids_df is not None:
-            dead = dead_ids_df.select(
-                F.col("doc_id").cast("long").alias("doc_id"))
-        tomb_name, n_tomb = None, 0
-        if dead is not None:
-            # existence-filtered (r12): tombstone only ids actually
-            # stored in an earlier segment.  Three tiers by batch-id
-            # cardinality (r13 ADVICE, the GateIndex discipline — the
-            # collect is limit()-capped, never unbounded):
-            #   ≤ _PROBE_LITERAL_IDS: In(doc_id)-pruned doclen reads
-            #     (doc_id-sorted since r12 → footer row-group pruning);
-            #   ≤ _BULK_IDS: broadcast LeftSemi probe — one doc_id-only
-            #     doclen scan, O(1) plan size vs a giant literal list;
-            #   > _BULK_IDS (bulk remove): skip the probe and write the
-            #     dead set FULLY DISTRIBUTED (observe above the range
-            #     exchange for the exact count) — the id set never
-            #     round-trips through the driver.
-            from binaryvectordb_spark.operators.segprobe import (
-                write_existence_filtered_tombstone,
-            )
-            tomb_name = self._next_name("tomb")
-            n_tomb = write_existence_filtered_tombstone(
-                self.spark, self.folder, self.meta["segments"], upto,
-                self._SCHEMAS["doclen"], "doclen", dead, tomb_name,
-                literal_cap=self._PROBE_LITERAL_IDS,
-                bulk_cap=self._BULK_IDS)
-            if not n_tomb:
-                tomb_name = None
-        if seg_name is None and tomb_name is None:
-            return  # fully empty batch: no state change, no meta bump
-        if seg_name is not None:
-            self.meta["segments"].append(seg_name)
-        if tomb_name is not None:
-            self.meta["tombstones"].append(tomb_name)
-            # effective scope recorded in meta from birth, so compact_tail
-            # can re-scope without rewriting the tombstone parquet
-            self.meta.setdefault("tomb_upto", {})[tomb_name] = upto
-            self.meta.setdefault("tomb_stats", {})[tomb_name] = n_tomb
-        self._write_meta()
-
-    # existence-probe tiers — one shared implementation for both derived
-    # indexes (operators/segprobe.py, r13 review: the "unified policy"
-    # must be unified in CODE); the caps are re-exported for tests
-    from binaryvectordb_spark.operators.segprobe import (
-        BULK_CAP as _BULK_IDS,
-        LITERAL_CAP as _PROBE_LITERAL_IDS,
-    )
-
-    def remove(self, doc_ids: Sequence[int]) -> None:
-        """Delete ids: a tombstone covering every current segment."""
-        if not doc_ids or not self.meta["segments"]:
-            return
-        self.remove_df(self.spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id: long"))
-
-    def remove_df(self, ids_df: DataFrame) -> None:
-        """remove() from a DataFrame of doc_ids — the distributed form
-        mutation hooks use.  Bulk sets (> _BULK_IDS) never round-trip
-        through the driver (distributed tombstone write); smaller sets
-        pay one bounded limit()-capped collect for the existence
-        probe."""
-        self.upsert_batch(None, ids_df)
+    # bound in this class's own namespace: perfbench wraps the layer
+    # function TextIndex.remove by class attribute
+    remove = SegmentStore.remove
 
     def compact(self) -> None:
         """Merge live postings into one fresh segment, drop tombstones
@@ -429,8 +348,8 @@ class TextIndex:
         # carry EVERY postings column (tf AND positions) — dropping one
         # would leave the compacted segment schema-incompatible with the
         # next upsert's segment and break the query-side union
-        post = self.live_postings().drop("seg")
-        dl = self.live_doclen().select("doc_id", "dl")
+        post = self.live_postings()
+        dl = self.live_doclen()
         name = self._next_name("seg")
         seg = os.path.join(self.folder, name)
         # the fmt-3 impact column, with the POST-compaction corpus avgdl
@@ -439,255 +358,25 @@ class TextIndex:
         # the literal equals the query-time _corpus_stats value exactly
         srow = dl.agg(F.count(F.lit(1)).alias("n"),
                       F.sum("dl").alias("s")).first()
-        # fully-deleted index: the live set is empty (sum is NULL) — any
-        # literal works, the imp projection runs over zero rows
-        avgdl = (float(srow["s"]) / float(srow["n"])
-                 if srow["n"] else 1.0)
-        post = post.withColumn(
-            "imp", F.expr(self._IMP_EXPR.replace("avgdl",
-                                                 repr(avgdl) + "D")))
-        (post.repartitionByRange("token")
-         .sortWithinPartitions("token", F.desc("imp"), "doc_id")
-         .write.mode("overwrite")
-         .options(**self._postings_block_opt())  # same cap as _write_segment
-         .parquet(os.path.join(seg, "postings")))
+        self._write_postings(self._with_imp(post, srow), seg, True)
         st = self._write_doclen(dl, seg)  # stats folded into the write job
         self._write_term_stats(seg)
         st["ts"] = True
-        old = self.meta["segments"] + self.meta["tombstones"]
         # compaction rewrites every posting row (with dl), so the folded
         # index is fmt-current even when the input segments predated it
-        self.meta = {"segments": [name], "tombstones": [],
-                     "seg_stats": {name: st},
-                     "v": self.meta.get("v", 0), "fmt": _FMT}
-        self._write_meta()
-        for stale in old:
-            shutil.rmtree(os.path.join(self.folder, stale),
-                          ignore_errors=True)
-        # GC orphans: seg_*/tomb_* dirs a crashed writer staged but never
-        # committed into meta (same role as the DB commit's stray sweep)
-        for entry in os.listdir(self.folder):
-            if ((entry.startswith("seg_") or entry.startswith("tomb_"))
-                    and entry != name):
-                shutil.rmtree(os.path.join(self.folder, entry),
-                              ignore_errors=True)
+        self._swap_in(name, st)
 
-    # geometric tier ratio: extend the trailing merge run while the next
-    # (older) segment is no more than this multiple of the run's size
-    _TIER_RATIO = 8
-
-    def compact_tail(self) -> None:
-        """Tiered (log-structured) merge — Lucene's real merge policy tier:
-        fold the maximal TRAILING run of comparably-small segments into
-        one, leaving large old segments untouched.  Under micro-batch
-        ingest this makes maintenance amortized O(batch·log) instead of
-        compact()'s O(index) full rewrite: at 100 TB the bootstrap segment
-        is never rewritten just because 16 small batches arrived.
-
-        Correctness with scoped tombstones: the merged segment is built
-        from the LIVE rows of its sources (`live_postings` restricted to
-        the run), so every tombstone's within-run effect is materialized;
-        a tombstone whose scope reached into the run is then re-scoped to
-        the last untouched segment via meta's tomb_upto override — its
-        parquet is untouched, and its remaining job (killing the doc in
-        segments OLDER than the run) is preserved exactly.  When the run
-        reaches segment 0 this degenerates to compact(), which also drops
-        the tombstones."""
-        segs = self.meta["segments"]
-        if len(segs) < 2:
-            self._fold_tombstones()
-            return
-        stats = dict(self.meta.get("seg_stats") or {})
-        backfilled = False
-        for s in segs:
-            have = stats.get(s) or {}
-            if "n_docs" not in have or "sum_dl" not in have:
-                # legacy pre-stats segment: one-time backfill, persisted —
-                # a default size of 0 would absorb a huge legacy bootstrap
-                # into the trailing run and degrade this tiered merge to a
-                # full compact() (r13 ADVICE, mirrored from GateIndex).
-                # BOTH stats come from the one doclen read: backfilling
-                # only n_docs left _corpus_stats' zero-job fast path to
-                # KeyError on sum_dl after the merge (r14 ADVICE).
-                got = (self.spark.read.schema(self._SCHEMAS["doclen"])
-                       .parquet(os.path.join(self.folder, s, "doclen"))
-                       .agg(F.count(F.lit(1)).alias("n"),
-                            F.sum("dl").alias("s")).first())
-                stats[s] = dict(have, n_docs=int(got["n"]),
-                                sum_dl=float(got["s"] or 0.0))
-                backfilled = True
-        if backfilled:
-            self.meta["seg_stats"] = stats
-            self._write_meta()
-        sizes = [int(stats[s].get("n_docs", 0)) for s in segs]
-        i = len(segs) - 1
-        acc = sizes[i]
-        while i - 1 >= 0 and sizes[i - 1] <= self._TIER_RATIO * max(acc, 1):
-            i -= 1
-            acc += sizes[i]
-        if i == len(segs) - 1:
-            # no mergeable segment run (the tail dwarfs its elder) —
-            # still bound the tombstone read fan-in
-            self._fold_tombstones()
-            return
-        if i == 0:
-            self.compact()
-            return
-        merged = self.live_postings().where(F.col("seg") >= i).drop("seg")
-        name = self._next_name("seg")
+    def _merge_run(self, name: str, lo: int) -> dict:
+        """compact_tail's merged segment: the live postings of
+        segments[lo:].  No imp / term_stats here: the block-max tier is
+        gated to the SINGLE-segment state (per-segment write-time avgdl
+        only equals the live avgdl there), and this merge leaves older
+        segments alive."""
         seg = os.path.join(self.folder, name)
-        # no imp / term_stats here: the tier is gated to the SINGLE-
-        # segment state (per-segment write-time avgdl only equals the
-        # live avgdl there), and this merge leaves older segments alive
-        (merged.repartitionByRange("token")
-         .sortWithinPartitions("token", F.desc("tf"), "dl", "doc_id")
-         .write.mode("overwrite")
-         .options(**self._postings_block_opt())
-         .parquet(os.path.join(seg, "postings")))
-        dl = (self.spark.read.schema("doc_id long, tf double")
-              .parquet(os.path.join(seg, "postings"))
-              .groupBy("doc_id").agg(F.sum("tf").alias("dl")))
-        st = self._write_doclen(dl, seg)
-        over = dict(self.meta.get("tomb_upto") or {})
-        for t in self.meta["tombstones"]:
-            u = over.get(t)
-            if u is None:
-                # tombstone born before scopes were recorded in meta:
-                # read its written scope (one tiny job) — guessing a
-                # default could WIDEN a narrow tombstone after re-scoping
-                u = int(self.spark.read.schema(self._SCHEMAS["tomb"])
-                        .parquet(os.path.join(self.folder, t))
-                        .agg(F.max("upto_seg")).first()[0])
-            if u >= i:
-                u = i - 1  # in-run effect materialized in the merge
-            over[t] = u
-        old_sources = segs[i:]
-        self.meta["segments"] = segs[:i] + [name]
-        self.meta["seg_stats"] = {
-            s: stats[s] for s in segs[:i] if s in stats}
-        self.meta["seg_stats"][name] = st
-        self.meta["tomb_upto"] = over
-        self._write_meta()
-        for stale in old_sources:
-            shutil.rmtree(os.path.join(self.folder, stale),
-                          ignore_errors=True)
-        self._fold_tombstones()
-
-    def _fold_tombstones(self) -> None:
-        """Fold the tombstone PILE into ONE doc_id-sorted file — the
-        other half of the tiered discipline (r12, ported with the
-        GateIndex fix): per-row effective scopes materialized (``least``
-        of written scope and meta override), repeated kills of one doc
-        collapse to the widest scope, empty scopes (upto_seg < 0) drop.
-        Bounds the tombstone FILE count (the anti-join read fan-in)
-        without touching any segment; the ROW count — true dead docs,
-        thanks to upsert_batch's existence filter — is bounded by the DB
-        hook's row-budget vacuum."""
-        tombs = self.meta["tombstones"]
-        if len(tombs) < 2:
-            return
-        name = self._next_name("tomb")
-        obs = Observation()
-        (self._tomb()
-         .where(F.col("upto_seg") >= 0)
-         .groupBy("doc_id")
-         .agg(F.max("upto_seg").alias("upto_seg"))
-         .observe(obs, F.count(F.lit(1)).alias("n"))
-         .coalesce(1).sortWithinPartitions("doc_id")
-         .write.mode("overwrite")
-         .parquet(os.path.join(self.folder, name)))
-        n = int(obs.get["n"])
-        if not n:
-            shutil.rmtree(os.path.join(self.folder, name),
-                          ignore_errors=True)
-        old = list(tombs)
-        self.meta["tombstones"] = [name] if n else []
-        self.meta["tomb_upto"] = {}
-        self.meta["tomb_stats"] = {name: n} if n else {}
-        self._write_meta()
-        for t in old:
-            shutil.rmtree(os.path.join(self.folder, t),
-                          ignore_errors=True)
-
-    def tomb_rows(self) -> int | None:
-        """Total tombstone rows from write-time stats (zero jobs); None
-        when a pre-stats legacy tombstone lacks one (trivially bounded:
-        any >=2-file pile is folded by compact_tail, which stats it)."""
-        st = self.meta.get("tomb_stats") or {}
-        if any(t not in st for t in self.meta["tombstones"]):
-            return None
-        return sum(int(st[t]) for t in self.meta["tombstones"])
-
-    def doc_rows(self) -> int:
-        """Total stored doc rows (live + not-yet-vacuumed dead) from
-        write-time stats — the row-budget vacuum's denominator."""
-        st = self.meta.get("seg_stats") or {}
-        return sum(int(st.get(s, {}).get("n_docs", 0))
-                   for s in self.meta["segments"])
+        self._write_postings(self._live_run("postings", lo), seg, False)
+        return self._doclen_from_postings(seg)
 
     # -- read paths --------------------------------------------------------
-
-    # fixed table schemas, supplied to every read: parquet schema
-    # inference over a multi-file dir runs a footer-reading Spark job,
-    # which would tax every query AND the maintenance job budget
-    _SCHEMAS = {
-        "postings": "token string, doc_id long, tf double, "
-                    "positions array<int>, dl double",
-        "doclen": "doc_id long, dl double",
-        "tomb": "doc_id long, upto_seg int",
-    }
-
-    def _tomb(self) -> DataFrame | None:
-        if not self.meta["tombstones"]:
-            return None
-        # a tiered merge (compact_tail) re-scopes tombstones whose range
-        # reached into the merged run WITHOUT rewriting their parquet:
-        # meta's tomb_upto override NARROWS the written column (least,
-        # never replace — a folded tombstone file holds heterogeneous
-        # per-row scopes, and a replace would WIDEN its narrow rows)
-        over = self.meta.get("tomb_upto") or {}
-        parts = []
-        for t in self.meta["tombstones"]:
-            df = (self.spark.read.schema(self._SCHEMAS["tomb"])
-                  .parquet(os.path.join(self.folder, t)))
-            if t in over:
-                df = df.withColumn(
-                    "upto_seg",
-                    F.least("upto_seg", F.lit(int(over[t]))))
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def _live(self, sub: str) -> DataFrame:
-        """Union the segment tables with their segment ordinal, minus
-        tombstoned rows (non-equi anti-join: a tombstone kills rows of
-        every segment up to its ``upto_seg`` — broadcast, the tombstone
-        table is deletes-since-compact)."""
-        if not self.meta["segments"]:
-            raise Exception("empty TextIndex; build() first")
-        parts = []
-        for i, name in enumerate(self.meta["segments"]):
-            parts.append(self.spark.read.schema(self._SCHEMAS[sub])
-                         .parquet(os.path.join(self.folder, name, sub))
-                         .withColumn("seg", F.lit(i)))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return self._minus_tombstones(df)
-
-    def _minus_tombstones(self, df: DataFrame) -> DataFrame:
-        """Anti-join the tombstones against rows carrying a segment
-        ordinal ``seg``."""
-        tomb = self._tomb()
-        if tomb is None:
-            return df
-        return df.join(
-            F.broadcast(tomb),
-            (df["doc_id"] == tomb["doc_id"])
-            & (tomb["upto_seg"] >= df["seg"]),
-            "left_anti")
 
     def _live_terms(self, terms: list, seg0_pred=None) -> DataFrame:
         """(token, doc_id, tf, dl, seg) live postings of ``terms``:
@@ -710,10 +399,10 @@ class TextIndex:
         return self._minus_tombstones(df)
 
     def live_postings(self) -> DataFrame:
-        return self._live("postings")
+        return self._live_run("postings")
 
     def live_doclen(self) -> DataFrame:
-        return self._live("doclen")
+        return self._live_run("doclen")
 
     # -- search ------------------------------------------------------------
 

@@ -295,8 +295,8 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode sides get a size(shs) > 0 filter pushed BELOW the exchange that
     # re-evaluates the whole interpreted shingle transform per conjunct), so
     # no exchange is reusable and the plan ran the transform ~10x per doc on
-    # the single scan partition (plans/r17/dedup_jaccard_pairs_before.txt
-    # nodes 1-7/8-15/20-25/29-34).  Spread the RAW docs first (the scan is
+    # the single scan partition (the r17 before-plan repeated it in nodes
+    # 1-7/8-15/20-25/29-34).  Spread the RAW docs first (the scan is
     # one row-group — round-robin puts the kernel on every core), derive the
     # shingle arrays ONCE, and pin the frame per-invocation so all four
     # consumers read the materialized rows.

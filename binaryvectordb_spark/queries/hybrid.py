@@ -71,8 +71,8 @@ def _bm25_perdoc(spark: SparkSession, sf_dir: str,
 
     r17 (guide §2.4): the naive tf/df/dl/stats construction planned FOUR
     full scan->explode->aggregate pipelines over `documents` in one query
-    (tf, df, dl-for-join, dl-for-avgdl: plans/r16/search_hybrid_rrf_before
-    nodes 1/8/20/30) because the consumers prune different columns, so no
+    (tf, df, dl-for-join, dl-for-avgdl: the r16 before-plan's nodes
+    1/8/20/30) because the consumers prune different columns, so no
     exchange is reusable.  With the fixed term list the per-term tf is a
     conditional aggregate riding the SAME groupBy(doc_id) as dl, and the
     frame is pinned with a lazy per-invocation localCheckpoint so its three

@@ -342,9 +342,9 @@ def agg_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_partkey materializes the partial HLL++ buffer (rsd=0.01 → 1,639
     words ≈ 13 KB) PER GROUP and ships it through the Exchange —
     gigabytes of aggregation state at scale for a sketch whose whole
-    point is one small mergeable buffer per partition (plan evidence:
-    plans/r16/agg_approx_count_distinct_before.txt, stage-1 HashAggregate
-    Results is 1,640 columns wide).  Split, each agg is its natural
+    point is one small mergeable buffer per partition (plan evidence, the
+    r16 before-plan: its stage-1 HashAggregate Results is 1,640 columns
+    wide).  Split, each agg is its natural
     one-pass shape; values are identical by construction (the exact count
     is exact, and the HLL++ estimate is a deterministic function of the
     inserted value set — register max-merge is insertion-order

@@ -638,8 +638,8 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate and the probe side — and Spark has no subtree reuse across
     # different shuffle keys, so the ENTIRE lineitem aggregate + dim
     # broadcast pipeline executed twice and met itself in a SortMergeJoin
-    # on (partkey, cost) (plans/r16/tpch_q2_min_cost_supplier_before.txt:
-    # nodes 1-22 duplicated at 25-45).  min() OVER (PARTITION BY partkey)
+    # on (partkey, cost) (the r16 before-plan: nodes 1-22 duplicated at
+    # 25-45).  min() OVER (PARTITION BY partkey)
     # is the same per-part minimum with the same cost = min filter —
     # identical rows (oracle-verified) — from ONE derivation and one
     # exchange on partkey; the after-plan has a single lineitem scan.

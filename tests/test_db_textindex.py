@@ -146,7 +146,7 @@ def test_auto_compact_bounds_segments(spark, tmp_path):
     segment, and answers are unchanged."""
     db = _mkdb(spark, str(tmp_path / "db"), n=40)
     db.build_text_index()
-    thr = BinaryVectorDB._TI_COMPACT_SEGMENTS
+    thr = BinaryVectorDB._COMPACT_SEGMENTS
     for i in range(thr + 2):
         db.add_batch([1000 + i], [f"fast merge batch{i}"],
                      np.array([_emb(1000 + i)], dtype=np.float32))

@@ -433,6 +433,33 @@ def test_gate_index_probe_touches_only_persisted_artifacts(
     assert rows[0]["n_dups"] >= 1 and not rows[0]["admit"]
 
 
+def test_gate_index_compact_sweeps_uncommitted_dirs(spark, tmp_path):
+    """compact() deletes seg_*/tomb_* dirs a crashed writer staged but
+    never committed into meta — the same orphan sweep as TextIndex's
+    compact — and leaves the live shingles unchanged."""
+    import os
+
+    from binaryvectordb_spark.operators.ingest_gate import GateIndex
+
+    folder = str(tmp_path / "gidx")
+    gi = GateIndex(spark, folder).build(_df(spark, _rand_docs(30, seed=5)))
+    gi.upsert_batch(_df(spark, [(3, DOC_A), (100, DOC_B)]))
+    before = sorted((r["doc_id"], tuple(r["shs"]))
+                    for r in gi.live_shingles().collect())
+    for orphan in ("seg_9", "tomb_9"):
+        os.makedirs(os.path.join(folder, orphan, "shingles"))
+        with open(os.path.join(folder, orphan, "shingles", "part-0"),
+                  "w") as f:
+            f.write("staged")
+    gi.compact()
+    assert not os.path.exists(os.path.join(folder, "seg_9"))
+    assert not os.path.exists(os.path.join(folder, "tomb_9"))
+    assert len(gi.meta["segments"]) == 1 and gi.meta["tombstones"] == []
+    after = sorted((r["doc_id"], tuple(r["shs"]))
+                   for r in GateIndex(spark, folder).live_shingles().collect())
+    assert after == before
+
+
 @pytest.mark.slow
 def test_gate_index_compact_tail_preserves_bootstrap(spark, tmp_path):
     """Tiered merge (VERDICT r11 item 3): micro-batch ingest folds only
@@ -593,7 +620,7 @@ def test_sharded_local_gate_bit_identical(spark):
 def test_db_gate_policy_never_full_compacts_on_micro_batches(
         spark, tmp_path, monkeypatch):
     """The r12 review fix at the DB-POLICY level: under
-    BinaryVectorDB._gi_bound_state (the real hook policy), a stream of
+    BinaryVectorDB._bound_state (the real hook policy), a stream of
     micro-batches NEVER triggers the full O(corpus) compact() — the old
     ``len(tombstones) >= threshold`` backstop fired every ~threshold
     gated batches and negated compact_tail entirely.  Pins: the
@@ -612,7 +639,7 @@ def test_db_gate_policy_never_full_compacts_on_micro_batches(
         near_dup_gate,
     )
 
-    monkeypatch.setattr(BinaryVectorDB, "_GI_COMPACT_SEGMENTS", 5)
+    monkeypatch.setattr(BinaryVectorDB, "_COMPACT_SEGMENTS", 5)
     corpus = dict(_rand_docs(400, seed=61))
     gi = GateIndex(spark, str(tmp_path / "gidx")).build(
         _df(spark, list(corpus.items())))
@@ -635,7 +662,7 @@ def test_db_gate_policy_never_full_compacts_on_micro_batches(
         for i, t in rows:
             corpus[i] = t
         gi.upsert_batch(_df(spark, rows))
-        BinaryVectorDB._gi_bound_state(gi)
+        BinaryVectorDB._bound_state(gi)
         assert "seg_0" in gi.meta["segments"], \
             f"full compact fired on micro-batch {step}"
         assert len(gi.meta["tombstones"]) <= 5
@@ -660,7 +687,7 @@ def test_db_gate_policy_never_full_compacts_on_micro_batches(
         for i in chunk:
             del corpus[i]
         gi.remove(chunk)
-        BinaryVectorDB._gi_bound_state(gi)
+        BinaryVectorDB._bound_state(gi)
         if not gi.meta["tombstones"] and lo > 0:
             vacuumed = True
             assert "seg_0" not in gi.meta["segments"]

@@ -532,7 +532,7 @@ def test_db_textindex_policy_never_full_compacts_on_micro_batches(
         spark, tmp_path, monkeypatch):
     """The r12 unified-policy pin, TextIndex side (mirror of
     test_db_gate_policy_never_full_compacts_on_micro_batches): under
-    BinaryVectorDB._ti_bound_state, insert-only micro-batches NEVER
+    BinaryVectorDB._bound_state, insert-only micro-batches NEVER
     trigger the full O(index) compact() — the bootstrap segment's
     postings files survive byte-for-byte, insert-only batches write
     ZERO tombstones (existence-filtered), and search answers equal a
@@ -544,7 +544,7 @@ def test_db_textindex_policy_never_full_compacts_on_micro_batches(
 
     from binaryvectordb_spark.db import BinaryVectorDB
 
-    monkeypatch.setattr(BinaryVectorDB, "_TI_COMPACT_SEGMENTS", 5)
+    monkeypatch.setattr(BinaryVectorDB, "_COMPACT_SEGMENTS", 5)
     d = _docs(spark)  # 60-doc bootstrap
     ti = TextIndex(spark, str(tmp_path / "ti")).build(d)
 
@@ -566,7 +566,7 @@ def test_db_textindex_policy_never_full_compacts_on_micro_batches(
             spark.createDataFrame(rows, "doc_id: long, text: string"),
             spark.createDataFrame(rows, "doc_id: long, text: string")
             .select("doc_id"))
-        BinaryVectorDB._ti_bound_state(ti)
+        BinaryVectorDB._bound_state(ti)
         assert "seg_0" in ti.meta["segments"], \
             f"full compact fired on insert-only micro-batch {step}"
         # existence filter: brand-new ids write NO tombstone rows
@@ -590,7 +590,7 @@ def test_db_textindex_policy_never_full_compacts_on_micro_batches(
         for i in chunk:
             live.pop(i)
         ti.remove(chunk)
-        BinaryVectorDB._ti_bound_state(ti)
+        BinaryVectorDB._bound_state(ti)
         if not ti.meta["tombstones"] and lo > 0:
             vacuumed = True
             assert "seg_0" not in ti.meta["segments"]
