@@ -149,7 +149,7 @@ def _gated_probe(max_retries: int = 5, backoff_s: float = 20.0):
         time.sleep(backoff_s)
 
 
-def _ms_block(fn, min_elapsed: float) -> float:
+def _ms_block(fn, min_elapsed: float, cpu: list | None = None) -> float:
     """One DURATION-TARGETED measurement window for ms-scale in-process
     keys (r13 verdict item 3 / NOTES r14 candidate 5): repeat ``fn`` — a
     thunk returning how many queries it executed — until ``min_elapsed``
@@ -157,13 +157,18 @@ def _ms_block(fn, min_elapsed: float) -> float:
     pause inside a 25 ms fixed window is a >0.5 relative spread; inside a
     >=120 ms window it is a few percent.  The arms of an interleaved loop
     each wrap their sweep in one block per round, so the interleave (all
-    arms see identical session drift) is preserved."""
+    arms see identical session drift) is preserved.  With ``cpu`` given,
+    the window's process CPU seconds per query are appended to it: every
+    thread's CPU, so work that spins on after a call returns counts."""
+    c0 = time.process_time()
     t0 = time.perf_counter()
     n = 0
     while True:
         n += fn()
         el = time.perf_counter() - t0
         if el >= min_elapsed:
+            if cpu is not None:
+                cpu.append((time.process_time() - c0) / n)
             return el / n
 
 
@@ -481,7 +486,7 @@ def bench_1m_scan(spark, sf_dir: str,
     # there), median of the kept 5, variance = (max-min)/median — the same
     # protocol as the interleaved 1M trio above, so local vs sharded see
     # identical session drift
-    local.search(qvecs[0])  # warm-up (BLAS thread spin-up)
+    local.search(qvecs[0])  # warm-up
     router.search(qvecs[0])
     # duration-targeted windows (r14): each round's arm repeats its
     # 20-query sweep until >=0.4 s elapsed, so one GC pause can no longer
@@ -492,16 +497,22 @@ def bench_1m_scan(spark, sf_dir: str,
             s.search(v)
         return len(qvecs)
 
-    local_runs, router_runs = [], []
+    # the _cpu_ms keys are process CPU per query in the same windows
+    local_runs, router_runs, local_cpu, router_cpu = [], [], [], []
     for _ in range(7):
-        local_runs.append(_ms_block(lambda: _sweep(local), 0.4))
-        router_runs.append(_ms_block(lambda: _sweep(router), 0.4))
+        local_runs.append(_ms_block(lambda: _sweep(local), 0.4, local_cpu))
+        router_runs.append(_ms_block(lambda: _sweep(router), 0.4,
+                                     router_cpu))
     for key, runs in (("cascade_1m_local_ms", local_runs[2:]),
-                      ("cascade_1m_local_sharded4_ms", router_runs[2:])):
+                      ("cascade_1m_local_sharded4_ms", router_runs[2:]),
+                      ("cascade_1m_local_cpu_ms", local_cpu[2:]),
+                      ("cascade_1m_local_sharded4_cpu_ms", router_cpu[2:])):
         runs = sorted(runs)[:-1]  # same single-outlier discard as the trio
         med = statistics.median(runs)
         out[key] = round(med * 1000, 2)
         variance[key] = round((max(runs) - min(runs)) / med, 2)
+    # the RAM tier's packed doc bits: dim/8 bytes per doc
+    out["cascade_1m_local_bits_mb"] = round(local.lanes.nbytes / 1e6, 2)
 
     index.unpersist()
     store.unpersist()

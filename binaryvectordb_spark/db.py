@@ -2183,10 +2183,8 @@ class BinaryVectorDB:
         idx, docs, nonempty = self._serving_handles()
         if not nonempty:
             raise Exception("Index is empty; add documents first")
-        if isinstance(query, str):
-            qvec = self.embed_fn([query])[0]
-        else:
-            qvec = np.asarray(query, dtype=np.float32)
+        qvec = self._query_vec(self.embed_fn([query])[0]
+                               if isinstance(query, str) else query)
         if not np.isfinite(qvec).all():
             # same boundary check as search_batch/LocalCascadeSearcher —
             # the SQL packer treats NaN >= 0 as true (Spark orders NaN above
@@ -2209,6 +2207,16 @@ class BinaryVectorDB:
                                      binary_oversample=binary_oversample,
                                      int8_oversample=int8_oversample)
         return [self._decode_hit(r.asDict()) for r in hits_df.collect()]
+
+    def _query_vec(self, q) -> np.ndarray:
+        """One query as a float32 ``(dim,)`` vector.  Any other length is
+        refused before a plan is built: the SQL packer would read past the
+        end of a short vector and drop the tail of a long one."""
+        v = np.asarray(q, dtype=np.float32)
+        if v.shape != (self.dim,):
+            raise ValueError(
+                f"query vector shape {v.shape} does not match dim={self.dim}")
+        return v
 
     @classmethod
     def _eligible_ids(cls, docs: DataFrame, filter: dict | str) -> DataFrame:
@@ -2425,14 +2433,9 @@ class BinaryVectorDB:
             embedded = iter(emb_out)
         else:
             embedded = iter(())
-        # normalize BEFORE the shape check: a custom embed_fn may return
-        # plain lists, not ndarrays
-        vecs = [np.asarray(next(embedded) if isinstance(q, str) else q,
-                           dtype=np.float32) for q in queries]
-        for v in vecs:
-            if v.shape != (self.dim,):
-                raise ValueError(
-                    f"query vector shape {v.shape} does not match dim={self.dim}")
+        # a custom embed_fn may return plain lists, not ndarrays
+        vecs = [self._query_vec(next(embedded) if isinstance(q, str) else q)
+                for q in queries]
         qdf = self.spark.createDataFrame(
             [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
             "qid: long, qvec: array<float>")

@@ -65,18 +65,11 @@ def pack_bits(col: str, dim: int) -> Column:
 def pack_bits_np(mat):
     """numpy mirror of ``pack_bits`` — (n, dim) float matrix -> (n, lanes)
     uint64, SAME bit layout (dimension d -> lane d//64, bit d%64, set iff
-    x >= 0).  vector.py owns the layout contract; kernels that pack driver-
-    side (e.g. the cascade's Arrow Phase-I kernel) must use this function so
-    the two packers can never drift."""
-    import numpy as np
-    mat = np.asarray(mat)
-    n, dim = mat.shape
-    lanes = NUM_LANES(dim)
-    out = np.zeros((n, lanes), dtype=np.uint64)
-    bits = (mat >= 0)
-    for d in range(dim):
-        out[:, d // LANE_BITS] |= bits[:, d].astype(np.uint64) << np.uint64(d % LANE_BITS)
-    return out
+    x >= 0).  vector.py owns the layout contract; numpy code that packs
+    (the RAM tier's query and doc bits) runs this one packer,
+    ``kernels.pack_lanes``, so the two packers can never drift."""
+    from binaryvectordb_spark.functions.kernels import pack_lanes
+    return pack_lanes(mat)
 
 
 def popcount_vec(col: str) -> Column:

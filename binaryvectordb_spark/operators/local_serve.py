@@ -15,17 +15,24 @@ Semantics replicated exactly (operators/cascade.py, functions/vector.py):
   Phase III q·d_int8/‖d_int8‖ desc, doc_id asc, top k  (:234-250)
 Float folds are strict left-to-right over ascending dimension in float64 —
 the same fold the SQL expressions and the DuckDB oracles use, so scores are
-bit-identical, not merely close.  Hamming uses the ±1 GEMM identity
-(dim − qpm·dpm)/2, integer-exact in float32 for dim < 2^24.  Every step
-runs on functions/kernels.py, the same kernels as the Arrow batch scan of
-cascade_search_batch; one phase-wise ``_cascade`` serves both searchers
-(the single searcher is its one-shard case).
+bit-identical, not merely close.  Every step runs on functions/kernels.py,
+whose selection and folds the Arrow batch scan of cascade_search_batch
+shares; one phase-wise ``_cascade`` serves both searchers (the single
+searcher is its one-shard case).
+
+The doc bits stay PACKED: ``lanes`` is an ``(n, NUM_LANES(dim))`` uint64
+array in the pack_bits_np layout, dim/8 bytes per doc.  Phase I scores
+one query with ``kernels.hamming_lanes``, popcount(q ^ d) per lane, and
+Phase II unpacks only the <= binary_k survivors; no BLAS call runs on
+this path (kernels.py says why the batch scan keeps its GEMM and this
+tier does not).
 
 Serving hosts need no SparkSession or JVM, but pyspark must be importable
 (this module imports operators/cascade.py for the phase defaults).
 
 Scale position: this is a SERVING tier, not a query engine — memory is
-O(n_shard × dim).  At 100 TB you run one searcher per cached shard behind a
+O(n_shard × dim): dim/8 bytes of bits plus dim bytes of int8 per doc,
+plus the payloads.  At 100 TB you run one searcher per cached shard behind a
 router (exactly how the reference would shard beyond one box); the Spark
 cascade remains the source of truth and the batch/throughput path.
 """
@@ -37,6 +44,7 @@ import json
 import numpy as np
 
 from binaryvectordb_spark.functions import kernels
+from binaryvectordb_spark.functions.vector import NUM_LANES
 from binaryvectordb_spark.operators.cascade import (
     DEFAULT_BINARY_OVERSAMPLE,
     DEFAULT_INT8_OVERSAMPLE,
@@ -71,19 +79,19 @@ def _cascade(shards: list, qf: np.ndarray, k: int, binary_oversample: int,
              int8_oversample: int, pool) -> list[dict]:
     """The phase-wise cascade over disjoint doc_id shards (one shard is the
     single searcher's case).  Phase I runs on every shard (on ``pool`` when
-    given — the GEMM releases the GIL, so shards scan concurrently), then
-    the merged candidates are re-selected GLOBALLY by (hamming asc, doc_id
-    asc); Phases II/III score that set on the owning shards and truncate
-    by (score desc, doc_id asc).  See ShardedLocalCascadeSearcher for why
+    given — numpy's bitwise ufuncs release the GIL, so shards scan
+    concurrently), then the merged candidates are re-selected GLOBALLY by
+    (hamming asc, doc_id asc); Phases II/III score that set on the owning
+    shards and truncate by (score desc, doc_id asc).  See ShardedLocalCascadeSearcher for why
     this is exact."""
     binary_k = min(k * binary_oversample, sum(s.n for s in shards))
     rescore_k = k * int8_oversample      # NOT clamped, as in :230
-    qpm = kernels.sign_pm1(qf)
+    qbits = kernels.pack_lanes(qf[None])[0]
     q64 = qf.astype(np.float64)
 
     def phase1(si):
         s = shards[si]
-        h = kernels.hamming_pm1(qpm, s.dpm)
+        h = kernels.hamming_lanes(qbits, s.lanes)
         cand = kernels.select_topk(h, s.doc_ids, binary_k)
         return (np.full(len(cand), si, dtype=np.int32),
                 cand, h[cand], s.doc_ids[cand])
@@ -103,8 +111,10 @@ def _cascade(shards: list, qf: np.ndarray, k: int, binary_oversample: int,
                 out[m] = score(s, rows[m])
         return out
 
-    # Phase II — ±q contribution fold, global top-rescore_k
-    s2 = on_shards(lambda s, r: kernels.fold_dot(q64, s.dpm[r]))
+    # Phase II — ±q contribution fold over the unpacked survivors,
+    # global top-rescore_k
+    s2 = on_shards(lambda s, r: kernels.fold_dot(
+        q64, kernels.unpack_pm1(s.lanes[r], s.dim)))
     o2 = np.lexsort((ids, -s2))[:rescore_k]
     sh, rows, hs, ids, s2 = (a[o2] for a in (sh, rows, hs, ids, s2))
 
@@ -129,15 +139,23 @@ class LocalCascadeSearcher:
     """In-process cascade over a materialized index shard.
 
     Build via ``BinaryVectorDB.to_local_searcher()`` or
-    ``from_dataframes(index_df, doc_df, dim)``.
+    ``from_dataframes(index_df, doc_df, dim)``; from arrays, ``lanes`` is
+    the packed doc bits, ``pack_bits_np(embeddings)``.
     """
 
-    def __init__(self, doc_ids: np.ndarray, dpm: np.ndarray,
+    def __init__(self, doc_ids: np.ndarray, lanes: np.ndarray,
                  emb_int8: np.ndarray, payloads: list, dim: int,
                  embed_fn=None):
+        lanes = np.asarray(lanes)
+        want = (len(doc_ids), NUM_LANES(dim))
+        if (lanes.shape != want or lanes.dtype.kind not in "iu"
+                or lanes.dtype.itemsize != 8):
+            raise ValueError(
+                f"doc bits must be {want} 64-bit lanes (pack_bits_np), "
+                f"got {lanes.dtype} {lanes.shape}")
         order = np.argsort(doc_ids)          # rows in doc_id order
         self.doc_ids = doc_ids[order]
-        self.dpm = dpm[order]                # (n, dim) float32 ±1 doc bits
+        self.lanes = lanes.view(np.uint64)[order]   # (n, lanes) doc bits
         self.emb_int8 = emb_int8[order]      # (n, dim) int8
         self.payloads = [payloads[i] for i in order]
         self.dim = dim
@@ -147,8 +165,6 @@ class LocalCascadeSearcher:
     @classmethod
     def from_dataframes(cls, index_df, doc_df, dim: int, embed_fn=None
                         ) -> "LocalCascadeSearcher":
-        from binaryvectordb_spark.functions.vector import NUM_LANES
-
         itbl = index_df.select("doc_id", "vec").toArrow()
         ids = itbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
         packed = _arrow_column_matrix(itbl, "vec", np.int64, NUM_LANES(dim))
@@ -167,7 +183,7 @@ class LocalCascadeSearcher:
         # align the doc store to the index rows by doc_id
         pos = {int(i): p for p, i in enumerate(dids)}
         sel = np.array([pos[int(i)] for i in ids], dtype=np.int64)
-        return cls(ids, kernels.unpack_pm1(packed, dim), i8[sel],
+        return cls(ids, packed, i8[sel],
                    [payloads[p] for p in sel], dim, embed_fn=embed_fn)
 
     def search(self, query, k: int = DEFAULT_K,
@@ -181,16 +197,18 @@ class LocalCascadeSearcher:
 
     # -- persistence (cross-process serving shards) -------------------------
     # A materialized shard saves to a plain directory: one .npz with the
-    # numeric arrays (doc bits re-PACKED 8-per-byte — 8x smaller than the
-    # ±1 float32 working form) plus JSON payloads/meta.  Any process — a
-    # serving node with no SparkSession or JVM — loads it back bit-identical.
+    # numeric arrays (doc bits as ``packed_bits``: the first ceil(dim/8)
+    # little-endian bytes of each row's lanes, which is exactly
+    # np.packbits(emb >= 0, axis=1, bitorder="little")) plus JSON
+    # payloads/meta.  Any process — a serving node with no SparkSession or
+    # JVM — loads it back bit-identical.
 
     def save(self, path: str) -> None:
         import os
 
         os.makedirs(path, exist_ok=True)
-        bits = np.packbits((self.dpm > 0).astype(np.uint8), axis=1,
-                           bitorder="little")
+        bits = np.ascontiguousarray(self.lanes.astype("<u8", copy=False)
+                                    .view(np.uint8)[:, :-(-self.dim // 8)])
         tmp = os.path.join(path, f".arrays.npz.tmp{os.getpid()}")
         with open(tmp, "wb") as f:
             np.savez_compressed(f, doc_ids=self.doc_ids, packed_bits=bits,
@@ -216,7 +234,7 @@ class LocalCascadeSearcher:
         with open(os.path.join(path, "payloads.json")) as f:
             payloads = json.load(f)
         return cls(arrs["doc_ids"].astype(np.int64),
-                   kernels.unpack_pm1(arrs["packed_bits"], dim),
+                   kernels.lanes_from_bytes(arrs["packed_bits"]),
                    arrs["emb_int8"].astype(np.int8), payloads, dim,
                    embed_fn=embed_fn)
 
@@ -251,15 +269,14 @@ class ShardedLocalCascadeSearcher:
         self.n = sum(s.n for s in self.shards)
         # Phase I fans out to the shards on a thread pool — the structure a
         # multi-node deployment has (one request per shard node in flight).
-        # In ONE box it is measured ~neutral (round 8, interleaved: 10.6 ms
-        # threaded vs 10.4 ms sequential): the 1M x 64 scan is MEMORY-
-        # BANDWIDTH-bound, so four concurrent quarter-scans move the same
-        # bytes as one full scan.  The router's ~1.2x per-query overhead vs
-        # the single-shard searcher (5.9 vs 7.2 ms, same protocol) is the
-        # per-shard partial-select + global merge — the modeled analogue of
-        # the per-shard RPC a real fleet pays; the architecture wins when
-        # the corpus exceeds one node's RAM, not before.  Pool is lazy so
-        # loaded/unpickled routers build their own.
+        # numpy's bitwise ufuncs release the GIL and the popcount is
+        # compute-bound, so in ONE box the fan-out is a real speed-up at
+        # scale (1M x 64 on 4 vCPUs, back-to-back: 7-11 ms per query
+        # against the single searcher's 15-16 ms, both ~16 ms of CPU);
+        # at 5k docs the per-shard partial-select + global merge dominates
+        # (1.7 vs 0.5 ms) — the modeled analogue of the per-shard RPC a
+        # real fleet pays.  Pool is lazy so loaded/unpickled routers build
+        # their own.
         self._pool = None
 
     def _phase1_pool(self):
@@ -277,7 +294,7 @@ class ShardedLocalCascadeSearcher:
         for s in range(max(1, n_shards)):
             rows = np.flatnonzero(base.doc_ids % n_shards == s)
             shards.append(LocalCascadeSearcher(
-                base.doc_ids[rows], base.dpm[rows], base.emb_int8[rows],
+                base.doc_ids[rows], base.lanes[rows], base.emb_int8[rows],
                 [base.payloads[r] for r in rows], base.dim,
                 embed_fn=base.embed_fn))
         return cls(shards, embed_fn=base.embed_fn)

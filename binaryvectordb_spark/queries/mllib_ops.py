@@ -114,12 +114,7 @@ def _exact_jaccard_near_count(docs: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        def popcount(x):  # SWAR over uint64
-            x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-            x = ((x & np.uint64(0x3333333333333333))
-                 + ((x >> np.uint64(2)) & np.uint64(0x3333333333333333)))
-            x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-            return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
+        from binaryvectordb_spark.functions.kernels import popcount64
 
         def masks(rows, vocab, nwords):
             out = np.zeros((len(rows), nwords), dtype=np.uint64)
@@ -147,8 +142,8 @@ def _exact_jaccard_near_count(docs: DataFrame) -> DataFrame:
                 for j in range(nwords):
                     aw = ma[:, j, None]
                     bw = mb[None, :, j]
-                    inter += popcount(aw & bw).astype(np.int64)
-                    union += popcount(aw | bw).astype(np.int64)
+                    inter += popcount64(aw & bw).astype(np.int64)
+                    union += popcount64(aw | bw).astype(np.int64)
                 ok = ((2 * inter >= union) & (union > 0)
                       & (ia[:, None] < ib[None, :]))
                 total += int(ok.sum())

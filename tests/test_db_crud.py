@@ -444,6 +444,21 @@ def test_search_batch_edge_cases(db):
         db.search_batch([[0.5] * 7])
 
 
+@pytest.mark.parametrize("n", [15, 17, 20])
+def test_search_rejects_wrong_query_length(spark, tmp_path, n):
+    """A query of the wrong length raises search_batch's ValueError from
+    db.search too, instead of reading past a short vector's end or
+    returning hits with a None cosine for a long one."""
+    db = BinaryVectorDB(spark, str(tmp_path / "db"), dim=16)
+    db.add_documents([1, 2], ["alpha text", "beta text"])
+    bad = [0.5] * n
+    want = rf"query vector shape \({n},\) does not match dim=16"
+    with pytest.raises(ValueError, match=want):
+        db.search(bad)
+    with pytest.raises(ValueError, match=want):
+        db.search_batch([bad])
+
+
 def test_empty_query_batch_returns_empty_frames(spark):
     import numpy as np
     from binaryvectordb_spark.operators.cascade import (

@@ -30,14 +30,33 @@ def test_select_topk_is_lexsort_prefix(n, n_values, data):
 
 
 def test_hamming_pm1_matches_popcount():
+    """Both Phase-I kernels against the sign-bit truth: the ±1 GEMM for a
+    query matrix and one query, and the lane popcount of one packed query
+    (dim 70 has a second, zero-padded lane)."""
     rng = np.random.RandomState(3)
-    dim = 70
-    q = rng.uniform(-1, 1, (4, dim)).astype(np.float32)
-    d = rng.uniform(-1, 1, (50, dim)).astype(np.float32)
-    want = ((q[:, None, :] >= 0) != (d[None, :, :] >= 0)).sum(axis=2)
-    dpm = kernels.sign_pm1(d)
-    assert (kernels.hamming_pm1(kernels.sign_pm1(q), dpm) == want).all()
-    assert (kernels.hamming_pm1(kernels.sign_pm1(q[1]), dpm) == want[1]).all()
+    for dim in (64, 70):
+        q = rng.uniform(-1, 1, (4, dim)).astype(np.float32)
+        d = rng.uniform(-1, 1, (50, dim)).astype(np.float32)
+        d[:5] = q[1]                                  # distance 0
+        d[5:10] = -q[1]                               # distance dim
+        want = ((q[:, None, :] >= 0) != (d[None, :, :] >= 0)).sum(axis=2)
+        dpm = kernels.sign_pm1(d)
+        assert (kernels.hamming_pm1(kernels.sign_pm1(q), dpm) == want).all()
+        assert (kernels.hamming_pm1(kernels.sign_pm1(q[1]), dpm)
+                == want[1]).all()
+        lanes = kernels.pack_lanes(d)
+        assert lanes.dtype == np.uint64
+        assert lanes.shape == (50, -(-dim // 64))
+        for i in range(len(q)):
+            qlanes = kernels.pack_lanes(q[i:i + 1])[0]
+            got = kernels.hamming_lanes(qlanes, lanes)
+            assert got.dtype == np.int32 and (got == want[i]).all()
+
+
+def test_popcount64_extremes():
+    x = np.array([0, 1, 2**63, 2**64 - 1, 0x5555555555555555,
+                  0x8000000000000001], dtype=np.uint64)
+    assert kernels.popcount64(x.copy()).tolist() == [0, 1, 1, 64, 32, 2]
 
 
 def test_kernel_fold_is_sequential():

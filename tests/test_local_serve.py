@@ -130,11 +130,13 @@ def test_sharded_router_phase_boundary_adversarial(db):
 def test_sharded_router_property():
     """Property-based: router == single shard on arbitrary corpora, dims,
     duplicate-heavy id spaces, oversamples, and shard counts.  Pure numpy
-    (no Spark) — the searcher is constructed from arrays directly, so
-    hypothesis can afford many examples."""
+    (no Spark) — the searcher is constructed from packed arrays directly,
+    so hypothesis can afford many examples.  Dims 70 and 130 cover
+    multi-lane rows and zero padding bits in the last lane."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
+    from binaryvectordb_spark.functions.vector import pack_bits_np
     from binaryvectordb_spark.operators.local_serve import (
         LocalCascadeSearcher,
         ShardedLocalCascadeSearcher,
@@ -143,7 +145,7 @@ def test_sharded_router_property():
     @st.composite
     def params(draw):
         return (draw(st.integers(5, 120)),            # n
-                draw(st.sampled_from([8, 16, 32])),   # dim
+                draw(st.sampled_from([8, 16, 32, 70, 130])),  # dim
                 draw(st.integers(0, 2**31 - 1)),      # seed
                 draw(st.integers(1, 8)),              # k
                 draw(st.integers(1, 5)),              # binary oversample
@@ -159,10 +161,9 @@ def test_sharded_router_property():
         if n >= 10:  # duplicated rows force ties at every phase
             V[: n // 5] = V[n // 5: 2 * (n // 5)]
         ids = np.sort(rng.choice(10 * n, size=n, replace=False)).astype(np.int64)
-        dpm = np.where(V >= 0, 1, -1).astype(np.float32)
         scaled = np.clip(V.astype(np.float64), -1, 1) * 127
         i8 = (np.sign(scaled) * np.floor(np.abs(scaled) + 0.5)).astype(np.int8)
-        base = LocalCascadeSearcher(ids, dpm, i8,
+        base = LocalCascadeSearcher(ids, pack_bits_np(V), i8,
                                     [f"d{i}" for i in ids], dim)
         router = ShardedLocalCascadeSearcher.from_searcher(base, n_shards)
         q = rng.uniform(-1, 1, dim).astype(np.float32)
@@ -171,6 +172,54 @@ def test_sharded_router_property():
         assert got == want
 
     run()
+
+
+def _random_searcher(n, dim, seed):
+    from binaryvectordb_spark.functions.vector import pack_bits_np
+    from binaryvectordb_spark.operators.local_serve import (
+        LocalCascadeSearcher,
+    )
+    rng = np.random.RandomState(seed)
+    V = rng.uniform(-1, 1, (n, dim)).astype(np.float32)
+    i8 = rng.randint(-127, 128, (n, dim)).astype(np.int8)
+    ids = np.arange(n, dtype=np.int64)
+    return V, LocalCascadeSearcher(ids, pack_bits_np(V), i8,
+                                   [f"d{i}" for i in ids], dim)
+
+
+def test_searcher_rejects_unpacked_bits():
+    """The doc bits must be 64-bit lanes of width NUM_LANES(dim): a ±1
+    float matrix, a byte-packed matrix or a wrong lane count is refused
+    instead of being read as lanes."""
+    from binaryvectordb_spark.operators.local_serve import (
+        LocalCascadeSearcher,
+    )
+    V, s = _random_searcher(20, 70, 4)
+    for bad in (np.where(V >= 0, 1, -1).astype(np.float32),
+                np.where(V >= 0, 1.0, -1.0)[:, :2],
+                np.packbits(V >= 0, axis=1, bitorder="little"),
+                s.lanes[:, :1],
+                s.lanes.view(np.float64)):
+        with pytest.raises(ValueError, match="64-bit lanes"):
+            LocalCascadeSearcher(s.doc_ids, bad, s.emb_int8, s.payloads, 70)
+
+
+@pytest.mark.parametrize("dim", [64, 70])
+def test_save_pins_packed_bits_format(tmp_path, dim):
+    """The shard format: ``packed_bits`` is exactly np.packbits(V >= 0,
+    axis=1, bitorder="little"), and a reload answers bit-identically."""
+    from binaryvectordb_spark.operators.local_serve import (
+        LocalCascadeSearcher,
+    )
+    V, s = _random_searcher(50, dim, 9)
+    s.save(str(tmp_path / "shard"))
+    bits = np.load(tmp_path / "shard" / "arrays.npz")["packed_bits"]
+    want = np.packbits(V >= 0, axis=1, bitorder="little")
+    assert bits.dtype == want.dtype and (bits == want).all()
+    back = LocalCascadeSearcher.load(str(tmp_path / "shard"))
+    assert (back.lanes == s.lanes).all()
+    q = np.random.RandomState(1).uniform(-1, 1, dim).astype(np.float32)
+    assert back.search(q, k=7) == s.search(q, k=7)
 
 
 def test_shard_persistence_cross_process(db, tmp_path):
