@@ -50,6 +50,14 @@ from binaryvectordb_spark.operators.local_serve import (
     rerank_maxsim,
     rrf_fuse,
 )
+from binaryvectordb_spark.operators.segments import (
+    LEGACY_META,
+    commit_version,
+    legacy_state,
+    log_versions,
+    read_version,
+    sweep,
+)
 
 _META = "_meta.json"
 _UNSET = object()
@@ -147,6 +155,8 @@ class BinaryVectorDB:
         # serving-handle memo: (manifest_version, index_df, docs_df,
         # index_nonempty) — see _serving_handles
         self._serve_cache: tuple | None = None
+        # (manifest_version, {name: side-index handle}): see _side_index
+        self._side_cache: tuple | None = None
         # RAM-tier serving memo (attach_local_serving): requested shard
         # count (None = not attached) and (manifest_version, vec_searcher,
         # bm25_searcher, payload_map) — see _local_searchers
@@ -211,7 +221,8 @@ class BinaryVectorDB:
     # holding one JSON manifest per committed version:
     #   v0000000042.json = {"version": 42,
     #                       "tables": {"index":     {"<bucket>": [files...]},
-    #                                  "documents": {"<bucket>": [files...]}}}
+    #                                  "documents": {"<bucket>": [files...]}},
+    #                       "side": {"text_index": {segments, ...}, ...}}
     # The manifest — not the directory listing — defines what a reader sees
     # (the Delta/Iceberg idea, SURVEY §1.3).  A mutation stages new parquet
     # files into the live bucket dirs under unique names (invisible: not in
@@ -221,8 +232,10 @@ class BinaryVectorDB:
     # the reference lacks entirely (full rewrite + no rollback story,
     # README.md:174).  A crash before the rename leaves the previous
     # version fully intact; stray staged files are garbage-collected by the
-    # next successful commit.  At 100 TB the manifest also replaces
-    # object-store LIST calls with one small JSON read per query.
+    # next successful commit.  The derived indexes' state rides the same
+    # manifest ("side", see the derived side indexes section).  At 100 TB
+    # the manifest also replaces object-store LIST calls with one small
+    # JSON read per query.
     # Single-writer by design (as is the reference); manifests are tiny and
     # kept forever as an audit trail (`history()`), data files of superseded
     # versions are deleted at commit time.
@@ -239,28 +252,23 @@ class BinaryVectorDB:
     def _manifest_version(self) -> int | None:
         """Latest committed version, or None when the DB predates the log
         (legacy round-1 layout: directory listing is the source of truth)."""
-        d = self._log_dir()
-        if not os.path.isdir(d):
-            return None
-        vs = [int(f[1:-5]) for f in os.listdir(d)
-              if f.startswith("v") and f.endswith(".json")]
-        return max(vs) if vs else None
+        vs = log_versions(self._log_dir())
+        return vs[-1] if vs else None
 
     def _manifest_tables(self) -> dict | None:
-        v = self._manifest_version()
-        if v is None:
-            return None
-        return self._manifest_tables_of(v)
+        m = self._manifest_of(self._manifest_version())
+        return None if m is None else m["tables"]
 
-    def _manifest_tables_of(self, version: int) -> dict:
-        """Table maps of one committed manifest (no data-file existence
-        check — callers that serve reads use _tables_at instead)."""
+    def _manifest_of(self, version: int | None) -> dict | None:
+        """One committed manifest (None for version None: no log yet) —
+        no data-file existence check; reads use _tables_at."""
+        if version is None:
+            return None
         path = os.path.join(self._log_dir(), f"v{int(version):010d}.json")
         if not os.path.isfile(path):
             raise ValueError(f"no committed version {version} "
                              f"(latest is {self._manifest_version()})")
-        with open(path) as f:
-            return json.load(f)["tables"]
+        return read_version(self._log_dir(), version)
 
     def _adopt_tables(self) -> dict:
         """First commit on a pre-log DB: reconstruct its current state from
@@ -291,15 +299,15 @@ class BinaryVectorDB:
         t = self._manifest_tables()
         return self._adopt_tables() if t is None else t
 
-    def _commit(self, updates: dict[str, dict[str, list[str]]],
-                expect=_UNSET) -> None:
-        """THE atomic commit point: one manifest rename makes every table in
-        `updates` (full new bucket->files maps) visible simultaneously.
-        Tables not mentioned keep their current entry; an update with no
-        files drops the table (full-delete edge).  After the commit,
-        no-longer-retained data files are deleted and Spark caches on the
-        updated paths invalidated (cache manager matches by plan, and a plan
-        built from the old manifest's file list must not serve stale blocks).
+    def _commit(self, updates: dict[str, dict], expect=_UNSET) -> None:
+        """THE atomic commit point: one manifest link makes every entry of
+        `updates` visible simultaneously — a table's full new
+        bucket->files map, or a side index's new state (None drops it).
+        Entries not mentioned are kept; an update with no files drops the
+        table (full-delete edge).  After the commit, no-longer-retained
+        files are deleted and Spark caches on the updated tables
+        invalidated (cache manager matches by plan, and a plan built from
+        the old manifest's file list must not serve stale blocks).
 
         Optimistic concurrency: `expect` is the manifest version the
         mutation read its snapshot from (None for a fresh/pre-log DB).  If
@@ -319,45 +327,31 @@ class BinaryVectorDB:
                     f"snapshot was v{expect}, but v{live} has since been "
                     "committed; mutation aborted (staged files will be "
                     "garbage-collected)")
-            base = (self._adopt_tables() if expect is None
-                    else self._manifest_tables_of(expect))
-            v = (expect or 0) + 1
         else:
-            base = self._current_tables()
-            v = (self._manifest_version() or 0) + 1
-        tables = dict(base)
-        for name, bmap in updates.items():
-            bmap = {b: fl for b, fl in bmap.items() if fl}
-            if bmap:
-                tables[name] = bmap
+            expect = self._manifest_version()
+        base = self._manifest_of(expect)
+        v = (expect or 0) + 1
+        tables = dict(self._adopt_tables() if base is None
+                      else base["tables"])
+        sides = dict(self._side_of(base))
+        for name, entry in updates.items():
+            into = sides if name in self._SIDE_DIRS else tables
+            if into is tables:
+                entry = {b: fl for b, fl in entry.items() if fl}
+            if entry:
+                into[name] = entry
             else:
-                tables.pop(name, None)
-        os.makedirs(self._log_dir(), exist_ok=True)
-        final = os.path.join(self._log_dir(), f"v{v:010d}.json")
-        tmp = final + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump({"version": v, "tables": tables}, f)
-            f.flush()
-            os.fsync(f.fileno())
+                into.pop(name, None)
         try:
-            os.link(tmp, final)  # atomic create-if-absent: the commit instant
+            commit_version(self._log_dir(), v, {
+                "version": v, "tables": tables, "side": sides})
         except FileExistsError:
             raise ConcurrentWriteError(
                 f"version {v} was committed by another writer at the commit "
                 "instant; mutation aborted (staged files will be "
                 "garbage-collected)") from None
-        finally:
-            os.unlink(tmp)
-        # fsync the directory too: without it, power loss after the ack can
-        # drop the new directory entry and roll the DB back a version even
-        # though the commit was reported durable
-        dfd = os.open(self._log_dir(), os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
         self._gc(self.retain_versions + 1)
-        for name in updates:
+        for name in updates.keys() - set(self._SIDE_DIRS):
             self.spark.catalog.refreshByPath(self._path(name))
         # table stats ride the commit: a docs-changing commit recomputes
         # them (narrow column-pruned scan of the tracked metadata columns);
@@ -378,39 +372,30 @@ class BinaryVectorDB:
                     st["version"] = v
                     self._write_stats(v, st)
 
-    def _retained_tables(self, keep_last: int) -> list[dict]:
-        """Table maps of the latest `keep_last` committed manifests —
-        the versions whose data files must survive GC."""
-        d = self._log_dir()
-        if not os.path.isdir(d):
-            return []
-        vs = sorted(int(f[1:-5]) for f in os.listdir(d)
-                    if f.startswith("v") and f.endswith(".json"))
-        out = []
-        for v in vs[-max(1, keep_last):]:
-            with open(os.path.join(d, f"v{v:010d}.json")) as f:
-                out.append(json.load(f)["tables"])
-        return out
-
     def _gc(self, keep_last: int, respect_pins: bool = True) -> None:
-        """Delete every data file none of the latest `keep_last` manifests
-        reference: files of versions that aged out of retention, and strays
-        from crashed or aborted commit attempts.  Safe under the
-        single-writer assumption — nothing unreferenced can be mid-read by
-        a committed reader.  Versions this handle time-traveled to are
-        pinned for the session: commit-time GC keeps their files even past
-        the retention window (versioned DataFrames are lazy and may execute
-        after a later commit); an explicit vacuum() overrides the pins."""
-        retained = self._retained_tables(keep_last)
+        """Delete every data file and side-index seg_*/tomb_* dir none of
+        the latest `keep_last` manifests references: those of versions
+        that aged out of retention, and strays from crashed or aborted
+        commit attempts.  Safe under the single-writer assumption —
+        nothing unreferenced can be mid-read by a committed reader.
+        Versions this handle time-traveled to are pinned for the session:
+        commit-time GC keeps their files even past the retention window
+        (versioned DataFrames are lazy and may execute after a later
+        commit); an explicit vacuum() overrides the pins."""
+        log = self._log_dir()
+        # a pre-log DB's state is its directory listing: keep all of it
+        retained = ([read_version(log, v)
+                     for v in log_versions(log)[-max(1, keep_last):]]
+                    or [{"tables": self._adopt_tables()}])
         if respect_pins:
             for pv in sorted(self._read_pinned):
                 try:
-                    retained.append(self._manifest_tables_of(pv))
+                    retained.append(self._manifest_of(pv))
                 except ValueError:
                     self._read_pinned.discard(pv)
         keep: dict[str, set[str]] = {}  # table -> kept relpaths
-        for tables in retained:
-            for name, bmap in tables.items():
+        for m in retained:
+            for name, bmap in m["tables"].items():
                 s = keep.setdefault(name, set())
                 for b, fl in bmap.items():
                     rd = self._key_reldir(b)
@@ -431,6 +416,21 @@ class BinaryVectorDB:
                     full = os.path.join(root, d)
                     if os.path.isdir(full) and not os.listdir(full):
                         os.rmdir(full)
+            if not os.listdir(p):
+                os.rmdir(p)
+        # side-index dirs; a retained legacy manifest keeps meta.json
+        for name in self._SIDE_DIRS:
+            p = self._path(name)
+            if not os.path.isdir(p):
+                continue
+            kset = set()
+            for m in retained:
+                st = self._side_of(m).get(name)
+                if st is not None:
+                    kset.update(st["segments"] + st["tombstones"])
+                if "side" not in m:
+                    kset.add(LEGACY_META)
+            sweep(p, kset)
             if not os.listdir(p):
                 os.rmdir(p)
 
@@ -461,17 +461,10 @@ class BinaryVectorDB:
         only within `retain_versions` (see index_df/docs_df(version=...) and
         restore()) — beyond that, history is an audit trail."""
         d = self._log_dir()
-        if not os.path.isdir(d):
-            return []
-        out = []
-        for f in sorted(os.listdir(d)):
-            if f.startswith("v") and f.endswith(".json"):
-                with open(os.path.join(d, f)) as fh:
-                    m = json.load(fh)
-                out.append({"version": m["version"],
-                            "tables": {n: sum(len(fl) for fl in b.values())
-                                       for n, b in m["tables"].items()}})
-        return out
+        return [{"version": m["version"],
+                 "tables": {n: sum(len(fl) for fl in b.values())
+                            for n, b in m["tables"].items()}}
+                for m in (read_version(d, v) for v in log_versions(d))]
 
     def _exists(self, name: str) -> bool:
         if name in self._DATA_TABLES:
@@ -604,7 +597,7 @@ class BinaryVectorDB:
         check on every referenced data file (a version older than the
         retention window has been vacuumed: its manifest survives, its
         data does not)."""
-        tables = self._manifest_tables_of(version)
+        tables = self._manifest_of(version)["tables"]
         for name, bmap in tables.items():
             p = self._path(name)
             for b, fl in bmap.items():
@@ -761,17 +754,26 @@ class BinaryVectorDB:
         `version`'s files — history moves forward, data moves back.  Needs
         the target inside the retention window (files still on disk); the
         restored files are referenced by the new head, so they survive
-        subsequent GC regardless of age."""
+        subsequent GC regardless of age.  The side indexes come back as
+        they were at `version` (none for a manifest older than side
+        state); their seg_*/tomb_* dirs must still be on disk too."""
         self._flush_pending()
         expect = self._manifest_version()
         old = self._tables_at(version)  # validates existence + files
-        self._commit({name: dict(old.get(name) or {})
-                      for name in self._DATA_TABLES}, expect=expect)
-        # the side indexes are derived from the doc store's forward
-        # history; after a rollback they would be wrong in both
-        # directions — drop them (rebuild with build_text_index() /
-        # build_gate_index() if wanted)
-        self._drop_side_indexes()
+        side = self._manifest_of(version).get("side") or {}
+        # a side-index commit leaves the data files alone, so v's data can
+        # outlive the segment dirs its side state names
+        gone = [f"{n}/{d}" for n, st in side.items()
+                for d in st["segments"] + st["tombstones"]
+                if not os.path.isdir(os.path.join(self._path(n), d))]
+        if gone:
+            raise ValueError(f"version {version} has been vacuumed (side "
+                             f"index dir {gone[0]} is gone); only versions "
+                             "inside the retention window are readable")
+        self._commit({**{name: dict(old.get(name) or {})
+                         for name in self._DATA_TABLES},
+                      **{name: side.get(name) for name in self._SIDE_DIRS}},
+                     expect=expect)
 
     def _read_buckets(self, name: str, touched: list[int]) -> DataFrame | None:
         """Scan ONLY the touched buckets — the partial-rewrite read path.
@@ -1201,18 +1203,16 @@ class BinaryVectorDB:
         had_ivf_model = (self.index_type == "ivf"
                          and self._ivf_model() is not None)
         new_docs = _align(new_docs)
-        # the batch alone, pre-merge, for the text-index hook — MATERIALIZED
-        # before the commit below: _commit garbage-collects superseded data
-        # files, so re-executing a batch frame that was DERIVED from the
-        # DB's own tables (the re-embed-existing-docs flow) after the commit
-        # can hit deleted parquet (FileNotFound), or re-evaluate a
-        # non-deterministic source into rows that were never committed.
-        # localCheckpoint pins the exact committed rows in block storage
+        # the batch alone, pre-merge, for the side-index staging —
+        # MATERIALIZED once: the side indexes read it several times
+        # (segment, tombstone, maintenance), and re-evaluating a
+        # non-deterministic source could stage rows the doc store never
+        # holds.  localCheckpoint pins the rows in block storage
         # (batch-sized), and the observed metrics fold the str/non-str
-        # counts into the SAME job — the hook then needs zero take(1)
+        # counts into the SAME job — the staging then needs zero take(1)
         # probes.  Only paid when a side index exists.
         incoming = incoming_counts = None
-        sides = self._side_indexes()
+        sides = self._side_writers(expect)
         if sides:
             from pyspark.sql import Observation
             obs = Observation()
@@ -1238,16 +1238,17 @@ class BinaryVectorDB:
                 new_docs = (_align(surv_docs)
                             .join(kside, "doc_id", "left_anti")
                             .unionByName(new_docs, allowMissingColumns=True))
-            # both tiers staged first, then ONE manifest commit: the upsert
-            # is atomic across index and documents (and all their buckets).
-            # The (possibly evolved) docs schema is recorded first so the
+            # both tiers and the side indexes staged first, then ONE
+            # manifest commit: the upsert is atomic across index, documents
+            # (and all their buckets) and every derived index.  The
+            # (possibly evolved) docs schema is recorded first so the
             # commit-time stats refresh reads with it; if the commit then
             # aborts, a superset schema is harmless (readers see nulls).
             self._record_docs_schema(new_docs.schema)
-            self._commit({
+            updates = {
                 "index": self._bucket_update(new_index, "index", touched),
                 "documents": self._bucket_update(new_docs, "documents",
-                                                 touched)}, expect=expect)
+                                                 touched)}
         else:
             old_index, old_docs = self.index_df(), self.docs_df()
             if old_index is not None:
@@ -1258,10 +1259,11 @@ class BinaryVectorDB:
                             .join(kside, "doc_id", "left_anti")
                             .unionByName(new_docs, allowMissingColumns=True))
             self._record_docs_schema(new_docs.schema)
-            self._commit({
+            updates = {
                 "index": self._full_update(new_index, "index"),
-                "documents": self._full_update(new_docs, "documents")},
-                expect=expect)
+                "documents": self._full_update(new_docs, "documents")}
+        updates.update(self._after_upsert(sides, incoming, incoming_counts))
+        self._commit(updates, expect=expect)
         # first ingest of an ivf DB: train the partitioner now; later
         # ingests attach clusters incrementally via the trained model —
         # and accumulate drift against it (ivf_drift)
@@ -1269,8 +1271,6 @@ class BinaryVectorDB:
             self.build_ivf()
         elif had_ivf_model:
             self._note_ivf_mutation(n_keys)
-        if incoming is not None:
-            self._after_upsert(sides, incoming, incoming_counts)
 
     def _enqueue(self, doc_ids: list[int], docs: list[str], kinds: list[str],
                  emb: np.ndarray, save: bool) -> None:
@@ -1433,31 +1433,31 @@ class BinaryVectorDB:
                        keys.join(scope_idx, "doc_id", "left_anti").count())
             if missing:
                 raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
-            self._commit({
+            updates = {
                 "index": self._bucket_update(
                     scope_idx.join(F.broadcast(keys), "doc_id", "left_anti"),
                     "index", touched),
                 "documents": self._bucket_update(
                     self._read_buckets("documents", touched)
                     .join(F.broadcast(keys), "doc_id", "left_anti"),
-                    "documents", touched)}, expect=expect)
-            if self.index_type == "ivf" and self._ivf_model() is not None:
-                self._note_ivf_mutation(len(doc_ids))
-            self._after_remove(doc_ids)
-            return
-        idx = self.index_df()
-        missing = keys.join(idx, "doc_id", "left_anti").count()
-        if missing:
-            raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
-        self._commit({
-            "index": self._full_update(
-                idx.join(F.broadcast(keys), "doc_id", "left_anti"), "index"),
-            "documents": self._full_update(
-                self.docs_df().join(F.broadcast(keys), "doc_id", "left_anti"),
-                "documents")}, expect=expect)
+                    "documents", touched)}
+        else:
+            idx = self.index_df()
+            missing = keys.join(idx, "doc_id", "left_anti").count()
+            if missing:
+                raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
+            updates = {
+                "index": self._full_update(
+                    idx.join(F.broadcast(keys), "doc_id", "left_anti"),
+                    "index"),
+                "documents": self._full_update(
+                    self.docs_df().join(F.broadcast(keys), "doc_id",
+                                        "left_anti"), "documents")}
+        updates.update(self._after_remove(self._side_writers(expect),
+                                          doc_ids))
+        self._commit(updates, expect=expect)
         if self.index_type == "ivf" and self._ivf_model() is not None:
             self._note_ivf_mutation(len(doc_ids))
-        self._after_remove(doc_ids)
 
     def remove_doc(self, doc_id: int) -> None:
         self.remove_docs([doc_id])
@@ -1583,36 +1583,57 @@ class BinaryVectorDB:
     #   behind search_text / search_hybrid;
     # - gate_index: the near-dup gate's corpus shingle/band tables
     #   (operators/ingest_gate.py) behind gated_add_documents_df.
-    # DERIVED state: each is updated after every successful commit (a
-    # crash in between leaves it one batch stale — rebuild with
-    # build_text_index() / build_gate_index()), and restore() drops both
-    # rather than guess.
+    # Their state is the manifest's "side" entry (Delta Lake's derived
+    # data as one more entry of the same atomic commit): mutations stage
+    # the indexes' new dirs before _commit, one link(2) publishes data and
+    # indexes, restore(v) brings back v's indexes, and _gc is the only
+    # deleter of their dirs.  A legacy side dir (its own meta.json) is
+    # adopted by the first commit.
 
     _TEXT_INDEX_DIR = "text_index"
     _GATE_INDEX_DIR = "gate_index"
+    _SIDE_DIRS = (_TEXT_INDEX_DIR, _GATE_INDEX_DIR)
     # fold a side index when an upsert pushes it to this many segments
     # (one micro-batch = one segment) or tombstone files (unbounded
     # growth makes the query-side union and the tombstone anti-join creep)
     _COMPACT_SEGMENTS = 16
 
-    def _open_index(self, sub: str, cls):
-        p = os.path.join(self.folder, sub)
-        if not os.path.exists(os.path.join(p, "meta.json")):
-            return None
-        return cls(self.spark, p)
+    def _side_of(self, manifest: dict | None) -> dict:
+        """{name: state} a manifest records; the legacy meta.json files
+        for a manifest from before side state rode it (or none)."""
+        if manifest is not None and "side" in manifest:
+            return manifest["side"]
+        return {name: st for name in self._SIDE_DIRS
+                if (st := legacy_state(self._path(name))) is not None}
+
+    def _side_handle(self, name: str, state: dict):
+        """A DB-owned handle on side index ``name`` (writes stage)."""
+        if name == self._TEXT_INDEX_DIR:
+            from binaryvectordb_spark.operators.textindex import TextIndex as cls
+        else:
+            from binaryvectordb_spark.operators.ingest_gate import GateIndex as cls
+        return cls(self.spark, self._path(name), state=state)
+
+    def _side_writers(self, version: int | None) -> dict:
+        """{name: fresh handle} on the side indexes of ``version``."""
+        sides = self._side_of(self._manifest_of(version))
+        return {n: self._side_handle(n, sides[n])
+                for n in self._SIDE_DIRS if n in sides}
+
+    def _side_index(self, name: str):
+        """Side index ``name`` at the current version (None when absent),
+        memoized per version as _serving_handles is: a search pays one log
+        listing, and the handle's memos carry over between calls."""
+        v = self._manifest_version()
+        if self._side_cache is None or self._side_cache[0] != v:
+            self._side_cache = (v, self._side_writers(v))
+        return self._side_cache[1].get(name)
 
     def _text_index(self):
-        from binaryvectordb_spark.operators.textindex import TextIndex
-        return self._open_index(self._TEXT_INDEX_DIR, TextIndex)
+        return self._side_index(self._TEXT_INDEX_DIR)
 
     def _gate_index(self):
-        from binaryvectordb_spark.operators.ingest_gate import GateIndex
-        return self._open_index(self._GATE_INDEX_DIR, GateIndex)
-
-    def _side_indexes(self) -> list:
-        """The side indexes that exist, text index first."""
-        return [ix for ix in (self._text_index(), self._gate_index())
-                if ix is not None]
+        return self._side_index(self._GATE_INDEX_DIR)
 
     def _str_docs(self) -> DataFrame:
         """The current str-kind payloads as (doc_id, text) — what both side
@@ -1627,50 +1648,61 @@ class BinaryVectorDB:
         return docs.select("doc_id", F.col("doc").alias("text"))
 
     def build_text_index(self) -> None:
-        """(Re)build the lexical index from the current doc store.  Only
-        str-kind payloads are text; typed payloads (json/bytes) are not
-        indexed and never match a keyword query."""
-        from binaryvectordb_spark.operators.textindex import TextIndex
-        TextIndex(self.spark, os.path.join(
-            self.folder, self._TEXT_INDEX_DIR)).build(self._str_docs())
+        """(Re)build the lexical index from the current doc store, in one
+        commit.  Only str-kind payloads are text; typed payloads
+        (json/bytes) are not indexed and never match a keyword query."""
+        self._build_side(self._TEXT_INDEX_DIR)
 
     def build_gate_index(self) -> None:
         """(Re)build the persisted near-dup gate artifacts (corpus
-        shingle + LSH band tables) from the current doc store.  With the
-        index present, ``gated_add_documents_df`` gates each batch at
-        probe-side cost instead of re-deriving the corpus tables per call
-        (VERDICT r10 item 3), and every upsert/remove commit maintains
-        the artifacts incrementally.  Only str-kind payloads participate
-        — typed payloads are never near-dup candidates."""
-        from binaryvectordb_spark.operators.ingest_gate import GateIndex
-        GateIndex(self.spark, os.path.join(
-            self.folder, self._GATE_INDEX_DIR)).build(self._str_docs())
+        shingle + LSH band tables) from the current doc store, in one
+        commit.  With the index present, ``gated_add_documents_df`` gates
+        each batch at probe-side cost instead of re-deriving the corpus
+        tables per call (VERDICT r10 item 3), and every upsert/remove
+        commit maintains the artifacts incrementally.  Only str-kind
+        payloads participate — typed payloads are never near-dup
+        candidates."""
+        self._build_side(self._GATE_INDEX_DIR)
 
-    def _after_upsert(self, sides: list, incoming: DataFrame,
-                      counts) -> None:
-        """Incremental side-index maintenance after an upsert commit: the
-        batch's str-kind rows become one new segment; EVERY incoming id is
-        killed in earlier segments by ONE scoped tombstone (str rows' old
-        entries die, their new ones live in the new segment; non-str rows
-        — payloads updated away from text — just die).  ``incoming`` is
-        the checkpointed batch projection and ``counts`` its observed
-        {n_str, n_other} from the same job (_merge_and_swap), so this
-        hook runs zero probe jobs: segment + tombstone writes only (jobs
-        pinned in tests/test_db_textindex.py)."""
+    def _build_side(self, name: str) -> None:
+        """Write a fresh single-segment index beside the old one and
+        commit it; a failed build leaves the old index answering."""
+        docs = self._str_docs()
+        expect = self._manifest_version()
+        ix = self._side_handle(name, {})
+        ix.build(docs)
+        self._commit({name: ix.meta}, expect=expect)
+
+    def _after_upsert(self, sides: dict, incoming: DataFrame | None,
+                      counts) -> dict:
+        """Stage the side indexes' share of an upsert ({name: state} for
+        _commit): the batch's str-kind rows become one new segment; EVERY
+        incoming id is killed in earlier segments by ONE scoped tombstone
+        (str rows' old entries die, their new ones live in the new
+        segment; non-str rows — payloads updated away from text — just
+        die).  ``incoming`` is the checkpointed batch projection and
+        ``counts`` its observed {n_str, n_other} from the same job
+        (_merge_and_swap), so this runs zero probe jobs: segment +
+        tombstone writes only (jobs pinned in
+        tests/test_db_textindex.py)."""
+        if not sides:
+            return {}
         n_str = int(counts["n_str"])
         if int(counts["n_other"]) + n_str == 0:
-            return  # empty batch — legitimate streaming no-op
+            return {}  # empty batch — legitimate streaming no-op
         str_df = (incoming.where(F.col("doc_kind") == "str")
                   .select("doc_id", F.col("doc").alias("text"))
                   if n_str else None)
-        for ix in sides:
+        for ix in sides.values():
             ix.upsert_batch(str_df, incoming.select("doc_id"))
             self._bound_state(ix)
+        return {n: ix.meta for n, ix in sides.items()}
 
-    def _after_remove(self, doc_ids: Sequence[int]) -> None:
-        for ix in self._side_indexes():
+    def _after_remove(self, sides: dict, doc_ids: Sequence[int]) -> dict:
+        for ix in sides.values():
             ix.remove([int(i) for i in doc_ids])
             self._bound_state(ix)
+        return {n: ix.meta for n, ix in sides.items()}
 
     @classmethod
     def _bound_state(cls, ix) -> None:
@@ -1706,12 +1738,6 @@ class BinaryVectorDB:
         tr = ix.tomb_rows()
         if tr is not None and 2 * tr >= max(1, ix.seg_rows()):
             ix.compact()
-
-    def _drop_side_indexes(self) -> None:
-        for sub in (self._TEXT_INDEX_DIR, self._GATE_INDEX_DIR):
-            p = os.path.join(self.folder, sub)
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
 
     def search_text(self, terms: Sequence[str], k: int = DEFAULT_K
                     ) -> list[dict]:
@@ -1967,10 +1993,8 @@ class BinaryVectorDB:
                 for fn in files:
                     shutil.copy(os.path.join(src_dir, fn),
                                 os.path.join(dst_dir, fn))
-        log_dir = os.path.join(tmp, self._LOG)
-        os.makedirs(log_dir)
-        with open(os.path.join(log_dir, f"v{1:010d}.json"), "w") as f:
-            json.dump({"version": 1, "tables": tables}, f)
+        commit_version(os.path.join(tmp, self._LOG), 1,
+                       {"version": 1, "tables": tables})
         os.rename(tmp, dest)
 
     def diff_versions(self, v_old: int,

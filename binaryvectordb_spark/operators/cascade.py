@@ -345,66 +345,39 @@ def cascade_search_batch(index_df: DataFrame, doc_df: DataFrame, dim: int,
                          queries_df: DataFrame,
                          k: int = DEFAULT_K,
                          binary_oversample: int = DEFAULT_BINARY_OVERSAMPLE,
-                         int8_oversample: int = DEFAULT_INT8_OVERSAMPLE,
-                         phase1: str = "arrow") -> DataFrame:
+                         int8_oversample: int = DEFAULT_INT8_OVERSAMPLE
+                         ) -> DataFrame:
     """Multi-query cascade: ``queries_df(qid, qvec array<float>)`` -> per-qid
-    top-k hits.
+    top-k hits, each query's rows equal to its ``cascade_search`` (the
+    single-query JVM expression plan, pinned in
+    tests/test_cascade_semantics.py).
 
-    Phase-I strategy (``phase1``):
-    - ``"arrow"`` (default): one-pass per-partition exact local top-k kernel
-      (see ``_phase1_arrow_topk``) — the scan output is ~binary_k rows per
-      (query, partition), so the only shuffle is the tiny rank window.
-    - ``"histogram"``: pure-expression two-pass plan — a map-side-combined
-      per-query score histogram (hamming has only dim+1 distinct values)
-      yields the binary_k cutoff; a second pass filters to survivors.  Fully
-      lazy/JVM-side, kept for environments where Python workers are
-      undesirable.  (A direct window over the full scored scan shuffles
-      #queries x index_size rows and both OOMed and ran 1000x slower at
-      100 x 1M — measured.)
-
-    Scale design: either way the exchange carries ONLY slim scored candidate
-    rows, never vectors.  The arrow kernel also emits the Phase-II score, so
-    the cached index is scanned exactly ONCE; the histogram path re-joins
-    the <= binary_k survivors per query against the index for their vectors
-    (broadcast).  For larger query batches, shard queries and union.
+    Phase I is the one-pass per-partition exact local top-k Arrow kernel
+    (see ``_phase1_arrow_topk``): the scan output is ~binary_k rows per
+    (query, partition), so the only shuffle is the tiny rank window, and
+    the kernel also emits the Phase-II score, so the cached index is
+    scanned exactly ONCE.  (A direct window over the full scored scan
+    shuffles #queries x index_size rows and both OOMed and ran 1000x
+    slower at 100 x 1M — measured.)  The exchange carries ONLY slim
+    scored candidate rows, never vectors.  For larger query batches,
+    shard queries and union.
     """
     q = queries_df.select("qid", F.col("qvec").cast("array<float>").alias("qvec"))
-    q = q.select("qid", "qvec", pack_bits("qvec", dim).alias("qbits"))
 
     binary_k = k * binary_oversample
     rescore_k = k * int8_oversample
 
     w1 = Window.partitionBy("qid").orderBy(F.asc("score_hamming"), F.asc("doc_id"))
-    if phase1 == "arrow":
-        local = _phase1_arrow_topk(index_df, dim, queries_df, binary_k)
-        # score_binary came with the kernel output; Phase II is just the
-        # rank window (it rescores ALL Phase-I candidates, :218-232)
-        p2s = (local.withColumn("rn", F.row_number().over(w1))
-               .where(F.col("rn") <= binary_k).drop("rn"))
-    else:
-        scored = (index_df.join(F.broadcast(q.select("qid", "qbits")))
-                  .select("qid", "doc_id",
-                          hamming("qbits", "vec", NUM_LANES(dim)).alias("score_hamming")))
-        hist = scored.groupBy("qid", "score_hamming").agg(F.count("*").alias("c"))
-        wq = (Window.partitionBy("qid").orderBy("score_hamming")
-              .rowsBetween(Window.unboundedPreceding, 0))
-        thr = (hist.withColumn("cum", F.sum("c").over(wq))
-               .where(F.col("cum") - F.col("c") < binary_k)
-               .groupBy("qid").agg(F.max("score_hamming").alias("thr")))
-        survivors = (scored.join(F.broadcast(thr), "qid")
-                     .where(F.col("score_hamming") <= F.col("thr")))
-        p1 = (survivors.withColumn("rn", F.row_number().over(w1))
-              .where(F.col("rn") <= binary_k).drop("rn", "thr"))
-        # re-attach vectors only for the survivors (tiny side broadcast)
-        p1v = (index_df.join(F.broadcast(p1), "doc_id")
-               .join(F.broadcast(q.select("qid", "qvec")), "qid"))
-        p2s = p1v.select("qid", "doc_id", "score_hamming",
-                         binary_dot("qvec", "vec", dim).alias("score_binary"))
+    local = _phase1_arrow_topk(index_df, dim, queries_df, binary_k)
+    # score_binary came with the kernel output; Phase II is just the rank
+    # window (it rescores ALL Phase-I candidates, :218-232)
+    p2s = (local.withColumn("rn", F.row_number().over(w1))
+           .where(F.col("rn") <= binary_k).drop("rn"))
 
     w2 = Window.partitionBy("qid").orderBy(F.desc("score_binary"), F.asc("doc_id"))
     p2 = (p2s.withColumn("rn", F.row_number().over(w2))
           .where(F.col("rn") <= rescore_k).drop("rn")
-          .join(F.broadcast(q.select("qid", "qvec")), "qid"))
+          .join(F.broadcast(q), "qid"))
 
     extra = [c for c in doc_df.columns if c == "doc_kind"]
     p3s = (F.broadcast(p2).join(doc_df, "doc_id")

@@ -271,14 +271,17 @@ class GateIndex(SegmentStore):
     distributed gate at ~8 s; with the tables persisted a probe pays only
     its own pruned read cost).
 
-    Layout (all state under ``folder``):
-        meta.json          {segments, tombstones, tomb_upto, v, ...}
+    Layout (all files under ``folder``):
         seg_<n>/shingles/  (doc_id, shs)       range-sorted by doc_id
         seg_<n>/bands/     (doc_id, band_idx, bh)  range-sorted by bh
         tomb_<n>/          (doc_id, upto_seg)  deletes/replacements
+    The state {segments, tombstones, tomb_upto, ...} naming the live dirs
+    is an entry of the DB manifest for the DB's gate (committed with the
+    data it derives from; the DB's ``_gc`` deletes dirs no retained
+    manifest names), ``_log/v<n>.json`` for a standalone one.
 
-    - Segments, tombstones, meta and compaction are the segment store
-      shared with TextIndex (operators/segments.py): a batch of
+    - Segments, tombstones, state commits and compaction are the segment
+      store shared with TextIndex (operators/segments.py): a batch of
       new/updated docs is ONE new segment plus a tombstone scoped to
       every earlier segment (delete-then-insert).  O(batch) write cost.
       The segment-stats entry is the segment's integer doc count.
@@ -301,15 +304,15 @@ class GateIndex(SegmentStore):
 
     100 TB: both tables are O(corpus) on disk but a probe touches
     O(probe bands + candidates) row groups; segments are immutable files
-    on object storage and the meta swap is the only commit point."""
+    on object storage and the state commit is the only commit point."""
 
     _SCHEMAS = {"shingles": "doc_id long, shs array<string>",
                 "bands": "doc_id long, band_idx int, bh string"}
     # the existence probe reads the doc_id-sorted shingle tables
     _PROBE = "shingles"
 
-    def _fresh_meta(self, v: int = 0) -> dict:
-        return dict(super()._fresh_meta(v), tomb_upto={}, tomb_stats={})
+    def _fresh_meta(self) -> dict:
+        return dict(super()._fresh_meta(), tomb_upto={}, tomb_stats={})
 
     @staticmethod
     def _seg_size(n: int) -> int:
@@ -370,9 +373,9 @@ class GateIndex(SegmentStore):
 
     def build(self, docs: DataFrame) -> "GateIndex":
         """(Re)build from scratch: one corpus pass, single segment."""
-        self._clear()
-        n = self._write_segment(docs, "seg_0")
-        self._swap_in("seg_0" if n else None, n)
+        name = self._next_name("seg")
+        n = self._write_segment(docs, name)
+        self._commit_single(name if n else None, n)
         return self
 
     def compact(self) -> None:
@@ -381,7 +384,7 @@ class GateIndex(SegmentStore):
             return
         name = self._next_name("seg")
         n = self._merge_run(name, 0)
-        self._swap_in(name if n else None, n)
+        self._commit_single(name if n else None, n)
 
     # -- read -----------------------------------------------------------
 

@@ -3,15 +3,21 @@
 The reference leaves segment, tombstone and compaction work to a single
 store, RocksDB (BinaryVectorDB/BinaryVectorDB.py:64).  Both derived
 indexes here keep their state the same way — immutable parquet segments
-plus scoped tombstones, committed by an atomic meta swap — and this
-module holds every part of that store they share, once:
+plus scoped tombstones, named by one small state dict — and this module
+holds every part of that store they share, once:
 
-    <folder>/meta.json   {segments, tombstones, seg_stats, tomb_upto,
-                          tomb_stats, v, ...}  the only commit point
+    state                {segments, tombstones, seg_stats, tomb_upto,
+                          tomb_stats, ...}   names the live dirs
     <folder>/seg_<n>/    one segment (its tables are index-specific)
     <folder>/tomb_<n>/   (doc_id, upto_seg)    kills doc_id in every
                                                segment up to ordinal
                                                upto_seg
+
+A DB-owned store's state is an entry of the DB manifest: ``_commit``
+only stages it, the DB's commit publishes it with the data it derives
+from, and the DB's ``_gc`` deletes unnamed dirs.  A standalone store logs
+its state under ``<folder>/_log`` through the same ``commit_version`` and
+sweeps the dirs it stops naming.  Dir names are never reused.
 
 - ``upsert_batch``: a batch of new/updated docs is ONE new segment plus
   ONE existence-filtered tombstone scoped to every earlier segment, so an
@@ -20,7 +26,7 @@ module holds every part of that store they share, once:
 - ``compact_tail``: the tiered (log-structured) merge — fold the
   trailing run of comparably-small segments, then fold the tombstone
   pile into one file.  ``compact``: the full fold into one segment, with
-  the tombstones dropped and orphan dirs swept (``_swap_in``).
+  the tombstones dropped (``_commit_single``).
 - Reads: the union of the segment tables minus the tombstones
   (``_live_run``), scope-correct per segment ordinal.
 
@@ -29,7 +35,7 @@ schemas), ``_PROBE`` (the doc_id-sorted table the existence probe
 reads), ``_write_segment`` (a batch of (doc_id, text) rows -> one
 segment), ``_merge_run`` (the live rows of segments[lo:] -> one segment),
 ``_seg_size``/``_backfill`` (its segment-stats entry) and ``build`` /
-``compact`` (which end in ``_swap_in``).
+``compact`` (which end in ``_commit_single``).
 
 Existence probe (``_write_tombstone``), three tiers by batch-id
 cardinality — the collect is limit()-capped, never unbounded:
@@ -54,6 +60,7 @@ rows — what the DB hook's row-budget vacuum (db._bound_state) counts.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -64,11 +71,76 @@ from pyspark.sql import functions as F
 LITERAL_CAP = 10_000
 BULK_CAP = 100_000
 _TOMB_SCHEMA = "doc_id long, upto_seg int"
+LOG = "_log"
+LEGACY_META = "meta.json"  # a folder's state before it rode a log
+
+
+# -- the commit protocol ---------------------------------------------------
+
+def log_versions(log_dir: str) -> list[int]:
+    """Committed versions in ``log_dir``, ascending ([] without a log)."""
+    return sorted(int(f[1:-5]) for f in (
+        os.listdir(log_dir) if os.path.isdir(log_dir) else ())
+        if f.startswith("v") and f.endswith(".json"))
+
+
+def read_version(log_dir: str, version: int) -> dict:
+    with open(os.path.join(log_dir, f"v{int(version):010d}.json")) as f:
+        return json.load(f)
+
+
+def commit_version(log_dir: str, version: int, body: dict) -> None:
+    """Make ``body`` version ``version`` of ``log_dir``, durably: fsynced
+    tmp file, ``link(2)`` (unlike ``rename(2)`` it fails on an existing
+    target, so a stale writer gets FileExistsError instead of overwriting
+    the winner), fsynced directory."""
+    os.makedirs(log_dir, exist_ok=True)
+    final = os.path.join(log_dir, f"v{int(version):010d}.json")
+    tmp = final + f".tmp{os.getpid()}"
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, final)  # atomic create-if-absent: the commit instant
+    finally:
+        os.unlink(tmp)
+    dfd = os.open(log_dir, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
+def legacy_state(folder: str) -> dict | None:
+    """The state a folder written before the log kept in ``meta.json``
+    (its write counter dropped), or None."""
+    p = os.path.join(folder, LEGACY_META)
+    if not os.path.isfile(p):
+        return None
+    with open(p) as f:
+        st = json.load(f)
+    st.pop("v", None)
+    return st
+
+
+def sweep(folder: str, keep: set[str]) -> None:
+    """Delete every seg_*/tomb_* dir (and a legacy meta.json) under
+    ``folder`` that ``keep`` does not name."""
+    for entry in os.listdir(folder):
+        if entry in keep:
+            continue
+        if entry.startswith(("seg_", "tomb_")):
+            shutil.rmtree(os.path.join(folder, entry), ignore_errors=True)
+        elif entry == LEGACY_META:
+            os.remove(os.path.join(folder, entry))
 
 
 class SegmentStore:
     """Open-or-create a segment store at ``folder`` (see the module
-    docstring for what a subclass supplies)."""
+    docstring for what a subclass supplies).  ``state``: the DB manifest
+    entry of a DB-owned store ({} when new); None: standalone, read from
+    ``<folder>/_log`` or else a legacy meta.json (adopted on commit)."""
 
     _SCHEMAS: dict[str, str] = {}
     _PROBE = ""
@@ -79,73 +151,85 @@ class SegmentStore:
     # (older) segment is no more than this multiple of the run's size
     _TIER_RATIO = 8
 
-    def __init__(self, spark: SparkSession, folder: str):
+    def __init__(self, spark: SparkSession, folder: str,
+                 state: dict | None = None):
         self.spark = spark
         self.folder = folder
         os.makedirs(folder, exist_ok=True)
-        self._meta_path = os.path.join(folder, "meta.json")
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                self.meta = json.load(f)
-        else:
-            self.meta = self._fresh_meta()
+        self._gen = 0  # bumped by every _commit: the read memos' key
+        self._log = None if state is not None else os.path.join(folder, LOG)
+        self.version = None
+        while self._log:
+            vs = log_versions(self._log)
+            self.version = vs[-1] if vs else None
+            try:
+                state = (read_version(self._log, vs[-1])["state"] if vs
+                         else legacy_state(folder))
+                break
+            except FileNotFoundError:
+                continue  # a writer pruned the head we listed: re-list
+        self.meta = state or self._fresh_meta()
 
-    # -- meta ----------------------------------------------------------------
+    # -- state ---------------------------------------------------------------
 
-    def _fresh_meta(self, v: int = 0) -> dict:
-        return {"segments": [], "tombstones": [], "seg_stats": {}, "v": v}
+    def _fresh_meta(self) -> dict:
+        return {"segments": [], "tombstones": [], "seg_stats": {}}
 
-    def _write_meta(self) -> None:
-        # optimistic-concurrency guard: meta carries a version counter; a
-        # handle whose view is stale (another writer committed since we
-        # read) fails loudly instead of last-write-wins dropping that
-        # writer's segments.  (DB-maintained indexes are already
-        # serialized by the DB's own commit flow; this protects direct
-        # multi-handle use.)
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                on_disk = json.load(f).get("v", 0)
-            if on_disk != self.meta.get("v", 0):
-                raise Exception(
-                    f"concurrent {type(self).__name__} writer detected: "
-                    f"meta version moved {self.meta.get('v', 0)} -> "
-                    f"{on_disk}; re-open the index and retry")
-        self.meta["v"] = self.meta.get("v", 0) + 1
-        tmp = self._meta_path + f".tmp{os.getpid()}"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f)
-        os.replace(tmp, self._meta_path)
+    def _commit(self) -> None:
+        """Publish ``self.meta``: staged for the DB's commit when
+        DB-owned; else the next log version (a stale handle fails loudly
+        instead of dropping another writer's segments), then the sweep of
+        the dirs and superseded log versions it no longer needs (nothing
+        reads a standalone store's history)."""
+        self._gen += 1
+        if self._log is None:
+            return
+        v = (self.version or 0) + 1
+        try:
+            commit_version(self._log, v, {"version": v, "state": self.meta})
+            # superseded versions are pruned, so a handle two or more
+            # commits behind links a free name below the head: it lost too
+            # (readers take the highest version, so it was never visible)
+            lost = log_versions(self._log)[-1] != v
+            if lost:
+                self._unlink_version(v)
+        except FileExistsError:
+            lost = True
+        if lost:
+            raise Exception(
+                f"concurrent {type(self).__name__} writer detected: "
+                f"version {v} is already committed over this handle's "
+                f"{self.version}; re-open the index and retry")
+        self.version = v
+        sweep(self.folder,
+              set(self.meta["segments"]) | set(self.meta["tombstones"]))
+        for old in log_versions(self._log)[:-1]:
+            self._unlink_version(old)
+
+    def _unlink_version(self, v: int) -> None:
+        # another writer's prune may have taken it already
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(os.path.join(self._log, f"v{v:010d}.json"))
 
     def _next_name(self, prefix: str) -> str:
-        existing = self.meta["segments"] + self.meta["tombstones"]
-        n = 0
-        while f"{prefix}_{n}" in existing:
-            n += 1
-        return f"{prefix}_{n}"
+        """One past the highest ``<prefix>_<n>`` dir in the folder (every
+        dir a retained state names is on disk)."""
+        cut = len(prefix) + 1
+        ns = [int(e[cut:]) for e in os.listdir(self.folder)
+              if e.startswith(prefix + "_") and e[cut:].isdigit()]
+        return f"{prefix}_{max(ns, default=-1) + 1}"
 
     def _rm(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.folder, name), ignore_errors=True)
 
-    def _clear(self) -> None:
-        """Start of a (re)build: drop every committed segment and
-        tombstone dir and reset meta (the version counter carries on)."""
-        for name in self.meta["segments"] + self.meta["tombstones"]:
-            self._rm(name)
-        self.meta = self._fresh_meta(self.meta.get("v", 0))
-
-    def _swap_in(self, name: str | None, stat) -> None:
+    def _commit_single(self, name: str | None, stat) -> None:
         """Commit ``name`` as the only segment (None: nothing live) with
-        no tombstones, then delete every other seg_*/tomb_* dir — the
-        replaced ones and any a crashed writer staged but never committed
-        into meta (same role as the DB commit's stray sweep)."""
-        self.meta = self._fresh_meta(self.meta.get("v", 0))
+        no tombstones; the replaced dirs go with the next sweep."""
+        self.meta = self._fresh_meta()
         if name is not None:
             self.meta["segments"] = [name]
             self.meta["seg_stats"] = {name: stat}
-        self._write_meta()
-        for entry in os.listdir(self.folder):
-            if entry.startswith(("seg_", "tomb_")) and entry != name:
-                self._rm(entry)
+        self._commit()
 
     # -- mutation ------------------------------------------------------------
 
@@ -186,7 +270,7 @@ class SegmentStore:
             if not n_tomb:
                 tomb_name = None
         if seg_name is None and tomb_name is None:
-            return  # fully empty batch: no state change, no meta bump
+            return  # fully empty batch: no state change, no commit
         if seg_name is not None:
             self.meta["segments"].append(seg_name)
         if tomb_name is not None:
@@ -195,7 +279,7 @@ class SegmentStore:
             # can re-scope without rewriting the tombstone parquet
             self.meta.setdefault("tomb_upto", {})[tomb_name] = upto
             self.meta.setdefault("tomb_stats", {})[tomb_name] = n_tomb
-        self._write_meta()
+        self._commit()
 
     def _write_tombstone(self, dead: DataFrame, upto: int,
                          name: str) -> int:
@@ -287,7 +371,7 @@ class SegmentStore:
                 backfilled = True
         if backfilled:
             self.meta["seg_stats"] = stats
-            self._write_meta()
+            self._commit()
         sizes = [self._seg_size(stats[s]) for s in segs]
         i = len(segs) - 1
         acc = sizes[i]
@@ -324,9 +408,7 @@ class SegmentStore:
         if name:
             self.meta["seg_stats"][name] = st
         self.meta["tomb_upto"] = over
-        self._write_meta()
-        for stale in segs[i:]:
-            self._rm(stale)
+        self._commit()
         self._fold_tombstones()
 
     def _fold_tombstones(self) -> None:
@@ -359,9 +441,7 @@ class SegmentStore:
         self.meta["tombstones"] = [name] if n else []
         self.meta["tomb_upto"] = {}
         self.meta["tomb_stats"] = {name: n} if n else {}
-        self._write_meta()
-        for t in tombs:
-            self._rm(t)
+        self._commit()
 
     # -- row counts (write-time stats, zero jobs) ----------------------------
 

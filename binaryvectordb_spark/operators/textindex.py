@@ -21,14 +21,17 @@ Architecture (Lucene's segment model on plain parquet):
                                  seeds, build/compact only
     <folder>/seg_<n>/doclen/     (doc_id, dl)  — stats + local serving
     <folder>/tomb_<n>/           (doc_id, upto_seg)    deletes/replacements
-    <folder>/meta.json           {segments, tombstones, ...} — atomic swap
+    state {segments, tombstones, ...}    which dirs are live: the DB
+                                 manifest's entry for the DB's index,
+                                 <folder>/_log/v<n>.json standalone
 
-- Segments, tombstones, meta and compaction are the segment store shared
-  with GateIndex (operators/segments.py): a batch of new/updated docs is
-  ONE new segment plus tombstones marking the incoming ids dead in every
-  EARLIER segment (``upto_seg`` scopes the tombstone, so an upsert kills
-  the old postings without touching the new ones).  No existing segment
-  file is ever rewritten — mutation cost is O(batch), not O(index).
+- Segments, tombstones, state commits and compaction are the segment
+  store shared with GateIndex (operators/segments.py): a batch of
+  new/updated docs is ONE new segment plus tombstones marking the
+  incoming ids dead in every EARLIER segment (``upto_seg`` scopes the
+  tombstone, so an upsert kills the old postings without touching the
+  new ones).  No existing segment file is ever rewritten — mutation cost
+  is O(batch), not O(index).
 - ``compact()`` folds live postings into a single fresh segment and drops
   the tombstones (Lucene's merge); ``compact_tail()`` is the tiered merge.
 - Postings are written ``repartitionByRange(token)`` + sorted by token, so
@@ -101,8 +104,8 @@ class TextIndex(SegmentStore):
     # the existence probe reads the doc_id-sorted doclen tables
     _PROBE = "doclen"
 
-    def _fresh_meta(self, v: int = 0) -> dict:
-        return dict(super()._fresh_meta(v), fmt=_FMT)
+    def _fresh_meta(self) -> dict:
+        return dict(super()._fresh_meta(), fmt=_FMT)
 
     @staticmethod
     def _seg_size(st: dict) -> int:
@@ -304,12 +307,12 @@ class TextIndex(SegmentStore):
     def build(self, docs_df: DataFrame, id_col: str = "doc_id",
               text_col: str = "text") -> "TextIndex":
         """(Re)build from scratch: one corpus pass, single segment."""
-        self._clear()
+        name = self._next_name("seg")
         st = self._write_segment(self._docs(docs_df, id_col, text_col),
-                                 "seg_0", with_imp=True)
-        self._write_term_stats(os.path.join(self.folder, "seg_0"))
+                                 name, with_imp=True)
+        self._write_term_stats(os.path.join(self.folder, name))
         st["ts"] = True
-        self._swap_in("seg_0", st)
+        self._commit_single(name, st)
         return self
 
     @staticmethod
@@ -364,7 +367,7 @@ class TextIndex(SegmentStore):
         st["ts"] = True
         # compaction rewrites every posting row (with dl), so the folded
         # index is fmt-current even when the input segments predated it
-        self._swap_in(name, st)
+        self._commit_single(name, st)
 
     def _merge_run(self, name: str, lo: int) -> dict:
         """compact_tail's merged segment: the live postings of
@@ -501,14 +504,14 @@ class TextIndex(SegmentStore):
 
     def _live_corpus_scalars(self) -> tuple:
         """(n_docs, avgdl) of the LIVE corpus as driver doubles,
-        memoized per meta version.  Zero jobs in tombstone-free states
+        memoized per state commit.  Zero jobs in tombstone-free states
         (the seg_stats fast path inside _corpus_stats); one slim doclen
         aggregation otherwise.  Both values are deterministic: counts
         are ints, dl sums are sums of integer-valued doubles (exact and
         fold-order-free), the division is one IEEE op — so the literal
         replay matches the classic plan's broadcast stats frame
         bit-for-bit."""
-        key = self.meta.get("v", 0)
+        key = self._gen
         cache = getattr(self, "_cs_cache", None)
         if cache is None:
             cache = self._cs_cache = {}
@@ -522,10 +525,10 @@ class TextIndex(SegmentStore):
     def _live_df(self, terms: list) -> dict:
         """{token: live df} — the per-term live postings count the
         classic plan derives inside its own job tree, memoized per
-        (meta version, term).  One aggregation job fills all of a
+        (state commit, term).  One aggregation job fills all of a
         query's missing terms at once; repeated serving queries then
-        pay ZERO df jobs until the next mutation bumps the version."""
-        v = self.meta.get("v", 0)
+        pay ZERO df jobs until the next mutation commits."""
+        v = self._gen
         cache = getattr(self, "_df_cache", None)
         if cache is None:
             cache = self._df_cache = {}
@@ -549,10 +552,10 @@ class TextIndex(SegmentStore):
 
     def _term_stats_lookup(self, terms: list) -> dict:
         """{token: (df, max_imp)} — one token-pruned read of the tiny
-        term_stats table, memoized per (meta version, term set) so
+        term_stats table, memoized per (state commit, term set) so
         repeated serving queries pay it once.  Terms absent from the
         index are absent from the result."""
-        key = (self.meta.get("v", 0), tuple(sorted(set(terms))))
+        key = (self._gen, tuple(sorted(set(terms))))
         cache = getattr(self, "_ts_cache", None)
         if cache is None:
             cache = self._ts_cache = {}
@@ -964,8 +967,7 @@ class TextIndex(SegmentStore):
         tc = getattr(self, "_thr_cache", None)
         if tc is None:
             tc = self._thr_cache = {}
-        v_meta = self.meta.get("v", 0)
-        keys = {q: (v_meta, tuple(sorted(qterms[q])), int(k))
+        keys = {q: (self._gen, tuple(sorted(qterms[q])), int(k))
                 for q in active}
         thr = {q: dict(tc.get(keys[q]) or
                        {t: (stats[t][1] * 0.8 if t in stats else 0.0)

@@ -350,11 +350,12 @@ def _shared_mutated_text_index(spark: SparkSession, sf_dir: str):
     import os as _os
     import tempfile
 
+    from binaryvectordb_spark.operators.segments import LOG
     from binaryvectordb_spark.operators.textindex import TextIndex
 
     key = _os.path.abspath(sf_dir)
     path = _TI_MUT_CACHE.get(key)
-    if path is None or not _os.path.exists(_os.path.join(path, "meta.json")):
+    if path is None or not _os.path.isdir(_os.path.join(path, LOG)):
         path = tempfile.mkdtemp(prefix="bvdb_textindex_mut_")
         ti = TextIndex(spark, path).build(
             load_table(spark, sf_dir, "documents"))
@@ -448,11 +449,12 @@ def _shared_text_index(spark: SparkSession, sf_dir: str):
     import os as _os
     import tempfile
 
+    from binaryvectordb_spark.operators.segments import LOG
     from binaryvectordb_spark.operators.textindex import TextIndex
 
     key = _os.path.abspath(sf_dir)
     path = _TI_CACHE.get(key)
-    if path is None or not _os.path.exists(_os.path.join(path, "meta.json")):
+    if path is None or not _os.path.isdir(_os.path.join(path, LOG)):
         path = tempfile.mkdtemp(prefix="bvdb_textindex_")
         TextIndex(spark, path).build(load_table(spark, sf_dir, "documents"))
         _TI_CACHE[key] = path

@@ -58,14 +58,24 @@ def corpus(draw):
     return V, q, k, bo, io
 
 
+def _per_query_rows(index, store, dim, queries, k):
+    """The reference for a batch: each query through the single-query
+    JVM expression plan (cascade_search), its rows prefixed with qid."""
+    out = []
+    for qid, qvec in queries:
+        out += [(qid, *r) for r in cascade_search(
+            index, store, dim, query_vec=qvec, k=k).collect()]
+    return out
+
+
 @pytest.mark.parametrize("dim", [96, 1024])
 @pytest.mark.slow
 def test_batch_phase1_paths_agree(spark, dim):
-    """The Arrow local-top-k Phase I and the pure-expression histogram
-    Phase I must produce byte-identical batch results — including tie
-    regions (duplicated vectors force score ties whose resolution must be
-    (score, doc_id), not selection-order).  dim=96 covers a partial lane;
-    dim=1024 is the reference's real dimensionality (16 full lanes)."""
+    """The Arrow batch cascade must produce byte-identical rows to the
+    per-query expression cascade — including tie regions (duplicated
+    vectors force score ties whose resolution must be (score, doc_id),
+    not selection-order).  dim=96 covers a partial lane; dim=1024 is the
+    reference's real dimensionality (16 full lanes)."""
     from binaryvectordb_spark.operators.cascade import cascade_search_batch
 
     rng = np.random.RandomState(7)
@@ -75,12 +85,11 @@ def test_batch_phase1_paths_agree(spark, dim):
     emb = spark.createDataFrame(rows, "vec_id: long, embedding: array<float>")
     index = build_index(emb, dim)
     store = build_doc_store(emb)
-    qs = spark.createDataFrame(
-        [(int(i), V[i * 3].tolist()) for i in range(5)],
-        "qid: long, qvec: array<float>")
-    a = cascade_search_batch(index, store, dim, qs, k=5, phase1="arrow").collect()
-    h = cascade_search_batch(index, store, dim, qs, k=5, phase1="histogram").collect()
-    assert a == h
+    queries = [(int(i), V[i * 3].tolist()) for i in range(5)]
+    qs = spark.createDataFrame(queries, "qid: long, qvec: array<float>")
+    a = cascade_search_batch(index, store, dim, qs, k=5).collect()
+    h = _per_query_rows(index, store, dim, queries, k=5)
+    assert [tuple(r) for r in a] == h
     assert len(a) == 25
 
 
@@ -180,9 +189,9 @@ def test_cascade_k_exceeds_corpus(spark):
 
 @pytest.mark.slow
 def test_batch_phase1_paths_agree_large_multibatch(spark):
-    """Arrow-vs-histogram equivalence at a scale that forces MANY partitions
-    and multiple Arrow batches per partition, with heavy score ties SPANNING
-    batch boundaries (the corpus is 40x-replicated, so every vector has 40
+    """Arrow batch vs per-query expression cascade equivalence at a scale
+    that forces MANY partitions and multiple Arrow batches per partition,
+    with heavy score ties SPANNING batch boundaries (the corpus is 40x-replicated, so every vector has 40
     identical twins in other partitions) — exercises the local-select
     tie fix-up and the global merge."""
     from pyspark.sql import functions as F
@@ -201,21 +210,20 @@ def test_batch_phase1_paths_agree_large_multibatch(spark):
     qs = (emb.where(F.col("vec_id") < 20)
           .select(F.col("vec_id").alias("qid"),
                   F.col("embedding").alias("qvec")))
+    queries = [(int(r["qid"]), list(r["qvec"])) for r in qs.collect()]
     # force >1 Arrow record batch per partition (1250 rows/partition, 300
     # rows/batch) so the kernel's cross-batch accumulate+merge actually runs
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
     spark.conf.set(key, "300")
     try:
-        a = cascade_search_batch(index, store, 64, qs, k=10,
-                                 phase1="arrow").collect()
-        h = cascade_search_batch(index, store, 64, qs, k=10,
-                                 phase1="histogram").collect()
+        a = cascade_search_batch(index, store, 64, qs, k=10).collect()
+        h = _per_query_rows(index, store, 64, sorted(queries), k=10)
     finally:
         spark.conf.set(key, prev)
         index.unpersist()
         store.unpersist()
-    assert a == h
+    assert [tuple(r) for r in a] == h
     assert len(a) == 200
 
 

@@ -4,8 +4,6 @@ DB's own mutation paths and always answers like a fresh rebuild."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -133,8 +131,7 @@ def test_restore_drops_derived_text_index(spark, tmp_path):
     db.build_text_index()
     assert db.search_text(TERMS, k=5)
     db.restore(v0)
-    assert not os.path.isdir(os.path.join(str(tmp_path / "db"),
-                                          "text_index"))
+    assert db._text_index() is None
     with pytest.raises(Exception, match="build_text_index"):
         db.search_text(TERMS)
 

@@ -503,7 +503,7 @@ def test_compact_tail_backfill_restores_full_stats(spark, tmp_path):
             "doc_id: long, text: string"))
     # simulate a legacy pre-stats meta
     ti.meta["seg_stats"] = {}
-    ti._write_meta()
+    ti._commit()
     ti.compact_tail()
     assert not ti.meta["tombstones"]
     stats = ti.meta["seg_stats"]
@@ -522,7 +522,7 @@ def test_compact_tail_backfill_restores_full_stats(spark, tmp_path):
     # guard rather than KeyError — both on read and via compact_tail
     ti.meta["seg_stats"] = {
         s: {"n_docs": stats[s]["n_docs"]} for s in ti.meta["segments"]}
-    ti._write_meta()
+    ti._commit()
     part = ti._corpus_stats().first()
     assert part["n_docs"] == agg["n"] and part["avgdl"] == agg["a"]
 
@@ -935,13 +935,13 @@ def test_blockmax_dirty_refuses_broken_bootstrap_stats(spark, tmp_path):
     orig_sum_dl = idx.meta["seg_stats"][seg0]["sum_dl"]
     # corrupt: a partially-migrated meta with zero sum_dl
     idx.meta["seg_stats"][seg0]["sum_dl"] = 0
-    idx._write_meta()
+    idx._commit()
     assert idx._search_blockmax_batch({0: list(TERMS)}, 10,
                                       forced=True) is None
     assert _rows(idx.search(TERMS, k=10, block_max=True)) == good
     # restore the true bootstrap entry -> the tier engages again
     idx.meta["seg_stats"][seg0]["sum_dl"] = orig_sum_dl
-    idx._write_meta()
+    idx._commit()
     assert idx._search_blockmax_batch({0: list(TERMS)}, 10,
                                       forced=True) is not None
     assert _rows(idx.search(TERMS, k=10, block_max=True)) == good
