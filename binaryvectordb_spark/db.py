@@ -30,6 +30,7 @@ import hashlib
 import json
 import os
 import shutil
+import uuid
 from collections.abc import Callable, Sequence
 
 import numpy as np
@@ -57,6 +58,7 @@ from binaryvectordb_spark.operators.segments import (
     log_versions,
     read_version,
     sweep,
+    write_json,
 )
 
 _META = "_meta.json"
@@ -150,8 +152,8 @@ class BinaryVectorDB:
         # will not delete them mid-session (time-travel DataFrames are lazy;
         # see index_df/docs_df)
         self._read_pinned: set[int] = set()
-        self._ivf_model_cache = None
-        self._ivf_centers = None
+        # (model dir, KMeansModel, centers): see _ivf
+        self._ivf_cache: tuple | None = None
         # serving-handle memo: (manifest_version, index_df, docs_df,
         # index_nonempty) — see _serving_handles
         self._serve_cache: tuple | None = None
@@ -162,10 +164,8 @@ class BinaryVectorDB:
         # bm25_searcher, payload_map) — see _local_searchers
         self._local_serve_shards: int | None = None
         self._local_serve: tuple | None = None
-        # commit-time table stats (see table_stats): advisory, cheap to
-        # recompute, so a handle can switch them off for bulk-load loops
-        self.auto_stats = True
-        self._stats_mem: tuple[int, dict] | None = None  # (version, stats)
+        # (version, stats) computed for a manifest without stats
+        self._stats_mem: tuple[int, dict] | None = None
         # _custom_embed_fn must be picklable for the distributed ingest path;
         # the default (None) is rebuilt executor-side from local_embedder+dim
         self._custom_embed_fn = embed_fn
@@ -186,34 +186,18 @@ class BinaryVectorDB:
                 self.retain_versions = int(meta.get("retain_versions", 0))
             elif int(retain_versions) != int(meta.get("retain_versions", 0)):
                 meta["retain_versions"] = int(retain_versions)
-                self._write_json(meta_path, meta)
+                write_json(meta_path, meta)
         elif os.listdir(folder):
             # mirrors :43-45 — refuse a non-empty folder without config
             raise Exception(
                 f"Folder {folder} has files but no {_META}; not a BinaryVectorDB")
         else:
             self.model = model
-            self._write_json(meta_path, {
+            write_json(meta_path, {
                 "version": "1.0", "model": model, "dim": dim,
                 "buckets": buckets, "index_type": index_type,
                 "index_args": self.index_args,
                 "retain_versions": self.retain_versions})
-
-    @staticmethod
-    def _write_json(meta_path: str, meta: dict) -> None:
-        # pid-suffixed tmp: two processes racing to create the same DB would
-        # otherwise interleave writes into ONE tmp file and rename a torn
-        # meta; with distinct tmps the last rename wins atomically
-        tmp = f"{meta_path}.tmp.{os.getpid()}"
-        try:
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, meta_path)
-        finally:
-            if os.path.exists(tmp):
-                os.remove(tmp)
 
     # -- storage ------------------------------------------------------------
     # Layout: <folder>/<name>/bucket=K/part-*.parquet with
@@ -222,18 +206,24 @@ class BinaryVectorDB:
     #   v0000000042.json = {"version": 42,
     #                       "tables": {"index":     {"<bucket>": [files...]},
     #                                  "documents": {"<bucket>": [files...]}},
-    #                       "side": {"text_index": {segments, ...}, ...}}
-    # The manifest — not the directory listing — defines what a reader sees
-    # (the Delta/Iceberg idea, SURVEY §1.3).  A mutation stages new parquet
-    # files into the live bucket dirs under unique names (invisible: not in
-    # any manifest), then COMMITS by atomically renaming one new manifest
-    # covering BOTH tiers — so an upsert is all-or-nothing across every
-    # touched bucket of `index` AND `documents`, the cross-tier atomicity
-    # the reference lacks entirely (full rewrite + no rollback story,
-    # README.md:174).  A crash before the rename leaves the previous
+    #                       "side": {"text_index": {segments, ...}, ...},
+    #                       "docs_schema": "<StructType json>" | null,
+    #                       "stats": {"n_rows", "columns"} | null,
+    #                       "ivf": {"model", "built_version",
+    #                               "mutated_rows"} | null}
+    # The manifest holds the whole versioned state (_meta.json is
+    # write-once config), and it — not the directory listing — defines
+    # what a reader sees (the Delta/Iceberg idea, SURVEY §1.3).  A mutation
+    # stages new parquet files into the live bucket dirs under unique names
+    # (invisible: not in any manifest), then COMMITS by atomically renaming
+    # one new manifest covering BOTH tiers — so an upsert is all-or-nothing
+    # across every touched bucket of `index` AND `documents`, the
+    # cross-tier atomicity the reference lacks entirely (full rewrite + no
+    # rollback story, README.md:174).  A crash before the rename leaves the previous
     # version fully intact; stray staged files are garbage-collected by the
     # next successful commit.  The derived indexes' state rides the same
-    # manifest ("side", see the derived side indexes section).  At 100 TB
+    # manifest ("side", see the derived side indexes section), as do the
+    # documents schema, the table stats and the IVF partitioner.  At 100 TB
     # the manifest also replaces object-store LIST calls with one small
     # JSON read per query.
     # Single-writer by design (as is the reference); manifests are tiny and
@@ -255,13 +245,16 @@ class BinaryVectorDB:
         vs = log_versions(self._log_dir())
         return vs[-1] if vs else None
 
+    def _head(self) -> dict | None:
+        return self._manifest_of(self._manifest_version())
+
     def _manifest_tables(self) -> dict | None:
-        m = self._manifest_of(self._manifest_version())
+        m = self._head()
         return None if m is None else m["tables"]
 
     def _manifest_of(self, version: int | None) -> dict | None:
         """One committed manifest (None for version None: no log yet) —
-        no data-file existence check; reads use _tables_at."""
+        no data-file existence check; reads use _manifest_at."""
         if version is None:
             return None
         path = os.path.join(self._log_dir(), f"v{int(version):010d}.json")
@@ -302,9 +295,13 @@ class BinaryVectorDB:
     def _commit(self, updates: dict[str, dict], expect=_UNSET) -> None:
         """THE atomic commit point: one manifest link makes every entry of
         `updates` visible simultaneously — a table's full new
-        bucket->files map, or a side index's new state (None drops it).
-        Entries not mentioned are kept; an update with no files drops the
-        table (full-delete edge).  After the commit, no-longer-retained
+        bucket->files map, a side index's new state (None drops it), or
+        a new docs_schema / stats / ivf entry.  Entries not mentioned are
+        kept; an update with no files drops the table (full-delete edge).
+        A commit that changes the documents table (and names no stats)
+        computes the table stats of the staged documents first; they are
+        advisory, so a failure leaves the entry null (table_stats then
+        computes on demand).  After the commit, no-longer-retained
         files are deleted and Spark caches on the updated tables
         invalidated (cache manager matches by plan, and a plan built from
         the old manifest's file list must not serve stale blocks).
@@ -331,50 +328,67 @@ class BinaryVectorDB:
             expect = self._manifest_version()
         base = self._manifest_of(expect)
         v = (expect or 0) + 1
-        tables = dict(self._adopt_tables() if base is None
-                      else base["tables"])
-        sides = dict(self._side_of(base))
+        body = {"version": v,
+                "tables": dict(self._adopt_tables() if base is None
+                               else base["tables"]),
+                "side": dict(self._side_of(base)),
+                **self._entries(base)}
         for name, entry in updates.items():
-            into = sides if name in self._SIDE_DIRS else tables
-            if into is tables:
+            if name in self._ENTRIES:
+                body[name] = entry
+                continue
+            into = body["side"] if name in self._SIDE_DIRS else body["tables"]
+            if into is body["tables"]:
                 entry = {b: fl for b, fl in entry.items() if fl}
             if entry:
                 into[name] = entry
             else:
                 into.pop(name, None)
+        if "documents" in updates and "stats" not in updates:
+            try:
+                body["stats"] = self._compute_stats(self._files_df(
+                    "documents", body["tables"].get("documents") or {},
+                    body))
+            except Exception:
+                body["stats"] = None
         try:
-            commit_version(self._log_dir(), v, {
-                "version": v, "tables": tables, "side": sides})
+            commit_version(self._log_dir(), v, body)
         except FileExistsError:
             raise ConcurrentWriteError(
                 f"version {v} was committed by another writer at the commit "
                 "instant; mutation aborted (staged files will be "
                 "garbage-collected)") from None
         self._gc(self.retain_versions + 1)
-        for name in updates.keys() - set(self._SIDE_DIRS):
+        for name in updates.keys() & set(self._DATA_TABLES):
             self.spark.catalog.refreshByPath(self._path(name))
-        # table stats ride the commit: a docs-changing commit recomputes
-        # them (narrow column-pruned scan of the tracked metadata columns);
-        # an index-only commit (build_ivf) carries the previous version's
-        # sidecar forward unchanged — stats are a property of the docs
-        # snapshot, and the version key makes invalidation exact
-        if self.auto_stats:
-            if "documents" in updates:
-                try:
-                    self._refresh_stats()
-                except Exception:
-                    pass  # stats are advisory; table_stats() recomputes
-            else:
-                prev = self._stats_path(v - 1)
-                if os.path.isfile(prev):
-                    with open(prev) as f:
-                        st = json.load(f)
-                    st["version"] = v
-                    self._write_stats(v, st)
+
+    # manifest entries beside tables and side (see the storage layout)
+    _ENTRIES = ("docs_schema", "stats", "ivf")
+    # IVF model dirs are ivf_model_<uuid>; a legacy DB has one ivf_model/
+    _IVF_DIR = "ivf_model"
+
+    def _entries(self, manifest: dict | None) -> dict:
+        """{docs_schema, stats, ivf} of ``manifest``.  A manifest from
+        before they rode the log (or none: a pre-log DB) reads the fields
+        _meta.json kept and the one ``ivf_model/`` dir, with no stats; its
+        next commit writes them into the new manifest."""
+        if manifest is not None and "ivf" in manifest:
+            return {k: manifest[k] for k in self._ENTRIES}
+        with open(os.path.join(self.folder, _META)) as f:
+            meta = json.load(f)
+        ivf = None
+        if os.path.isdir(self._path(self._IVF_DIR)):
+            ivf = {"model": self._IVF_DIR,
+                   "built_version": meta.get("ivf_built_version"),
+                   "mutated_rows": int(meta.get("ivf_mutated_rows", 0))}
+        return {"docs_schema": meta.get("docs_schema"), "stats": None,
+                "ivf": ivf}
 
     def _gc(self, keep_last: int, respect_pins: bool = True) -> None:
-        """Delete every data file and side-index seg_*/tomb_* dir none of
-        the latest `keep_last` manifests references: those of versions
+        """Delete every data file, side-index seg_*/tomb_* dir and IVF
+        model dir none of the latest `keep_last` manifests references
+        (and the `_stats/` dir of a DB from before stats rode the
+        manifest, which nothing reads): those of versions
         that aged out of retention, and strays from crashed or aborted
         commit attempts.  Safe under the single-writer assumption —
         nothing unreferenced can be mid-read by a committed reader.
@@ -433,6 +447,12 @@ class BinaryVectorDB:
             sweep(p, kset)
             if not os.listdir(p):
                 os.rmdir(p)
+        models = {ivf["model"] for m in retained
+                  if (ivf := self._entries(m)["ivf"]) is not None}
+        for d in os.listdir(self.folder):
+            if d.startswith(self._IVF_DIR) and d not in models:
+                shutil.rmtree(self._path(d), ignore_errors=True)
+        shutil.rmtree(self._path("_stats"), ignore_errors=True)
 
     def vacuum(self, keep_last: int = 1) -> None:
         """One-shot GC to the latest `keep_last` versions' files (Delta
@@ -450,7 +470,7 @@ class BinaryVectorDB:
         # dead entries (and their manifests' file lists) forever
         for pv in list(self._read_pinned):
             try:
-                self._tables_at(pv)
+                self._manifest_at(pv)
             except ValueError:
                 self._read_pinned.discard(pv)
 
@@ -471,7 +491,7 @@ class BinaryVectorDB:
             t = self._manifest_tables()
             if t is not None:
                 return bool(t.get(name))
-        # non-logged artifacts (ivf_model) and legacy pre-log tables
+        # legacy pre-log tables
         return os.path.isdir(self._path(name))
 
     def _bucket_dirs(self, name: str) -> list[str]:
@@ -519,21 +539,23 @@ class BinaryVectorDB:
         """The doc_id-bucket component of a manifest key (last segment)."""
         return key.rsplit("/", 1)[-1]
 
-    def _files_df(self, name: str, bmap: dict) -> DataFrame | None:
-        """Build the reader for a manifest entry: explicit file list, with
-        basePath so the partition columns (bucket; cluster+bucket for an
-        IVF-partitioned index) still prune.  The documents table applies
-        the schema recorded in _meta.json (when present): metadata columns
-        evolve the schema, buckets rewritten before the column existed
-        lack it physically, and ONE explicit schema makes parquet fill the
-        gaps with nulls — the Delta-style alternative to a mergeSchema
-        footer scan over every file."""
+    def _files_df(self, name: str, bmap: dict,
+                  manifest: dict | None) -> DataFrame | None:
+        """Build the reader for a table entry ``bmap`` of ``manifest``:
+        explicit file list, with basePath so the partition columns
+        (bucket; cluster+bucket for an IVF-partitioned index) still prune.
+        The documents table applies the manifest's docs_schema (when
+        present): metadata columns evolve the schema, buckets rewritten
+        before the column existed lack it physically, and ONE explicit
+        schema makes parquet fill the gaps with nulls — the Delta-style
+        alternative to a mergeSchema footer scan over every file."""
         p = self._path(name)
         reader = self.spark.read
         if name == "documents":
-            sch = self._docs_schema()
-            if sch is not None:
-                reader = reader.schema(sch)
+            sch = self._entries(manifest)["docs_schema"]
+            if sch:
+                from pyspark.sql.types import StructType
+                reader = reader.schema(StructType.fromJson(json.loads(sch)))
         if "_flat" in bmap:
             files = [os.path.join(p, f) for f in bmap["_flat"]]
             df = reader.parquet(*files)
@@ -553,52 +575,23 @@ class BinaryVectorDB:
                                F.coalesce(F.col("doc_kind"), F.lit("str")))
         return df
 
-    def _docs_schema(self):
-        """The committed documents schema from _meta.json, or None for DBs
-        that never recorded one (their buckets all share the written
-        schema, so inference is exact)."""
-        meta_path = os.path.join(self.folder, _META)
-        try:
-            with open(meta_path) as f:
-                s = json.load(f).get("docs_schema")
-        except (OSError, ValueError):
-            return None
-        if not s:
-            return None
-        from pyspark.sql.types import StructType
-        return StructType.fromJson(json.loads(s))
-
-    def _record_docs_schema(self, schema) -> None:
-        """Persist the (possibly evolved) documents schema after a commit.
-        Written post-commit so an aborted mutation cannot advertise a
-        column no committed file carries; a superset schema is harmless
-        (readers see nulls) which makes the non-transactional meta update
-        safe under the single-writer contract."""
-        meta_path = os.path.join(self.folder, _META)
-        with open(meta_path) as f:
-            meta = json.load(f)
-        sj = schema.json()
-        if meta.get("docs_schema") != sj:
-            meta["docs_schema"] = sj
-            self._write_json(meta_path, meta)
-
     def _read_df(self, name: str) -> DataFrame | None:
-        t = self._manifest_tables()
-        if t is None:  # legacy pre-log DB: directory listing is the truth
+        m = self._head()
+        if m is None:  # legacy pre-log DB: directory listing is the truth
             if not os.path.isdir(self._path(name)):
                 return None
             df = self.spark.read.parquet(self._path(name))
             return df.drop("bucket") if "bucket" in df.columns else df
-        bmap = t.get(name)
-        return self._files_df(name, bmap) if bmap else None
+        bmap = m["tables"].get(name)
+        return self._files_df(name, bmap, m) if bmap else None
 
-    def _tables_at(self, version: int) -> dict:
-        """Table maps of a specific committed version, with an existence
+    def _manifest_at(self, version: int) -> dict:
+        """The manifest of a specific committed version, with an existence
         check on every referenced data file (a version older than the
         retention window has been vacuumed: its manifest survives, its
         data does not)."""
-        tables = self._manifest_of(version)["tables"]
-        for name, bmap in tables.items():
+        m = self._manifest_of(version)
+        for name, bmap in m["tables"].items():
             p = self._path(name)
             for b, fl in bmap.items():
                 d = os.path.join(p, self._key_reldir(b))
@@ -609,10 +602,11 @@ class BinaryVectorDB:
                             f"{name}/{self._key_reldir(b)}/{fn} is gone); "
                             "only versions inside the retention window are "
                             "readable")
-        return tables
+        return m
 
     def _read_version_df(self, name: str, version: int) -> DataFrame | None:
-        bmap = self._tables_at(version).get(name)
+        m = self._manifest_at(version)
+        bmap = m["tables"].get(name)
         # Time-travel DataFrames are lazy: pin the version so this handle's
         # own commit-time GC cannot delete its files before the plan
         # executes.  SCOPE: pins live in THIS handle's memory only — they do
@@ -623,7 +617,7 @@ class BinaryVectorDB:
         # retention window itself (which every writer honors, no pin needed)
         # covers the read.
         self._read_pinned.add(int(version))
-        return self._files_df(name, bmap) if bmap else None
+        return self._files_df(name, bmap, m) if bmap else None
 
     def index_df(self, version: int | None = None) -> DataFrame | None:
         """The binary index tier; `version` time-travels to an earlier
@@ -641,33 +635,22 @@ class BinaryVectorDB:
     # -- table statistics -----------------------------------------------------
     # Per-snapshot stats over the docs table's filterable metadata columns
     # (everything except the payload/embedding columns): row count, per-column
-    # NDV, and a value->count frequency map for low-NDV columns.  Persisted as
-    # a version-keyed sidecar (_stats/v<N>.json) written at commit time —
-    # stats describe a SNAPSHOT, so the version key gives exact invalidation,
-    # and a missing sidecar (crash between commit and stats write, or a
-    # pre-stats DB) just recomputes on demand.  The serving win: a filtered
-    # search estimates predicate selectivity from the frequency map instead
-    # of paying two count jobs per query (operators/cascade.py
+    # NDV, and a value->count frequency map for low-NDV columns.  They are
+    # the manifest's "stats" entry, computed by the commit that changes the
+    # documents (carried forward by the others) — stats describe a
+    # SNAPSHOT, so riding its manifest gives exact invalidation, and a
+    # manifest without them (failed computation, pre-stats DB) just
+    # recomputes on demand.  The serving win: a filtered search estimates
+    # predicate selectivity from the frequency map instead of paying two
+    # count jobs per query (operators/cascade.py
     # cascade_search_filtered_adaptive's `selectivity` input).
 
-    _STATS_DIR = "_stats"
     _STATS_NDV_CAP = 64  # freq maps only for columns at or under this NDV
     _STATS_SKIP_COLS = ("doc", "emb_int8")  # payload/embedding: not filterable
 
-    def _stats_path(self, version: int) -> str:
-        return os.path.join(self.folder, self._STATS_DIR,
-                            f"v{int(version):010d}.json")
-
-    def _write_stats(self, version: int, stats: dict) -> None:
-        os.makedirs(os.path.join(self.folder, self._STATS_DIR), exist_ok=True)
-        self._write_json(self._stats_path(version), stats)
-        self._stats_mem = (int(version), stats)
-
-    def _compute_stats(self) -> dict:
-        v = self._manifest_version()
-        docs = self.docs_df()
+    def _compute_stats(self, docs: DataFrame | None) -> dict:
         if docs is None:
-            return {"version": v, "n_rows": 0, "columns": {}}
+            return {"n_rows": 0, "columns": {}}
         tracked = [c for c, t in docs.dtypes
                    if c not in self._STATS_SKIP_COLS
                    and t in ("string", "boolean", "tinyint", "smallint",
@@ -692,31 +675,24 @@ class BinaryVectorDB:
                     info["null_count"] = int(r["count"])
                 else:
                     info.setdefault("freq", {})[r["v"]] = int(r["count"])
-        return {"version": v, "n_rows": n_rows, "columns": cols}
-
-    def _refresh_stats(self) -> dict:
-        stats = self._compute_stats()
-        self._write_stats(self._manifest_version(), stats)
-        return stats
+        return {"n_rows": n_rows, "columns": cols}
 
     def table_stats(self, refresh: bool = False) -> dict | None:
         """Stats of the docs table at the current committed version:
         ``{"version", "n_rows", "columns": {col: {"ndv", "freq"?,
-        "null_count"?}}}``.  Reads the commit-time sidecar (no Spark job);
-        computes and persists it when absent or ``refresh=True``."""
+        "null_count"?}}}``.  Reads the manifest's stats entry (no Spark
+        job); computes them, memoized in this handle, when the manifest
+        has none or ``refresh=True``."""
         v = self._manifest_version()
         if v is None:
             return None
-        if not refresh:
-            if self._stats_mem is not None and self._stats_mem[0] == v:
-                return self._stats_mem[1]
-            p = self._stats_path(v)
-            if os.path.isfile(p):
-                with open(p) as f:
-                    stats = json.load(f)
-                self._stats_mem = (v, stats)
-                return stats
-        return self._refresh_stats()
+        st = self._entries(self._manifest_of(v))["stats"]
+        if st is not None and not refresh:
+            return {"version": v, **st}
+        if refresh or self._stats_mem is None or self._stats_mem[0] != v:
+            self._stats_mem = (v, {"version": v,
+                                   **self._compute_stats(self.docs_df())})
+        return self._stats_mem[1]
 
     @staticmethod
     def _stats_key(value) -> str:
@@ -754,39 +730,45 @@ class BinaryVectorDB:
         `version`'s files — history moves forward, data moves back.  Needs
         the target inside the retention window (files still on disk); the
         restored files are referenced by the new head, so they survive
-        subsequent GC regardless of age.  The side indexes come back as
-        they were at `version` (none for a manifest older than side
-        state); their seg_*/tomb_* dirs must still be on disk too."""
+        subsequent GC regardless of age.  The side indexes, the docs
+        schema and the IVF partitioner (its model dir and drift counter)
+        come back as they were at `version` (no side indexes for a
+        manifest older than side state); the dirs they name must still be
+        on disk too."""
         self._flush_pending()
         expect = self._manifest_version()
-        old = self._tables_at(version)  # validates existence + files
-        side = self._manifest_of(version).get("side") or {}
-        # a side-index commit leaves the data files alone, so v's data can
-        # outlive the segment dirs its side state names
+        m = self._manifest_at(version)  # validates existence + files
+        side = m.get("side") or {}
+        ent = self._entries(m)
+        # a side-index or IVF commit leaves the data files alone, so v's
+        # data can outlive the dirs its side and ivf entries name
         gone = [f"{n}/{d}" for n, st in side.items()
                 for d in st["segments"] + st["tombstones"]
                 if not os.path.isdir(os.path.join(self._path(n), d))]
+        if ent["ivf"] and not os.path.isdir(self._path(ent["ivf"]["model"])):
+            gone.append(ent["ivf"]["model"])
         if gone:
-            raise ValueError(f"version {version} has been vacuumed (side "
-                             f"index dir {gone[0]} is gone); only versions "
+            raise ValueError(f"version {version} has been vacuumed (dir "
+                             f"{gone[0]} is gone); only versions "
                              "inside the retention window are readable")
-        self._commit({**{name: dict(old.get(name) or {})
+        self._commit({**{name: dict(m["tables"].get(name) or {})
                          for name in self._DATA_TABLES},
-                      **{name: side.get(name) for name in self._SIDE_DIRS}},
+                      **{name: side.get(name) for name in self._SIDE_DIRS},
+                      "docs_schema": ent["docs_schema"], "ivf": ent["ivf"]},
                      expect=expect)
 
     def _read_buckets(self, name: str, touched: list[int]) -> DataFrame | None:
         """Scan ONLY the touched buckets — the partial-rewrite read path.
         Returns None when none of them hold data yet."""
-        t = self._manifest_tables()
-        if t is not None:
-            bmap = t.get(name) or {}
+        m = self._head()
+        if m is not None:
+            bmap = m["tables"].get(name) or {}
             if "_flat" in bmap:  # unbucketed legacy data: cannot prune
                 return self._read_df(name)
             tset = {str(b) for b in touched}
             sel = {k: fl for k, fl in bmap.items()
                    if self._key_bucket(k) in tset and fl}
-            return self._files_df(name, sel) if sel else None
+            return self._files_df(name, sel, m) if sel else None
         p = self._path(name)
         dirs = [os.path.join(p, f"bucket={b}") for b in touched]
         dirs = [d for d in dirs if os.path.isdir(d)]
@@ -900,32 +882,43 @@ class BinaryVectorDB:
     # nprobe/k of the index bytes, not all of them).  The inner bucket level
     # keeps mutations rewriting only touched doc_id buckets.  On the cached
     # RAM tier the same predicate prunes via in-memory batch stats.
+    # Each build saves its model into a fresh ivf_model_<uuid> dir that the
+    # manifest's "ivf" entry names, so the model a version was assigned
+    # with stays on disk while that version is retained (restore) and a
+    # handle memoizing one model sees the next by its new name.
 
     def _ivf_args(self) -> dict:
         args = {"n_clusters": 16, "nprobe": 4}
         args.update(self.index_args)
         return args
 
-    def _ivf_model(self):
-        if self._ivf_model_cache is None and self._exists("ivf_model"):
+    def _ivf(self) -> tuple | None:
+        """(KMeansModel, centers matrix) of the partitioner the head
+        version names, or None before the first build_ivf.  Memoized on
+        the model dir, which no build reuses."""
+        ivf = self._entries(self._head())["ivf"]
+        if ivf is None:
+            return None
+        if self._ivf_cache is None or self._ivf_cache[0] != ivf["model"]:
             from pyspark.ml.clustering import KMeansModel
-            self._ivf_model_cache = KMeansModel.load(self._path("ivf_model"))
+            model = KMeansModel.load(self._path(ivf["model"]))
             # memoize the centers matrix: clusterCenters() round-trips every
             # centroid through py4j (~40 ms/query at k=32 — measurable
             # against a ~0.5 s serving latency); the matrix is immutable for
             # a given trained model
-            self._ivf_centers = (np.vstack(self._ivf_model_cache.clusterCenters())
-                                 if self._ivf_model_cache is not None else None)
-        return self._ivf_model_cache
+            self._ivf_cache = (ivf["model"], model,
+                               np.vstack(model.clusterCenters()))
+        return self._ivf_cache[1:]
 
-    def _with_cluster(self, df: DataFrame, int8_col: str) -> DataFrame:
+    @staticmethod
+    def _with_cluster(df: DataFrame, int8_col: str, model) -> DataFrame:
         """Attach the IVF partition id by nearest trained centroid — a
         map-side model.transform over the int8 feature space (the space the
         model was trained in), no shuffle, no join."""
         from pyspark.ml.functions import array_to_vector
         feats = df.withColumn(
             "features", array_to_vector(F.col(int8_col).cast("array<double>")))
-        return self._ivf_model().transform(feats).drop("features")
+        return model.transform(feats).drop("features")
 
     def build_ivf(self, n_clusters: int | None = None) -> None:
         """Train (or retrain) the IVF partitioner on the current corpus and
@@ -938,6 +931,7 @@ class BinaryVectorDB:
         from pyspark.ml.functions import array_to_vector
 
         self._flush_pending()
+        expect = self._manifest_version()  # OCC snapshot
         docs = self.docs_df()
         if docs is None or not docs.take(1):
             raise Exception("Index is empty; add documents first")
@@ -977,13 +971,13 @@ class BinaryVectorDB:
         # (init sampling is positional)
         train = train.repartition(32, "doc_id").sortWithinPartitions("doc_id")
         model = km.fit(train)
-        model.write().overwrite().save(self._path("ivf_model"))
-        self._ivf_model_cache = None
-        self._ivf_centers = None
+        # a failed commit leaves this dir unnamed: the next commit's _gc
+        # deletes it, and the old model keeps serving
+        model_dir = f"{self._IVF_DIR}_{uuid.uuid4().hex}"
+        model.save(self._path(model_dir))
         assign = self._with_cluster(
-            docs.select("doc_id", "emb_int8"), "emb_int8"
+            docs.select("doc_id", "emb_int8"), "emb_int8", model
         ).select("doc_id", "cluster")
-        expect = self._manifest_version()  # OCC snapshot
         idx = self.index_df()
         if "cluster" in idx.columns:
             idx = idx.drop("cluster")
@@ -991,14 +985,14 @@ class BinaryVectorDB:
         # column-pruned size estimate of the 2-column assignment can dip
         # under the broadcast threshold and BROADCAST a corpus-sized side —
         # flaky driver OOM at 1M rows, certain death at 100 TB
+        # fresh centroids reset the drift counter: every row is now
+        # assigned by the model that was trained on it
         self._commit(
             {"index": self._full_update(
-                idx.join(assign.hint("shuffle_hash"), "doc_id"), "index")},
+                idx.join(assign.hint("shuffle_hash"), "doc_id"), "index"),
+             "ivf": {"model": model_dir, "built_version": (expect or 0) + 1,
+                     "mutated_rows": 0}},
             expect=expect)
-        # fresh centroids: reset the drift counter (every row is now
-        # assigned by the model that was trained on it)
-        self._meta_update(ivf_mutated_rows=0,
-                          ivf_built_version=self._manifest_version())
 
     # -- IVF drift ----------------------------------------------------------
     # Upserts assign clusters with the FROZEN centroids (_with_cluster), so
@@ -1006,29 +1000,24 @@ class BinaryVectorDB:
     # distribution the partitioner never saw land in whichever old centroid
     # is nearest, and clusters bloat/starve.  faiss has no counterpart (the
     # reference rebuilds the flat index wholesale); here the churn since the
-    # last build_ivf is tracked in _meta.json and surfaced as a metric with
-    # a rebuild recommendation — or an automatic rebuild under
+    # last build_ivf is counted in the manifest's "ivf" entry by the
+    # mutation's own commit and surfaced as a metric with a rebuild
+    # recommendation — or an automatic rebuild under
     # index_args={"auto_rebuild": True}.
 
-    def _meta_read(self) -> dict:
-        with open(os.path.join(self.folder, _META)) as f:
-            return json.load(f)
+    def _ivf_churn(self, expect: int | None, n_rows: int) -> dict:
+        """The ``ivf`` update of a mutation of ``n_rows`` rows planned
+        against version ``expect`` ({} unless it is a built IVF DB)."""
+        ivf = (self._entries(self._manifest_of(expect))["ivf"]
+               if self.index_type == "ivf" else None)
+        if ivf is None:
+            return {}
+        return {"ivf": dict(ivf, mutated_rows=ivf["mutated_rows"] + n_rows)}
 
-    def _meta_update(self, **kv) -> None:
-        meta_path = os.path.join(self.folder, _META)
-        meta = self._meta_read()
-        meta.update(kv)
-        self._write_json(meta_path, meta)
-
-    def _note_ivf_mutation(self, n_keys: int | None) -> None:
-        """Accumulate churn after a mutation on a built IVF DB, and rebuild
-        when past threshold under the auto_rebuild flag.  The fraction uses
-        the commit-time stats row count — no Spark job on the mutation
-        path."""
-        if n_keys is None:
-            return  # unknown batch size (no caller does this today)
-        mutated = int(self._meta_read().get("ivf_mutated_rows", 0)) + int(n_keys)
-        self._meta_update(ivf_mutated_rows=mutated)
+    def _maybe_rebuild_ivf(self, mutated: int) -> None:
+        """Rebuild under the auto_rebuild flag once ``mutated`` rows reach
+        drift_threshold of the corpus.  The fraction uses the commit-time
+        stats row count — no Spark job on the mutation path."""
         if not self._ivf_args().get("auto_rebuild"):
             return
         st = self.table_stats()
@@ -1050,10 +1039,10 @@ class BinaryVectorDB:
           drift_threshold (default 0.3).  build_ivf() resets the counter.
         """
         self._flush_pending()
-        if self.index_type != "ivf" or self._ivf_model() is None:
+        ivf = self._entries(self._head())["ivf"]
+        if self.index_type != "ivf" or ivf is None:
             raise ValueError("ivf_drift() requires a built index_type='ivf' DB")
-        meta = self._meta_read()
-        mutated = int(meta.get("ivf_mutated_rows", 0))
+        mutated = int(ivf["mutated_rows"])
         sizes = [int(r["count"]) for r in
                  self.index_df().groupBy("cluster").count().collect()]
         n = sum(sizes)
@@ -1067,15 +1056,17 @@ class BinaryVectorDB:
             "cluster_skew": round(max(sizes) / (n / len(sizes)), 4)
                             if sizes and n else 0.0,
             "drift_threshold": thr,
-            "built_at_version": meta.get("ivf_built_version"),
+            "built_at_version": ivf["built_version"],
             "rebuild_recommended": frac >= thr,
         }
 
-    def _probe_clusters(self, qvec: np.ndarray, nprobe: int) -> list[int]:
+    def _probe_clusters(self, qvec: np.ndarray, nprobe: int,
+                        centers: np.ndarray | None = None) -> list[int]:
         """nprobe nearest centroids to the query (L2 in the trained int8
-        space; ties by cluster id) — a k-row numpy argsort on the driver."""
-        self._ivf_model()  # ensure loaded + centers memoized
-        centers = self._ivf_centers
+        space; ties by cluster id) — a k-row numpy argsort on the driver.
+        ``centers`` defaults to the head version's."""
+        if centers is None:
+            centers = self._ivf()[1]
         scaled = np.clip(np.asarray(qvec, dtype=np.float64), -1, 1) * 127
         # HALF_UP (away from zero), matching int8_quantize — np.round is
         # half-to-even and would land .5 cases in a different int8 space
@@ -1092,11 +1083,13 @@ class BinaryVectorDB:
         the first build.  On the cluster-partitioned layout this predicate
         is a PARTITION filter (asserted in tests/test_plans.py): a cold scan
         opens only the probed clusters' files."""
-        if (self.index_type != "ivf" or "cluster" not in idx.columns
-                or self._ivf_model() is None):
+        ivf = (self._ivf() if self.index_type == "ivf"
+               and "cluster" in idx.columns else None)
+        if ivf is None:
             return idx
         np_ = int(nprobe or self._ivf_args()["nprobe"])
-        probe = sorted({c for q in qvecs for c in self._probe_clusters(q, np_)})
+        probe = sorted({c for q in qvecs
+                        for c in self._probe_clusters(q, np_, ivf[1])})
         return idx.where(F.col("cluster").isin(probe))
 
     # -- mutation (reference "DML", §2.10) ----------------------------------
@@ -1189,10 +1182,10 @@ class BinaryVectorDB:
         # column back-filled as 'str' at merge time, so unionByName aligns.
         # User metadata columns (add_batch_df meta_cols) evolve the docs
         # schema too — those union with allowMissingColumns (nulls for rows
-        # ingested before the column existed), and the union schema is
-        # recorded in _meta.json after the commit so readers apply ONE
-        # explicit schema across mixed-schema buckets (no mergeSchema
-        # footer storm at scale; parquet fills absent columns with null).
+        # ingested before the column existed), and the union schema rides
+        # the commit as docs_schema so readers apply ONE explicit schema
+        # across mixed-schema buckets (no mergeSchema footer storm at
+        # scale; parquet fills absent columns with null).
         def _align(df: DataFrame) -> DataFrame:
             return (df if "doc_kind" in df.columns
                     else df.withColumn("doc_kind", F.lit("str")))
@@ -1200,8 +1193,6 @@ class BinaryVectorDB:
         # OCC snapshot: the version every read below is planned against;
         # _commit aborts if another writer lands in between (lost update)
         expect = self._manifest_version()
-        had_ivf_model = (self.index_type == "ivf"
-                         and self._ivf_model() is not None)
         new_docs = _align(new_docs)
         # the batch alone, pre-merge, for the side-index staging —
         # MATERIALIZED once: the side indexes read it several times
@@ -1240,11 +1231,8 @@ class BinaryVectorDB:
                             .unionByName(new_docs, allowMissingColumns=True))
             # both tiers and the side indexes staged first, then ONE
             # manifest commit: the upsert is atomic across index, documents
-            # (and all their buckets) and every derived index.  The
-            # (possibly evolved) docs schema is recorded first so the
-            # commit-time stats refresh reads with it; if the commit then
-            # aborts, a superset schema is harmless (readers see nulls).
-            self._record_docs_schema(new_docs.schema)
+            # (and all their buckets), their schema and stats, and every
+            # derived index
             updates = {
                 "index": self._bucket_update(new_index, "index", touched),
                 "documents": self._bucket_update(new_docs, "documents",
@@ -1258,19 +1246,20 @@ class BinaryVectorDB:
                 new_docs = (_align(old_docs)
                             .join(kside, "doc_id", "left_anti")
                             .unionByName(new_docs, allowMissingColumns=True))
-            self._record_docs_schema(new_docs.schema)
             updates = {
                 "index": self._full_update(new_index, "index"),
                 "documents": self._full_update(new_docs, "documents")}
+        updates["docs_schema"] = new_docs.schema.json()
         updates.update(self._after_upsert(sides, incoming, incoming_counts))
+        updates.update(self._ivf_churn(expect, int(n_keys or 0)))
         self._commit(updates, expect=expect)
         # first ingest of an ivf DB: train the partitioner now; later
         # ingests attach clusters incrementally via the trained model —
         # and accumulate drift against it (ivf_drift)
-        if self.index_type == "ivf" and self._ivf_model() is None:
+        if "ivf" in updates:
+            self._maybe_rebuild_ivf(updates["ivf"]["mutated_rows"])
+        elif self.index_type == "ivf":
             self.build_ivf()
-        elif had_ivf_model:
-            self._note_ivf_mutation(n_keys)
 
     def _enqueue(self, doc_ids: list[int], docs: list[str], kinds: list[str],
                  emb: np.ndarray, save: bool) -> None:
@@ -1316,11 +1305,12 @@ class BinaryVectorDB:
         place that decides whether rows carry an IVF cluster id."""
         new_index = base.select(
             "doc_id", pack_bits("embedding", self.dim).alias("vec"))
-        if self._ivf_model() is not None:
+        ivf = self._ivf()
+        if ivf is not None:
             new_index = self._with_cluster(
                 base.select("doc_id",
                             pack_bits("embedding", self.dim).alias("vec"),
-                            "emb_int8"), "emb_int8").drop("emb_int8")
+                            "emb_int8"), "emb_int8", ivf[0]).drop("emb_int8")
         return new_index
 
     def add_documents_df(self, docs_df, id_col: str = "doc_id",
@@ -1455,9 +1445,10 @@ class BinaryVectorDB:
                                         "left_anti"), "documents")}
         updates.update(self._after_remove(self._side_writers(expect),
                                           doc_ids))
+        updates.update(self._ivf_churn(expect, len(doc_ids)))
         self._commit(updates, expect=expect)
-        if self.index_type == "ivf" and self._ivf_model() is not None:
-            self._note_ivf_mutation(len(doc_ids))
+        if "ivf" in updates:
+            self._maybe_rebuild_ivf(updates["ivf"]["mutated_rows"])
 
     def remove_doc(self, doc_id: int) -> None:
         self.remove_docs([doc_id])
@@ -1909,7 +1900,7 @@ class BinaryVectorDB:
         the audit is persisted as ``_audit/v<version>.json`` keyed to the
         CURRENT manifest version — an audit describes a snapshot, so the
         version key gives exact attribution, re-auditing a version
-        overwrites its file (atomic tmp+replace), and ``audit_history()``
+        overwrites its file (durable tmp+replace), and ``audit_history()``
         returns the trail.  Structural invariants are
         ``verify_integrity()``'s job; this is for DATA rules the engine
         can't know (domains, ranges, payload shape)."""
@@ -1926,10 +1917,8 @@ class BinaryVectorDB:
             v = self._manifest_version() or 0
             d = os.path.join(self.folder, "_audit")
             os.makedirs(d, exist_ok=True)
-            tmp = os.path.join(d, f".v{v}.json.tmp")
-            with open(tmp, "w") as f:
-                json.dump({"version": v, "checks": out}, f)
-            os.replace(tmp, os.path.join(d, f"v{v}.json"))
+            write_json(os.path.join(d, f"v{v}.json"),
+                       {"version": v, "checks": out})
         return out
 
     def audit_history(self) -> list[dict]:
@@ -1954,14 +1943,16 @@ class BinaryVectorDB:
                         version: int | None = None) -> None:
         """Clone ONE committed version into a standalone folder that opens
         as an independent DB (backup / environment promotion): the
-        version's manifest-listed data files plus `_meta.json`, re-rooted
-        under a fresh v1 manifest.  Staged into `<dest>.tmp` and renamed,
-        so a crashed export never leaves a half-clone at `dest`.
+        version's manifest-listed data files, its IVF model dir and
+        `_meta.json`, re-rooted under a fresh v1 manifest that carries the
+        version's docs_schema, stats and ivf entries.  Staged into
+        `<dest>.tmp` and renamed, so a crashed export never leaves a
+        half-clone at `dest`.
 
         Mutating the clone cannot touch the source (file copies, separate
-        txn log).  Derived state (text index, stats sidecars, serving
-        exports) is NOT copied — each rebuilds from the data tier on
-        demand, and copying it would just widen the consistency surface.
+        txn log).  The side indexes (text and gate index) and serving
+        exports are NOT copied — each rebuilds from the data tier on
+        demand, and copying them would just widen the consistency surface.
         History is not copied either: a clone starts at version 1 (use
         `version=` to pick WHICH snapshot becomes the clone's v1).
 
@@ -1969,11 +1960,11 @@ class BinaryVectorDB:
         single-node layout; on an object store the same structure is a
         server-side copy per manifest-listed key — still O(data), no
         Spark job, no read-repair."""
-        import shutil
-
         self._flush_pending()
-        tables = (self._tables_at(version) if version is not None
-                  else self._current_tables())
+        m = (self._manifest_at(version) if version is not None
+             else self._head())
+        tables = self._current_tables() if m is None else m["tables"]
+        ent = self._entries(m)
         if not tables:
             raise ValueError("nothing to export: DB has no committed data")
         if os.path.exists(dest):
@@ -1984,6 +1975,9 @@ class BinaryVectorDB:
         os.makedirs(tmp)
         shutil.copy(os.path.join(self.folder, _META),
                     os.path.join(tmp, _META))
+        if ent["ivf"]:
+            shutil.copytree(self._path(ent["ivf"]["model"]),
+                            os.path.join(tmp, ent["ivf"]["model"]))
         for name, bmap in tables.items():
             for key, files in bmap.items():
                 rel = self._key_reldir(key)
@@ -1994,7 +1988,7 @@ class BinaryVectorDB:
                     shutil.copy(os.path.join(src_dir, fn),
                                 os.path.join(dst_dir, fn))
         commit_version(os.path.join(tmp, self._LOG), 1,
-                       {"version": 1, "tables": tables})
+                       {"version": 1, "tables": tables, "side": {}, **ent})
         os.rename(tmp, dest)
 
     def diff_versions(self, v_old: int,
@@ -2104,29 +2098,6 @@ class BinaryVectorDB:
         return 0 if idx is None else idx.count()
 
     # -- search (§2.5) ------------------------------------------------------
-    def _cached_index(self) -> DataFrame | None:
-        """RAM tier: the packed binary index is cached on first search
-        (README.md:68 'binary embeddings are loaded in memory').
-
-        No DataFrame handle is held across calls — a held plan snapshots the
-        file listing and throws FileNotFound after another instance swaps the
-        directory.  Re-reading per search costs only a plan lookup: Spark's
-        cache manager dedupes equivalent parquet-scan plans, and
-        _commit's refreshByPath is the single invalidation point."""
-        idx, _, _ = self._serving_handles()
-        return idx
-
-    def _cached_docs(self) -> DataFrame | None:
-        """RAM tier for the rescore side: Phases II/III join the doc store
-        (int8 embeddings + payloads) per search; without caching, every
-        query re-scans the documents parquet — 18x slower than the cached
-        index scan on a 1M corpus.  The reference keeps int8 on disk but
-        reads only the candidates by offset (a memmap point-read); columnar
-        Spark has no per-row offset read, so the RAM-tier equivalent is
-        caching the store alongside the index."""
-        _, docs, _ = self._serving_handles()
-        return docs
-
     def _serving_handles(self) -> tuple[DataFrame | None, DataFrame | None,
                                         bool]:
         """(index_df, docs_df, index_nonempty) for the serving paths,

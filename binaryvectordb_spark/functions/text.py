@@ -25,10 +25,6 @@ def tokens(col: str) -> Column:
     return F.split(F.col(col), " ")
 
 
-def distinct_tokens(col: str) -> Column:
-    return F.array_distinct(F.split(F.col(col), " "))
-
-
 def shingles(tokens_col: str, k: int = 3) -> Column:
     """k-word shingles; empty array when the doc has fewer than k tokens.
     (sequence() would run DESCENDING for start>stop — hence the guard.)"""

@@ -391,9 +391,6 @@ class GateIndex(SegmentStore):
     def live_shingles(self, prune_ids=None) -> DataFrame:
         return self._live_run("shingles", 0, prune_ids)
 
-    def live_bands(self) -> DataFrame:
-        return self._live_run("bands")
-
     # -- serve ----------------------------------------------------------
 
     def gate(self, batch: DataFrame, *,

@@ -89,6 +89,26 @@ def read_version(log_dir: str, version: int) -> dict:
         return json.load(f)
 
 
+def _tmp_of(path: str) -> str:
+    # pid-suffixed: two processes never interleave writes into one tmp
+    return f"{path}.tmp{os.getpid()}"
+
+
+def _write_synced(tmp: str, body: dict) -> None:
+    with open(tmp, "w") as f:
+        json.dump(body, f)
+        f.flush()
+        os.fsync(f.fileno())
+
+
+def _fsync_dir(path: str) -> None:
+    dfd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
+
+
 def commit_version(log_dir: str, version: int, body: dict) -> None:
     """Make ``body`` version ``version`` of ``log_dir``, durably: fsynced
     tmp file, ``link(2)`` (unlike ``rename(2)`` it fails on an existing
@@ -96,20 +116,28 @@ def commit_version(log_dir: str, version: int, body: dict) -> None:
     the winner), fsynced directory."""
     os.makedirs(log_dir, exist_ok=True)
     final = os.path.join(log_dir, f"v{int(version):010d}.json")
-    tmp = final + f".tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(body, f)
-        f.flush()
-        os.fsync(f.fileno())
+    tmp = _tmp_of(final)
+    _write_synced(tmp, body)
     try:
         os.link(tmp, final)  # atomic create-if-absent: the commit instant
     finally:
         os.unlink(tmp)
-    dfd = os.open(log_dir, os.O_RDONLY)
+    _fsync_dir(log_dir)
+
+
+def write_json(path: str, body: dict) -> None:
+    """Replace ``path`` with ``body``, durably: fsynced tmp file,
+    ``os.replace`` (the last writer wins atomically), fsynced directory.
+    For files one writer owns or that any writer may overwrite; a
+    versioned commit that must not overwrite uses ``commit_version``."""
+    tmp = _tmp_of(path)
     try:
-        os.fsync(dfd)
+        _write_synced(tmp, body)
+        os.replace(tmp, path)
     finally:
-        os.close(dfd)
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    _fsync_dir(os.path.dirname(path) or ".")
 
 
 def legacy_state(folder: str) -> dict | None:

@@ -127,16 +127,10 @@ class TextIndex(SegmentStore):
                     sum_dl=float(got["s"] or 0.0))
 
     @staticmethod
-    def _tokens(docs_df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-        # the SAME tokenizer as queries/hybrid.py _doc_tokens: split on ' '
-        return docs_df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.split(F.col(text_col), " ")).alias("token"))
-
-    @staticmethod
     def _tokens_pos(docs_df: DataFrame, id_col: str,
                     text_col: str) -> DataFrame:
-        """(doc_id, pos, token) with 1-based token positions."""
+        """(doc_id, pos, token) with 1-based token positions — the SAME
+        tokenizer as queries/hybrid.py _doc_tokens: split on ' '."""
         return docs_df.select(
             F.col(id_col).alias("doc_id"),
             F.posexplode(F.split(F.col(text_col), " "))

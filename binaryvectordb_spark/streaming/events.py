@@ -78,15 +78,6 @@ def tumbling_counts(events: DataFrame, width: str = "1 hour",
                     "n", "sum_value"))
 
 
-def sliding_counts(events: DataFrame, width: str = "1 hour",
-                   slide: str = "30 minutes",
-                   watermark: str = "10 minutes") -> DataFrame:
-    return (events.withWatermark("ts", watermark)
-            .groupBy(F.window("ts", width, slide).alias("win"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("win_start"), "n"))
-
-
 def session_stats(events: DataFrame, gap: str = "5 minutes",
                   watermark: str = "10 minutes") -> DataFrame:
     return (events.withWatermark("ts", watermark)
@@ -406,16 +397,16 @@ def _state_dir(meta: dict, key: str, out_dir: str) -> str:
 
 
 def _commit_meta(out_dir: str, meta: dict, keep: set[str]) -> None:
-    """Atomic meta swap + GC of superseded version dirs (every streaming
-    store here commits through it)."""
-    import json as _json
+    """Durable meta swap + GC of superseded version dirs (every streaming
+    store here commits through it).  The swap is fsynced: the Spark
+    checkpoint counts a batch done once its handler returns, and the
+    replay guard then never re-applies a batch a lost swap dropped."""
     import os as _os
     import shutil as _shutil
 
-    tmp = _os.path.join(out_dir, f"meta.json.tmp{_os.getpid()}")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(out_dir, "meta.json"))
+    from binaryvectordb_spark.operators.segments import write_json
+
+    write_json(_os.path.join(out_dir, "meta.json"), meta)
     for d in _os.listdir(out_dir):
         if "_v" in d and d not in keep and not d.startswith("meta.json"):
             _shutil.rmtree(_os.path.join(out_dir, d), ignore_errors=True)

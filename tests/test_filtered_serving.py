@@ -1,13 +1,11 @@
 """Filtered serving: metadata columns (add_batch_df meta_cols), commit-time
-table stats (_stats/v<N>.json sidecars), and the stats-fed adaptive filtered
-search — the serving path must run ZERO count jobs for dict filters because
-selectivity comes from the persisted frequency maps.
+table stats (the "stats" entry of each manifest _log/v<N>.json), and the
+stats-fed adaptive filtered search — the serving path must run ZERO count
+jobs for dict filters because selectivity comes from the persisted
+frequency maps.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 import numpy as np
 import pytest
@@ -30,12 +28,10 @@ def _mk_db(spark, path, n=120, dim=16):
     return db, emb
 
 
-def test_stats_sidecar_written_at_commit(spark, tmp_path):
+def test_stats_ride_the_commit_manifest(spark, tmp_path):
     db, _ = _mk_db(spark, tmp_path / "db")
-    p = db._stats_path(db._manifest_version())
-    assert os.path.isfile(p), "commit did not write the stats sidecar"
-    with open(p) as f:
-        st = json.load(f)
+    st = db._manifest_of(db._manifest_version())["stats"]
+    assert st is not None, "commit did not write the stats entry"
     assert st["n_rows"] == 120
     assert st["columns"]["lang"]["ndv"] == 3
     assert st["columns"]["lang"]["freq"] == {"en": 40, "de": 40, "fr": 40}
@@ -43,7 +39,7 @@ def test_stats_sidecar_written_at_commit(spark, tmp_path):
     # doc_id is tracked for NDV but never gets a freq map (NDV over cap)
     assert st["columns"]["doc_id"]["ndv"] == 120
     assert "freq" not in st["columns"]["doc_id"]
-    # estimation reads the sidecar, no jobs
+    # estimation reads the manifest, no jobs
     assert db._estimate_selectivity({"lang": "en"}) == pytest.approx(1 / 3)
     assert db._estimate_selectivity({"lang": ["en", "de"]}) == pytest.approx(2 / 3)
     assert db._estimate_selectivity({"lang": "xx"}) == 0.0
@@ -182,10 +178,11 @@ def test_filter_composes_with_ivf_probe(spark, tmp_path):
 def test_index_only_commit_carries_stats_forward(spark, tmp_path):
     db, _ = _mk_db(spark, tmp_path / "db", n=40)
     v0 = db._manifest_version()
-    assert os.path.isfile(db._stats_path(v0))
+    st0 = db._manifest_of(v0)["stats"]
+    assert st0 is not None
     db.build_ivf(n_clusters=2)  # index-only commit
     v1 = db._manifest_version()
     assert v1 == v0 + 1
-    with open(db._stats_path(v1)) as f:
-        st = json.load(f)
+    assert db._manifest_of(v1)["stats"] == st0
+    st = db.table_stats()
     assert st["version"] == v1 and st["n_rows"] == 40
