@@ -4,6 +4,7 @@ Maps the reference's stores (BinaryVectorDB/BinaryVectorDB.py):
   faiss index.bin (:58-62)   -> <folder>/index/    parquet (doc_id, vec ARRAY<BIGINT>)
   RocksDB docs dir (:64)     -> <folder>/documents parquet (doc_id, doc, emb_int8)
   config.json (:42-53)       -> <folder>/_meta.json {version, model, dim}
+                                (version: the on-disk layout, _LAYOUT)
 
 Mutation is delete-then-insert upsert exactly as :93-101, implemented as an
 anti-join + union over hash-bucketed storage: both tiers are laid out as
@@ -20,7 +21,8 @@ API: a deterministic local embedder stands in for the Cohere call (:109), and
 pre-embedded input takes the `_add_batch` path (:117-143).
 
 Error semantics mirrored (SURVEY §2.13): non-empty folder without config
-(:43-45), len mismatch (:78-79), non-int ids (:95-96), docs2text non-str
+(:43-45) — and, beyond the reference, a config naming another layout
+version — len mismatch (:78-79), non-int ids (:95-96), docs2text non-str
 (:88-89), delete of missing id (:159-160), search on empty index (:190-191).
 """
 
@@ -52,9 +54,7 @@ from binaryvectordb_spark.operators.local_serve import (
     rrf_fuse,
 )
 from binaryvectordb_spark.operators.segments import (
-    LEGACY_META,
     commit_version,
-    legacy_state,
     log_versions,
     read_version,
     sweep,
@@ -62,6 +62,9 @@ from binaryvectordb_spark.operators.segments import (
 )
 
 _META = "_meta.json"
+# _meta.json "version": the on-disk layout this code writes, and the only
+# one it opens (every earlier revision wrote "1.0")
+_LAYOUT = 2
 _UNSET = object()
 
 
@@ -177,14 +180,20 @@ class BinaryVectorDB:
         if os.path.exists(meta_path):
             with open(meta_path) as f:
                 meta = json.load(f)
+            if meta.get("version") != _LAYOUT:
+                raise ValueError(
+                    f"Folder {folder} holds a BinaryVectorDB in layout "
+                    f"version {meta.get('version')!r}; this engine opens "
+                    f"only layout {_LAYOUT}: re-ingest its documents into "
+                    "a new folder")
             self.dim = int(meta["dim"])
             self.model = meta["model"]
-            self.buckets = int(meta.get("buckets", buckets))
-            self.index_type = meta.get("index_type", "flat")
-            self.index_args = dict(meta.get("index_args", {}))
+            self.buckets = int(meta["buckets"])
+            self.index_type = meta["index_type"]
+            self.index_args = dict(meta["index_args"])
             if retain_versions is None:
-                self.retain_versions = int(meta.get("retain_versions", 0))
-            elif int(retain_versions) != int(meta.get("retain_versions", 0)):
+                self.retain_versions = int(meta["retain_versions"])
+            elif int(retain_versions) != int(meta["retain_versions"]):
                 meta["retain_versions"] = int(retain_versions)
                 write_json(meta_path, meta)
         elif os.listdir(folder):
@@ -194,7 +203,7 @@ class BinaryVectorDB:
         else:
             self.model = model
             write_json(meta_path, {
-                "version": "1.0", "model": model, "dim": dim,
+                "version": _LAYOUT, "model": model, "dim": dim,
                 "buckets": buckets, "index_type": index_type,
                 "index_args": self.index_args,
                 "retain_versions": self.retain_versions})
@@ -226,6 +235,10 @@ class BinaryVectorDB:
     # documents schema, the table stats and the IVF partitioner.  At 100 TB
     # the manifest also replaces object-store LIST calls with one small
     # JSON read per query.
+    # One layout: _meta.json's "version" (_LAYOUT) names it, and __init__
+    # refuses a folder that names another one before writing anything —
+    # a DB written by an earlier revision is re-ingested, not migrated.
+    # Before the first commit there is no manifest and the DB is empty.
     # Single-writer by design (as is the reference); manifests are tiny and
     # kept forever as an audit trail (`history()`), data files of superseded
     # versions are deleted at commit time.
@@ -240,57 +253,28 @@ class BinaryVectorDB:
         return os.path.join(self.folder, self._LOG)
 
     def _manifest_version(self) -> int | None:
-        """Latest committed version, or None when the DB predates the log
-        (legacy round-1 layout: directory listing is the source of truth)."""
+        """Latest committed version, or None before the first commit."""
         vs = log_versions(self._log_dir())
         return vs[-1] if vs else None
 
-    def _head(self) -> dict | None:
+    def _head(self) -> dict:
         return self._manifest_of(self._manifest_version())
 
-    def _manifest_tables(self) -> dict | None:
-        m = self._head()
-        return None if m is None else m["tables"]
+    def _manifest_tables(self) -> dict:
+        return self._head()["tables"]
 
-    def _manifest_of(self, version: int | None) -> dict | None:
-        """One committed manifest (None for version None: no log yet) —
-        no data-file existence check; reads use _manifest_at."""
+    def _manifest_of(self, version: int | None) -> dict:
+        """One committed manifest (for version None, the empty state
+        before the first commit) — no data-file existence check; reads
+        use _manifest_at."""
         if version is None:
-            return None
+            return {"version": 0, "tables": {}, "side": {},
+                    **dict.fromkeys(self._ENTRIES)}
         path = os.path.join(self._log_dir(), f"v{int(version):010d}.json")
         if not os.path.isfile(path):
             raise ValueError(f"no committed version {version} "
                              f"(latest is {self._manifest_version()})")
         return read_version(self._log_dir(), version)
-
-    def _adopt_tables(self) -> dict:
-        """First commit on a pre-log DB: reconstruct its current state from
-        directory listings so the new manifest keeps every live file.  A
-        legacy flat (unbucketed) table is recorded under the pseudo-bucket
-        key "_flat" (files at the table root); the next rewrite of that
-        table migrates it to bucketed layout and the key disappears."""
-        tables: dict = {}
-        for name in self._DATA_TABLES:
-            p = self._path(name)
-            if not os.path.isdir(p):
-                continue
-            bmap: dict = {}
-            flat = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
-            if flat:
-                bmap["_flat"] = flat
-            for d in sorted(os.listdir(p)):
-                if d.startswith("bucket=") and os.path.isdir(os.path.join(p, d)):
-                    fl = sorted(f for f in os.listdir(os.path.join(p, d))
-                                if f.endswith(".parquet"))
-                    if fl:
-                        bmap[d.split("=", 1)[1]] = fl
-            if bmap:
-                tables[name] = bmap
-        return tables
-
-    def _current_tables(self) -> dict:
-        t = self._manifest_tables()
-        return self._adopt_tables() if t is None else t
 
     def _commit(self, updates: dict[str, dict], expect=_UNSET) -> None:
         """THE atomic commit point: one manifest link makes every entry of
@@ -307,7 +291,7 @@ class BinaryVectorDB:
         the old manifest's file list must not serve stale blocks).
 
         Optimistic concurrency: `expect` is the manifest version the
-        mutation read its snapshot from (None for a fresh/pre-log DB).  If
+        mutation read its snapshot from (None before the first commit).  If
         another writer committed since, the merge was computed from stale
         data; abort with ConcurrentWriteError rather than lose its update.
         Both the base tables AND the target version number are pinned to the
@@ -328,11 +312,9 @@ class BinaryVectorDB:
             expect = self._manifest_version()
         base = self._manifest_of(expect)
         v = (expect or 0) + 1
-        body = {"version": v,
-                "tables": dict(self._adopt_tables() if base is None
-                               else base["tables"]),
-                "side": dict(self._side_of(base)),
-                **self._entries(base)}
+        body = {"version": v, "tables": dict(base["tables"]),
+                "side": dict(base["side"]),
+                **{k: base[k] for k in self._ENTRIES}}
         for name, entry in updates.items():
             if name in self._ENTRIES:
                 body[name] = entry
@@ -364,43 +346,22 @@ class BinaryVectorDB:
 
     # manifest entries beside tables and side (see the storage layout)
     _ENTRIES = ("docs_schema", "stats", "ivf")
-    # IVF model dirs are ivf_model_<uuid>; a legacy DB has one ivf_model/
+    # IVF model dirs are ivf_model_<uuid>
     _IVF_DIR = "ivf_model"
-
-    def _entries(self, manifest: dict | None) -> dict:
-        """{docs_schema, stats, ivf} of ``manifest``.  A manifest from
-        before they rode the log (or none: a pre-log DB) reads the fields
-        _meta.json kept and the one ``ivf_model/`` dir, with no stats; its
-        next commit writes them into the new manifest."""
-        if manifest is not None and "ivf" in manifest:
-            return {k: manifest[k] for k in self._ENTRIES}
-        with open(os.path.join(self.folder, _META)) as f:
-            meta = json.load(f)
-        ivf = None
-        if os.path.isdir(self._path(self._IVF_DIR)):
-            ivf = {"model": self._IVF_DIR,
-                   "built_version": meta.get("ivf_built_version"),
-                   "mutated_rows": int(meta.get("ivf_mutated_rows", 0))}
-        return {"docs_schema": meta.get("docs_schema"), "stats": None,
-                "ivf": ivf}
 
     def _gc(self, keep_last: int, respect_pins: bool = True) -> None:
         """Delete every data file, side-index seg_*/tomb_* dir and IVF
-        model dir none of the latest `keep_last` manifests references
-        (and the `_stats/` dir of a DB from before stats rode the
-        manifest, which nothing reads): those of versions
-        that aged out of retention, and strays from crashed or aborted
-        commit attempts.  Safe under the single-writer assumption —
+        model dir none of the latest `keep_last` manifests references:
+        those of versions that aged out of retention, and strays from
+        crashed or aborted commit attempts.  Safe under the single-writer assumption —
         nothing unreferenced can be mid-read by a committed reader.
         Versions this handle time-traveled to are pinned for the session:
         commit-time GC keeps their files even past the retention window
         (versioned DataFrames are lazy and may execute after a later
         commit); an explicit vacuum() overrides the pins."""
         log = self._log_dir()
-        # a pre-log DB's state is its directory listing: keep all of it
-        retained = ([read_version(log, v)
-                     for v in log_versions(log)[-max(1, keep_last):]]
-                    or [{"tables": self._adopt_tables()}])
+        retained = [read_version(log, v)
+                    for v in log_versions(log)[-max(1, keep_last):]]
         if respect_pins:
             for pv in sorted(self._read_pinned):
                 try:
@@ -432,27 +393,22 @@ class BinaryVectorDB:
                         os.rmdir(full)
             if not os.listdir(p):
                 os.rmdir(p)
-        # side-index dirs; a retained legacy manifest keeps meta.json
         for name in self._SIDE_DIRS:
             p = self._path(name)
             if not os.path.isdir(p):
                 continue
             kset = set()
             for m in retained:
-                st = self._side_of(m).get(name)
+                st = m["side"].get(name)
                 if st is not None:
                     kset.update(st["segments"] + st["tombstones"])
-                if "side" not in m:
-                    kset.add(LEGACY_META)
             sweep(p, kset)
             if not os.listdir(p):
                 os.rmdir(p)
-        models = {ivf["model"] for m in retained
-                  if (ivf := self._entries(m)["ivf"]) is not None}
+        models = {m["ivf"]["model"] for m in retained if m["ivf"] is not None}
         for d in os.listdir(self.folder):
             if d.startswith(self._IVF_DIR) and d not in models:
                 shutil.rmtree(self._path(d), ignore_errors=True)
-        shutil.rmtree(self._path("_stats"), ignore_errors=True)
 
     def vacuum(self, keep_last: int = 1) -> None:
         """One-shot GC to the latest `keep_last` versions' files (Delta
@@ -487,25 +443,7 @@ class BinaryVectorDB:
                 for m in (read_version(d, v) for v in log_versions(d))]
 
     def _exists(self, name: str) -> bool:
-        if name in self._DATA_TABLES:
-            t = self._manifest_tables()
-            if t is not None:
-                return bool(t.get(name))
-        # legacy pre-log tables
-        return os.path.isdir(self._path(name))
-
-    def _bucket_dirs(self, name: str) -> list[str]:
-        p = self._path(name)
-        if not os.path.isdir(p):
-            return []
-        return sorted(d for d in os.listdir(p) if d.startswith("bucket="))
-
-    def _is_bucketed(self, name: str) -> bool:
-        t = self._manifest_tables()
-        if t is not None:
-            bmap = t.get(name)
-            return bool(bmap) and "_flat" not in bmap
-        return bool(self._bucket_dirs(name))
+        return bool(self._manifest_tables().get(name))
 
     def _with_bucket(self, df: DataFrame) -> DataFrame:
         return df.withColumn(
@@ -521,10 +459,8 @@ class BinaryVectorDB:
 
     @staticmethod
     def _key_reldir(key: str) -> str:
-        """Manifest bucket key -> directory path relative to the table root
-        ('' for the legacy flat pseudo-key)."""
-        if key == "_flat":
-            return ""
+        """Manifest bucket key -> directory path relative to the table
+        root."""
         if "/" in key:
             c, b = key.split("/", 1)
             return os.path.join(f"cluster={c}", f"bucket={b}")
@@ -540,7 +476,7 @@ class BinaryVectorDB:
         return key.rsplit("/", 1)[-1]
 
     def _files_df(self, name: str, bmap: dict,
-                  manifest: dict | None) -> DataFrame | None:
+                  manifest: dict) -> DataFrame | None:
         """Build the reader for a table entry ``bmap`` of ``manifest``:
         explicit file list, with basePath so the partition columns
         (bucket; cluster+bucket for an IVF-partitioned index) still prune.
@@ -551,37 +487,20 @@ class BinaryVectorDB:
         alternative to a mergeSchema footer scan over every file."""
         p = self._path(name)
         reader = self.spark.read
-        if name == "documents":
-            sch = self._entries(manifest)["docs_schema"]
-            if sch:
-                from pyspark.sql.types import StructType
-                reader = reader.schema(StructType.fromJson(json.loads(sch)))
-        if "_flat" in bmap:
-            files = [os.path.join(p, f) for f in bmap["_flat"]]
-            df = reader.parquet(*files)
-        else:
-            files = [os.path.join(p, self._key_reldir(b), f)
-                     for b in sorted(bmap, key=self._key_sort)
-                     for f in bmap[b]]
-            if not files:
-                return None
-            df = reader.option("basePath", p).parquet(*files)
-        if "bucket" in df.columns:
-            df = df.drop("bucket")
-        if name == "documents" and "doc_kind" in df.columns:
-            # files from before doc_kind existed read as null under the
-            # explicit schema — preserve the merge-time 'str' backfill
-            df = df.withColumn("doc_kind",
-                               F.coalesce(F.col("doc_kind"), F.lit("str")))
-        return df
+        if name == "documents" and manifest["docs_schema"]:
+            from pyspark.sql.types import StructType
+            reader = reader.schema(StructType.fromJson(
+                json.loads(manifest["docs_schema"])))
+        files = [os.path.join(p, self._key_reldir(b), f)
+                 for b in sorted(bmap, key=self._key_sort)
+                 for f in bmap[b]]
+        if not files:
+            return None
+        df = reader.option("basePath", p).parquet(*files)
+        return df.drop("bucket") if "bucket" in df.columns else df
 
     def _read_df(self, name: str) -> DataFrame | None:
         m = self._head()
-        if m is None:  # legacy pre-log DB: directory listing is the truth
-            if not os.path.isdir(self._path(name)):
-                return None
-            df = self.spark.read.parquet(self._path(name))
-            return df.drop("bucket") if "bucket" in df.columns else df
         bmap = m["tables"].get(name)
         return self._files_df(name, bmap, m) if bmap else None
 
@@ -686,7 +605,7 @@ class BinaryVectorDB:
         v = self._manifest_version()
         if v is None:
             return None
-        st = self._entries(self._manifest_of(v))["stats"]
+        st = self._manifest_of(v)["stats"]
         if st is not None and not refresh:
             return {"version": v, **st}
         if refresh or self._stats_mem is None or self._stats_mem[0] != v:
@@ -732,21 +651,19 @@ class BinaryVectorDB:
         restored files are referenced by the new head, so they survive
         subsequent GC regardless of age.  The side indexes, the docs
         schema and the IVF partitioner (its model dir and drift counter)
-        come back as they were at `version` (no side indexes for a
-        manifest older than side state); the dirs they name must still be
-        on disk too."""
+        come back as they were at `version`; the dirs they name must
+        still be on disk too."""
         self._flush_pending()
         expect = self._manifest_version()
         m = self._manifest_at(version)  # validates existence + files
-        side = m.get("side") or {}
-        ent = self._entries(m)
+        side = m["side"]
         # a side-index or IVF commit leaves the data files alone, so v's
         # data can outlive the dirs its side and ivf entries name
         gone = [f"{n}/{d}" for n, st in side.items()
                 for d in st["segments"] + st["tombstones"]
                 if not os.path.isdir(os.path.join(self._path(n), d))]
-        if ent["ivf"] and not os.path.isdir(self._path(ent["ivf"]["model"])):
-            gone.append(ent["ivf"]["model"])
+        if m["ivf"] and not os.path.isdir(self._path(m["ivf"]["model"])):
+            gone.append(m["ivf"]["model"])
         if gone:
             raise ValueError(f"version {version} has been vacuumed (dir "
                              f"{gone[0]} is gone); only versions "
@@ -754,28 +671,17 @@ class BinaryVectorDB:
         self._commit({**{name: dict(m["tables"].get(name) or {})
                          for name in self._DATA_TABLES},
                       **{name: side.get(name) for name in self._SIDE_DIRS},
-                      "docs_schema": ent["docs_schema"], "ivf": ent["ivf"]},
+                      "docs_schema": m["docs_schema"], "ivf": m["ivf"]},
                      expect=expect)
 
     def _read_buckets(self, name: str, touched: list[int]) -> DataFrame | None:
         """Scan ONLY the touched buckets — the partial-rewrite read path.
         Returns None when none of them hold data yet."""
         m = self._head()
-        if m is not None:
-            bmap = m["tables"].get(name) or {}
-            if "_flat" in bmap:  # unbucketed legacy data: cannot prune
-                return self._read_df(name)
-            tset = {str(b) for b in touched}
-            sel = {k: fl for k, fl in bmap.items()
-                   if self._key_bucket(k) in tset and fl}
-            return self._files_df(name, sel, m) if sel else None
-        p = self._path(name)
-        dirs = [os.path.join(p, f"bucket={b}") for b in touched]
-        dirs = [d for d in dirs if os.path.isdir(d)]
-        if not dirs:
-            return None
-        return (self.spark.read.option("basePath", p).parquet(*dirs)
-                .drop("bucket"))
+        tset = {str(b) for b in touched}
+        sel = {k: fl for k, fl in (m["tables"].get(name) or {}).items()
+               if self._key_bucket(k) in tset and fl}
+        return self._files_df(name, sel, m) if sel else None
 
     def _stage(self, df: DataFrame, name: str, nparts: int,
                sort_cols: Sequence[str] = (),
@@ -839,8 +745,8 @@ class BinaryVectorDB:
         return out
 
     def _full_update(self, df: DataFrame, name: str) -> dict[str, list[str]]:
-        """Stage a full-table rewrite (initial load, flat-layout migration,
-        compact); the caller commits."""
+        """Stage a full-table rewrite (build_ivf, compact); the caller
+        commits."""
         return self._stage(df, name, self.buckets)
 
     def _bucket_update(self, df: DataFrame, name: str,
@@ -854,8 +760,7 @@ class BinaryVectorDB:
         "C'/K" entries (the bucket's rows, wherever they now cluster) take
         their place."""
         staged = self._stage(df, name, len(touched))
-        out = dict(self._current_tables().get(name) or {})
-        out.pop("_flat", None)  # only reachable when table was bucketed
+        out = dict(self._manifest_tables().get(name) or {})
         tset = {str(b) for b in touched}
         for k in list(out):
             if self._key_bucket(k) in tset:
@@ -896,7 +801,7 @@ class BinaryVectorDB:
         """(KMeansModel, centers matrix) of the partitioner the head
         version names, or None before the first build_ivf.  Memoized on
         the model dir, which no build reuses."""
-        ivf = self._entries(self._head())["ivf"]
+        ivf = self._head()["ivf"]
         if ivf is None:
             return None
         if self._ivf_cache is None or self._ivf_cache[0] != ivf["model"]:
@@ -1008,7 +913,7 @@ class BinaryVectorDB:
     def _ivf_churn(self, expect: int | None, n_rows: int) -> dict:
         """The ``ivf`` update of a mutation of ``n_rows`` rows planned
         against version ``expect`` ({} unless it is a built IVF DB)."""
-        ivf = (self._entries(self._manifest_of(expect))["ivf"]
+        ivf = (self._manifest_of(expect)["ivf"]
                if self.index_type == "ivf" else None)
         if ivf is None:
             return {}
@@ -1039,7 +944,7 @@ class BinaryVectorDB:
           drift_threshold (default 0.3).  build_ivf() resets the counter.
         """
         self._flush_pending()
-        ivf = self._entries(self._head())["ivf"]
+        ivf = self._head()["ivf"]
         if self.index_type != "ivf" or ivf is None:
             raise ValueError("ivf_drift() requires a built index_type='ivf' DB")
         mutated = int(ivf["mutated_rows"])
@@ -1169,31 +1074,23 @@ class BinaryVectorDB:
         return F.broadcast(keys)
 
     def _merge_and_swap(self, new_index: DataFrame, new_docs: DataFrame,
-                        keys: DataFrame,
-                        touched: list[int] | None = None,
+                        keys: DataFrame, touched: list[int],
                         n_keys: int | None = None) -> None:
         """Delete-then-insert merge (:93-101) — the single upsert
-        implementation shared by every ingest path.  With `touched` bucket
-        ids and a bucketed table on disk, only those buckets are read,
-        anti-joined, and swapped; otherwise (initial load, or a pre-bucketing
-        flat layout that this merge migrates) both tiers are fully
-        rewritten."""
-        # doc_kind arrived after round 1: tables written before it get the
-        # column back-filled as 'str' at merge time, so unionByName aligns.
-        # User metadata columns (add_batch_df meta_cols) evolve the docs
-        # schema too — those union with allowMissingColumns (nulls for rows
-        # ingested before the column existed), and the union schema rides
-        # the commit as docs_schema so readers apply ONE explicit schema
-        # across mixed-schema buckets (no mergeSchema footer storm at
-        # scale; parquet fills absent columns with null).
-        def _align(df: DataFrame) -> DataFrame:
-            return (df if "doc_kind" in df.columns
-                    else df.withColumn("doc_kind", F.lit("str")))
+        implementation shared by every ingest path.  Only the `touched`
+        buckets are read, anti-joined, and swapped (a first load reads
+        nothing and stages the batch).
 
+        User metadata columns (add_batch_df meta_cols) evolve the docs
+        schema — those union with allowMissingColumns (nulls for rows
+        ingested before the column existed), and the union of the base
+        version's docs_schema and the merged batch's schema rides the
+        commit, so readers apply ONE explicit schema across mixed-schema
+        buckets (no mergeSchema footer storm at scale; parquet fills
+        absent columns with null)."""
         # OCC snapshot: the version every read below is planned against;
         # _commit aborts if another writer lands in between (lost update)
         expect = self._manifest_version()
-        new_docs = _align(new_docs)
         # the batch alone, pre-merge, for the side-index staging —
         # MATERIALIZED once: the side indexes read it several times
         # (segment, tombstone, maintenance), and re-evaluating a
@@ -1216,40 +1113,25 @@ class BinaryVectorDB:
                                                 1)).alias("n_other"))
                         .localCheckpoint(eager=True))
             incoming_counts = obs.get
-        if (touched is not None and self._is_bucketed("index")
-                and self._is_bucketed("documents")):
-            surv_index = self._read_buckets("index", touched)
-            surv_docs = self._read_buckets("documents", touched)
-            kside = self._keys_side(keys, n_keys)
-            if surv_index is not None:
-                new_index = (surv_index
-                             .join(kside, "doc_id", "left_anti")
-                             .unionByName(new_index))
-            if surv_docs is not None:
-                new_docs = (_align(surv_docs)
-                            .join(kside, "doc_id", "left_anti")
-                            .unionByName(new_docs, allowMissingColumns=True))
-            # both tiers and the side indexes staged first, then ONE
-            # manifest commit: the upsert is atomic across index, documents
-            # (and all their buckets), their schema and stats, and every
-            # derived index
-            updates = {
-                "index": self._bucket_update(new_index, "index", touched),
-                "documents": self._bucket_update(new_docs, "documents",
-                                                 touched)}
-        else:
-            old_index, old_docs = self.index_df(), self.docs_df()
-            if old_index is not None:
-                kside = self._keys_side(keys, n_keys)
-                new_index = (old_index.join(kside, "doc_id", "left_anti")
-                             .unionByName(new_index))
-                new_docs = (_align(old_docs)
-                            .join(kside, "doc_id", "left_anti")
-                            .unionByName(new_docs, allowMissingColumns=True))
-            updates = {
-                "index": self._full_update(new_index, "index"),
-                "documents": self._full_update(new_docs, "documents")}
-        updates["docs_schema"] = new_docs.schema.json()
+        surv_index = self._read_buckets("index", touched)
+        surv_docs = self._read_buckets("documents", touched)
+        kside = self._keys_side(keys, n_keys)
+        if surv_index is not None:
+            new_index = (surv_index
+                         .join(kside, "doc_id", "left_anti")
+                         .unionByName(new_index))
+        if surv_docs is not None:
+            new_docs = (surv_docs
+                        .join(kside, "doc_id", "left_anti")
+                        .unionByName(new_docs, allowMissingColumns=True))
+        # both tiers and the side indexes staged first, then ONE manifest
+        # commit: the upsert is atomic across index, documents (and all
+        # their buckets), their schema and stats, and every derived index
+        updates = {
+            "index": self._bucket_update(new_index, "index", touched),
+            "documents": self._bucket_update(new_docs, "documents", touched),
+            "docs_schema": self._docs_schema(
+                self._manifest_of(expect)["docs_schema"], new_docs.schema)}
         updates.update(self._after_upsert(sides, incoming, incoming_counts))
         updates.update(self._ivf_churn(expect, int(n_keys or 0)))
         self._commit(updates, expect=expect)
@@ -1260,6 +1142,22 @@ class BinaryVectorDB:
             self._maybe_rebuild_ivf(updates["ivf"]["mutated_rows"])
         elif self.index_type == "ivf":
             self.build_ivf()
+
+    @staticmethod
+    def _docs_schema(base: str | None, merged) -> str:
+        """The docs_schema to commit: the base version's columns first (a
+        batch that touches only empty buckets must not drop a metadata
+        column the other buckets hold), then the columns the merge adds.
+        A column of both takes the merged frame's field."""
+        if not base:
+            return merged.json()
+        from pyspark.sql.types import StructType
+        old = StructType.fromJson(json.loads(base))
+        have = {f.name: f for f in merged.fields}
+        return StructType(
+            [have.get(f.name, f) for f in old.fields]
+            + [f for f in merged.fields if f.name not in old.fieldNames()]
+        ).json()
 
     def _enqueue(self, doc_ids: list[int], docs: list[str], kinds: list[str],
                  emb: np.ndarray, save: bool) -> None:
@@ -1406,8 +1304,8 @@ class BinaryVectorDB:
 
     def remove_docs(self, doc_ids: Sequence[int]) -> None:
         """Batched delete (reference deletes one id + full rewrite, :155-166).
-        On bucketed storage only the buckets holding the deleted ids are
-        read (for the missing-id check) and rewritten."""
+        Only the buckets holding the deleted ids are read (for the
+        missing-id check) and rewritten."""
         self._flush_pending()
         if not self._exists("index"):
             raise ValueError("empty DB")
@@ -1416,33 +1314,20 @@ class BinaryVectorDB:
         expect = self._manifest_version()  # OCC snapshot
         keys = self.spark.createDataFrame([(int(i),) for i in doc_ids],
                                           "doc_id: long")
-        if self._is_bucketed("index") and self._is_bucketed("documents"):
-            touched = self._touched_buckets(doc_ids)
-            scope_idx = self._read_buckets("index", touched)
-            missing = (keys.count() if scope_idx is None else
-                       keys.join(scope_idx, "doc_id", "left_anti").count())
-            if missing:
-                raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
-            updates = {
-                "index": self._bucket_update(
-                    scope_idx.join(F.broadcast(keys), "doc_id", "left_anti"),
-                    "index", touched),
-                "documents": self._bucket_update(
-                    self._read_buckets("documents", touched)
-                    .join(F.broadcast(keys), "doc_id", "left_anti"),
-                    "documents", touched)}
-        else:
-            idx = self.index_df()
-            missing = keys.join(idx, "doc_id", "left_anti").count()
-            if missing:
-                raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
-            updates = {
-                "index": self._full_update(
-                    idx.join(F.broadcast(keys), "doc_id", "left_anti"),
-                    "index"),
-                "documents": self._full_update(
-                    self.docs_df().join(F.broadcast(keys), "doc_id",
-                                        "left_anti"), "documents")}
+        touched = self._touched_buckets(doc_ids)
+        scope_idx = self._read_buckets("index", touched)
+        missing = (keys.count() if scope_idx is None else
+                   keys.join(scope_idx, "doc_id", "left_anti").count())
+        if missing:
+            raise ValueError(f"{missing} doc_id(s) not in index")  # :159-160
+        updates = {
+            "index": self._bucket_update(
+                scope_idx.join(F.broadcast(keys), "doc_id", "left_anti"),
+                "index", touched),
+            "documents": self._bucket_update(
+                self._read_buckets("documents", touched)
+                .join(F.broadcast(keys), "doc_id", "left_anti"),
+                "documents", touched)}
         updates.update(self._after_remove(self._side_writers(expect),
                                           doc_ids))
         updates.update(self._ivf_churn(expect, len(doc_ids)))
@@ -1472,12 +1357,9 @@ class BinaryVectorDB:
         self._flush_pending()
         if not doc_ids or not self._exists("documents"):
             return {}
-        docs = (self._read_buckets("documents", self._touched_buckets(doc_ids))
-                if self._is_bucketed("documents") else self.docs_df())
+        docs = self._read_buckets("documents", self._touched_buckets(doc_ids))
         if docs is None:
             return {}
-        cols = ["doc_id", "doc"] + (["doc_kind"] if "doc_kind" in docs.columns
-                                    else [])
         ids = sorted({int(i) for i in doc_ids})
         if len(ids) <= self._GET_ISIN_MAX:
             pruned = docs.where(F.col("doc_id").isin(ids))
@@ -1485,10 +1367,8 @@ class BinaryVectorDB:
             keys = self.spark.createDataFrame([(i,) for i in ids],
                                               "doc_id: long")
             pruned = docs.join(F.broadcast(keys), "doc_id", "left_semi")
-        rows = pruned.select(*cols).collect()
-        return {r["doc_id"]: self.decode_payload(r["doc"],
-                                                 r["doc_kind"] if "doc_kind" in cols
-                                                 else "str")
+        rows = pruned.select("doc_id", "doc", "doc_kind").collect()
+        return {r["doc_id"]: self.decode_payload(r["doc"], r["doc_kind"])
                 for r in rows}
 
     def get_doc(self, doc_id: int):
@@ -1506,9 +1386,9 @@ class BinaryVectorDB:
         millions of tiny parquet files (the classic streaming-sink
         pathology — the reference's full-index rewrite per save, :165-172,
         is the same cost paid EVERY time).  Rewrites both tiers into one
-        file per bucket (also migrates a pre-bucketing flat layout).  On
-        Delta this would be OPTIMIZE.  `target_partitions` is accepted for
-        API compatibility; the bucketed layout fixes file count = buckets."""
+        file per bucket.  On Delta this would be OPTIMIZE.
+        `target_partitions` is accepted for API compatibility; the
+        bucketed layout fixes file count = buckets."""
         del target_partitions  # layout now pins files-per-table to buckets
         self._flush_pending()
         expect = self._manifest_version()  # OCC snapshot
@@ -1578,8 +1458,7 @@ class BinaryVectorDB:
     # data as one more entry of the same atomic commit): mutations stage
     # the indexes' new dirs before _commit, one link(2) publishes data and
     # indexes, restore(v) brings back v's indexes, and _gc is the only
-    # deleter of their dirs.  A legacy side dir (its own meta.json) is
-    # adopted by the first commit.
+    # deleter of their dirs.
 
     _TEXT_INDEX_DIR = "text_index"
     _GATE_INDEX_DIR = "gate_index"
@@ -1588,14 +1467,6 @@ class BinaryVectorDB:
     # (one micro-batch = one segment) or tombstone files (unbounded
     # growth makes the query-side union and the tombstone anti-join creep)
     _COMPACT_SEGMENTS = 16
-
-    def _side_of(self, manifest: dict | None) -> dict:
-        """{name: state} a manifest records; the legacy meta.json files
-        for a manifest from before side state rode it (or none)."""
-        if manifest is not None and "side" in manifest:
-            return manifest["side"]
-        return {name: st for name in self._SIDE_DIRS
-                if (st := legacy_state(self._path(name))) is not None}
 
     def _side_handle(self, name: str, state: dict):
         """A DB-owned handle on side index ``name`` (writes stage)."""
@@ -1607,7 +1478,7 @@ class BinaryVectorDB:
 
     def _side_writers(self, version: int | None) -> dict:
         """{name: fresh handle} on the side indexes of ``version``."""
-        sides = self._side_of(self._manifest_of(version))
+        sides = self._manifest_of(version)["side"]
         return {n: self._side_handle(n, sides[n])
                 for n in self._SIDE_DIRS if n in sides}
 
@@ -1634,9 +1505,8 @@ class BinaryVectorDB:
         docs = self.docs_df()
         if docs is None:
             raise Exception("Index is empty; add documents first")
-        if "doc_kind" in docs.columns:
-            docs = docs.where(F.col("doc_kind") == "str")
-        return docs.select("doc_id", F.col("doc").alias("text"))
+        return (docs.where(F.col("doc_kind") == "str")
+                .select("doc_id", F.col("doc").alias("text")))
 
     def build_text_index(self) -> None:
         """(Re)build the lexical index from the current doc store, in one
@@ -1711,9 +1581,7 @@ class BinaryVectorDB:
         - TOMBSTONE rows (dead data in segments): row-budget VACUUM —
           full compact() only once TRUE dead rows (existence-filtered
           tombstones) reach ~half the stored rows, i.e. amortized O(1)
-          rewrite per churned doc.  tomb_rows() is None only for a
-          <2-file legacy pile (any fold stats it), which is trivially
-          bounded."""
+          rewrite per churned doc."""
         ran_tail = False
         if len(ix.meta["segments"]) >= cls._COMPACT_SEGMENTS:
             ix.compact_tail()
@@ -1726,8 +1594,7 @@ class BinaryVectorDB:
         if (not ran_tail
                 and len(ix.meta["tombstones"]) >= cls._COMPACT_SEGMENTS):
             ix.compact_tail()  # remove-heavy stream: fold files only
-        tr = ix.tomb_rows()
-        if tr is not None and 2 * tr >= max(1, ix.seg_rows()):
+        if 2 * ix.tomb_rows() >= max(1, ix.seg_rows()):
             ix.compact()
 
     def search_text(self, terms: Sequence[str], k: int = DEFAULT_K
@@ -1963,8 +1830,8 @@ class BinaryVectorDB:
         self._flush_pending()
         m = (self._manifest_at(version) if version is not None
              else self._head())
-        tables = self._current_tables() if m is None else m["tables"]
-        ent = self._entries(m)
+        tables = m["tables"]
+        ent = {k: m[k] for k in self._ENTRIES}
         if not tables:
             raise ValueError("nothing to export: DB has no committed data")
         if os.path.exists(dest):

@@ -275,10 +275,11 @@ class GateIndex(SegmentStore):
         seg_<n>/shingles/  (doc_id, shs)       range-sorted by doc_id
         seg_<n>/bands/     (doc_id, band_idx, bh)  range-sorted by bh
         tomb_<n>/          (doc_id, upto_seg)  deletes/replacements
-    The state {segments, tombstones, tomb_upto, ...} naming the live dirs
-    is an entry of the DB manifest for the DB's gate (committed with the
-    data it derives from; the DB's ``_gc`` deletes dirs no retained
-    manifest names), ``_log/v<n>.json`` for a standalone one.
+    The state {fmt, segments, tombstones, tomb_upto, ...} naming the live
+    dirs is an entry of the DB manifest for the DB's gate (committed with
+    the data it derives from; the DB's ``_gc`` deletes dirs no retained
+    manifest names), ``_log/v<n>.json`` for a standalone one (opened only
+    in the current ``fmt``, see operators/segments.py).
 
     - Segments, tombstones, state commits and compaction are the segment
       store shared with TextIndex (operators/segments.py): a batch of
@@ -311,21 +312,9 @@ class GateIndex(SegmentStore):
     # the existence probe reads the doc_id-sorted shingle tables
     _PROBE = "shingles"
 
-    def _fresh_meta(self) -> dict:
-        return dict(super()._fresh_meta(), tomb_upto={}, tomb_stats={})
-
     @staticmethod
     def _seg_size(n: int) -> int:
         return int(n)
-
-    def _backfill(self, name: str, have: int | None) -> int | None:
-        """Doc count of a legacy segment lacking a stats entry (None when
-        it has one)."""
-        if have is not None:
-            return None
-        return int(self.spark.read.schema(self._SCHEMAS["shingles"])
-                   .parquet(os.path.join(self.folder, name, "shingles"))
-                   .count())
 
     def _write_tables(self, name: str, shingles: DataFrame,
                       bands) -> int:

@@ -6,8 +6,8 @@ indexes here keep their state the same way — immutable parquet segments
 plus scoped tombstones, named by one small state dict — and this module
 holds every part of that store they share, once:
 
-    state                {segments, tombstones, seg_stats, tomb_upto,
-                          tomb_stats, ...}   names the live dirs
+    state                {fmt, segments, tombstones, seg_stats,
+                          tomb_upto, tomb_stats, ...}   names the live dirs
     <folder>/seg_<n>/    one segment (its tables are index-specific)
     <folder>/tomb_<n>/   (doc_id, upto_seg)    kills doc_id in every
                                                segment up to ordinal
@@ -18,6 +18,14 @@ only stages it, the DB's commit publishes it with the data it derives
 from, and the DB's ``_gc`` deletes unnamed dirs.  A standalone store logs
 its state under ``<folder>/_log`` through the same ``commit_version`` and
 sweeps the dirs it stops naming.  Dir names are never reused.
+
+One layout: the state's ``fmt`` names the layout a store was written in
+(``_FMT``; every segment has a ``seg_stats`` entry, every tombstone a
+``tomb_stats`` row count and a ``tomb_upto`` scope).  A standalone store
+opens only a log whose head carries the current ``fmt``, or a folder no
+version was committed to; anything else is refused before anything is
+written — re-ingest it.  A DB-owned store is covered by the DB's own
+layout check.
 
 - ``upsert_batch``: a batch of new/updated docs is ONE new segment plus
   ONE existence-filtered tombstone scoped to every earlier segment, so an
@@ -34,7 +42,7 @@ A subclass says what a segment holds: ``_SCHEMAS`` (its tables' read
 schemas), ``_PROBE`` (the doc_id-sorted table the existence probe
 reads), ``_write_segment`` (a batch of (doc_id, text) rows -> one
 segment), ``_merge_run`` (the live rows of segments[lo:] -> one segment),
-``_seg_size``/``_backfill`` (its segment-stats entry) and ``build`` /
+``_seg_size`` (the doc count of its segment-stats entry) and ``build`` /
 ``compact`` (which end in ``_commit_single``).
 
 Existence probe (``_write_tombstone``), three tiers by batch-id
@@ -72,7 +80,6 @@ LITERAL_CAP = 10_000
 BULK_CAP = 100_000
 _TOMB_SCHEMA = "doc_id long, upto_seg int"
 LOG = "_log"
-LEGACY_META = "meta.json"  # a folder's state before it rode a log
 
 
 # -- the commit protocol ---------------------------------------------------
@@ -140,36 +147,23 @@ def write_json(path: str, body: dict) -> None:
     _fsync_dir(os.path.dirname(path) or ".")
 
 
-def legacy_state(folder: str) -> dict | None:
-    """The state a folder written before the log kept in ``meta.json``
-    (its write counter dropped), or None."""
-    p = os.path.join(folder, LEGACY_META)
-    if not os.path.isfile(p):
-        return None
-    with open(p) as f:
-        st = json.load(f)
-    st.pop("v", None)
-    return st
-
-
 def sweep(folder: str, keep: set[str]) -> None:
-    """Delete every seg_*/tomb_* dir (and a legacy meta.json) under
-    ``folder`` that ``keep`` does not name."""
+    """Delete every seg_*/tomb_* dir under ``folder`` that ``keep`` does
+    not name."""
     for entry in os.listdir(folder):
-        if entry in keep:
-            continue
-        if entry.startswith(("seg_", "tomb_")):
+        if entry not in keep and entry.startswith(("seg_", "tomb_")):
             shutil.rmtree(os.path.join(folder, entry), ignore_errors=True)
-        elif entry == LEGACY_META:
-            os.remove(os.path.join(folder, entry))
 
 
 class SegmentStore:
     """Open-or-create a segment store at ``folder`` (see the module
     docstring for what a subclass supplies).  ``state``: the DB manifest
     entry of a DB-owned store ({} when new); None: standalone, read from
-    ``<folder>/_log`` or else a legacy meta.json (adopted on commit)."""
+    the head of ``<folder>/_log`` (a fresh store when nothing was
+    committed), refused unless it is in the current layout."""
 
+    # the layout version a standalone store's state records as ``fmt``
+    _FMT = 1
     _SCHEMAS: dict[str, str] = {}
     _PROBE = ""
     # existence-probe tier caps (class attributes so tests can pin them)
@@ -191,17 +185,26 @@ class SegmentStore:
             vs = log_versions(self._log)
             self.version = vs[-1] if vs else None
             try:
-                state = (read_version(self._log, vs[-1])["state"] if vs
-                         else legacy_state(folder))
+                state = read_version(self._log, vs[-1])["state"] if vs else None
                 break
             except FileNotFoundError:
                 continue  # a writer pruned the head we listed: re-list
+        if self._log and not (
+                state.get("fmt") == self._FMT if state is not None
+                # nothing committed: only an unpublished write's dirs
+                else all(e == LOG or e.startswith(("seg_", "tomb_"))
+                         for e in os.listdir(folder))):
+            raise ValueError(
+                f"{folder} is not a {type(self).__name__} in layout "
+                f"fmt {self._FMT} (this engine opens no other layout); "
+                "re-ingest its documents into a new folder")
         self.meta = state or self._fresh_meta()
 
     # -- state ---------------------------------------------------------------
 
     def _fresh_meta(self) -> dict:
-        return {"segments": [], "tombstones": [], "seg_stats": {}}
+        return {"fmt": self._FMT, "segments": [], "tombstones": [],
+                "seg_stats": {}, "tomb_upto": {}, "tomb_stats": {}}
 
     def _commit(self) -> None:
         """Publish ``self.meta``: staged for the DB's commit when
@@ -282,7 +285,7 @@ class SegmentStore:
             seg_name = self._next_name("seg")
             st = self._write_segment(docs, seg_name)
             if self._seg_size(st):
-                self.meta.setdefault("seg_stats", {})[seg_name] = st
+                self.meta["seg_stats"][seg_name] = st
             else:
                 # empty batch (streaming sinks deliver them routinely):
                 # roll the staged segment back — the write-time stats
@@ -305,8 +308,8 @@ class SegmentStore:
             self.meta["tombstones"].append(tomb_name)
             # effective scope recorded in meta from birth, so compact_tail
             # can re-scope without rewriting the tombstone parquet
-            self.meta.setdefault("tomb_upto", {})[tomb_name] = upto
-            self.meta.setdefault("tomb_stats", {})[tomb_name] = n_tomb
+            self.meta["tomb_upto"][tomb_name] = upto
+            self.meta["tomb_stats"][tomb_name] = n_tomb
         self._commit()
 
     def _write_tombstone(self, dead: DataFrame, upto: int,
@@ -386,20 +389,7 @@ class SegmentStore:
         if len(segs) < 2:
             self._fold_tombstones()
             return
-        stats = dict(self.meta.get("seg_stats") or {})
-        backfilled = False
-        for s in segs:
-            # legacy pre-stats segment: one-time backfill, persisted — a
-            # default size of 0 would absorb a huge legacy bootstrap into
-            # the trailing run and degrade this tiered merge to a full
-            # compact()
-            got = self._backfill(s, stats.get(s))
-            if got is not None:
-                stats[s] = got
-                backfilled = True
-        if backfilled:
-            self.meta["seg_stats"] = stats
-            self._commit()
+        stats = self.meta["seg_stats"]
         sizes = [self._seg_size(stats[s]) for s in segs]
         i = len(segs) - 1
         acc = sizes[i]
@@ -419,18 +409,9 @@ class SegmentStore:
         if not self._seg_size(st):
             self._rm(name)
             name = None
-        over = dict(self.meta.get("tomb_upto") or {})
-        for t in self.meta["tombstones"]:
-            u = over.get(t)
-            if u is None:
-                # tombstone born before scopes were recorded in meta:
-                # read its written scope (one tiny job) — guessing a
-                # default could WIDEN a narrow tombstone after re-scoping
-                u = int(self.spark.read.schema(_TOMB_SCHEMA)
-                        .parquet(os.path.join(self.folder, t))
-                        .agg(F.max("upto_seg")).first()[0])
-            # in-run effect materialized in the merge
-            over[t] = min(u, i - 1)
+        # in-run effects are materialized in the merge
+        over = {t: min(self.meta["tomb_upto"][t], i - 1)
+                for t in self.meta["tombstones"]}
         self.meta["segments"] = segs[:i] + ([name] if name else [])
         self.meta["seg_stats"] = {s: stats[s] for s in segs[:i]}
         if name:
@@ -449,7 +430,9 @@ class SegmentStore:
         ROWS ≈ distinct churned ids since the last full compact, and the
         fold is O(churn), never O(index).  The row count itself is
         bounded by the DB hook's row-budget vacuum (full compact at ~50%
-        churn: amortized O(1) rewrite per churned doc)."""
+        churn: amortized O(1) rewrite per churned doc).  The same
+        observed job records the folded file's row count and widest
+        scope, so a later compact_tail re-scopes it without a read."""
         tombs = self.meta["tombstones"]
         if len(tombs) < 2:
             return
@@ -459,35 +442,32 @@ class SegmentStore:
          .where(F.col("upto_seg") >= 0)
          .groupBy("doc_id")
          .agg(F.max("upto_seg").alias("upto_seg"))
-         .observe(obs, F.count(F.lit(1)).alias("n"))
+         .observe(obs, F.count(F.lit(1)).alias("n"),
+                  F.max("upto_seg").alias("upto"))
          .coalesce(1).sortWithinPartitions("doc_id")  # In(doc_id)
          .write.mode("overwrite")                     # footer pruning
          .parquet(os.path.join(self.folder, name)))
-        n = int(obs.get["n"])
+        got = obs.get
+        n = int(got["n"])
         if not n:
             self._rm(name)
         self.meta["tombstones"] = [name] if n else []
-        self.meta["tomb_upto"] = {}
+        self.meta["tomb_upto"] = {name: int(got["upto"])} if n else {}
         self.meta["tomb_stats"] = {name: n} if n else {}
         self._commit()
 
     # -- row counts (write-time stats, zero jobs) ----------------------------
 
-    def tomb_rows(self) -> int | None:
-        """Total tombstone rows from write-time stats; None when a
-        pre-stats legacy tombstone lacks one (trivially bounded: any
-        >=2-file pile is folded by compact_tail, which stats it)."""
-        st = self.meta.get("tomb_stats") or {}
-        if any(t not in st for t in self.meta["tombstones"]):
-            return None
+    def tomb_rows(self) -> int:
+        """Total tombstone rows from write-time stats."""
+        st = self.meta["tomb_stats"]
         return sum(int(st[t]) for t in self.meta["tombstones"])
 
     def seg_rows(self) -> int:
         """Total stored doc rows (live + not-yet-vacuumed dead) — the
         row-budget vacuum's denominator."""
-        st = self.meta.get("seg_stats") or {}
-        return sum(self._seg_size(st[s]) for s in self.meta["segments"]
-                   if s in st)
+        st = self.meta["seg_stats"]
+        return sum(self._seg_size(st[s]) for s in self.meta["segments"])
 
     doc_rows = seg_rows
 
@@ -501,15 +481,12 @@ class SegmentStore:
         # meta's tomb_upto override NARROWS the written column (least,
         # never replace — a folded tombstone file holds heterogeneous
         # per-row scopes, and a replace would WIDEN its narrow rows)
-        over = self.meta.get("tomb_upto") or {}
-        parts = []
-        for t in self.meta["tombstones"]:
-            df = (self.spark.read.schema(_TOMB_SCHEMA)
-                  .parquet(os.path.join(self.folder, t)))
-            if t in over:
-                df = df.withColumn(
-                    "upto_seg", F.least("upto_seg", F.lit(int(over[t]))))
-            parts.append(df)
+        over = self.meta["tomb_upto"]
+        parts = [self.spark.read.schema(_TOMB_SCHEMA)
+                 .parquet(os.path.join(self.folder, t))
+                 .withColumn("upto_seg",
+                             F.least("upto_seg", F.lit(int(over[t]))))
+                 for t in self.meta["tombstones"]]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

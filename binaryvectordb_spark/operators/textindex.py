@@ -12,18 +12,19 @@ Architecture (Lucene's segment model on plain parquet):
 
     <folder>/seg_<n>/postings/   (token, doc_id, tf, positions, dl[, imp])
                                  token-RANGE-sorted; dl denormalized so
-                                 BM25 is a postings-only read (fmt 2);
+                                 BM25 is a postings-only read;
                                  build/compact also store the impact
                                  column and sort it DESC per token so
                                  footer stats drive block-max early
-                                 termination (fmt 3)
-    <folder>/seg_<n>/term_stats/ (token, df, max_imp) — fmt-3 threshold
+                                 termination
+    <folder>/seg_<n>/term_stats/ (token, df, max_imp) — block-max threshold
                                  seeds, build/compact only
     <folder>/seg_<n>/doclen/     (doc_id, dl)  — stats + local serving
     <folder>/tomb_<n>/           (doc_id, upto_seg)    deletes/replacements
-    state {segments, tombstones, ...}    which dirs are live: the DB
-                                 manifest's entry for the DB's index,
+    state {fmt, segments, tombstones, ...}   which dirs are live: the
+                                 DB manifest's entry for the DB's index,
                                  <folder>/_log/v<n>.json standalone
+                                 (opened only in the current fmt)
 
 - Segments, tombstones, state commits and compaction are the segment
   store shared with GateIndex (operators/segments.py): a batch of
@@ -69,23 +70,6 @@ from pyspark.sql import Window
 
 from binaryvectordb_spark.operators.segments import SegmentStore
 
-# on-disk layout format: 2 = postings rows carry the denormalized doc
-# length (dl) so BM25 reads ONLY pruned postings — no O(corpus) doclen
-# join per query (the 1M-corpus bench measured that join dominating:
-# indexed 1.8 s vs scan 3.8 s; postings-only drops the indexed side to
-# O(matching postings) at any corpus size); 3 = IMPACT layout (r13):
-# build/compact store each posting's exact score weight (`imp`, the
-# _TERM_SCORE factor sans idf, computed with the segment's write-time
-# avgdl) and sort each token's postings imp DESC, so the parquet
-# row-group footers themselves become the Block-Max WAND structure
-# (Ding & Suel, SIGIR'11) — an `imp >= I` pushdown skips every block
-# that cannot reach the running top-k threshold — plus a per-term
-# stats table (token, df, max_imp) the early-termination tier reads
-# token-pruned to set thresholds and bounds.  Micro-batch segments
-# keep a tf DESC / dl ASC order and no imp (the per-upsert job budget
-# stays pinned); the tier is gated to the compacted state.
-_FMT = 3
-
 
 class TextIndex(SegmentStore):
     """Open-or-create a persisted inverted index at ``folder``.  Segments,
@@ -103,28 +87,29 @@ class TextIndex(SegmentStore):
     }
     # the existence probe reads the doc_id-sorted doclen tables
     _PROBE = "doclen"
-
-    def _fresh_meta(self) -> dict:
-        return dict(super()._fresh_meta(), fmt=_FMT)
+    # The on-disk layout, recorded as the state's ``fmt`` (the one layout a
+    # TextIndex opens, see operators/segments.py):
+    # - postings rows carry the denormalized doc length (dl), so BM25 reads
+    #   ONLY pruned postings — no O(corpus) doclen join per query (the
+    #   1M-corpus bench measured that join dominating: indexed 1.8 s vs
+    #   scan 3.8 s);
+    # - build/compact store each posting's exact score weight (`imp`, the
+    #   _TERM_SCORE factor sans idf, computed with the segment's write-time
+    #   avgdl) and sort each token's postings imp DESC, so the parquet
+    #   row-group footers themselves become the Block-Max WAND structure
+    #   (Ding & Suel, SIGIR'11) — an `imp >= I` pushdown skips every block
+    #   that cannot reach the running top-k threshold — plus a per-term
+    #   stats table (token, df, max_imp) the early-termination tier reads
+    #   token-pruned to set thresholds and bounds.  Micro-batch segments
+    #   keep a tf DESC / dl ASC order and no imp (the per-upsert job budget
+    #   stays pinned);
+    # - every segment has write-time stats {n_docs, sum_dl} and every
+    #   tombstone a recorded row count and scope.
+    _FMT = 4
 
     @staticmethod
     def _seg_size(st: dict) -> int:
-        return int(st.get("n_docs", 0))
-
-    def _backfill(self, name: str, have: dict | None) -> dict | None:
-        """Segment-stats entry for a legacy segment lacking one (None when
-        ``have`` is complete).  BOTH stats come from the one doclen read:
-        an n_docs-only entry would leave _corpus_stats' zero-job fast
-        path to KeyError on sum_dl after a merge."""
-        have = have or {}
-        if "n_docs" in have and "sum_dl" in have:
-            return None
-        got = (self.spark.read.schema(self._SCHEMAS["doclen"])
-               .parquet(os.path.join(self.folder, name, "doclen"))
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.sum("dl").alias("s")).first())
-        return dict(have, n_docs=int(got["n"]),
-                    sum_dl=float(got["s"] or 0.0))
+        return int(st["n_docs"])
 
     @staticmethod
     def _tokens_pos(docs_df: DataFrame, id_col: str,
@@ -149,7 +134,7 @@ class TextIndex(SegmentStore):
     #                      the tf-part's universal supremum (_seen_ub)
 
     # the tf/dl weight factor of _TERM_SCORE (everything but the per-term
-    # idf): stored per posting as the fmt-3 `imp` column.  score_e10 =
+    # idf): stored per posting as the `imp` column.  score_e10 =
     # floor(idf * imp * 1e10) — identical IEEE ops to the classic tree,
     # so the impact tier's scores are bit-for-bit the classic scores.
     _IMP_EXPR = ("((tf * 2.2D) / (tf + (1.2D * (0.25D + "
@@ -170,7 +155,7 @@ class TextIndex(SegmentStore):
                     .select("token", "doc_id",
                             F.size("positions").cast("double").alias("tf"),
                             "positions"))
-        # DENORMALIZE the doc length into every posting row (fmt 2): dl is
+        # DENORMALIZE the doc length into every posting row: dl is
         # a window sum of tf over the doc's postings — integer-valued
         # doubles, so the sum is exact and fold-order-free, bit-identical
         # to the doclen table.  BM25 then reads ONLY the pruned postings
@@ -188,7 +173,7 @@ class TextIndex(SegmentStore):
             "dl", F.sum("tf").over(Window.partitionBy("doc_id")))
         seg = os.path.join(self.folder, name)
         if with_imp:
-            # fmt-3 IMPACT layout (build/compact only — the extra stats
+            # IMPACT layout (build/compact only — the extra stats
             # job stays off the pinned per-upsert budget; the block-max
             # tier is gated to the compacted state anyway): store the
             # exact score weight per posting, computed with THIS
@@ -206,7 +191,7 @@ class TextIndex(SegmentStore):
         return self._doclen_from_postings(seg)
 
     def _with_imp(self, postings: DataFrame, srow) -> DataFrame:
-        """``postings`` plus the fmt-3 `imp` column, with the avgdl of the
+        """``postings`` plus the `imp` column, with the avgdl of the
         stats row ``srow`` (n, s) as a literal."""
         # empty corpus (zero postings, sum is NULL): any literal works,
         # the imp projection runs over zero rows
@@ -269,7 +254,7 @@ class TextIndex(SegmentStore):
                 "sum_dl": float(got["s"] or 0.0)}
 
     def _write_term_stats(self, seg: str) -> None:
-        """Per-term stats table for the block-max tier (fmt 3): one row
+        """Per-term stats table for the block-max tier: one row
         per token — postings count (the exact BM25 df of the compacted
         state) and the max stored impact (the threshold ladder's start).
         Written only by the FULL rewrites (build / compact), never by a
@@ -349,7 +334,7 @@ class TextIndex(SegmentStore):
         dl = self.live_doclen()
         name = self._next_name("seg")
         seg = os.path.join(self.folder, name)
-        # the fmt-3 impact column, with the POST-compaction corpus avgdl
+        # the impact column, with the POST-compaction corpus avgdl
         # (one small stats job — compact is the amortized rewrite, not
         # the pinned upsert path); fold-order-free sum / int count, so
         # the literal equals the query-time _corpus_stats value exactly
@@ -359,8 +344,6 @@ class TextIndex(SegmentStore):
         st = self._write_doclen(dl, seg)  # stats folded into the write job
         self._write_term_stats(seg)
         st["ts"] = True
-        # compaction rewrites every posting row (with dl), so the folded
-        # index is fmt-current even when the input segments predated it
         self._commit_single(name, st)
 
     def _merge_run(self, name: str, lo: int) -> dict:
@@ -420,16 +403,10 @@ class TextIndex(SegmentStore):
         avgdl division is the same IEEE op either way).  Tombstones make
         the live set data-dependent, so that path aggregates the slim
         doclen tables."""
-        seg_stats = self.meta.get("seg_stats") or {}
+        seg_stats = self.meta["seg_stats"]
         segs = self.meta["segments"]
-        if (not self.meta["tombstones"]
-                # require BOTH stats per segment — a partial entry (e.g.
-                # written by an old n_docs-only backfill) must fall through
-                # to the aggregation path, not KeyError (r14 ADVICE)
-                and all(s in seg_stats and "sum_dl" in seg_stats[s]
-                        and "n_docs" in seg_stats[s] for s in segs)
-                and sum(seg_stats[s]["n_docs"] for s in segs) > 0):
-            n = sum(seg_stats[s]["n_docs"] for s in segs)
+        n = sum(seg_stats[s]["n_docs"] for s in segs)
+        if not self.meta["tombstones"] and n > 0:
             sd = 0.0
             for s in segs:
                 sd += seg_stats[s]["sum_dl"]
@@ -440,7 +417,7 @@ class TextIndex(SegmentStore):
             F.count("*").cast("double").alias("n_docs"),
             (F.sum("dl") / F.count("*").cast("double")).alias("avgdl"))
 
-    # -- block-max early termination (fmt 3) --------------------------------
+    # -- block-max early termination ---------------------------------------
 
     # auto-engagement floors: below these the classic single-read path is
     # already cheap and the tier's threshold iterations would only add
@@ -449,8 +426,8 @@ class TextIndex(SegmentStore):
     _BLOCKMAX_MIN_DOCS = 200_000
     _BLOCKMAX_MIN_POSTINGS = 50_000
     def _blockmax_ready(self) -> bool:
-        """State requirements for exactness of the impact tier: fmt 3
-        with the bootstrap segment's term_stats table present.  Since
+        """State requirements for exactness of the impact tier: the
+        bootstrap segment's term_stats table is present.  Since
         r14 the tier survives MUTATION — micro-batch segments and
         tombstones no longer gate it off (see _blockmax_dirty): the
         dirty mode thresholds only the impact-ordered bootstrap
@@ -459,11 +436,9 @@ class TextIndex(SegmentStore):
         with LIVE corpus stats, and inflates the unseen-posting bound
         by the avgdl drift factor — so the exactness proof carries
         through every segmented/tombstoned state."""
-        ss = self.meta.get("seg_stats") or {}
+        ss = self.meta["seg_stats"]
         return (bool(self.meta["segments"])
-                and self.meta.get("fmt", 1) >= 3
-                and bool((ss.get(self.meta["segments"][0]) or {})
-                         .get("ts")))
+                and bool(ss[self.meta["segments"][0]].get("ts")))
 
     def _blockmax_dirty(self) -> bool:
         """True when the index state diverges from the compacted
@@ -481,20 +456,14 @@ class TextIndex(SegmentStore):
     _BLOCKMAX_MICRO_FRAC = 0.25
 
     def _micro_frac(self) -> float:
-        """Micro-segment doc mass / bootstrap doc mass (inf when a
-        segment lacks write-time stats — auto then refuses)."""
-        ss = self.meta.get("seg_stats") or {}
+        """Micro-segment doc mass / bootstrap doc mass (inf for an empty
+        bootstrap — auto then refuses)."""
         segs = self.meta["segments"]
-        n0 = int((ss.get(segs[0]) or {}).get("n_docs", 0))
+        n0 = self._seg_size(self.meta["seg_stats"][segs[0]])
         if n0 <= 0:
             return float("inf")
-        tail = 0
-        for s in segs[1:]:
-            st = ss.get(s) or {}
-            if "n_docs" not in st:
-                return float("inf")
-            tail += int(st["n_docs"])
-        return tail / n0
+        return sum(self._seg_size(self.meta["seg_stats"][s])
+                   for s in segs[1:]) / n0
 
     def _live_corpus_scalars(self) -> tuple:
         """(n_docs, avgdl) of the LIVE corpus as driver doubles,
@@ -538,11 +507,6 @@ class TextIndex(SegmentStore):
             for t in missing:
                 cache[(v, t)] = got.get(t, 0.0)
         return {t: cache[(v, t)] for t in terms}
-
-    def _meta_n_docs(self) -> int:
-        ss = self.meta.get("seg_stats") or {}
-        return sum(int((ss.get(s) or {}).get("n_docs", 0))
-                   for s in self.meta["segments"])
 
     def _term_stats_lookup(self, terms: list) -> dict:
         """{token: (df, max_imp)} — one token-pruned read of the tiny
@@ -833,7 +797,7 @@ class TextIndex(SegmentStore):
         postings — Block-Max WAND (Ding & Suel, SIGIR'11) re-shaped for
         a batch engine, for N queries at once (a single ``search`` is a
         batch of one).  Each round reads only the per-term HIGH-IMPACT
-        PREFIX ``imp >= I_t``: the fmt-3 layout sorts each term's
+        PREFIX ``imp >= I_t``: the impact layout sorts each term's
         postings imp-descending, so the parquet footer max(imp) stats
         descend through the term's row groups and the pushdown
         physically skips every block below the threshold — the footers
@@ -897,7 +861,7 @@ class TextIndex(SegmentStore):
             if not forced and sum(stats[t][0] for t in present_all) < \
                     self._BLOCKMAX_MIN_POSTINGS:
                 return None
-            n_docs = float(self._meta_n_docs())
+            n_docs = float(self.seg_rows())
             idf = {t: ((n_docs - stats[t][0]) + 0.5) / (stats[t][0] + 0.5)
                    for t in present_all}
             c_drift, avgdl = 1.0, None
@@ -933,17 +897,16 @@ class TextIndex(SegmentStore):
             # g_live <= max(1, a_l/a_w) * imp  (the denominator
             # tf + 0.3 + 0.9*dl/a is decreasing in a, and
             # D(a_w)/D(a_l) <= a_l/a_w for a_l > a_w).
-            ss0 = (self.meta.get("seg_stats") or {}).get(
-                self.meta["segments"][0]) or {}
-            n0, s0 = int(ss0.get("n_docs", 0)), float(ss0.get("sum_dl", 0))
+            ss0 = self.meta["seg_stats"][self.meta["segments"][0]]
+            n0, s0 = int(ss0["n_docs"]), float(ss0["sum_dl"])
             a_w = (s0 / n0) if n0 else 0.0
             if a_w <= 0:
-                # bootstrap write-time stats unusable (missing/zero
-                # sum_dl or n_docs): no sound drift bound exists, and a
+                # bootstrap write-time stats unusable (zero sum_dl or
+                # n_docs): no sound drift bound exists, and a
                 # 1.0 fallback defends in the WRONG direction whenever
                 # live avgdl exceeds the true write-time avgdl — serve
                 # classic.  Unreachable via build/compact; this guards
-                # hand-edited or partially-migrated metas.
+                # hand-edited metas.
                 return None
             c_drift = max(1.0, avgdl / a_w)
         pres = set(present_all)
@@ -1177,17 +1140,17 @@ class TextIndex(SegmentStore):
         path (queries/hybrid.py search_bm25_topk): same rarity idf, same
         floored-bigint 1e-10 units, same expression tree.  Reads ONLY
         the pruned postings row groups for ``terms`` — dl rides in the
-        posting rows (fmt 2), so query cost is O(matching postings) at
+        posting rows, so query cost is O(matching postings) at
         ANY corpus size; the doclen tables are touched only for the
         tombstone-path corpus stats.
 
-        ``block_max``: the fmt-3 EARLY-TERMINATION tier for dense
+        ``block_max``: the EARLY-TERMINATION tier for dense
         (stop-word) terms, where "matching postings" IS a large corpus
         fraction — the query runs as a batch of one through
         _search_blockmax_batch (MaxScore split, then the Block-Max
         descent).  None (default) auto-engages on large maintained
-        indexes; True forces it whenever the index state allows (fmt 3,
-        term_stats present); False disables.  Every mode is
+        indexes; True forces it whenever the index state allows
+        (term_stats present); False disables.  Every mode is
         bit-identical — the tier either PROVES its answer exact via
         upper bounds or descends to the full read."""
         terms = [str(t) for t in terms]
@@ -1195,13 +1158,9 @@ class TextIndex(SegmentStore):
             # would otherwise surface as an opaque py4j error from
             # isin(*[]) — and db.search_text forwards raw user input here
             raise ValueError("empty terms: pass at least one query term")
-        if self.meta["segments"] and self.meta.get("fmt", 1) < 2:
-            raise Exception(
-                "TextIndex was written by an older layout (postings rows "
-                "carry no dl column); rebuild() or compact() the index")
         if block_max is not False and self._blockmax_ready():
             want = (block_max is True
-                    or self._meta_n_docs() >= self._BLOCKMAX_MIN_DOCS)
+                    or self.seg_rows() >= self._BLOCKMAX_MIN_DOCS)
             if want:
                 out = self._search_blockmax_batch(
                     {0: terms}, k, forced=block_max is True)
@@ -1243,7 +1202,7 @@ class TextIndex(SegmentStore):
         partition top-k pruned before the shuffle) keeps each query's
         top-k.  Returns (qid, doc_id, bm25_e10, kw_rank).
 
-        ``block_max``: the fmt-3 early-termination tier, batched
+        ``block_max``: the early-termination tier, batched
         (_search_blockmax_batch) — one imp-thresholded read per round at
         the union of the members' proven frontiers instead of the
         pruned-but-full union read.  None auto-engages on large
@@ -1258,13 +1217,9 @@ class TextIndex(SegmentStore):
             raise ValueError("empty batch: pass at least one query")
         if any(not ts for ts in qmap.values()):
             raise ValueError("empty terms: every query needs >= 1 term")
-        if self.meta["segments"] and self.meta.get("fmt", 1) < 2:
-            raise Exception(
-                "TextIndex was written by an older layout (postings rows "
-                "carry no dl column); rebuild() or compact() the index")
         if block_max is not False and self._blockmax_ready():
             want = (block_max is True
-                    or self._meta_n_docs() >= self._BLOCKMAX_MIN_DOCS)
+                    or self.seg_rows() >= self._BLOCKMAX_MIN_DOCS)
             if want:
                 out = self._search_blockmax_batch(
                     qmap, k, forced=block_max is True)
@@ -1360,7 +1315,7 @@ class TextIndex(SegmentStore):
         - tf == len(positions) and tf >= 1 per posting,
         - positions sorted ascending, non-negative,
         - denormalized dl consistent: every posting row of a doc carries
-          the same dl, equal to the doc's sum(tf) (the fmt-2 invariant
+          the same dl, equal to the doc's sum(tf) (the invariant
           that makes BM25 postings-only),
         - doclen-table parity: same doc set, same dl values,
         - the META fast-path corpus stats equal a forced recomputation

@@ -212,7 +212,7 @@ WHERE kw_rank <= 10
 
 def search_bm25_indexed_blockmax(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    """The same top-10 BM25 query through the fmt-3 BLOCK-MAX
+    """The same top-10 BM25 query through the BLOCK-MAX
     EARLY-TERMINATION tier, FORCED on (operators/textindex.py
     _search_blockmax_batch — the Block-Max WAND idea on impact-ordered
     parquet: per-term high-impact prefixes `imp >= I` pruned by the
@@ -272,7 +272,7 @@ SPLIT_TERMS = ("dup", "vector", "window")
 def search_bm25_maxscore_split(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Top-10 BM25 for the SELECTIVE+dense term mix, FORCED through the
-    fmt-3 early-termination tier where the MaxScore essential/dense
+    early-termination tier where the MaxScore essential/dense
     split engages (operators/textindex.py _split_batch,
     Turtle & Flood '95): the selective term's postings are read in full
     (tiny by definition), every no-essential doc is excluded by the
@@ -370,7 +370,7 @@ def _shared_mutated_text_index(spark: SparkSession, sf_dir: str):
 
 def search_bm25_indexed_mutated(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    """Top-10 BM25 through the fmt-3 early-termination tier in the
+    """Top-10 BM25 through the early-termination tier in the
     MUTATED index state (r14: operators/textindex.py dirty mode) — the
     bootstrap segment is imp-thresholded, the micro segments (an
     overwrite batch and a batch carrying brand-new vocabulary) are read

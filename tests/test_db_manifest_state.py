@@ -144,62 +144,20 @@ def test_meta_json_is_write_once_config(spark, tmp_path):
     assert _model_dirs(folder) == _named_models(db, 3)
 
 
-def _to_legacy(db):
-    """Rewrite ``db`` as the layout the engine wrote before these entries
-    rode the manifest: docs_schema and the drift counter in _meta.json,
-    one ivf_model/ dir, a _stats/v<N>.json sidecar, no manifest entries."""
-    log = os.path.join(db.folder, "_log")
-    head = None
-    for fn in sorted(os.listdir(log)):
-        with open(os.path.join(log, fn)) as f:
-            head = json.load(f)
-        ent = {k: head.pop(k) for k in ("docs_schema", "stats", "ivf")}
-        with open(os.path.join(log, fn), "w") as f:
-            json.dump(head, f)
-    os.rename(os.path.join(db.folder, ent["ivf"]["model"]),
-              os.path.join(db.folder, "ivf_model"))
-    p = os.path.join(db.folder, "_meta.json")
-    with open(p) as f:
-        meta = json.load(f)
-    meta.update(docs_schema=ent["docs_schema"],
-                ivf_mutated_rows=ent["ivf"]["mutated_rows"],
-                ivf_built_version=ent["ivf"]["built_version"])
-    with open(p, "w") as f:
-        json.dump(meta, f)
-    os.makedirs(os.path.join(db.folder, "_stats"))
-    with open(os.path.join(db.folder, "_stats",
-                           f"v{head['version']:010d}.json"), "w") as f:
-        json.dump(dict(ent["stats"], version=head["version"]), f)
-    return ent
-
-
-def test_legacy_meta_json_fields_are_adopted_by_first_commit(spark,
-                                                             tmp_path):
-    folder = str(tmp_path / "db")
-    db = BinaryVectorDB(spark, folder, dim=DIM, buckets=4, index_type="ivf",
-                        index_args=ARGS)
-    rows = [(i, f"d{i}", [float(x) for x in e], ("en", "de", "fr")[i % 3])
-            for i, e in enumerate(_vecs(0, 150))]
+def test_upsert_into_empty_buckets_keeps_metadata_columns(spark, tmp_path):
+    """A batch whose touched buckets are all empty commits the union of
+    the base docs_schema and its own: the metadata column the other
+    buckets hold stays readable and filterable."""
+    db = BinaryVectorDB(spark, str(tmp_path / "db"), dim=DIM, buckets=4)
+    rows = [(i, f"d{i}", [float(x) for x in e], lang)
+            for i, e, lang in zip((0, 4, 8), _vecs(0, 3), ("en", "de", "en"))]
     db.add_batch_df(spark.createDataFrame(
         rows, "doc_id long, doc string, embedding array<float>, "
-              "lang string"), meta_cols=["lang"])
-    _add(db, range(10), seed=1)                      # churn 10, lang null
-    q = QUERIES[0].tolist()
-
-    def observed(h):
-        return ([x["doc_id"] for x in h.search(q, k=5, filter={"lang": "en"})],
-                _answers(h), h.table_stats(), h.ivf_drift())
-
-    want = observed(db)
-    ent = _to_legacy(db)
-    legacy = BinaryVectorDB(spark, folder)
-    assert observed(legacy) == want
-
-    legacy.remove_docs([20])
-    head = legacy._manifest_of(legacy._manifest_version())
-    assert head["docs_schema"] == ent["docs_schema"]
-    assert head["ivf"] == dict(ent["ivf"], model="ivf_model",
-                               mutated_rows=ent["ivf"]["mutated_rows"] + 1)
-    assert head["stats"]["n_rows"] == 149
-    assert not os.path.exists(os.path.join(folder, "_stats"))
-    assert _misassigned(legacy) == []
+              "lang string"), meta_cols=["lang"])      # bucket 0 only
+    _add(db, [1, 5], seed=1)                           # empty bucket 1
+    assert db.docs_df().columns == ["doc_id", "doc", "doc_kind", "emb_int8",
+                                    "lang"]
+    langs = {r["doc_id"]: r["lang"] for r in db.docs_df().collect()}
+    assert langs == {0: "en", 4: "de", 8: "en", 1: None, 5: None}
+    hits = db.search(_vecs(0, 1)[0].tolist(), k=5, filter={"lang": "en"})
+    assert sorted(h["doc_id"] for h in hits) == [0, 8]

@@ -280,83 +280,3 @@ def test_stale_standalone_handle_keeps_winner_state(spark, tmp_path):
     c = GateIndex(spark, folder)
     assert c.meta == a.meta
     assert _gate_rows(c, spark) == _gate_rows(a, spark)
-
-
-def _to_legacy_db(db):
-    """Rewrite ``db``'s head as the layout the engine wrote before side
-    state rode the manifest: each side dir holds its own meta.json (with
-    its write counter) and the manifest has no "side" entry."""
-    import json
-
-    log = os.path.join(db.folder, "_log")
-    head = os.path.join(log, sorted(os.listdir(log))[-1])
-    with open(head) as f:
-        m = json.load(f)
-    for name, st in m.pop("side", {}).items():
-        with open(os.path.join(db.folder, name, "meta.json"), "w") as f:
-            json.dump(dict(st, v=7), f)
-    with open(head, "w") as f:
-        json.dump(m, f)
-
-
-def test_legacy_meta_json_is_adopted_by_first_commit(spark, tmp_path):
-    """A DB whose side dirs still carry meta.json (and whose manifest has
-    no side entry) answers unchanged; its first commit moves the state
-    into the manifest, drops meta.json and keeps maintaining the index —
-    and so does a standalone folder with meta.json and no log."""
-    db = _mkdb(spark, str(tmp_path / "db"))
-    db.build_text_index()
-    db.build_gate_index()
-    _add(db, [3, 300], text=lambda i: "fast merge footer")
-    db.remove_docs([7])
-    want_text = _text_hits(db)
-    want_gate = _gate_rows(db._gate_index(), spark)
-    _to_legacy_db(db)
-    legacy = BinaryVectorDB(spark, db.folder)
-    assert _text_hits(legacy) == want_text
-    assert _gate_rows(legacy._gate_index(), spark) == want_gate
-
-    _add(legacy, [301], text=lambda i: "fast fast scan")
-    for name in legacy._SIDE_DIRS:
-        assert not os.path.exists(os.path.join(db.folder, name, "meta.json"))
-    _assert_no_unreferenced_dirs(legacy)
-    fresh = TextIndex(spark, str(tmp_path / "fresh")).build(
-        _str_docs(legacy))
-    assert ([h[:3] for h in _text_hits(legacy)]
-            == sorted(map(tuple, fresh.search(TERMS, k=10).collect()),
-                      key=lambda t: t[2]))
-
-    # standalone: meta.json and no _log
-    import json
-    import shutil
-
-    folder = str(tmp_path / "ti")
-    ti = TextIndex(spark, folder).build(_str_docs(legacy))
-    ti.remove([0, 1])
-    want = sorted(map(tuple, ti.search(TERMS, k=10).collect()))
-    with open(os.path.join(folder, "meta.json"), "w") as f:
-        json.dump(dict(ti.meta, v=3), f)
-    shutil.rmtree(os.path.join(folder, "_log"))
-    old = TextIndex(spark, folder)
-    assert old.meta == ti.meta
-    assert sorted(map(tuple, old.search(TERMS, k=10).collect())) == want
-    old.remove([2])
-    assert not os.path.exists(os.path.join(folder, "meta.json"))
-    assert TextIndex(spark, folder).meta == old.meta
-
-
-def test_vacuum_of_pre_log_db_keeps_its_state(spark, tmp_path):
-    """A DB without a transaction log (its directory listing is its
-    state) loses nothing to vacuum(): no manifest means nothing is
-    unreferenced.  It used to delete every data file."""
-    import shutil
-
-    db = _mkdb(spark, str(tmp_path / "db"), n=20)
-    db.build_text_index()
-    want = _text_hits(db)
-    _to_legacy_db(db)
-    shutil.rmtree(os.path.join(db.folder, "_log"))
-    pre = BinaryVectorDB(spark, db.folder)
-    pre.vacuum()
-    assert len(pre) == 20
-    assert _text_hits(pre) == want

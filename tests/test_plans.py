@@ -121,10 +121,10 @@ def test_ivf_probe_is_partition_filter(spark, tmp_path):
     assert df_m is None or "cluster" not in df_m.group(1), plan[:2000]
     # mutation pruning still works on the two-level layout: a one-doc
     # upsert reads/rewrites only the touched doc_id bucket within clusters
-    before = dict(db._current_tables()["index"])
+    before = dict(db._manifest_tables()["index"])
     assert all("/" in k for k in before)  # two-level keys C/K
     db.add_batch([3], ["upd"], rng.uniform(-1, 1, (1, 16)).astype(np.float32))
-    after = db._current_tables()["index"]
+    after = db._manifest_tables()["index"]
     # the doc-3 bucket's staged FILES must actually change (the upsert
     # rewrote it), and every other bucket's file list must be IDENTICAL —
     # untouched buckets are never restaged

@@ -459,9 +459,10 @@ def test_compact_tail_tiered_merge(spark, tmp_path):
         str(tmp_path / "ti"), "seg_0", "postings"))) == seg0_file
     # the tombstone PILE folds to ONE doc_id-sorted file (r12), its
     # per-row scopes materialized to the last untouched segment — the
-    # re-scope override is consumed by the fold and cleared
+    # re-scope override is consumed by the fold, which records the
+    # folded file's widest scope
     assert len(ti.meta["tombstones"]) == 1
-    assert ti.meta["tomb_upto"] == {}
+    assert ti.meta["tomb_upto"] == {ti.meta["tombstones"][0]: 0}
     folded = ti._tomb().collect()
     assert all(int(r["upto_seg"]) == 0 for r in folded)
     assert ti.tomb_rows() == len(folded)
@@ -485,46 +486,42 @@ def test_compact_tail_tiered_merge(spark, tmp_path):
     assert not alive & {40, 41}
 
 
-def test_compact_tail_backfill_restores_full_stats(spark, tmp_path):
-    """A pre-stats index (no seg_stats in meta) run through compact_tail
-    must end with COMPLETE per-segment stats — both n_docs and sum_dl —
-    so the tombstone-free zero-job corpus-stats fast path neither crashes
-    (r14 ADVICE: an n_docs-only backfill left _corpus_stats to
-    KeyError('sum_dl')) nor drifts from the aggregation path."""
+def test_folded_tombstone_scope_is_recorded(spark, tmp_path):
+    """A tombstone fold records the folded file's scope in the state, so
+    every live tombstone has one: a later compact_tail re-scopes the
+    folded file from the state instead of reading it back.  Answers
+    equal a fresh build at each step."""
     d = _docs(spark)
     ti = TextIndex(spark, str(tmp_path / "ti")).build(d)
-    # two micro-batches of brand-new docs: their upsert tombstones have
-    # empty scope, so the fold drops them and the post-merge state is
-    # tombstone-free — exactly the state that engages the fast path
-    for i in range(2):
+    live = {r["doc_id"]: r["text"] for r in d.collect()}
+
+    def upsert(rows):
         ti.add_documents(spark.createDataFrame(
-            [(2_000 + 2 * i, "vector merge fresh"),
-             (2_001 + 2 * i, "window scan fresh")],
-            "doc_id: long, text: string"))
-    # simulate a legacy pre-stats meta
-    ti.meta["seg_stats"] = {}
-    ti._commit()
-    ti.compact_tail()
-    assert not ti.meta["tombstones"]
-    stats = ti.meta["seg_stats"]
-    assert set(stats) == set(ti.meta["segments"])
-    for s in ti.meta["segments"]:
-        assert "n_docs" in stats[s] and "sum_dl" in stats[s], s
-    # the fast path must agree with the aggregation over live doclen
-    fast = ti._corpus_stats().first()
-    agg = ti.live_doclen().agg(
-        F.count("*").cast("double").alias("n"),
-        (F.sum("dl") / F.count("*").cast("double")).alias("a")).first()
-    assert fast["n_docs"] == agg["n"] and fast["avgdl"] == agg["a"]
-    # and search works end-to-end (the ADVICE repro crashed here)
-    assert len(ti.search(TERMS, k=10).collect()) == 10
-    # a PARTIAL legacy entry (n_docs only) must also fall through the
-    # guard rather than KeyError — both on read and via compact_tail
-    ti.meta["seg_stats"] = {
-        s: {"n_docs": stats[s]["n_docs"]} for s in ti.meta["segments"]}
-    ti._commit()
-    part = ti._corpus_stats().first()
-    assert part["n_docs"] == agg["n"] and part["avgdl"] == agg["a"]
+            rows, "doc_id: long, text: string"))
+        live.update(rows)
+
+    def check():
+        assert set(ti.meta["tomb_upto"]) == set(ti.meta["tombstones"])
+        fresh = TextIndex(spark, str(tmp_path / f"fresh{ti.version}")).build(
+            spark.createDataFrame(sorted(live.items()),
+                                  "doc_id: long, text: string"))
+        assert (_rows(ti.search(TERMS, k=30))
+                == _rows(fresh.search(TERMS, k=30)))
+
+    upsert([(0, "vector window merge"), (1, "window scan")])  # kills seg_0
+    upsert([(100, "vector merge extra"), (101, "window scan extra")])
+    ti.remove([40, 41])
+    for dd in (40, 41):
+        live.pop(dd)
+    ti.compact_tail()            # merges the two micro segments, folds
+    assert len(ti.meta["tombstones"]) == 1
+    assert ti.meta["tomb_upto"] == {ti.meta["tombstones"][0]: 0}
+    check()
+
+    upsert([(2, "vector merge scan"), (102, "merge extra")])
+    ti.compact_tail()            # re-scopes the folded file, folds again
+    assert len(ti.meta["tombstones"]) == 1
+    check()
 
 
 @pytest.mark.slow

@@ -138,24 +138,6 @@ def test_full_delete_drops_tables(spark, tmp_path):
     assert db.search("seven", k=1)[0]["doc_id"] == 7
 
 
-def test_legacy_pre_log_db_adopted_on_first_mutation(spark, tmp_path):
-    """A round-1 DB (bucketed dirs, no _log) stays readable, and the first
-    mutation adopts every live file into v1 without losing rows."""
-    folder = str(tmp_path / "db")
-    db = BinaryVectorDB(spark, folder, dim=32, buckets=4)
-    db.add_documents(list(range(6)), [f"doc {i}" for i in range(6)])
-    import shutil
-    shutil.rmtree(os.path.join(folder, "_log"))   # simulate pre-log layout
-
-    db2 = BinaryVectorDB(spark, folder, dim=32, buckets=4)
-    assert len(db2) == 6                          # legacy dir-listing read
-    db2.add_documents([6], ["doc 6"])             # first logged mutation
-    assert db2._manifest_version() == 1
-    assert len(db2) == 7
-    assert db2.get_doc(3) == "doc 3"
-    assert _data_files(folder, "index") == _referenced(db2, "index")
-
-
 def test_time_travel_reads_prior_version(spark, tmp_path):
     """retain_versions keeps superseded versions' files on disk; a versioned
     read plans against exactly that manifest's file list (Delta
@@ -307,7 +289,12 @@ def test_export_snapshot_clones_a_version(spark, tmp_path):
     src.add_documents([2, 9], ["TWO", "nine"])              # v2
 
     src.export_snapshot(str(tmp_path / "clone"))
-    clone = BinaryVectorDB(spark, str(tmp_path / "clone"), dim=32, buckets=4)
+    # the clone is in the layout this engine writes, so it opens
+    with open(os.path.join(str(tmp_path / "clone"), "_meta.json")) as f:
+        clone_meta = json.load(f)
+    with open(os.path.join(src.folder, "_meta.json")) as f:
+        assert clone_meta == json.load(f)
+    clone = BinaryVectorDB(spark, str(tmp_path / "clone"))
     assert len(clone) == 4
     assert clone.get_doc(2) == "TWO" and clone.get_doc(9) == "nine"
     assert [h["version"] for h in clone.history()] == [1]
