@@ -1,26 +1,35 @@
-"""Ingest-time near-duplicate gate — the MAINTENANCE form of MinHash/LSH
-dedup, as a reusable operator over arbitrary (doc_id, text) frames.
+"""The MinHash-LSH near-duplicate family, in one place: every Spark caller
+composes the pieces below — the registry queries of queries/dedup.py
+(``dedup_minhash_signature``, ``dedup_minhash_pairs``, ``dedup_lsh_jaccard``
+and the queries built on them), the ingest gate (``near_dup_gate``,
+``intra_batch_dups``, ``gated_add_documents_df``), the persisted
+``GateIndex`` and the RAM-tier ``LocalNearDupGate`` build.
 
-The bootstrap dedup (queries/dedup.py `dedup_lsh_jaccard`) self-joins the
-corpus band table once; a production pipeline then needs the incremental
-question at every ingest: *is this incoming doc a near-dup of anything
-already admitted?*  The reference's add_documents flow
-(BinaryVectorDB/BinaryVectorDB.py:93-101) has no such gate; at 100 TB a
-corpus without one silently re-accumulates the duplicates the bootstrap
-removed.
+    3-word shingle sets -> 12 affine MinHash mins over an md5-prefix base
+    hash -> 4 bands x 3 rows -> band-collision candidate pairs -> exact
+    shingle-Jaccard verification
 
-100 TB shape: the BATCH side's band table (O(batch) rows) broadcasts
-against the corpus band table — the corpus never shuffles and never
-self-joins; exact shingle-Jaccard verification touches only the pruned
-candidate pairs.  Cost per ingest is O(corpus scan + batch), with the
-corpus scan being the token/band projection only (narrow columns).
+(Broder 1997; the banding of Leskovec, Rajaraman & Ullman, *MMDS* ch. 3).
+The independent references the tests compare against are the DuckDB
+oracles in queries/dedup.py, ``LocalNearDupGate``'s pure-Python twin and
+the Python oracle of tests/test_ingest_gate_property.py.
+
+The ingest gate is the MAINTENANCE form of the bootstrap dedup: *is this
+incoming doc a near-dup of anything already admitted?*  The reference's
+add_documents flow (BinaryVectorDB/BinaryVectorDB.py:93-101) has no such
+gate; at 100 TB a corpus without one silently re-accumulates the
+duplicates the bootstrap removed.  Its shape: the BATCH side's band table
+(O(batch) rows) broadcasts against the corpus band table — the corpus
+never shuffles and never self-joins; exact verification touches only the
+pruned candidate pairs.  Cost per ingest is O(corpus scan + batch), the
+corpus scan being the narrow shingle/band projection only.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from binaryvectordb_spark.functions.text import (
@@ -36,39 +45,48 @@ ROWS_PER_BAND = 3
 SHINGLE_K = 3
 
 
-def _shingle_sets(docs: DataFrame) -> DataFrame:
-    """(doc_id, shs): the distinct k-token shingle set per doc.  Docs with
-    fewer than SHINGLE_K tokens have an empty set — they produce no MinHash
-    signature, collide with nothing, and are always admitted (documented
-    semantics, shared with the bootstrap dedup)."""
-    return (docs
-            .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-            .select("doc_id",
-                    F.array_distinct(shingles("toks", SHINGLE_K))
-                    .alias("shs")))
+def _tokens(docs: DataFrame) -> DataFrame:
+    return docs.select("doc_id", F.split(F.col("text"), " ").alias("toks"))
 
 
-def _band_table(docs: DataFrame) -> DataFrame:
+def _shingle_set() -> Column:
+    return F.array_distinct(shingles("toks", SHINGLE_K))
+
+
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, shs): the distinct k-token shingle set of each (doc_id,
+    text) row.  Docs with fewer than SHINGLE_K tokens have an empty set —
+    they produce no MinHash signature, collide with nothing, and are
+    always admitted."""
+    return _tokens(docs).select("doc_id", _shingle_set().alias("shs"))
+
+
+def minhash_sigs(docs: DataFrame) -> DataFrame:
+    """(doc_id, sig_0..sig_{N_HASHES-1}): ONE md5 base hash per distinct
+    shingle, then the affine-family MINs in a single hash-agg (map-side
+    combinable; one shuffle on doc_id).
+
+    ``docs`` is either a (doc_id, text) frame, whose shingle expression
+    is exploded directly, or a PINNED or stored (doc_id, shs) frame.
+    Both run the interpreted shingle transform once per doc.  An
+    unpinned (doc_id, shs) frame would not: Spark infers a size(shs) > 0
+    filter from the explode of a column and pushes it below the
+    projection that computes shs, so the transform runs again in that
+    filter."""
+    if "shs" in docs.columns:
+        ex = docs.select("doc_id", F.explode("shs").alias("s"))
+    else:
+        ex = _tokens(docs).select("doc_id",
+                                  F.explode(_shingle_set()).alias("s"))
+    return (ex.select("doc_id", F.expr(token_hash31("s")).alias("h"))
+            .groupBy("doc_id").agg(*minhash_min_exprs("h", N_HASHES)))
+
+
+def band_table(docs: DataFrame) -> DataFrame:
     """(doc_id, band_idx, bh): one LSH band hash per (doc, band) — the
-    inverted-index key.  12 affine MinHash mins in ONE hash-agg, banded
-    3-row-per-band (same family/constants as the bootstrap dedup so gate
-    decisions are consistent with it)."""
-    return _band_table_from(_shingle_sets(docs))
-
-
-def _band_table_from(shingle_df: DataFrame) -> DataFrame:
-    """_band_table over an ALREADY-BUILT (doc_id, shs) frame — so a
-    caller that needs both the band table and the shingle sets (every
-    gate shape does: bands prune, shingles verify) derives the shingle
-    sets ONCE and feeds both consumers (r16; before this split the gate
-    ran the corpus shingle pipeline twice and the batch side three
-    times, and the explode-inferred size(shs)>0 filter re-evaluated the
-    interpreted shingle transform inside the scan filter of each copy)."""
-    ex = (shingle_df
-          .select("doc_id", F.explode("shs").alias("s"))
-          .select("doc_id", F.expr(token_hash31("s")).alias("h")))
-    m = ex.groupBy("doc_id").agg(*minhash_min_exprs("h", N_HASHES))
-    bands = m.select("doc_id", F.array(*[
+    inverted-index key, ROWS_PER_BAND signature mins per band.  ``docs``
+    as for ``minhash_sigs``."""
+    bands = minhash_sigs(docs).select("doc_id", F.array(*[
         F.concat_ws("|", *[f"sig_{b * ROWS_PER_BAND + r}"
                            for r in range(ROWS_PER_BAND)])
         for b in range(N_BANDS)]).alias("bands"))
@@ -76,49 +94,97 @@ def _band_table_from(shingle_df: DataFrame) -> DataFrame:
         "doc_id", F.posexplode("bands").alias("band_idx", "bh"))
 
 
-def _gate_core(batch_ids: DataFrame, b_bands: DataFrame,
-               b_shingles: DataFrame, c_bands: DataFrame,
-               c_shingles: DataFrame, j_threshold: float) -> DataFrame:
-    """Shared gate plan over EXPLICIT corpus artifacts: candidate pairs
-    from the (band_idx, bh) collision join (batch side broadcast, corpus
-    side never shuffled), exact shingle-Jaccard verification on the
-    pruned pairs only, one record per batch doc (zero-candidate docs kept
-    via the left join).  ``near_dup_gate`` feeds freshly-computed
-    artifacts; ``GateIndex.gate`` feeds the persisted tables — identical
-    semantics either way."""
-    cands = (c_bands.join(F.broadcast(b_bands), ["band_idx", "bh"])
-             .where(F.col("doc_id") != F.col("bid"))
-             .select("bid", F.col("doc_id").alias("cid"))
-             .distinct())
-    sa = b_shingles.select(F.col("doc_id").alias("bid"),
-                           F.col("shs").alias("sa"))
-    sb = c_shingles.select(F.col("doc_id").alias("cid"),
-                           F.col("shs").alias("sb"))
-    # the candidate-pair side (O(batch x collisions), micro-batch-bounded
-    # by the gate's contract) broadcasts EXPLICITLY for the corpus-
-    # shingle attach: the corpus side then neither shuffles nor
-    # broadcasts at any scale.  Before r16 the planner auto-broadcast the
-    # CORPUS shingle table instead — fine at fixture size, the wrong side
-    # at 100 TB (and the no-corpus-shuffle contract only held by size
-    # estimate).
-    ver = (sb.join(F.broadcast(cands.join(sa, "bid")), "cid")
-           .withColumn("common", F.size(F.array_intersect("sa", "sb"))
-                       .cast("double"))
-           .withColumn("j", F.col("common")
-                       / (F.size("sa") + F.size("sb") - F.col("common"))))
-    per_doc = (ver.groupBy("bid")
+def lsh_pairs(bands: DataFrame) -> DataFrame:
+    """(id_a, id_b), id_a < id_b: the distinct doc pairs that agree on any
+    band — the band table self-equi-joined on (band_idx, bh), a shuffle on
+    short keys only, no cross join.  The band table is pinned (lazy
+    localCheckpoint, per invocation) so the two join sides read one
+    shingle + MinHash derivation instead of running it once each."""
+    ex = bands.localCheckpoint(eager=False)
+    a, b = ex.alias("a"), ex.alias("b")
+    return (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
+                   & (F.col("a.bh") == F.col("b.bh"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("id_a"),
+                    F.col("b.doc_id").alias("id_b"))
+            .distinct())
+
+
+def _verify(pairs: DataFrame, sh_a: DataFrame, sh_b: DataFrame, *,
+            small_pairs: bool = False) -> DataFrame:
+    """(id_a, id_b, jaccard): the exact shingle Jaccard of each candidate
+    pair, from the (doc_id, shs) frames of the id_a and id_b sides.
+
+    ``small_pairs`` states that the pairs are bounded by a batch while
+    ``sh_b`` is a whole corpus (near_dup_gate): the pairs broadcast, with
+    id_a's sets attached, so the corpus neither shuffles nor broadcasts
+    at any scale.  Left to size estimates the planner broadcast the
+    CORPUS sets instead, the wrong side at 100 TB.  The bootstrap's pairs
+    are O(corpus), so the planner chooses there; a caller whose inputs
+    are all bounded (GateIndex.gate) hints them itself."""
+    a = sh_a.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"))
+    b = sh_b.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"))
+    left = pairs.join(a, "id_a")
+    common = F.size(F.array_intersect("sa", "sb")).cast("double")
+    return (b.join(F.broadcast(left) if small_pairs else left, "id_b")
+            .select("id_a", "id_b",
+                    (common / (F.size("sa") + F.size("sb") - common))
+                    .alias("jaccard")))
+
+
+def near_dup_pairs(docs: DataFrame, j_threshold: float = 0.5) -> DataFrame:
+    """(id_a, id_b, jaccard), id_a < id_b: the LSH candidate pairs of a
+    (doc_id, text) frame whose exact shingle Jaccard is >= j_threshold —
+    the bootstrap dedup (dedup_lsh_jaccard) and the intra-batch gate.
+    One pinned shingle pass feeds both the bands and the verify."""
+    sh = shingle_sets(docs).localCheckpoint(eager=False)
+    return (_verify(lsh_pairs(band_table(sh)), sh, sh)
+            .where(F.col("jaccard") >= j_threshold))
+
+
+def _collisions(c_bands: DataFrame, b_bands: DataFrame) -> DataFrame:
+    """Band-key collisions of batch docs (id_a) with corpus rows (id_b),
+    the batch side broadcast so the corpus side never shuffles.  Corpus
+    rows with the batch doc's own doc_id are excluded (see near_dup_gate).
+    Keeps the corpus side's other columns."""
+    b = b_bands.select(F.col("doc_id").alias("id_a"), "band_idx", "bh")
+    return (c_bands.join(F.broadcast(b), ["band_idx", "bh"])
+            .where(F.col("doc_id") != F.col("id_a"))
+            .withColumnRenamed("doc_id", "id_b"))
+
+
+def _gate_record(ids: DataFrame, ver: DataFrame | None,
+                 j_threshold: float) -> DataFrame:
+    """One record per batch doc in ``ids`` from its verified candidate
+    pairs ``ver`` (id_a = the batch doc; None when there are none):
+    (doc_id, n_candidates, n_dups, best_jaccard, admit), zero-candidate
+    docs kept by the left join."""
+    if ver is None:
+        return (ids.withColumn("n_candidates", F.lit(0).cast("long"))
+                .withColumn("n_dups", F.lit(0).cast("long"))
+                .withColumn("best_jaccard", F.lit(None).cast("double"))
+                .withColumn("admit", F.lit(True)))
+    dup = F.col("jaccard") >= j_threshold
+    per_doc = (ver.groupBy("id_a")
                .agg(F.count("*").alias("n_candidates"),
-                    F.sum(F.when(F.col("j") >= j_threshold, 1).otherwise(0))
-                    .alias("n_dups"),
-                    F.max(F.when(F.col("j") >= j_threshold, F.col("j")))
+                    F.sum(F.when(dup, 1).otherwise(0)).alias("n_dups"),
+                    F.max(F.when(dup, F.col("jaccard")))
                     .alias("best_jaccard")))
-    return (batch_ids
-            .join(per_doc, batch_ids["doc_id"] == per_doc["bid"], "left")
+    return (ids.join(per_doc, ids["doc_id"] == per_doc["id_a"], "left")
             .select("doc_id",
                     F.coalesce("n_candidates", F.lit(0)).alias("n_candidates"),
                     F.coalesce("n_dups", F.lit(0)).alias("n_dups"),
                     "best_jaccard")
             .withColumn("admit", F.col("n_dups") == 0))
+
+
+def _distinct_shingles(docs: DataFrame) -> DataFrame:
+    """The shingle sets of a (doc_id, text) frame's distinct doc_ids,
+    pinned per invocation (lazy localCheckpoint): bands, verify and the
+    record's id list all read this one pass."""
+    return (shingle_sets(docs.select("doc_id", "text")
+                         .dropDuplicates(["doc_id"]))
+            .localCheckpoint(eager=False))
 
 
 def near_dup_gate(batch: DataFrame, corpus: DataFrame, *,
@@ -144,23 +210,20 @@ def near_dup_gate(batch: DataFrame, corpus: DataFrame, *,
     NOTE: the corpus shingle/band derivation runs PER CALL — right for a
     bootstrap or an occasional micro-batch, wrong as a steady serving
     path.  ``GateIndex`` persists those artifacts through commits so a
-    probe pays only its own (pruned) read cost.  The per-call pin below
-    (``localCheckpoint`` of the corpus shingle frame, r16) materializes
-    O(corpus) rows in executor storage for the invocation and is not
-    fault-tolerant (an executor loss fails the job instead of recomputing)
-    — acceptable here exactly because this form is the bootstrap path;
-    when corpus >> memory, use the persisted ``GateIndex`` route."""
-    batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-    corpus = corpus.select("doc_id", "text")
-    # one shingle pass per side (r16): bands AND verify read the same
-    # pinned (doc_id, shs) frame — lazy localCheckpoint, per-invocation
-    # (see _band_table_from for what the unshared form cost)
-    b_sh = _shingle_sets(batch).localCheckpoint(eager=False)
-    c_sh = _shingle_sets(corpus).localCheckpoint(eager=False)
-    b_bands = (_band_table_from(b_sh)
-               .select(F.col("doc_id").alias("bid"), "band_idx", "bh"))
-    return _gate_core(batch.select("doc_id"), b_bands,
-                      b_sh, _band_table_from(c_sh), c_sh, j_threshold)
+    probe pays only its own (pruned) read cost.  The per-call pin of the
+    corpus shingle sets (``localCheckpoint``) materializes O(corpus) rows
+    in executor storage for the invocation and is not fault-tolerant (an
+    executor loss fails the job instead of recomputing) — acceptable here
+    exactly because this form is the bootstrap path; when corpus >>
+    memory, use the persisted ``GateIndex`` route."""
+    b_sh = _distinct_shingles(batch)
+    c_sh = (shingle_sets(corpus.select("doc_id", "text"))
+            .localCheckpoint(eager=False))
+    cands = (_collisions(band_table(c_sh), band_table(b_sh))
+             .select("id_a", "id_b").distinct())
+    return _gate_record(b_sh.select("doc_id"),
+                        _verify(cands, b_sh, c_sh, small_pairs=True),
+                        j_threshold)
 
 
 def intra_batch_dups(batch: DataFrame, *,
@@ -168,59 +231,34 @@ def intra_batch_dups(batch: DataFrame, *,
     """(doc_id) rows for batch docs that are near-dups of a LOWER-doc_id
     doc in the SAME batch — the intra-batch half of the ingest gate
     (ADVICE r9: two near-identical docs arriving in one micro-batch must
-    not both be admitted).
+    not both be admitted): ``near_dup_pairs`` over the batch.
 
     Semantics are PAIRWISE, lowest-id-wins, and deliberately
     non-transitive: if 2 dups 1 and 3 dups 2 (but 3 does not dup 1), BOTH
     2 and 3 are rejected — 3 collides with 2 regardless of 2's own fate.
     Safe-side and deterministic; the transitive-closure alternative would
-    need a connected-components pass per micro-batch.
-
-    Same LSH family/constants as near_dup_gate; the band self-join keys
-    on (band_idx, bh) with a < on doc_id so each unordered pair is
-    verified once.  O(batch²) only within colliding LSH buckets."""
+    need a connected-components pass per micro-batch.  O(batch²) only
+    within colliding LSH buckets."""
     batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-    # one shingle pass + one band derivation for both self-join sides
-    # and the verify attach (r16, same sharing as near_dup_gate)
-    sh = _shingle_sets(batch).localCheckpoint(eager=False)
-    bands = _band_table_from(sh).localCheckpoint(eager=False)
-    pairs = (bands.alias("a")
-             .join(bands.alias("b"),
-                   (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("cid"),
-                     F.col("b.doc_id").alias("bid"))
-             .distinct())
-    sa = sh.select(F.col("doc_id").alias("bid"), F.col("shs").alias("sa"))
-    sb = sh.select(F.col("doc_id").alias("cid"), F.col("shs").alias("sb"))
-    ver = (pairs.join(sa, "bid").join(sb, "cid")
-           .withColumn("common", F.size(F.array_intersect("sa", "sb"))
-                       .cast("double"))
-           .withColumn("j", F.col("common")
-                       / (F.size("sa") + F.size("sb") - F.col("common"))))
-    return (ver.where(F.col("j") >= j_threshold)
-            .select(F.col("bid").alias("doc_id")).distinct())
+    return (near_dup_pairs(batch, j_threshold)
+            .select(F.col("id_b").alias("doc_id")).distinct())
 
 
 def gated_add_documents_df(db, docs_df: DataFrame, *,
                            j_threshold: float = 0.5,
                            id_col: str = "doc_id",
-                           text_col: str = "text",
-                           intra_batch: bool = True) -> DataFrame:
+                           text_col: str = "text") -> DataFrame:
     """Near-dup-gated distributed upsert: run the gate against the DB's
-    CURRENT str-payload documents AND (by default) within the batch
-    itself, admit only docs with zero near-dups, upsert the admitted
-    slice via add_documents_df, and return the gate record (one row per
-    distinct incoming doc_id): (doc_id, n_candidates, n_dups,
-    best_jaccard, intra_dup, admit) where admit = corpus-clean AND NOT
-    intra_dup.
+    CURRENT str-payload documents AND within the batch itself, admit only
+    docs with zero near-dups, upsert the admitted slice via
+    add_documents_df, and return the gate record (one row per distinct
+    incoming doc_id): (doc_id, n_candidates, n_dups, best_jaccard,
+    intra_dup, admit) where admit = corpus-clean AND NOT intra_dup.
 
     Corpus rows with the SAME doc_id as a batch row are excluded by
     near_dup_gate, so updates to an existing doc are gated against the
     rest of the corpus (not self-rejected) and a foreachBatch replay
-    re-admits identically.  intra_batch=False restores corpus-only
-    gating (intra_dup all false).
+    re-admits identically.
 
     The record is localCheckpoint-materialized BEFORE the upsert commits —
     both it and the admitted slice derive from the pre-commit docs table,
@@ -229,32 +267,24 @@ def gated_add_documents_df(db, docs_df: DataFrame, *,
     batch = docs_df.select(F.col(id_col).cast("long").alias("doc_id"),
                            F.col(text_col).alias("text"))
     corpus_df = db.docs_df()
-    gi = db._gate_index() if hasattr(db, "_gate_index") else None
+    gi = db._gate_index()
     if corpus_df is None:
-        rec = (batch.dropDuplicates(["doc_id"]).select("doc_id")
-               .withColumn("n_candidates", F.lit(0).cast("long"))
-               .withColumn("n_dups", F.lit(0).cast("long"))
-               .withColumn("best_jaccard", F.lit(None).cast("double")))
+        rec = _gate_record(batch.dropDuplicates(["doc_id"]).select("doc_id"),
+                           None, j_threshold)
     elif gi is not None:
         # persisted artifacts: probe-side cost, bit-identical decisions
         # (the commit hooks keep the index current through every upsert/
         # remove, so gating against it == gating against the corpus)
-        rec = gi.gate(batch, j_threshold=j_threshold).drop("admit")
+        rec = gi.gate(batch, j_threshold=j_threshold)
     else:
         corpus = (corpus_df.where(F.col("doc_kind") == "str")
                   .select("doc_id", F.col("doc").alias("text")))
-        rec = near_dup_gate(batch, corpus, j_threshold=j_threshold) \
-            .drop("admit")
-    if intra_batch:
-        intra = intra_batch_dups(batch, j_threshold=j_threshold) \
-            .withColumn("intra_dup", F.lit(True))
-        rec = (rec.join(intra, "doc_id", "left")
-               .withColumn("intra_dup",
-                           F.coalesce("intra_dup", F.lit(False))))
-    else:
-        rec = rec.withColumn("intra_dup", F.lit(False))
-    rec = rec.withColumn(
-        "admit", (F.col("n_dups") == 0) & ~F.col("intra_dup"))
+        rec = near_dup_gate(batch, corpus, j_threshold=j_threshold)
+    intra = intra_batch_dups(batch, j_threshold=j_threshold) \
+        .withColumn("intra_dup", F.lit(True))
+    rec = (rec.drop("admit").join(intra, "doc_id", "left")
+           .withColumn("intra_dup", F.coalesce("intra_dup", F.lit(False)))
+           .withColumn("admit", (F.col("n_dups") == 0) & ~F.col("intra_dup")))
     rec = rec.localCheckpoint(eager=True)
     admitted = (batch.join(rec.where("admit").select("doc_id"), "doc_id")
                 .localCheckpoint(eager=True))
@@ -348,8 +378,8 @@ class GateIndex(SegmentStore):
         doclen-from-written-postings pattern)."""
         docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
         return self._write_tables(
-            name, _shingle_sets(docs),
-            lambda: _band_table_from(
+            name, shingle_sets(docs),
+            lambda: band_table(
                 self.spark.read.schema(self._SCHEMAS["shingles"])
                 .parquet(os.path.join(self.folder, name, "shingles"))))
 
@@ -388,93 +418,65 @@ class GateIndex(SegmentStore):
         artifacts — bit-identical records (pinned by
         tests/test_ingest_gate.py), at probe-side cost:
 
-        1. the batch's band table is computed once and COLLECTED (O(batch
-           x N_BANDS) slim rows — the bounded candidate-set collect class);
+        1. the batch's band table is COLLECTED (O(batch x N_BANDS) slim
+           rows — the bounded candidate-set collect class);
         2. the persisted bands scan carries ``In(bh)`` from those keys
            (row-group pruned — the segments are range-sorted on bh) and
-           its broadcast-join collisions are collected as
-           (bid, cid, seg) pairs (bounded by LSH collisions); liveness
-           is then refined DRIVER-SIDE from an ``In(cid)``-pruned
-           tombstone read, so probe cost never scales with the
-           tombstone pile;
+           its broadcast-join collisions are collected as (batch doc,
+           corpus doc, seg) triples (bounded by LSH collisions);
+           liveness is then refined DRIVER-SIDE from a tombstone read
+           pruned to the corpus docs, so probe cost never scales with
+           the tombstone pile;
         3. the final plan verifies exactly the surviving pairs: batch
            shingles (narrow recompute) x corpus shingles read with
            ``In(doc_id)`` pruned row groups on BOTH the segment and
            tombstone sides — the bands table is not re-scanned.
 
         The corpus is never re-shingled and never shuffled; the only
-        exchanges in the final plan carry candidate/record rows."""
+        exchanges in the final plan carry candidate/record rows.  The
+        batch is not pinned: each plan above derives its shingles once,
+        and a pin would add a job per probe to save a recompute that
+        O(batch) keeps small."""
         spark = self.spark
         batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-        brows = (_band_table(batch)
-                 .select(F.col("doc_id").alias("bid"), "band_idx", "bh")
-                 .collect())
-        batch_ids = batch.select("doc_id")
-        empty_core = (batch_ids
-                      .withColumn("n_candidates", F.lit(0).cast("long"))
-                      .withColumn("n_dups", F.lit(0).cast("long"))
-                      .withColumn("best_jaccard",
-                                  F.lit(None).cast("double"))
-                      .withColumn("admit", F.lit(True)))
+        ids = batch.select("doc_id")
+        brows = band_table(batch).collect()
         if not brows or not self.meta["segments"]:
-            return empty_core
-        b_bands = spark.createDataFrame(
-            brows, "bid long, band_idx int, bh string")
+            return _gate_record(ids, None, j_threshold)
         keys = sorted({r["bh"] for r in brows})
         # collisions against the RAW (un-tombstoned) bands, carrying the
         # segment ordinal; liveness is refined DRIVER-SIDE from an
-        # In(cid)-pruned tombstone read (r12 review: joining the whole
+        # In(id_b)-pruned tombstone read (r12 review: joining the whole
         # pile into the probe made probe cost O(churn since vacuum) —
         # this way both the collision collect and the tombstone read
         # are bounded by the probe, and the surviving (row, seg) set is
         # exactly what the anti-join would keep, so records stay
         # bit-identical to the recompute form)
-        c_bands = self._raw_run("bands").where(F.col("bh").isin(keys))
-        raw_pairs = (c_bands.join(F.broadcast(b_bands),
-                                  ["band_idx", "bh"])
-                     .where(F.col("doc_id") != F.col("bid"))
-                     .select("bid", F.col("doc_id").alias("cid"), "seg")
-                     .distinct().collect())
-        if not raw_pairs:
-            return empty_core
-        cset = sorted({int(p["cid"]) for p in raw_pairs})
+        b_bands = spark.createDataFrame(
+            brows, "doc_id long, band_idx int, bh string")
+        raw_pairs = (_collisions(
+            self._raw_run("bands").where(F.col("bh").isin(keys)), b_bands)
+            .select("id_a", "id_b", "seg").distinct().collect())
+        cset = sorted({int(p["id_b"]) for p in raw_pairs})
         dead_scope: dict[int, int] = {}
         tomb = self._tomb()
-        if tomb is not None:
+        if tomb is not None and cset:
             for r in (tomb.where(F.col("doc_id").isin(cset))
                       .groupBy("doc_id")
                       .agg(F.max("upto_seg").alias("u")).collect()):
                 dead_scope[int(r["doc_id"])] = int(r["u"])
-        pairs = sorted({(int(p["bid"]), int(p["cid"])) for p in raw_pairs
-                        if dead_scope.get(int(p["cid"]), -1)
+        pairs = sorted({(int(p["id_a"]), int(p["id_b"])) for p in raw_pairs
+                        if dead_scope.get(int(p["id_b"]), -1)
                         < int(p["seg"])})
         if not pairs:
-            return empty_core
-        pairs_df = spark.createDataFrame(pairs, "bid long, cid long")
-        cids = sorted({c for _, c in pairs})
-        sa = (_shingle_sets(batch)
-              .select(F.col("doc_id").alias("bid"), F.col("shs").alias("sa")))
-        sb = (self.live_shingles(prune_ids=cids)
-              .select(F.col("doc_id").alias("cid"), F.col("shs").alias("sb")))
-        ver = (F.broadcast(pairs_df).join(sa, "bid").join(sb, "cid")
-               .withColumn("common", F.size(F.array_intersect("sa", "sb"))
-                           .cast("double"))
-               .withColumn("j", F.col("common")
-                           / (F.size("sa") + F.size("sb") - F.col("common"))))
-        per_doc = (ver.groupBy("bid")
-                   .agg(F.count("*").alias("n_candidates"),
-                        F.sum(F.when(F.col("j") >= j_threshold, 1)
-                              .otherwise(0)).alias("n_dups"),
-                        F.max(F.when(F.col("j") >= j_threshold, F.col("j")))
-                        .alias("best_jaccard")))
-        return (batch_ids
-                .join(per_doc, batch_ids["doc_id"] == per_doc["bid"], "left")
-                .select("doc_id",
-                        F.coalesce("n_candidates", F.lit(0))
-                        .alias("n_candidates"),
-                        F.coalesce("n_dups", F.lit(0)).alias("n_dups"),
-                        "best_jaccard")
-                .withColumn("admit", F.col("n_dups") == 0))
+            return _gate_record(ids, None, j_threshold)
+        # every side is probe-bounded: the pairs and the id-pruned corpus
+        # sets broadcast, the batch sets stream
+        sb = self.live_shingles(prune_ids=sorted({c for _, c in pairs}))
+        ver = _verify(F.broadcast(spark.createDataFrame(
+                          pairs, "id_a long, id_b long")),
+                      shingle_sets(batch), F.broadcast(sb))
+        return _gate_record(ids, ver, j_threshold)
 
 
 class LocalNearDupGate:
@@ -545,10 +547,10 @@ class LocalNearDupGate:
         """One distributed build over a (doc_id, text) frame: shingle
         sets and band table computed executor-side, collected once."""
         g = cls(j_threshold)
-        docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-        for r in _shingle_sets(docs).collect():
+        sh = _distinct_shingles(docs)
+        for r in sh.collect():
             g._shingles[r["doc_id"]] = frozenset(r["shs"])
-        for r in _band_table(docs).collect():
+        for r in band_table(sh).collect():
             g._bands.setdefault((r["band_idx"], r["bh"]),
                                 set()).add(r["doc_id"])
         return g
@@ -656,16 +658,16 @@ class ShardedLocalNearDupGate:
     @classmethod
     def from_df(cls, docs: DataFrame, n_shards: int = 4,
                 j_threshold: float = 0.5) -> "ShardedLocalNearDupGate":
-        """One distributed build (same two slim collects as the unsharded
-        gate); rows route to their owner shard driver-side."""
+        """The unsharded gate's build, its docs routed to their owner
+        shard driver-side."""
+        flat = LocalNearDupGate.from_df(docs, j_threshold)
         g = cls(n_shards, j_threshold)
-        docs = docs.select("doc_id", "text").dropDuplicates(["doc_id"])
-        for r in _shingle_sets(docs).collect():
-            g.shards[r["doc_id"] % n_shards]._shingles[r["doc_id"]] = \
-                frozenset(r["shs"])
-        for r in _band_table(docs).collect():
-            g.shards[r["doc_id"] % n_shards]._bands.setdefault(
-                (r["band_idx"], r["bh"]), set()).add(r["doc_id"])
+        for doc_id, shs in flat._shingles.items():
+            g.shards[doc_id % n_shards]._shingles[doc_id] = shs
+        for key, ids in flat._bands.items():
+            for doc_id in ids:
+                g.shards[doc_id % n_shards]._bands.setdefault(
+                    key, set()).add(doc_id)
         return g
 
     def check(self, doc_id: int, text: str) -> dict:

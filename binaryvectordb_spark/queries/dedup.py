@@ -2,6 +2,12 @@
 star): exact, fingerprint, MinHash+LSH, SimHash, token-set Jaccard, and
 embedding-cosine near-dup, over the ``documents``/``embeddings`` fixtures.
 
+The MinHash-LSH queries are compositions of the one Spark implementation
+of that family in operators/ingest_gate.py (shingle sets, MinHash
+signatures, band table, band self-join, exact Jaccard verify, gate
+record); this module holds their DuckDB oracles, built from shared CTE
+blocks.
+
 Scale design (100 TB): every method here is blocking-based — signatures are
 computed per-row with no shuffle (array expressions over the scan), and the
 only shuffles are groupBy/join on short hash keys (band hash, simhash block,
@@ -21,17 +27,16 @@ from binaryvectordb_spark.functions.text import (
     fingerprint,
     minhash_a,
     minhash_b,
-    minhash_min_exprs,
-    shingles,
-    token_hash31,
     token_hash60,
+)
+from binaryvectordb_spark.operators import ingest_gate as lsh
+from binaryvectordb_spark.operators.ingest_gate import (
+    N_BANDS,
+    N_HASHES,
+    ROWS_PER_BAND,
 )
 from binaryvectordb_spark.queries import register
 from binaryvectordb_spark.sources.tables import load_table
-
-N_HASHES = 12
-N_BANDS = 4           # 4 bands x 3 rows
-ROWS_PER_BAND = 3
 
 
 def _docs(spark, sf_dir):
@@ -74,41 +79,47 @@ GROUP BY 1 HAVING count(*) > 1
 
 # -- MinHash + LSH ----------------------------------------------------------
 
-def _minhash_df(spark, sf_dir):
-    """MinHash signatures: explode DISTINCT shingles, ONE md5 base hash per
-    shingle, then 12 affine-family MINs in a single hash-agg (map-side
-    combinable; one shuffle on doc_id).  This replaced a per-seed salted-md5
-    design that was 12x the hashing cost and dominated the LSH pipeline."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks"))
-    ex = (d.select("doc_id",
-                   F.explode(F.array_distinct(shingles("toks", 3))).alias("s"))
-          .select("doc_id", F.expr(token_hash31("s")).alias("h")))
-    return ex.groupBy("doc_id").agg(*minhash_min_exprs("h", N_HASHES))
-
-
+# -- the DuckDB oracle blocks of the LSH family: shingle sets (shl) and
+# MinHash signatures (sigs), the exploded band table (bex), the band
+# self-join's candidate pairs (cands), and the batch-vs-corpus gate
+# record (_duck_gate)
 _DUCK_SIGS = ", ".join(
     f"min(({minhash_a(j)} * h + {minhash_b(j)}) % {MINHASH_P}) AS sig_{j}"
     for j in range(N_HASHES))
-_DUCK_SHINGLES = f"""
+_DUCK_SHL = """
 WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 shl AS (SELECT doc_id, list_distinct(list_transform(
             range(0, greatest(length(toks) - 2, 0)),
             i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shs
-        FROM tk),
+        FROM tk)"""
+_DUCK_SHINGLES = _DUCK_SHL + f""",
 ex AS (SELECT doc_id,
               CAST('0x' || substring(md5(unnest(shs)), 1, 15) AS BIGINT)
                 % {MINHASH_P} AS h
        FROM shl),
 sigs AS (SELECT doc_id, {_DUCK_SIGS} FROM ex GROUP BY doc_id)
 """
+_DUCK_BANDS = ", ".join(
+    "concat_ws('|', " +
+    ", ".join(f"sig_{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)) +
+    f") AS band_{b}" for b in range(N_BANDS))
+_DUCK_BEX = f"""{_DUCK_SHINGLES},
+bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
+bex AS (
+  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
+                      for b in range(N_BANDS))}
+)"""
+_DUCK_CANDS = _DUCK_BEX + """,
+cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+          FROM bex a JOIN bex b ON a.band_idx = b.band_idx AND a.bh = b.bh
+                               AND a.doc_id < b.doc_id)"""
 
 
 def dedup_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc MinHash signature, folded to one md5 for compact comparison.
     Docs with < 3 tokens have no shingles and thus no signature (documented
     semantics, same in the oracle)."""
-    m = _minhash_df(spark, sf_dir)
+    m = lsh.minhash_sigs(_docs(spark, sf_dir))
     return m.select(
         "doc_id",
         F.md5(F.concat_ws("|", *[f"sig_{j}" for j in range(N_HASHES)]))
@@ -123,17 +134,15 @@ FROM sigs
 """)
 
 
-# r16 optimization toggle: a self-join's two sides are IDENTICAL
-# subplans, but Spark re-executes the whole derivation for each side (the
-# broadcast side cannot reuse the probe side's exchange), so the
-# shingle+minhash aggregation — the heavy part of the LSH family — ran 2x
-# in dedup_minhash_pairs and the shingle arrays 3x in dedup_lsh_jaccard.
-# True pins the small derived frames (bands: 4 rows/doc; shingle sets: 1
-# row/doc) with a lazy localCheckpoint so each derivation runs once per
-# invocation (interleaved A/B at sf0.001: dedup_minhash_pairs 0.398 ->
-# 0.180 s, dedup_lsh_jaccard 0.456 -> 0.231 s); nothing
-# persists across calls (a fresh call builds fresh RDDs).
-_PIN_SHARED = True
+# Pinning: a self-join's two sides are IDENTICAL subplans, but Spark
+# re-executes the whole derivation for each side (the broadcast side
+# cannot reuse the probe side's exchange).  The queries below, and the
+# LSH pieces in operators/ingest_gate.py, pin a small derived frame that
+# several consumers read with a lazy localCheckpoint,
+# so each derivation runs once per invocation (r16 interleaved A/B at
+# sf0.001: dedup_minhash_pairs 0.398 -> 0.180 s, dedup_lsh_jaccard 0.456
+# -> 0.231 s); nothing persists across calls (a fresh call builds fresh
+# RDDs).
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -151,39 +160,14 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH candidate pairs: docs agreeing on any of the 4 bands (3 sigs each).
-    The band table is exploded then self-equi-joined on (band_idx, band_hash)
-    — shuffle on short keys only, no cross join."""
-    m = _minhash_df(spark, sf_dir)
-    bands = m.select("doc_id", F.array(*[
-        F.concat_ws("|", *[f"sig_{b * ROWS_PER_BAND + r}"
-                           for r in range(ROWS_PER_BAND)])
-        for b in range(N_BANDS)]).alias("bands"))
-    ex = bands.select("doc_id", F.posexplode("bands").alias("band_idx", "bh"))
-    if _PIN_SHARED:
-        ex = ex.localCheckpoint(eager=False)
-    a = ex.alias("a")
-    b = ex.alias("b")
-    return (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.bh") == F.col("b.bh"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("id_a"),
-                    F.col("b.doc_id").alias("id_b"))
-            .distinct())
+    """LSH candidate pairs: docs agreeing on any of the 4 bands (3 sigs
+    each) — the band table's self-join.  The shingle expression is
+    exploded directly (no shingle frame is needed downstream)."""
+    return lsh.lsh_pairs(lsh.band_table(_docs(spark, sf_dir)))
 
-
-_DUCK_BANDS = ", ".join(
-    "concat_ws('|', " +
-    ", ".join(f"sig_{b * ROWS_PER_BAND + r}" for r in range(ROWS_PER_BAND)) +
-    f") AS band_{b}" for b in range(N_BANDS))
 
 register("dedup_minhash_pairs", dedup_minhash_pairs, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-)
+{_DUCK_BEX}
 SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
 FROM bex a JOIN bex b ON a.band_idx = b.band_idx AND a.bh = b.bh
                       AND a.doc_id < b.doc_id
@@ -233,12 +217,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocks = s.select("doc_id", "simhash", F.array(*[
         F.expr(f"shiftright(simhash, {8 * b}) & 255").alias(f"b{b}")
         for b in range(4)]).alias("blks"))
-    ex = blocks.select("doc_id", "simhash",
-                       F.posexplode("blks").alias("blk_idx", "blk"))
-    if _PIN_SHARED:
-        # the 32-sum simhash aggregation would otherwise run once per
-        # self-join side (see _PIN_SHARED note above)
-        ex = ex.localCheckpoint(eager=False)
+    # pinned: the 32-sum simhash aggregation would otherwise run once per
+    # self-join side (see the pinning note above)
+    ex = (blocks.select("doc_id", "simhash",
+                        F.posexplode("blks").alias("blk_idx", "blk"))
+          .localCheckpoint(eager=False))
     a, b = ex.alias("a"), ex.alias("b")
     # Earliest-matching-block dedup (r16): a pair matching on k of the 4
     # blocks used to surface k times and rely on a full-shuffle DISTINCT
@@ -287,8 +270,6 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle join is ~160x cheaper (measured) — the same reason production
     dedup shingles before joining.  Never materializes the doc x doc cross
     product."""
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks"))
     # r17 (guide §2.4 + §2.6): the old repartition("doc_id") barrier did NOT
     # make the four consumers (two explode join sides + two size sides) share
     # one derivation — the optimizer specializes each side's subtree (the
@@ -300,11 +281,9 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one row-group — round-robin puts the kernel on every core), derive the
     # shingle arrays ONCE, and pin the frame per-invocation so all four
     # consumers read the materialized rows.
-    shl = (_spread(d)
-           .select("doc_id",
-                   F.array_distinct(shingles("toks", 3)).alias("shs")))
-    if _PIN_SHARED:
-        shl = shl.localCheckpoint(eager=False)
+    shl = (lsh.shingle_sets(_spread(_docs(spark, sf_dir)
+                                    .select("doc_id", "text")))
+           .localCheckpoint(eager=False))
     sizes = shl.select("doc_id", F.size("shs").alias("n"))
     ex = shl.select("doc_id", F.explode("shs").alias("s"))
     a, b = ex.alias("a"), ex.alias("b")
@@ -323,12 +302,7 @@ def dedup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("id_a", "id_b", "jaccard"))
 
 
-register("dedup_jaccard_pairs", dedup_jaccard_pairs, oracle="""
-WITH tk AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-shl AS (SELECT doc_id, list_distinct(list_transform(
-            range(0, greatest(length(toks) - 2, 0)),
-            i -> toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS shs
-        FROM tk),
+register("dedup_jaccard_pairs", dedup_jaccard_pairs, oracle=_DUCK_SHL + """,
 sizes AS (SELECT doc_id, length(shs) AS n FROM shl),
 ex AS (SELECT doc_id, unnest(shs) AS s FROM shl),
 common AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
@@ -412,37 +386,13 @@ def dedup_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     textbook two-stage pipeline: bands prune (~n pairs instead of the
     posting-join's millions), exact set intersection confirms.  ~10x cheaper
     than dedup_jaccard_pairs at sf0.1 with identical >= tau semantics on the
-    candidate set."""
-    cands = dedup_minhash_pairs(spark, sf_dir)
-    d = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks"))
-    shl = d.select("doc_id",
-                   F.array_distinct(shingles("toks", 3)).alias("shs"))
-    if _PIN_SHARED:
-        # both verify sides read the same per-doc shingle sets — derive
-        # them once (see _PIN_SHARED note above)
-        shl = shl.localCheckpoint(eager=False)
-    a = shl.select(F.col("doc_id").alias("id_a"), F.col("shs").alias("sa"))
-    b = shl.select(F.col("doc_id").alias("id_b"), F.col("shs").alias("sb"))
-    return (cands.join(a, "id_a").join(b, "id_b")
-            .withColumn("common", F.size(F.array_intersect("sa", "sb")))
-            .withColumn("jaccard",
-                        F.col("common").cast("double")
-                        / (F.size("sa") + F.size("sb") - F.col("common")))
-            .where(F.col("jaccard") >= 0.5)
-            .select("id_a", "id_b", "jaccard"))
+    candidate set.  One pinned shingle pass feeds both the bands and the
+    verify."""
+    return lsh.near_dup_pairs(_docs(spark, sf_dir), 0.5)
 
 
 register("dedup_lsh_jaccard", dedup_lsh_jaccard, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bex a JOIN bex b ON a.band_idx = b.band_idx AND a.bh = b.bh
-                               AND a.doc_id < b.doc_id),
+{_DUCK_CANDS},
 withsets AS (
   SELECT id_a, id_b,
          CAST(length(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS common,
@@ -471,15 +421,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reachability); dedup_clusters and dedup_corpus_kept both compose final
 # SELECTs onto it
 _CLUSTERS_CTES = "WITH RECURSIVE " + f"""
-{_DUCK_SHINGLES.replace("WITH ", "", 1)},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bex a JOIN bex b ON a.band_idx = b.band_idx AND a.bh = b.bh
-                               AND a.doc_id < b.doc_id),
+{_DUCK_CANDS.replace("WITH ", "", 1)},
 verified AS (
   SELECT id_a, id_b
   FROM (SELECT id_a, id_b,
@@ -523,15 +465,7 @@ def dedup_levenshtein_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register("dedup_levenshtein_pairs", dedup_levenshtein_pairs, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM bex a JOIN bex b ON a.band_idx = b.band_idx AND a.bh = b.bh
-                               AND a.doc_id < b.doc_id)
+{_DUCK_CANDS}
 SELECT id_a, id_b,
        CAST(levenshtein(da.text, db.text) AS INTEGER) AS edit_distance
 FROM cands
@@ -863,6 +797,39 @@ GROUP BY s.clab ORDER BY cluster
 BATCH_MOD, BATCH_REM = 20, 7  # docs with doc_id % 20 == 7 play the batch
 
 
+def _duck_gate(scored_cols: str) -> str:
+    """Gate oracle CTEs, the batch slice against the rest of the corpus,
+    down to the per-batch-doc aggregate ``agg``."""
+    return f"""
+{_DUCK_BEX},
+cands AS (SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
+          FROM bex b JOIN bex c ON b.band_idx = c.band_idx AND b.bh = c.bh
+          WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
+            AND c.doc_id % {BATCH_MOD} <> {BATCH_REM}),
+ver AS (SELECT bid, cid,
+               CAST(length(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS common,
+               length(sa.shs) AS na, length(sb.shs) AS nb
+        FROM cands JOIN shl sa ON sa.doc_id = bid
+                   JOIN shl sb ON sb.doc_id = cid),
+scored AS (SELECT {scored_cols}, common / (na + nb - common) AS j FROM ver),
+agg AS (SELECT bid, CAST(count(*) AS BIGINT) AS n_candidates,
+               CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
+                 AS n_dups,
+               max(CASE WHEN j >= 0.5 THEN j END) AS best_jaccard
+        FROM scored GROUP BY bid)"""
+
+
+# the record both incremental gate queries hash against
+_DUCK_GATE_RECORD = _duck_gate("bid, cid") + f"""
+SELECT d.doc_id,
+       COALESCE(a.n_candidates, 0) AS n_candidates,
+       COALESCE(a.n_dups, 0) AS n_dups,
+       a.best_jaccard
+FROM documents d LEFT JOIN agg a ON a.bid = d.doc_id
+WHERE d.doc_id % {BATCH_MOD} = {BATCH_REM}
+"""
+
+
 def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ingest-time near-dup GATE: is each incoming doc a near-dup of
     anything already in the corpus?  The fixture's 5% doc_id-slice plays
@@ -881,43 +848,15 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     one.  Delegates to operators/ingest_gate.py::near_dup_gate — the same
     operator the DB's gated streaming ingest runs — so this oracle row IS
     the gate's correctness gate."""
-    from binaryvectordb_spark.operators.ingest_gate import near_dup_gate
     d = _docs(spark, sf_dir)
     is_batch = (F.col("doc_id") % BATCH_MOD) == BATCH_REM
-    return (near_dup_gate(d.where(is_batch), d.where(~is_batch),
-                          j_threshold=0.5)
+    return (lsh.near_dup_gate(d.where(is_batch), d.where(~is_batch),
+                              j_threshold=0.5)
             .drop("admit"))
 
 
-register("dedup_incremental_batch", dedup_incremental_batch, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
-          FROM bex b JOIN bex c ON b.band_idx = c.band_idx AND b.bh = c.bh
-          WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
-            AND c.doc_id % {BATCH_MOD} <> {BATCH_REM}),
-ver AS (SELECT bid, cid,
-               CAST(length(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS common,
-               length(sa.shs) AS na, length(sb.shs) AS nb
-        FROM cands JOIN shl sa ON sa.doc_id = bid
-                   JOIN shl sb ON sb.doc_id = cid),
-scored AS (SELECT bid, cid, common / (na + nb - common) AS j FROM ver),
-agg AS (SELECT bid, CAST(count(*) AS BIGINT) AS n_candidates,
-               CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_dups,
-               max(CASE WHEN j >= 0.5 THEN j END) AS best_jaccard
-        FROM scored GROUP BY bid)
-SELECT d.doc_id,
-       COALESCE(a.n_candidates, 0) AS n_candidates,
-       COALESCE(a.n_dups, 0) AS n_dups,
-       a.best_jaccard
-FROM documents d LEFT JOIN agg a ON a.bid = d.doc_id
-WHERE d.doc_id % {BATCH_MOD} = {BATCH_REM}
-""")
+register("dedup_incremental_batch", dedup_incremental_batch,
+         oracle=_DUCK_GATE_RECORD)
 
 
 def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -935,12 +874,11 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from binaryvectordb_spark.operators.ingest_gate import GateIndex
     d = _docs(spark, sf_dir)
     is_batch = (F.col("doc_id") % BATCH_MOD) == BATCH_REM
     gdir = tempfile.mkdtemp(prefix="bvdb_gate_idx_q_")
     try:
-        gi = GateIndex(spark, gdir).build(d.where(~is_batch))
+        gi = lsh.GateIndex(spark, gdir).build(d.where(~is_batch))
         rec = gi.gate(d.where(is_batch), j_threshold=0.5).drop("admit")
         rows, schema = rec.collect(), rec.schema
     finally:
@@ -948,35 +886,8 @@ def dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-register("dedup_incremental_persisted", dedup_incremental_persisted, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
-          FROM bex b JOIN bex c ON b.band_idx = c.band_idx AND b.bh = c.bh
-          WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
-            AND c.doc_id % {BATCH_MOD} <> {BATCH_REM}),
-ver AS (SELECT bid, cid,
-               CAST(length(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS common,
-               length(sa.shs) AS na, length(sb.shs) AS nb
-        FROM cands JOIN shl sa ON sa.doc_id = bid
-                   JOIN shl sb ON sb.doc_id = cid),
-scored AS (SELECT bid, cid, common / (na + nb - common) AS j FROM ver),
-agg AS (SELECT bid, CAST(count(*) AS BIGINT) AS n_candidates,
-               CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_dups,
-               max(CASE WHEN j >= 0.5 THEN j END) AS best_jaccard
-        FROM scored GROUP BY bid)
-SELECT d.doc_id,
-       COALESCE(a.n_candidates, 0) AS n_candidates,
-       COALESCE(a.n_dups, 0) AS n_dups,
-       a.best_jaccard
-FROM documents d LEFT JOIN agg a ON a.bid = d.doc_id
-WHERE d.doc_id % {BATCH_MOD} = {BATCH_REM}
-""")
+register("dedup_incremental_persisted", dedup_incremental_persisted,
+         oracle=_DUCK_GATE_RECORD)
 
 
 # -- gate-log analytics: the audit trail's READ path (VERDICT r9 item 7) ----
@@ -1012,7 +923,9 @@ def gate_log_admit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     log_dir = tempfile.mkdtemp(prefix="bvdb_gate_log_q_")
     for bid in (0, 1):
         batch = d.where(is_batch & ((F.col("doc_id") % 2) == bid))
-        rec = _gate_record(batch, corpus)
+        # the log stores the counts; admit is n_dups == 0, recomputed by
+        # the analytics so the oracle needs no boolean column
+        rec = lsh.near_dup_gate(batch, corpus, j_threshold=0.5).drop("admit")
         (rec.withColumn("batch_id", F.lit(bid).cast("long"))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1033,36 +946,8 @@ def gate_log_admit_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, schema)
 
 
-def _gate_record(batch: DataFrame, corpus: DataFrame) -> DataFrame:
-    """near_dup_gate minus the admit flag (the log schema stores the
-    counts; admit is derivable as n_dups == 0 and the analytics recompute
-    it so the oracle needs no boolean column)."""
-    from binaryvectordb_spark.operators.ingest_gate import near_dup_gate
-    return near_dup_gate(batch, corpus, j_threshold=0.5).drop("admit")
-
-
-register("gate_log_admit_stats", gate_log_admit_stats, oracle=f"""
-{_DUCK_SHINGLES},
-bands AS (SELECT doc_id, {_DUCK_BANDS} FROM sigs),
-bex AS (
-  {" UNION ALL ".join(f"SELECT doc_id, {b} AS band_idx, band_{b} AS bh FROM bands"
-                      for b in range(N_BANDS))}
-),
-cands AS (SELECT DISTINCT b.doc_id AS bid, c.doc_id AS cid
-          FROM bex b JOIN bex c ON b.band_idx = c.band_idx AND b.bh = c.bh
-          WHERE b.doc_id % {BATCH_MOD} = {BATCH_REM}
-            AND c.doc_id % {BATCH_MOD} <> {BATCH_REM}),
-ver AS (SELECT bid, cid,
-               CAST(length(list_intersect(sa.shs, sb.shs)) AS DOUBLE) AS common,
-               length(sa.shs) AS na, length(sb.shs) AS nb
-        FROM cands JOIN shl sa ON sa.doc_id = bid
-                   JOIN shl sb ON sb.doc_id = cid),
-scored AS (SELECT bid, common / (na + nb - common) AS j FROM ver),
-agg AS (SELECT bid, CAST(count(*) AS BIGINT) AS n_candidates,
-               CAST(sum(CASE WHEN j >= 0.5 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_dups,
-               max(CASE WHEN j >= 0.5 THEN j END) AS best_jaccard
-        FROM scored GROUP BY bid),
+register("gate_log_admit_stats", gate_log_admit_stats,
+         oracle=_duck_gate("bid") + f""",
 rec AS (SELECT d.doc_id, d.doc_id % 2 AS batch_id,
                COALESCE(a.n_dups, 0) AS n_dups, a.best_jaccard
         FROM documents d LEFT JOIN agg a ON a.bid = d.doc_id

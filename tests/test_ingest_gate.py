@@ -50,6 +50,20 @@ def test_near_dup_gate_dedups_batch_ids(spark):
     assert len(rows) == 1 and rows[0]["admit"]
 
 
+def test_band_table_runs_the_shingle_transform_once(spark):
+    """The one band builder over a fresh, unpinned (doc_id, text) frame
+    holds the interpreted shingle transform once in its optimized plan.
+    Exploding a shingle COLUMN computed in the same plan would not: Spark
+    infers a size(shs) > 0 filter from the explode and pushes it below
+    the projection, which runs the transform again inside the filter."""
+    from binaryvectordb_spark.operators.ingest_gate import band_table
+
+    bands = band_table(_df(spark, [(1, DOC_A), (2, DOC_B), (3, "too short")]))
+    plan = bands._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("transform(sequence") <= 1, plan
+    assert {r["doc_id"] for r in bands.collect()} == {1, 2}
+
+
 def test_gated_add_documents_df(spark, tmp_path):
     from binaryvectordb_spark.db import BinaryVectorDB
     db = BinaryVectorDB(spark, str(tmp_path / "db"), dim=16)
@@ -181,12 +195,6 @@ def test_intra_batch_near_dups_lowest_id_wins(spark, tmp_path):
     got = {r["doc_id"]: (r["admit"], r["intra_dup"]) for r in rec.collect()}
     assert got == {10: (True, False), 11: (False, True), 12: (True, False)}
     assert len(db) == 2 and db.get_docs([11]) == {}
-    # corpus-only mode restores the documented old semantics
-    db2 = BinaryVectorDB(spark, str(tmp_path / "db2"), dim=16)
-    rec2 = gated_add_documents_df(
-        db2, _df(spark, [(10, DOC_A), (11, DOC_A_NEAR)]), intra_batch=False)
-    assert all(r["admit"] for r in rec2.collect())
-    assert len(db2) == 2
 
 
 @pytest.mark.slow

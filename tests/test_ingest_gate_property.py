@@ -24,6 +24,7 @@ from binaryvectordb_spark.operators.ingest_gate import (
     N_HASHES,
     ROWS_PER_BAND,
     SHINGLE_K,
+    intra_batch_dups,
     near_dup_gate,
 )
 
@@ -147,6 +148,45 @@ def test_gate_oracle_with_overlapping_doc_ids(spark, seed):
                spark.createDataFrame(list(corpus.items()),
                                      "doc_id long, text string")).collect()}
     assert got == {k: (v[0], v[1], v[3]) for k, v in want.items()}
+
+
+def _py_intra_batch(batch: dict, j_threshold: float = 0.5) -> set:
+    """Pairwise, lowest-id-wins: every doc that is an LSH candidate of a
+    LOWER doc_id in the batch with shingle Jaccard >= j_threshold."""
+    keys = {i: set(_py_bands(t)) for i, t in batch.items()}
+    rejected = set()
+    for a in batch:
+        for b in batch:
+            if a < b and keys[a] & keys[b]:
+                sa, sb = _py_shingles(batch[a]), _py_shingles(batch[b])
+                common = len(sa & sb)
+                if common / (len(sa) + len(sb) - common) >= j_threshold:
+                    rejected.add(b)
+    return rejected
+
+
+@pytest.mark.parametrize("seed", [2, 17, 60])
+def test_intra_batch_dups_match_pure_python_oracle(spark, seed):
+    """intra_batch_dups over one batch with planted near-dup pairs and
+    chains (a doc perturbed from an EARLIER batch doc, so both the
+    lowest-id-wins direction and the non-transitive chains occur) equals
+    the pairwise oracle over the same shingle/band definition."""
+    rng = np.random.RandomState(seed)
+    batch = {}
+    for i in range(40):
+        if batch and rng.rand() < 0.4:
+            src = batch[sorted(batch)[int(rng.randint(0, len(batch)))]]
+            toks = src.split(" ")
+            toks[int(rng.randint(0, len(toks)))] = str(rng.choice(VOCAB))
+            batch[i] = " ".join(toks)
+        else:
+            batch[i] = _rand_text(rng, 3, 30)
+    want = _py_intra_batch(batch)
+    assert want, "no planted near-dup survived the LSH banding"
+    got = {r["doc_id"] for r in intra_batch_dups(
+        spark.createDataFrame(list(batch.items()),
+                              "doc_id long, text string")).collect()}
+    assert got == want
 
 
 @pytest.mark.parametrize("seed", [5, 41])

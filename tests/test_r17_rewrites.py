@@ -104,23 +104,15 @@ def test_with_cosine_equals_single_expression_cosine(spark):
 
 
 def test_jaccard_pin_equals_unpinned_and_plan_has_no_rederivation(spark):
-    """The pinned+spread shingle frame must not change dedup_jaccard_pairs'
-    rows, and the final plan must contain NO parquet re-scan and NO copy
-    of the interpreted shingle transform (they live inside the one
-    checkpointed derivation now)."""
+    """dedup_jaccard_pairs' final plan must contain NO parquet re-scan and
+    NO copy of the interpreted shingle transform (they live inside the
+    one checkpointed derivation).  Its rows are pinned against the
+    unpinned construction by the DuckDB parity of dedup_jaccard_pairs."""
     from binaryvectordb_spark.queries import dedup
 
-    cur = dedup.dedup_jaccard_pairs(spark, SF_SMOKE)
-    plan = formatted_plan(cur)
+    plan = formatted_plan(dedup.dedup_jaccard_pairs(spark, SF_SMOKE))
     assert "Scan parquet" not in plan
     assert "transform(sequence" not in plan
-    old = dedup._PIN_SHARED
-    dedup._PIN_SHARED = False
-    try:
-        unpinned = dedup.dedup_jaccard_pairs(spark, SF_SMOKE)
-        assert _rows(cur) == _rows(unpinned)
-    finally:
-        dedup._PIN_SHARED = old
 
 
 def test_part_view_pin_identical_rows(spark):
