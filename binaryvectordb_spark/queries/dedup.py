@@ -18,8 +18,11 @@ shuffle-bounded approach at cluster scale.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from binaryvectordb_spark.functions.text import (
     MINHASH_P,
@@ -147,14 +150,14 @@ FROM sigs
 
 def _spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to defaultParallelism ahead of an expensive
-    per-row kernel (pair-wise cosine/levenshtein, the SemDeDup assign
-    projection).  At fixture scale the kernel's input arrives as ONE
-    partition — a single-row-group parquet scan, or an AQE-coalesced
-    exchange — so the kernel runs serially on one core (r16 measured
-    dedup_embedding_cosine 4.5 s -> 0.95 s from this alone).  The exchange
-    cost stays O(kernel input) — a bounded candidate/vector set, never the
-    corpus — and the partition count tracks the session's core count
-    (local[N] and any lower-core bench replica alike), not a constant."""
+    per-row kernel (pair-wise cosine/levenshtein).  At fixture scale the
+    kernel's input arrives as ONE partition — a single-row-group parquet
+    scan, or an AQE-coalesced exchange — so the kernel runs serially on one
+    core (r16 measured dedup_embedding_cosine 4.5 s -> 0.95 s from this
+    alone).  The exchange cost stays O(kernel input) — a bounded
+    candidate/vector set, never the corpus — and the partition count tracks
+    the session's core count (local[N] and any lower-core bench replica
+    alike), not a constant."""
     sc = df.sparkSession.sparkContext
     return df.repartition(sc.defaultParallelism)
 
@@ -588,28 +591,35 @@ def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_span_keep_first).  Output: per-cluster (cluster, n_docs,
     n_removed, kept_id_sum) — counts and an id checksum, hash-strong.
 
-    Scale: centroids broadcast (n_clusters rows); assignment is one
-    map-side broadcast join + a per-vec_id window (shuffle on vec_id);
-    the pair search shuffles once on the cluster id.  At 100 TB the
-    within-cluster self-join is the intended cost model — SemDeDup's own
-    k trades cluster size against recall."""
-    import os as _os
-
+    Scale: the centroids (n_clusters rows) ride the assign kernel's
+    closure, so assignment is one narrow Arrow pass with no join and no
+    shuffle; the pair search shuffles once on the cluster id.  At 100 TB
+    the within-cluster self-join is the intended cost model — SemDeDup's
+    own k trades cluster size against recall."""
     e = load_table(spark, sf_dir, "embeddings")
     # the centroid set is the TRAINED clustering artifact (the k-means
-    # model) — computed once per corpus and reused across queries, the
-    # same amortization as PQ codebooks and the IVF partitioner (both
-    # trained once, untimed as ingest); ~1/3 of this query's wall-clock
-    # at sf0.1 was re-deriving it per call
-    key = _os.path.abspath(sf_dir)
+    # model) — computed once per table version and reused across queries,
+    # the same amortization as PQ codebooks and the IVF partitioner (both
+    # trained once, untimed as ingest); ~1/3 of this query's wall-clock at
+    # sf0.1 was re-deriving it per call.  The key holds the table's file
+    # listing, so a table rewritten in place is trained afresh.
+    key = (os.path.abspath(sf_dir),
+           _file_stamps(os.path.join(sf_dir, "embeddings.parquet")))
     cent = _SEM_CENT_CACHE.get(key)
     if cent is None:
-        cent = _collect_centroids(e)
-        _SEM_CENT_CACHE[key] = cent
+        cent = _SEM_CENT_CACHE[key] = _collect_centroids(e)
     return semantic_dedup(e, SEMDEDUP_TAU, cent_rows=cent)
 
 
-_SEM_CENT_CACHE: dict[str, list] = {}
+_SEM_CENT_CACHE: dict[tuple, list] = {}
+
+
+def _file_stamps(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file of a parquet table path."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+    return tuple((f, st.st_size, st.st_mtime_ns)
+                 for f, st in zip(files, map(os.stat, files)))
 
 
 def _collect_centroids(e: DataFrame) -> list:
@@ -624,61 +634,47 @@ def semantic_assign(e: DataFrame, cent_rows: list | None = None) -> DataFrame:
     tie-break) — the `assigned` frame semantic_dedup builds internally,
     exposed so tests can verify keep-first identities against the actual
     membership.  ``cent_rows`` (pre-collected centroids, sorted by label)
-    skips the training aggregation."""
-    import numpy as np
+    skips the training aggregation.
 
-    # Assignment via literal centroid coefficients (the measured MaxSim
-    # rule from NOTES.md: a tiny side known before the big scan should be
-    # INLINED, not joined — kills the broadcast join, the per-row cosine
-    # HOFs, and the per-id rank window in one move).  The ≤ n_clusters-row
-    # collect is a candidate-class collect; repr() round-trips the doubles
-    # so the inlined folds are bit-identical to the joined form.
+    One mapInArrow pass scores every centroid per record batch with
+    kernels.fold_dot — the strict ascending-d float64 fold of the SQL dot,
+    so each cosine is bit-identical to the oracle's — and takes the first
+    argmax over the label-sorted centroids, so a tie goes to the lowest
+    label.  The centroids are a tiny side known before the scan (the
+    MaxSim rule in NOTES.md: inline, never join), shipped in the closure.
+    Not SQL: inlining them as literal folds (16 centroids x 64 element_at
+    terms in one projection) overflowed Janino's 64 KB method limit, and
+    every cold pass paid a failed compile before running interpreted."""
+    import numpy as np
+    import pyarrow as pa
+
+    from binaryvectordb_spark.functions import kernels
+
     if cent_rows is None:
         cent_rows = _collect_centroids(e)
-    # NOT _spread() here: the r16 interleaved A/B measured parity-to-worse
-    # (3.20 s vs 2.98 s off) — the literal-coefficient dot columns are a
-    # compact codegen form, so the serial projection is already cheap and
-    # the exchange + repartition sort only add cost; the expensive stage
-    # (the per-cluster pandas kernel) is parallel by cluster id anyway.
+    cents = np.array([r["cvec"] for r in cent_rows], dtype=np.float64)
+    labels = np.array([r["label"] for r in cent_rows], dtype=np.int64)
+    nc = np.sqrt(kernels.fold_dot(cents, cents))
+    dim = cents.shape[1]
 
-    def lit_fold_terms(coeffs: list[float]) -> str:
-        # CAST(0)+t1+...+t64 parses left-associative — the exact fold of
-        # functions/vector.py dot and the DuckDB list_sum twin
-        return "CAST(0 AS DOUBLE)" + "".join(
-            f" + CAST(element_at(embedding, {i + 1}) AS DOUBLE) * {c!r}D"
-            for i, c in enumerate(coeffs))
+    def assign(batches):
+        for b in batches:
+            x = np.asarray(b.column("embedding").flatten()).reshape(
+                b.num_rows, dim)
+            na = np.sqrt(kernels.fold_dot(x, x))
+            cs = np.zeros((b.num_rows, len(cents)))
+            for j, c in enumerate(cents):
+                ok = (na > 0) & (nc[j] > 0)
+                np.divide(kernels.fold_dot(c, x), na * nc[j],
+                          out=cs[:, j], where=ok)
+            yield pa.RecordBatch.from_arrays(
+                [b.column("vec_id"), b.column("embedding"),
+                 pa.array(labels[cs.argmax(axis=1)])],
+                names=["vec_id", "embedding", "clab"])
 
-    sq_self = "CAST(0 AS DOUBLE)" + "".join(
-        f" + CAST(element_at(embedding, {i + 1}) AS DOUBLE)"
-        f" * CAST(element_at(embedding, {i + 1}) AS DOUBLE)"
-        for i in range(len(cent_rows[0]["cvec"])))
-    # one 64-term column per centroid dot + one for the self-norm — each a
-    # compact codegen linear form; a single expression inlining all of them
-    # per struct overflowed janino and fell back to interpretation
-    dot_cols, ncs = [], []
-    for j, r in enumerate(cent_rows):
-        cv = [float(v) for v in r["cvec"]]
-        acc = 0.0  # strict ascending-d fold, same as the SQL twin
-        for v in cv:
-            acc += v * v
-        ncs.append(float(np.sqrt(acc)))
-        dot_cols.append(F.expr(lit_fold_terms(cv)).alias(f"_dot{j}"))
-    scored = e.select("vec_id", "embedding",
-                      F.expr(f"sqrt({sq_self})").alias("_na"), *dot_cols)
-    struct_terms = []
-    for j, r in enumerate(cent_rows):
-        cs = (f"IF(_na > 0 AND {ncs[j]!r}D > 0, "
-              f"_dot{j} / (_na * {ncs[j]!r}D), CAST(0 AS DOUBLE))")
-        # max of (cs, -label) structs == rank by cs DESC, label ASC
-        struct_terms.append(
-            f"struct({cs} AS cs, {-int(r['label'])}L AS neg_label)")
-    # greatest() needs >= 2 args — with a single centroid every row is
-    # trivially assigned to it, so use the lone struct directly
-    pick = (struct_terms[0] if len(struct_terms) == 1
-            else f"greatest({', '.join(struct_terms)})")
-    return scored.select(
-        "vec_id", "embedding",
-        (-F.expr(f"({pick}).neg_label")).alias("clab"))
+    src = e.select("vec_id", "embedding")
+    return src.mapInArrow(assign, T.StructType(
+        [*src.schema, T.StructField("clab", T.LongType())]))
 
 
 # the per-cluster dup kernel works in fixed j-row blocks: peak temp memory

@@ -19,9 +19,9 @@ import pandas as pd
 from binaryvectordb_spark.sources.tables import TABLE_NAMES
 
 
-def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+def duck_con(sf_dir: str, tables=TABLE_NAMES) -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
-    for t in TABLE_NAMES:
+    for t in tables:
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con

@@ -264,9 +264,10 @@ def test_ivfpq_probe_joins_hash_and_semdedup_no_cartesian(spark):
     """ann_ivfpq_search: the probe (label IN best-clusters) must be a
     broadcast HASH join — never a nested-loop rescan of the corpus — and
     SortMergeJoin must not appear (every non-corpus side is k-row).
-    dedup_semantic_clusters: both the centroid-assign join and the
-    within-cluster pair join are equi-joins on clab — a CartesianProduct
-    would mean the cluster blocking silently degenerated to all-pairs."""
+    dedup_semantic_clusters: no join at all — the centroid assign is one
+    Arrow map over the scan and the pair search one per-cluster grouped
+    map; a CartesianProduct would mean the cluster blocking silently
+    degenerated to all-pairs."""
     from binaryvectordb_spark.queries.dedup import dedup_semantic_clusters
     from binaryvectordb_spark.queries.similarity import ann_ivfpq_search
 
@@ -277,11 +278,12 @@ def test_ivfpq_probe_joins_hash_and_semdedup_no_cartesian(spark):
 
     plan = formatted_plan(dedup_semantic_clusters(spark, SF_SMOKE))
     assert "CartesianProduct" not in plan
-    # the main plan has NO join at all: centroids are inlined as literal
-    # codegen coefficients (NOTES.md MaxSim rule), and the pair search is
-    # one per-cluster grouped-map kernel — its clab exchange is the only
-    # corpus shuffle
+    # the main plan has NO join at all: the centroids ride the assign
+    # kernel's closure (NOTES.md MaxSim rule), and the pair search is one
+    # per-cluster grouped-map kernel — its clab exchange is the only corpus
+    # shuffle
     assert "Join" not in plan
+    assert "MapInArrow" in plan
     assert "FlatMapGroupsInPandas" in plan
 
 

@@ -1,21 +1,91 @@
 """SemDeDup policy semantics (dedup_semantic_clusters) pinned at the tau
-extremes and against the cluster-blocking invariant."""
+extremes and against the cluster-blocking invariant, and its assign step
+pinned against the oracle's `assigned` CTE."""
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from binaryvectordb_spark.queries import ORACLES, QUERIES
 from binaryvectordb_spark.queries.dedup import (
     semantic_assign,
     semantic_dedup,
 )
 from binaryvectordb_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
+from tests.oracle_harness import compare, duck_con
 
 
 def _e(spark):
     return load_table(spark, SF_SMOKE, "embeddings")
+
+
+# the registry oracle down to its assign step: every (vec_id, clab) of the
+# `assigned` CTE (row_number over cosine DESC, label ASC)
+_DUCK_ASSIGNED = (ORACLES["dedup_semantic_clusters"].split(",\ndup AS")[0]
+                  + "\nSELECT vec_id, clab FROM assigned")
+
+
+def test_assign_matches_oracle_assigned_cte(spark, duck):
+    compare(semantic_assign(_e(spark)).select("vec_id", "clab"),
+            _DUCK_ASSIGNED, duck, "semantic_assign")
+
+
+def test_assign_edge_rows_tie_break_to_lowest_label(spark, tmp_path):
+    """Hand-built 64-dim rows: label 5's centroid is e0, label 7's is e1
+    and label 2's is e2/4.  A zero-norm row scores 0 against every
+    centroid, and e0+e1 scores exactly 1/sqrt(2) against labels 5 and 7:
+    both ties go to the lowest label, in Spark and in the DuckDB oracle."""
+    unit = np.eye(64, dtype=np.float32)
+    rows = {  # vec_id: (label, embedding, expected clab)
+        1: (5, unit[0], 5),               # equal to label 5's centroid
+        2: (5, unit[0], 5),
+        3: (7, unit[1], 7),
+        4: (2, unit[2], 2),
+        5: (2, 0 * unit[0], 2),           # zero norm: all-zero scores
+        6: (2, unit[0] + unit[1], 5),     # exact 5/7 tie
+        7: (2, -(unit[0] + unit[1]), 2),  # only label 2 scores >= 0
+    }
+    d = str(tmp_path)
+    pq.write_table(pa.table({
+        "vec_id": pa.array(list(rows), pa.int64()),
+        "embedding": pa.array([list(map(float, v)) for _, v, _ in
+                               rows.values()], pa.list_(pa.float32())),
+        "label": pa.array([lab for lab, _, _ in rows.values()], pa.int32()),
+    }), os.path.join(d, "embeddings.parquet"))
+    got = semantic_assign(load_table(spark, d, "embeddings"))
+    assert {r["vec_id"]: r["clab"] for r in got.collect()} == \
+        {i: want for i, (_, _, want) in rows.items()}
+    con = duck_con(d, ["embeddings"])
+    try:
+        compare(got.select("vec_id", "clab"), _DUCK_ASSIGNED, con,
+                "semantic_assign edge rows")
+    finally:
+        con.close()
+
+
+def test_rewritten_tables_get_fresh_centroids(spark, tmp_path):
+    """dedup_semantic_clusters over tables rewritten in place: each pass
+    hash-matches its oracle on the files as they are now, not on the
+    centroids of the first tables written at that path."""
+    from perfbench import gen
+
+    d = str(tmp_path)
+    for seed in (1, 2):
+        gen.write_curation_tables(d, seed, 50, 400)
+        con = duck_con(d, ["embeddings"])
+        try:
+            compare(QUERIES["dedup_semantic_clusters"](spark, d),
+                    ORACLES["dedup_semantic_clusters"], con,
+                    f"dedup_semantic_clusters seed {seed}")
+        finally:
+            con.close()
 
 
 def test_tau_above_one_removes_nothing(spark):
