@@ -83,6 +83,8 @@ LOG = "_log"
 
 
 # -- the commit protocol ---------------------------------------------------
+# The package's one: the DB, a standalone segment store and the streaming
+# exactly-once stores (streaming/events.py) each publish a version here.
 
 def log_versions(log_dir: str) -> list[int]:
     """Committed versions in ``log_dir``, ascending ([] without a log)."""
@@ -91,9 +93,42 @@ def log_versions(log_dir: str) -> list[int]:
         if f.startswith("v") and f.endswith(".json"))
 
 
+def _version_path(log_dir: str, version: int) -> str:
+    return os.path.join(log_dir, f"v{int(version):010d}.json")
+
+
 def read_version(log_dir: str, version: int) -> dict:
-    with open(os.path.join(log_dir, f"v{int(version):010d}.json")) as f:
+    with open(_version_path(log_dir, version)) as f:
         return json.load(f)
+
+
+def read_head(log_dir: str) -> tuple[int | None, dict | None]:
+    """(version, body) of the latest committed version in ``log_dir``;
+    (None, None) before the first commit.  A writer that prunes the head
+    this call listed (it committed past it) makes it re-list."""
+    while True:
+        vs = log_versions(log_dir)
+        if not vs:
+            return None, None
+        try:
+            return vs[-1], read_version(log_dir, vs[-1])
+        except FileNotFoundError:
+            continue
+
+
+def _unlink_version(log_dir: str, version: int) -> None:
+    # another writer's prune may have taken it already
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(_version_path(log_dir, version))
+
+
+def prune_log(log_dir: str, keep: int) -> list[int]:
+    """Unlink every version of ``log_dir`` older than the latest ``keep``;
+    returns the kept versions, ascending."""
+    vs = log_versions(log_dir)
+    for v in vs[:-keep]:
+        _unlink_version(log_dir, v)
+    return vs[-keep:]
 
 
 def _tmp_of(path: str) -> str:
@@ -122,7 +157,7 @@ def commit_version(log_dir: str, version: int, body: dict) -> None:
     target, so a stale writer gets FileExistsError instead of overwriting
     the winner), fsynced directory."""
     os.makedirs(log_dir, exist_ok=True)
-    final = os.path.join(log_dir, f"v{int(version):010d}.json")
+    final = _version_path(log_dir, version)
     tmp = _tmp_of(final)
     _write_synced(tmp, body)
     try:
@@ -181,23 +216,17 @@ class SegmentStore:
         self._gen = 0  # bumped by every _commit: the read memos' key
         self._log = None if state is not None else os.path.join(folder, LOG)
         self.version = None
-        while self._log:
-            vs = log_versions(self._log)
-            self.version = vs[-1] if vs else None
-            try:
-                state = read_version(self._log, vs[-1])["state"] if vs else None
-                break
-            except FileNotFoundError:
-                continue  # a writer pruned the head we listed: re-list
-        if self._log and not (
-                state.get("fmt") == self._FMT if state is not None
-                # nothing committed: only an unpublished write's dirs
-                else all(e == LOG or e.startswith(("seg_", "tomb_"))
-                         for e in os.listdir(folder))):
-            raise ValueError(
-                f"{folder} is not a {type(self).__name__} in layout "
-                f"fmt {self._FMT} (this engine opens no other layout); "
-                "re-ingest its documents into a new folder")
+        if self._log:
+            self.version, head = read_head(self._log)
+            state = head and head["state"]
+            if not (state.get("fmt") == self._FMT if state is not None
+                    # nothing committed: only an unpublished write's dirs
+                    else all(e == LOG or e.startswith(("seg_", "tomb_"))
+                             for e in os.listdir(folder))):
+                raise ValueError(
+                    f"{folder} is not a {type(self).__name__} in layout "
+                    f"fmt {self._FMT} (this engine opens no other "
+                    "layout); re-ingest its documents into a new folder")
         self.meta = state or self._fresh_meta()
 
     # -- state ---------------------------------------------------------------
@@ -223,7 +252,7 @@ class SegmentStore:
             # (readers take the highest version, so it was never visible)
             lost = log_versions(self._log)[-1] != v
             if lost:
-                self._unlink_version(v)
+                _unlink_version(self._log, v)
         except FileExistsError:
             lost = True
         if lost:
@@ -234,13 +263,7 @@ class SegmentStore:
         self.version = v
         sweep(self.folder,
               set(self.meta["segments"]) | set(self.meta["tombstones"]))
-        for old in log_versions(self._log)[:-1]:
-            self._unlink_version(old)
-
-    def _unlink_version(self, v: int) -> None:
-        # another writer's prune may have taken it already
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(os.path.join(self._log, f"v{v:010d}.json"))
+        prune_log(self._log, 1)
 
     def _next_name(self, prefix: str) -> str:
         """One past the highest ``<prefix>_<n>`` dir in the folder (every

@@ -7,15 +7,30 @@ in-watermark dedup, and a foreachBatch sink that applies the reference's
 upsert semantics (delete-then-insert, BinaryVectorDB/BinaryVectorDB.py:93-101)
 incrementally — i.e. streaming index maintenance.
 
-At scale: state is keyed by (window x group); the watermark bounds it; sinks
-are idempotent per micro-batch (foreachBatch MERGE), which is the standard
-exactly-once pattern on object storage.
+At scale: state is keyed by (window x group); the watermark bounds it.  The
+six exactly-once stores (rollup, transition matrix, cohort retention, value
+histogram, KMV sketch, bottom-k sample) keep immutable state dirs named by
+one manifest per micro-batch, ``<out_dir>/_log/v<batch_id>.json``, published
+by the package's one commit protocol (operators/segments.py::commit_version);
+a replayed batch at or below the head is skipped, so an additive fold stays
+exactly-once under foreachBatch's at-least-once delivery.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
+
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+
+from binaryvectordb_spark.operators.segments import (
+    LOG,
+    commit_version,
+    prune_log,
+    read_head,
+    read_version,
+)
 
 # streaming requires an explicit schema; ts's declared type depends on the
 # fixture's physical encoding, probed from the parquet footer exactly as the
@@ -112,6 +127,105 @@ def run_append_to_memory(stream_df: DataFrame, name: str) -> DataFrame:
     return stream_df.sparkSession.table(name)
 
 
+# ---------------------------------------------------------------------------
+# foreachBatch sinks: each drains with availableNow (_start).  The six
+# exactly-once stores commit through _exactly_once: a batch's fresh
+# ``<prefix>_v<batch_id>`` state dirs are named (with the store's k,
+# horizon or watermark) by the manifest ``_log/v<batch_id>.json``, linked by
+# segments.commit_version.  The version is the batch id, so a replay
+# (batch_id <= head) is skipped and link(2) refuses a second commit of one
+# batch; a crash before the link leaves only unnamed dirs, which the replay
+# overwrites and GC deletes.
+# ---------------------------------------------------------------------------
+
+# the state-dir prefixes the stores write: GC deletes nothing else
+_STATE_DIRS = ("data_v", "counts_v", "last_v", "facts_v", "cmap_v", "hist_v",
+               "sketch_v", "sample_v")
+# manifests GC retains: the head and the version before it, so a DataFrame
+# a reader took at version v survives the commit of v + 1
+_RETAIN = 2
+
+
+def _start(stream: DataFrame, handle, checkpoint_dir: str):
+    return (stream.writeStream.foreachBatch(handle)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True).start())
+
+
+def _head(out_dir: str) -> tuple[int | None, dict]:
+    """(version, manifest) of the store's head; (None, {}) before its first
+    commit.  A folder without a log that holds anything but unpublished
+    state dirs (an earlier layout's pointer file, say) is refused."""
+    log = os.path.join(out_dir, LOG)
+    if (os.path.isdir(out_dir) and not os.path.isdir(log)
+            and not all(e.startswith(_STATE_DIRS)
+                        for e in os.listdir(out_dir))):
+        raise ValueError(
+            f"{out_dir} is not a streaming store in this engine's layout "
+            f"(state named by {LOG}/v<batch_id>.json; this engine opens no "
+            "other layout): re-ingest its events into a new folder")
+    v, m = read_head(log)
+    return v, m or {}
+
+
+def _committed(out_dir: str) -> dict:
+    """The head manifest, for a reader."""
+    v, m = _head(out_dir)
+    if v is None:
+        raise FileNotFoundError(
+            f"no committed streaming state under {out_dir}: run the "
+            "writer's first trigger before reading")
+    return m
+
+
+def _gc(out_dir: str) -> None:
+    """Unlink the manifests older than the _RETAIN latest, then delete every
+    state dir no retained manifest names: superseded versions and the
+    strays of a batch that crashed before its commit."""
+    log = os.path.join(out_dir, LOG)
+    keep = set()
+    for v in prune_log(log, _RETAIN):
+        # a manifest value is a dir name, a list of them, or a scalar
+        # (version, k, horizon, wm) no state dir is named after
+        for x in read_version(log, v).values():
+            keep.update(x if isinstance(x, list) else [x])
+    for d in os.listdir(out_dir):
+        if d.startswith(_STATE_DIRS) and d not in keep:
+            shutil.rmtree(os.path.join(out_dir, d), ignore_errors=True)
+
+
+def _exactly_once(stream: DataFrame, out_dir: str, checkpoint_dir: str,
+                  fold, check=None):
+    """Start ``stream`` into the exactly-once store at ``out_dir`` (an
+    earlier layout is refused here, before start()).  Per micro-batch:
+    open the head; ``check(head)`` refuses a config the state was not
+    maintained with (before the replay guard: a mismatch is an error even
+    for a replayed batch); skip a replay; ``fold(batch_df, batch_id,
+    head)`` writes the new state dirs and returns the manifest fields
+    naming them; commit them as version batch_id, durably before the
+    handler returns and the checkpoint counts the batch done; GC."""
+    _head(out_dir)
+    log = os.path.join(out_dir, LOG)
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        v, head = _head(out_dir)
+        if check is not None:
+            check(head)
+        if v is not None and batch_id <= v:
+            return  # replayed batch: already folded in (exactly-once)
+        commit_version(log, batch_id, {"version": batch_id,
+                                       **fold(batch_df, batch_id, head)})
+        _gc(out_dir)
+
+    return _start(stream, handle, checkpoint_dir)
+
+
+def _write1(df: DataFrame, out_dir: str, name: str) -> str:
+    """Write ``df`` as the one-file state dir ``name``; returns ``name``."""
+    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(out_dir, name))
+    return name
+
+
 def foreach_batch_index_upsert(events: DataFrame, db,
                                checkpoint_dir: str):
     """Incremental index maintenance: every micro-batch of events is folded
@@ -120,8 +234,6 @@ def foreach_batch_index_upsert(events: DataFrame, db,
     DISTRIBUTED end-to-end: add_documents_df embeds executor-side via
     mapInPandas and merges into the bucketed store — no driver collect, so
     a micro-batch can be arbitrarily large."""
-    from pyspark.sql import functions as F
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.take(1):
             return
@@ -130,9 +242,7 @@ def foreach_batch_index_upsert(events: DataFrame, db,
                             F.concat_ws(" ", "event_type", "props")
                             .alias("text")))
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _start(events, handle, checkpoint_dir)
 
 
 def stateful_user_totals(events: DataFrame,
@@ -213,7 +323,6 @@ def stream_static_enrich(events: DataFrame, dim_df: DataFrame,
     static side broadcasts so the stream never shuffles.  At scale the
     dimension is re-read per micro-batch, picking up dimension updates
     without restarting the query."""
-    from pyspark.sql import functions as F
     return events.join(F.broadcast(dim_df), key, "left")
 
 
@@ -223,26 +332,20 @@ def foreach_batch_rollup(events: DataFrame, out_dir: str,
     counts and value sums — with EXACTLY-ONCE semantics under micro-batch
     REPLAY.  Additive aggregation is the foreachBatch trap: the sink is
     called at-least-once, so a replayed batch would double-count unless
-    the commit is idempotent.  The guard is the same manifest-pointer
-    pattern as the DB's txn log: each batch writes its merged table to a
-    fresh ``data_v<batch_id>`` dir, then atomically swaps ``meta.json``
-    = {data: dir, last_batch: id}; a replayed batch_id <= last_batch is
-    skipped, and a crash between data write and meta swap leaves only an
-    orphan dir the replay overwrites.  Readers (``read_rollup``) always
-    see exactly one committed version.
+    the commit is idempotent.  The commit is the package's one protocol
+    (_exactly_once over segments.commit_version): each batch writes its merged table to a fresh ``data_v<batch_id>``
+    dir, and the manifest ``_log/v<batch_id>.json`` = {data: dir} is
+    linked; a replayed batch_id <= head is skipped, and a crash between
+    the data write and the link leaves only an orphan dir the replay
+    overwrites.  Readers (``read_rollup``) always see exactly one
+    committed version.
 
     Scale: the per-batch delta is a map-side-combined groupBy of the
     micro-batch; the merge touches the (days x types)-sized rollup, never
     the event history — the standard incremental materialized aggregate."""
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _read_meta(out_dir)
-        if batch_id <= meta.get("last_batch", -1):
-            return  # replayed batch: already folded in, skip (exactly-once)
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
         # value is aggregated in integer CENTS: partial sums of doubles
         # merge in a different fold order than one global sum and drift
         # ULPs, so an incremental rollup must carry an EXACT additive
@@ -252,30 +355,24 @@ def foreach_batch_rollup(events: DataFrame, out_dir: str,
                  .agg(F.count("*").alias("n_events"),
                       F.sum(F.round(F.col("value") * 100).cast("long"))
                       .alias("value_cents")))
-        if meta.get("data"):
-            cur = spark.read.parquet(_os.path.join(out_dir, meta["data"]))
+        if head:
+            cur = spark.read.parquet(os.path.join(out_dir, head["data"]))
             merged = (cur.unionByName(delta)
                       .groupBy("event_date", "event_type")
                       .agg(F.sum("n_events").alias("n_events"),
                            F.sum("value_cents").alias("value_cents")))
         else:
             merged = delta
-        vdir = f"data_v{batch_id}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, vdir))
-        _commit_meta(out_dir, {"data": vdir, "last_batch": batch_id}, {vdir})
+        return {"data": _write1(merged, out_dir, f"data_v{batch_id}")}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(events, out_dir, checkpoint_dir, fold)
 
 
 def read_rollup(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed rollup snapshot (meta-pointer read)."""
-    import os as _os
-
-    return spark.read.parquet(_os.path.join(
-        out_dir, _state_dir(_read_meta(out_dir), "data", out_dir)))
+    """The rollup at the head version.  The DataFrame survives the commit
+    of the next version (GC retains the version before the head)."""
+    return spark.read.parquet(
+        os.path.join(out_dir, _committed(out_dir)["data"]))
 
 
 def foreach_batch_gated_upsert(docs: DataFrame, db, checkpoint_dir: str,
@@ -314,9 +411,7 @@ def foreach_batch_gated_upsert(docs: DataFrame, db, checkpoint_dir: str,
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id").parquet(gate_log_dir))
 
-    return (docs.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _start(docs, handle, checkpoint_dir)
 
 
 def stateful_funnel(events: DataFrame,
@@ -368,56 +463,16 @@ def stateful_funnel(events: DataFrame,
 
 # ---------------------------------------------------------------------------
 # streaming twins of the event-sequence analytics (VERDICT r9 item 4):
-# incrementally maintained transition matrix + cohort retention, built on
-# the same exactly-once meta-pointer commit as foreach_batch_rollup (the
-# helpers below are that commit, shared).
+# incrementally maintained transition matrix + cohort retention, committed
+# through the same exactly-once store as foreach_batch_rollup.
 # ---------------------------------------------------------------------------
-
-def _read_meta(out_dir: str) -> dict:
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(out_dir, "meta.json")
-    if _os.path.exists(p):
-        with open(p) as f:
-            return _json.load(f)
-    return {}
-
-
-def _state_dir(meta: dict, key: str, out_dir: str) -> str:
-    """Committed state-dir name for ``key``, with a descriptive error when
-    the store has no committed batch yet (reading before the first
-    foreachBatch commit used to raise a bare KeyError — ADVICE r10)."""
-    if key not in meta:
-        raise FileNotFoundError(
-            f"no committed streaming state {key!r} under {out_dir}: the "
-            "store has no meta.json entry for it yet (run the writer's "
-            "first trigger before reading)")
-    return meta[key]
-
-
-def _commit_meta(out_dir: str, meta: dict, keep: set[str]) -> None:
-    """Durable meta swap + GC of superseded version dirs (every streaming
-    store here commits through it).  The swap is fsynced: the Spark
-    checkpoint counts a batch done once its handler returns, and the
-    replay guard then never re-applies a batch a lost swap dropped."""
-    import os as _os
-    import shutil as _shutil
-
-    from binaryvectordb_spark.operators.segments import write_json
-
-    write_json(_os.path.join(out_dir, "meta.json"), meta)
-    for d in _os.listdir(out_dir):
-        if "_v" in d and d not in keep and not d.startswith("meta.json"):
-            _shutil.rmtree(_os.path.join(out_dir, d), ignore_errors=True)
-
 
 def foreach_batch_transition_matrix(events: DataFrame, out_dir: str,
                                     checkpoint_dir: str):
     """Incrementally maintained first-order transition counts — the
     STREAMING twin of events_transition_matrix, exactly-once under
-    micro-batch replay (meta-pointer versioned state, replayed
-    batch_id <= last_batch skipped).
+    micro-batch replay (versioned state dirs committed by _exactly_once,
+    replayed batch_id <= head skipped).
 
     State = two tables: (from_type, to_type, n) counts — bounded by
     |types|² — and the per-user LAST event (user_id, ts, event_id,
@@ -432,17 +487,9 @@ def foreach_batch_transition_matrix(events: DataFrame, out_dir: str,
     or a per-key-ordered log) — a cross-batch late event would need
     retraction, which an additive counts table cannot express.  Within a
     batch, (ts, event_id) ordering is handled by the window."""
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        meta = _read_meta(out_dir)
-        if batch_id <= meta.get("last_batch", -1):
-            return  # replay: already folded in (exactly-once)
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
         b = batch_df.select("user_id", "ts", "event_id", "event_type")
         w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         within = (b.withColumn("to_type", F.lead("event_type").over(w))
@@ -460,8 +507,8 @@ def foreach_batch_transition_matrix(events: DataFrame, out_dir: str,
                  .select("user_id", F.col("s.ts").alias("ts"),
                          F.col("s.event_id").alias("event_id"),
                          F.col("s.event_type").alias("event_type")))
-        if meta.get("last"):
-            prev = spark.read.parquet(_os.path.join(out_dir, meta["last"]))
+        if head:
+            prev = spark.read.parquet(os.path.join(out_dir, head["last"]))
             boundary = (prev.select("user_id",
                                     F.col("event_type").alias("from_type"))
                         .join(firsts, "user_id")
@@ -479,36 +526,26 @@ def foreach_batch_transition_matrix(events: DataFrame, out_dir: str,
             new_last = lasts
         delta = pairs.groupBy("from_type", "to_type").agg(
             F.count("*").alias("n"))
-        if meta.get("counts"):
-            cur = spark.read.parquet(_os.path.join(out_dir, meta["counts"]))
+        if head:
+            cur = spark.read.parquet(os.path.join(out_dir, head["counts"]))
             counts = (cur.unionByName(delta)
                       .groupBy("from_type", "to_type")
                       .agg(F.sum("n").alias("n")))
         else:
             counts = delta
-        cdir, ldir = f"counts_v{batch_id}", f"last_v{batch_id}"
-        counts.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, cdir))
-        new_last.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, ldir))
-        _commit_meta(out_dir, {"counts": cdir, "last": ldir,
-                               "last_batch": batch_id}, {cdir, ldir})
+        return {"counts": _write1(counts, out_dir, f"counts_v{batch_id}"),
+                "last": _write1(new_last, out_dir, f"last_v{batch_id}")}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(events, out_dir, checkpoint_dir, fold)
 
 
 def read_transition_matrix(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed transition matrix with row-normalized probabilities —
-    the same (from_type, to_type, n, p) schema as the batch twin."""
-    import os as _os
-
-    from pyspark.sql import Window
-
-    meta = _read_meta(out_dir)
+    """Transition matrix at the head version with row-normalized
+    probabilities — the same (from_type, to_type, n, p) schema as the
+    batch twin.  The DataFrame survives the commit of the next version
+    (GC retains the version before the head)."""
     counts = spark.read.parquet(
-        _os.path.join(out_dir, _state_dir(meta, "counts", out_dir)))
+        os.path.join(out_dir, _committed(out_dir)["counts"]))
     wf = Window.partitionBy("from_type")
     return counts.select(
         "from_type", "to_type", "n",
@@ -557,7 +594,7 @@ def foreach_batch_cohort_retention(events: DataFrame, out_dir: str,
 
     ``horizon_weeks`` (VERDICT r11 item 5 — the production variant the
     r11 docstring only named): cohorts CLOSE once the event-time
-    watermark (max day seen, kept in meta) has advanced more than
+    watermark (max day seen, kept in the manifest) has advanced more than
     ``horizon_weeks`` weeks past their cohort day.  Facts of closed
     cohorts stop being written (the TTL — they could never change the
     open-window matrix), compaction physically drops closed partitions,
@@ -567,35 +604,32 @@ def foreach_batch_cohort_retention(events: DataFrame, out_dir: str,
     of a closed cohort would be misassigned to a fresh open cohort), so
     fact state is O(open cohorts × active users × ≤horizon weeks)
     instead of O(history).  ``None`` keeps the exact unbounded twin.
-    The horizon is pinned in meta: a restart with a different value is
-    refused in either direction (the matrix served would silently mean
-    a different window)."""
-    import os as _os
+    The horizon is pinned in the manifest: a restart with a different
+    value is refused in either direction (the matrix served would
+    silently mean a different window).
 
-    _os.makedirs(out_dir, exist_ok=True)
+    Each manifest names its live segments, so consecutive versions share
+    the segments they have in common, and a segment (or map segment) that
+    a batch wrote empty is named by none and goes with GC."""
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        meta = _read_meta(out_dir)
-        if meta.get("last_batch", -1) >= 0 and \
-                meta.get("horizon") != horizon_weeks:
+    def check(head: dict) -> None:
+        if head and head["horizon"] != horizon_weeks:
             raise ValueError(
                 f"cohort retention state at {out_dir} was maintained "
-                f"with horizon_weeks={meta.get('horizon')}; restarting "
+                f"with horizon_weeks={head['horizon']}; restarting "
                 f"with horizon_weeks={horizon_weeks} would serve a "
                 "matrix over a DIFFERENT window (wider: closed-cohort "
                 "facts were already dropped; narrower: stored facts "
                 "would leak past the new horizon) — use the original "
                 "value or a fresh state dir")
-        if batch_id <= meta.get("last_batch", -1):
-            return
-        segs = _cohort_segments(meta)
+
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
+        segs = head.get("fact_segs", [])
         b = batch_df.select("user_id", F.to_date("ts").alias("d"))
         bmin = b.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
-        new_map_segs = list(meta.get("cohort_segs", []))
-        wm = meta.get("wm")
+        new_map_segs = list(head.get("cohort_segs", []))
+        wm = head.get("wm")
         if horizon_weeks is not None:
             # advance the event-time watermark (max day seen; ISO strings
             # compare lexicographically so max() is date order)
@@ -625,26 +659,21 @@ def foreach_batch_cohort_retention(events: DataFrame, out_dir: str,
             obs_m = Observation()
             (new_users.observe(obs_m, F.count(F.lit(1)).alias("n"))
              .write.mode("overwrite")
-             .parquet(_os.path.join(out_dir, mdir)))
-            if int(obs_m.get["n"]) == 0:
-                import shutil as _shutil
-                _shutil.rmtree(_os.path.join(out_dir, mdir),
-                               ignore_errors=True)
-            else:
+             .parquet(os.path.join(out_dir, mdir)))
+            if int(obs_m.get["n"]):
                 new_map_segs.append(mdir)
             if len(new_map_segs) > _COHORT_COMPACT_SEGMENTS:
                 cmdir = f"cmap_v{batch_id}c"
                 (_cohort_map(spark, out_dir, new_map_segs)
                  .write.mode("overwrite")
-                 .parquet(_os.path.join(out_dir, cmdir)))
+                 .parquet(os.path.join(out_dir, cmdir)))
                 new_map_segs = [cmdir]
         else:
             prior_facts = _cohort_facts(spark, out_dir, segs)
             if prior_facts is not None:
                 # first-seen wins here too: with stable identity a
                 # user's prior facts all carry ONE cohort day by
-                # construction (min() is defensive for legacy state
-                # written before the r12 fix, which could split)
+                # construction, which min() picks
                 prior_days = (prior_facts.groupBy("user_id")
                               .agg(F.min("cohort_day")
                                    .alias("cohort_day")))
@@ -681,34 +710,23 @@ def foreach_batch_cohort_retention(events: DataFrame, out_dir: str,
         obs = Observation()
         (cand.observe(obs, F.count(F.lit(1)).alias("n"))
          .write.mode("overwrite").partitionBy("cohort_day")
-         .parquet(_os.path.join(out_dir, fdir)))
-        if int(obs.get["n"]) == 0:
-            import shutil as _shutil
-            _shutil.rmtree(_os.path.join(out_dir, fdir),
-                           ignore_errors=True)
-            new_segs = segs
-        else:
-            new_segs = segs + [fdir]
+         .parquet(os.path.join(out_dir, fdir)))
+        new_segs = segs + [fdir] if int(obs.get["n"]) else segs
         if len(new_segs) > _COHORT_COMPACT_SEGMENTS:
             cdir = f"facts_v{batch_id}c"
-            fold = _cohort_facts(spark, out_dir, new_segs)
+            merged = _cohort_facts(spark, out_dir, new_segs)
             if horizon_weeks is not None and wm is not None:
                 # compaction physically drops closed-cohort partitions:
                 # the amortized point where fact state shrinks to the
                 # open window
-                fold = fold.where(_cohort_open(wm, horizon_weeks))
-            (fold.write.mode("overwrite").partitionBy("cohort_day")
-             .parquet(_os.path.join(out_dir, cdir)))
+                merged = merged.where(_cohort_open(wm, horizon_weeks))
+            (merged.write.mode("overwrite").partitionBy("cohort_day")
+             .parquet(os.path.join(out_dir, cdir)))
             new_segs = [cdir]
-        new_meta = {"fact_segs": new_segs, "last_batch": batch_id}
-        if horizon_weeks is not None:
-            new_meta.update({"horizon": horizon_weeks, "wm": wm,
-                             "cohort_segs": new_map_segs})
-        _commit_meta(out_dir, new_meta, set(new_segs) | set(new_map_segs))
+        return {"fact_segs": new_segs, "horizon": horizon_weeks, "wm": wm,
+                "cohort_segs": new_map_segs}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(events, out_dir, checkpoint_dir, fold, check)
 
 
 def _cohort_open(wm: str, horizon_weeks: int):
@@ -718,66 +736,52 @@ def _cohort_open(wm: str, horizon_weeks: int):
             <= F.lit(int(horizon_weeks)))
 
 
-def _cohort_map(spark: SparkSession, out_dir: str,
-                segs: list[str]) -> DataFrame | None:
-    """Grow-only (user_id, cohort_day) assignment map — union of the
-    horizon variant's map segments."""
-    import os as _os
+def _union_segs(spark: SparkSession, out_dir: str, segs: list[str],
+                schema: str) -> DataFrame | None:
     if not segs:
         return None
-    parts = [spark.read.schema("user_id long, cohort_day date")
-             .parquet(_os.path.join(out_dir, s)) for s in segs]
+    parts = [spark.read.schema(schema).parquet(os.path.join(out_dir, s))
+             for s in segs]
     df = parts[0]
     for p in parts[1:]:
         df = df.unionByName(p)
     return df
+
+
+def _cohort_map(spark: SparkSession, out_dir: str,
+                segs: list[str]) -> DataFrame | None:
+    """Grow-only (user_id, cohort_day) assignment map — union of the
+    horizon variant's map segments."""
+    return _union_segs(spark, out_dir, segs, "user_id long, cohort_day date")
 
 
 # live segments past this count are folded into one on the next batch
 _COHORT_COMPACT_SEGMENTS = 16
 
 
-def _cohort_segments(meta: dict) -> list[str]:
-    """Live fact-segment dirs; a legacy single-table state ('facts', the
-    pre-r11 layout) reads as one segment."""
-    if "fact_segs" in meta:
-        return list(meta["fact_segs"])
-    if "facts" in meta:
-        return [meta["facts"]]
-    return []
-
-
 def _cohort_facts(spark: SparkSession, out_dir: str,
                   segs: list[str]) -> DataFrame | None:
-    import os as _os
-    if not segs:
-        return None
-    parts = [spark.read.schema(
-        "user_id long, week_offset long, cohort_day date")
-        .parquet(_os.path.join(out_dir, s)) for s in segs]
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return _union_segs(spark, out_dir, segs,
+                       "user_id long, week_offset long, cohort_day date")
 
 
 def read_cohort_retention(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Committed retention matrix — same (cohort_day, week_offset,
-    n_active) schema as the batch twin.  Segments hold disjoint facts,
-    so the distinct count unions them without re-deduplication cost
-    beyond the aggregate itself.  A horizon-bounded state reports
-    exactly the OPEN window w.r.t. the committed watermark (facts of
-    cohorts that closed since their segment was written are filtered
-    here; compaction eventually drops them physically)."""
-    meta = _read_meta(out_dir)
-    segs = _cohort_segments(meta)
-    if not segs:
-        raise FileNotFoundError(
-            f"no committed streaming state 'fact_segs' under {out_dir}: "
-            "run the writer's first trigger before reading")
-    facts = _cohort_facts(spark, out_dir, segs)
-    if meta.get("horizon") is not None and meta.get("wm") is not None:
-        facts = facts.where(_cohort_open(meta["wm"], meta["horizon"]))
+    """Retention matrix at the head version — same (cohort_day,
+    week_offset, n_active) schema as the batch twin.  Segments hold
+    disjoint facts, so the distinct count unions them without
+    re-deduplication cost beyond the aggregate itself.  A
+    horizon-bounded state reports exactly the OPEN window w.r.t. the
+    committed watermark (facts of cohorts that closed since their
+    segment was written are filtered here; compaction eventually drops
+    them physically).  The DataFrame survives the commit of the next
+    version (GC retains the version before the head)."""
+    m = _committed(out_dir)
+    facts = _cohort_facts(spark, out_dir, m["fact_segs"])
+    if facts is None:  # every batch so far wrote no fact
+        facts = spark.createDataFrame(
+            [], "user_id long, week_offset long, cohort_day date")
+    if m["horizon"] is not None and m["wm"] is not None:
+        facts = facts.where(_cohort_open(m["wm"], m["horizon"]))
     return (facts.groupBy("cohort_day", "week_offset")
             .agg(F.countDistinct("user_id").alias("n_active")))
 
@@ -786,7 +790,7 @@ def foreach_batch_value_histogram(events: DataFrame, out_dir: str,
                                   checkpoint_dir: str):
     """Incrementally maintained EXACT value histogram per event type —
     the streaming twin of events_value_outliers, exactly-once under
-    replay (meta-pointer commit, batch_id guard).
+    replay (_exactly_once: versioned state dirs, batch_id guard).
 
     The design point: 3-sigma outlier classification depends on the
     FINAL moments, so per-row verdicts cannot be streamed — a row
@@ -798,48 +802,34 @@ def foreach_batch_value_histogram(events: DataFrame, out_dir: str,
     the batch twin's exact answer — counts, moments, and the
     division-free integer z-test — at any point in time.  Maintain
     statistics, not answers."""
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _read_meta(out_dir)
-        if batch_id <= meta.get("last_batch", -1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
         delta = (batch_df.select(
                     "event_type",
                     F.round(F.col("value") * 100).cast("long").alias("v_c"))
                  .groupBy("event_type", "v_c")
                  .agg(F.count("*").alias("cnt")))
-        if meta.get("hist"):
-            cur = spark.read.parquet(_os.path.join(out_dir, meta["hist"]))
+        if head:
+            cur = spark.read.parquet(os.path.join(out_dir, head["hist"]))
             merged = (cur.unionByName(delta)
                       .groupBy("event_type", "v_c")
                       .agg(F.sum("cnt").alias("cnt")))
         else:
             merged = delta
-        hdir = f"hist_v{batch_id}"
-        merged.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, hdir))
-        _commit_meta(out_dir, {"hist": hdir, "last_batch": batch_id},
-                     {hdir})
+        return {"hist": _write1(merged, out_dir, f"hist_v{batch_id}")}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(events, out_dir, checkpoint_dir, fold)
 
 
 def read_value_outliers(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The batch twin's exact output derived from the maintained
-    histogram: same integer-cleared 3-sigma test
+    """The batch twin's exact output derived from the histogram at the
+    head version: same integer-cleared 3-sigma test
     ((n·v − S)² > 9·(n·Q − S²)), weights carried by the histogram
-    counts."""
-    import os as _os
-
-    meta = _read_meta(out_dir)
+    counts.  The DataFrame survives the commit of the next version (GC
+    retains the version before the head)."""
     h = spark.read.parquet(
-        _os.path.join(out_dir, _state_dir(meta, "hist", out_dir)))
+        os.path.join(out_dir, _committed(out_dir)["hist"]))
     stats = (h.groupBy("event_type")
              .agg(F.sum("cnt").alias("n"),
                   F.sum(F.col("cnt") * F.col("v_c")).alias("s"),
@@ -866,7 +856,7 @@ def read_value_outliers(spark: SparkSession, out_dir: str) -> DataFrame:
 KMV_STREAM_K = 128
 
 
-def _check_bottomk_widening(meta: dict, k: int, out_dir: str,
+def _check_bottomk_widening(head: dict, k: int, out_dir: str,
                             what: str) -> None:
     """Shared k-compatibility guard for bottom-K CRDT state (the KMV
     sketch and the quantile sample): WIDENING k against trimmed state
@@ -877,11 +867,11 @@ def _check_bottomk_widening(meta: dict, k: int, out_dir: str,
     smaller k trims once on the next commit and maintains at k' from
     then on (ADVICE r11: the old guard refused both directions with a
     widening-only message)."""
-    if k > meta.get("k", k):
+    if k > head.get("k", k):
         raise ValueError(
             f"{what} state at {out_dir} was maintained with "
-            f"k={meta['k']}; widening to k={k} would make it claim "
-            f"members it already evicted — use k <= {meta['k']} "
+            f"k={head['k']}; widening to k={k} would make it claim "
+            f"members it already evicted — use k <= {head['k']} "
             "(served exactly by trimming) or a fresh state dir")
 
 
@@ -890,8 +880,6 @@ def _kmv_fold(sk: DataFrame, k: int) -> DataFrame:
     (grp rows + the union-merged ALL row) with the shared estimator —
     used by both kmv_direct and read_kmv_ndv so the two derivations
     cannot drift."""
-    from pyspark.sql import Window
-
     from binaryvectordb_spark.functions.sketch import kmv_estimate
 
     w_all = Window.partitionBy(F.lit(1)).orderBy("h")
@@ -913,8 +901,6 @@ def kmv_direct(events_df: DataFrame, k: int = KMV_STREAM_K) -> DataFrame:
     integer estimator (hash + estimator from functions/sketch.py — the
     SAME definitions the batch registry query uses, so stream/batch
     hash-compatibility is by construction)."""
-    from pyspark.sql import Window
-
     from binaryvectordb_spark.functions.sketch import kmv_hash48
 
     hashed = events_df.select(F.col("event_type").alias("grp"),
@@ -931,13 +917,13 @@ def foreach_batch_kmv_sketch(events: DataFrame, out_dir: str,
     """Streaming twin of the KMV bottom-k NDV sketch
     (queries/analytics3.py::sketch_kmv_mergeable) — incrementally
     maintained per-event_type distinct-user sketches, exactly-once under
-    micro-batch replay (meta-pointer versioned state).
+    micro-batch replay (versioned state committed by _exactly_once).
 
     State = the per-group bottom-k hash SET — a set-union CRDT:
     commutative, associative, AND idempotent, so unlike the sequence
     twins this fold needs NO ordering contract (any event_id/time split
     of the stream converges to the same state), and a replayed batch
-    would be harmless even without the meta guard (kept for job
+    would be harmless even without the replay guard (kept for job
     hygiene).  The strongest member of the exactly-once taxonomy:
     additive counts tolerate reordering but not replay; distinct fact
     sets tolerate both but grow with the data; the KMV set tolerates
@@ -947,58 +933,46 @@ def foreach_batch_kmv_sketch(events: DataFrame, out_dir: str,
     Read-side NDV (read_kmv_ndv) derives per-group estimates AND the
     union-merged ALL row from the same state — the mergeability theorem
     the batch query pins cross-engine."""
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
         from binaryvectordb_spark.functions.sketch import kmv_hash48
 
-        meta = _read_meta(out_dir)
-        _check_bottomk_widening(meta, k, out_dir, "kmv sketch")
-        if batch_id <= meta.get("last_batch", -1):
-            return
         delta = (batch_df.select(F.col("event_type").alias("grp"),
                                  kmv_hash48("user_id").alias("h"))
                  .distinct())
-        if meta.get("sketch"):
-            cur = spark.read.parquet(_os.path.join(out_dir, meta["sketch"]))
+        if head:
+            cur = spark.read.parquet(os.path.join(out_dir, head["sketch"]))
             merged = cur.unionByName(delta).distinct()
         else:
             merged = delta
         w = Window.partitionBy("grp").orderBy("h")
         sk = (merged.withColumn("rn", F.row_number().over(w))
               .where(F.col("rn") <= k).select("grp", "h"))
-        sdir = f"sketch_v{batch_id}"
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, sdir))
-        _commit_meta(out_dir, {"sketch": sdir, "last_batch": batch_id,
-                               "k": k}, {sdir})
+        return {"sketch": _write1(sk, out_dir, f"sketch_v{batch_id}"),
+                "k": k}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(
+        events, out_dir, checkpoint_dir, fold,
+        lambda head: _check_bottomk_widening(head, k, out_dir, "kmv sketch"))
 
 
 def read_kmv_ndv(spark: SparkSession, out_dir: str) -> DataFrame:
     """(grp, n_sketch, kth_hash, est_ndv) per event_type plus the
-    union-merged ALL row, derived from the committed sketch state by
-    the same shared fold as the batch spec."""
-    import os as _os
-
-    meta = _read_meta(out_dir)
-    sk = spark.read.parquet(
-        _os.path.join(out_dir, _state_dir(meta, "sketch", out_dir)))
-    return _kmv_fold(sk, meta["k"])
+    union-merged ALL row, derived from the sketch state at the head
+    version by the same shared fold as the batch spec.  The DataFrame
+    survives the commit of the next version (GC retains the version
+    before the head)."""
+    m = _committed(out_dir)
+    return _kmv_fold(
+        spark.read.parquet(os.path.join(out_dir, m["sketch"])), m["k"])
 
 
 # -- bottom-k hash-sample quantiles, streamed --------------------------------
 
 BKQ_STREAM_K = 256
 BKQ_STREAM_QS = (25, 50, 75, 90)
+_BKQ_SCHEMA = "h long, event_id long, cents long"
 
 
 def _bkq_rows(events_df: DataFrame) -> DataFrame:
@@ -1019,8 +993,6 @@ def _bkq_bottomk(rows: DataFrame, k: int) -> DataFrame:
     bottom-K, ≤ 2K rows) — the (h, key) tie-break is the r11 total-order
     boundary rule: a 48-bit collision straddling the K boundary must
     resolve identically on every engine and layout."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(F.lit(1)).orderBy("h", "event_id")
     return (rows.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") <= k).select("h", "event_id", "cents"))
@@ -1041,8 +1013,6 @@ def bottomk_quantiles(sample: DataFrame,
     direct sample — the read-side derivation SHARED by stream and batch
     (rank 1 + (q·(k−1)) div 100, pure integer arithmetic, the exact
     recipe of the oracle row sketch_bottomk_quantiles)."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy(F.lit(1)).orderBy("cents", "event_id")
     rk = sample.withColumn("rn", F.row_number().over(w))
     kc = rk.agg(F.count("*").cast("bigint").alias("k_sample"))
@@ -1067,7 +1037,7 @@ def foreach_batch_bottomk_sample(events: DataFrame, out_dir: str,
     SAME set-union bottom-K rule as the KMV sketch, so it inherits the
     full CRDT taxonomy position: commutative, associative, AND
     idempotent (no ordering contract to honor; a replayed batch is
-    harmless even without the meta guard, kept for job hygiene), at
+    harmless even without the replay guard, kept for job hygiene), at
     CONSTANT state — k slim rows, so the per-batch rewrite is bounded
     and coalesce(1) is the right physical shape.  Per batch the delta
     is the batch's own bottom-K (TakeOrderedAndProject — no global
@@ -1077,44 +1047,33 @@ def foreach_batch_bottomk_sample(events: DataFrame, out_dir: str,
     quantile estimates through the same integer recipe as the oracle
     row, so at any point in time the stream state answers exactly what
     the batch sample over the same events would."""
-    import os as _os
-
-    _os.makedirs(out_dir, exist_ok=True)
     spark = events.sparkSession
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        meta = _read_meta(out_dir)
-        _check_bottomk_widening(meta, k, out_dir, "bottom-k sample")
-        if batch_id <= meta.get("last_batch", -1):
-            return
+    def fold(batch_df: DataFrame, batch_id: int, head: dict) -> dict:
         delta = bottomk_direct(batch_df, k)
-        if meta.get("sample"):
-            cur = (spark.read.schema("h long, event_id long, cents long")
-                   .parquet(_os.path.join(out_dir, meta["sample"])))
+        if head:
+            cur = (spark.read.schema(_BKQ_SCHEMA)
+                   .parquet(os.path.join(out_dir, head["sample"])))
             merged = (cur.unionByName(delta)
                       .dropDuplicates(["h", "event_id"]))
         else:
             merged = delta
         sk = _bkq_bottomk(merged, k)
-        sdir = f"sample_v{batch_id}"
-        sk.coalesce(1).write.mode("overwrite").parquet(
-            _os.path.join(out_dir, sdir))
-        _commit_meta(out_dir, {"sample": sdir, "last_batch": batch_id,
-                               "k": k}, {sdir})
+        return {"sample": _write1(sk, out_dir, f"sample_v{batch_id}"),
+                "k": k}
 
-    return (events.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True).start())
+    return _exactly_once(
+        events, out_dir, checkpoint_dir, fold,
+        lambda head: _check_bottomk_widening(head, k, out_dir,
+                                             "bottom-k sample"))
 
 
 def read_bottomk_sample(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed (h, event_id, cents) sample rows."""
-    import os as _os
-
-    meta = _read_meta(out_dir)
-    return (spark.read.schema("h long, event_id long, cents long")
-            .parquet(_os.path.join(out_dir,
-                                   _state_dir(meta, "sample", out_dir))))
+    """The (h, event_id, cents) sample rows at the head version.  The
+    DataFrame survives the commit of the next version (GC retains the
+    version before the head)."""
+    return (spark.read.schema(_BKQ_SCHEMA)
+            .parquet(os.path.join(out_dir, _committed(out_dir)["sample"])))
 
 
 def read_bottomk_quantiles(spark: SparkSession, out_dir: str,

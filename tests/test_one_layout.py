@@ -1,10 +1,11 @@
-"""One on-disk layout: a DB folder and a standalone segment store open only
-in the layout this engine writes (`_meta.json`'s "version", the log
-state's "fmt").  A folder written in an earlier layout is refused before
-anything is written: the error names the folder, and the tree is
-byte-identical afterwards.  Each case builds its folder the way the
-earlier revision left it, including the "version": "1.0" every earlier
-revision wrote into `_meta.json`."""
+"""One on-disk layout: a DB folder, a standalone segment store and a
+streaming store open only in the layout this engine writes (`_meta.json`'s
+"version", the log state's "fmt", a streaming store's `_log`).  A folder
+written in an earlier layout is refused before anything is written: the
+error names the folder, and the tree is byte-identical afterwards.  Each
+case builds its folder the way the earlier revision left it, a DB folder
+including the "version": "1.0" every earlier revision wrote into
+`_meta.json`."""
 
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ import pytest
 from binaryvectordb_spark.db import BinaryVectorDB
 from binaryvectordb_spark.operators.ingest_gate import GateIndex
 from binaryvectordb_spark.operators.textindex import TextIndex
+from tests.conftest import SF_SMOKE
 
 DIM = 8
 N = 8
@@ -167,6 +169,42 @@ def _gate_index_without_fmt(spark, folder):
     return GateIndex
 
 
+def _streaming_meta_json(spark, folder):
+    """An exactly-once streaming store whose head a meta.json pointer
+    named, with no log.  Every writer refuses it before start(), every
+    reader refuses it too; the last reader's error reaches the test."""
+    import binaryvectordb_spark.streaming.events as EV
+
+    spark.range(3).write.parquet(os.path.join(folder, "data_v0"))
+    _json(os.path.join(folder, "meta.json"),
+          {"data": "data_v0", "last_batch": 0})
+    events = os.path.join(os.path.dirname(folder), "events_in")
+    os.makedirs(events)
+    shutil.copy(f"{SF_SMOKE}/events.parquet", events)
+    ckpt = os.path.join(os.path.dirname(folder), "ckpt")
+    writers = [EV.foreach_batch_rollup, EV.foreach_batch_transition_matrix,
+               EV.foreach_batch_cohort_retention,
+               EV.foreach_batch_value_histogram, EV.foreach_batch_kmv_sketch,
+               EV.foreach_batch_bottomk_sample]
+    readers = [EV.read_transition_matrix, EV.read_cohort_retention,
+               EV.read_value_outliers, EV.read_kmv_ndv,
+               EV.read_bottomk_sample, EV.read_bottomk_quantiles,
+               EV.read_rollup]
+
+    def open_every_store(spark, folder):
+        stream = EV.read_events_stream(spark, events)
+        for write in writers:
+            with pytest.raises(ValueError, match=re.escape(folder)):
+                write(stream, folder, ckpt)
+        assert not os.path.exists(ckpt)
+        for read in readers[:-1]:
+            with pytest.raises(ValueError, match=re.escape(folder)):
+                read(spark, folder)
+        readers[-1](spark, folder)
+
+    return open_every_store
+
+
 def _tree(folder):
     """(relative path, sha256) of every file and dir under ``folder``."""
     out = []
@@ -183,7 +221,7 @@ def _tree(folder):
 @pytest.mark.parametrize("build", [
     _pre_log_db, _flat_table, _side_meta_json, _meta_json_fields,
     _meta_version_1_0, _standalone_meta_json, _textindex_pre_stats,
-    _gate_index_without_fmt,
+    _gate_index_without_fmt, _streaming_meta_json,
 ], ids=lambda f: f.__name__.lstrip("_"))
 def test_earlier_layout_is_refused_before_any_write(spark, tmp_path, build):
     folder = str(tmp_path / "folder")

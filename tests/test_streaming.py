@@ -280,10 +280,10 @@ def test_foreach_batch_rollup_exactly_once(spark, tmp_path, events_dir):
 
 def test_rollup_commit_fsyncs_meta_and_dir(spark, tmp_path, events_dir,
                                           monkeypatch):
-    """A rollup batch's meta.json swap is durable before the handler
-    returns (the Spark checkpoint then counts the batch done, and the
-    replay guard never re-applies it): the new meta.json and the store
-    dir are both fsynced."""
+    """A rollup batch's commit is durable before the handler returns (the
+    Spark checkpoint then counts the batch done, and the replay guard
+    never re-applies it): the head manifest and the store's ``_log`` dir
+    are both fsynced."""
     import os
 
     from binaryvectordb_spark.streaming.events import foreach_batch_rollup
@@ -300,15 +300,17 @@ def test_rollup_commit_fsyncs_meta_and_dir(spark, tmp_path, events_dir,
     foreach_batch_rollup(read_events_stream(spark, events_dir), out,
                          str(tmp_path / "ckpt")).awaitTermination()
     monkeypatch.undo()
-    assert os.stat(os.path.join(out, "meta.json")).st_ino in synced
-    assert os.stat(out).st_ino in synced
+    log = os.path.join(out, "_log")
+    head = os.path.join(log, sorted(os.listdir(log))[-1])
+    assert os.stat(head).st_ino in synced
+    assert os.stat(log).st_ino in synced
 
 
 def test_rollup_crash_window_recovery(spark, tmp_path):
     """Failure injection for the exactly-once rollup's crash window
     (VERDICT r8 item 7): a crash BETWEEN the data_v write and the
-    meta.json swap leaves a torn orphan dir.  Readers must never see it
-    (the pointer still names the last committed version), and the
+    manifest link leaves a torn orphan dir.  Readers must never see it
+    (the head still names the last committed version), and the
     resumed stream must overwrite the orphan and converge to the batch
     ground truth with no double counting."""
     import json
@@ -316,6 +318,7 @@ def test_rollup_crash_window_recovery(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from binaryvectordb_spark.operators.segments import read_head
     from binaryvectordb_spark.streaming.events import (
         foreach_batch_rollup,
         read_rollup,
@@ -354,11 +357,11 @@ def test_rollup_crash_window_recovery(spark, tmp_path):
                       .select(*cols).collect())) == half0
 
     # inject the crash artifact: batch 1's data dir TORN mid-write (half a
-    # parquet file), meta.json never swapped
+    # parquet file), its manifest never linked
     orphan = os.path.join(out, "data_v1")
     os.makedirs(orphan, exist_ok=True)
     committed = os.path.join(
-        out, json.load(open(os.path.join(out, "meta.json")))["data"])
+        out, read_head(os.path.join(out, "_log"))[1]["data"])
     src = next(f for f in os.listdir(committed) if f.endswith(".parquet"))
     blob = open(os.path.join(committed, src), "rb").read()
     with open(os.path.join(orphan, "part-torn.parquet"), "wb") as f:
@@ -376,12 +379,139 @@ def test_rollup_crash_window_recovery(spark, tmp_path):
     q2.awaitTermination()
     assert sorted(map(tuple, read_rollup(spark, out)
                       .select(*cols).collect())) == rollup_of(raw)
-    # exactly one committed version remains; the torn file is gone
-    vdirs = [d for d in os.listdir(out) if d.startswith("data_v")]
-    meta = json.load(open(os.path.join(out, "meta.json")))
-    assert vdirs == [meta["data"]]
-    assert not any("torn" in f for f in os.listdir(os.path.join(
-        out, meta["data"])))
+    # the data_v dirs are exactly those the retained manifests name, and
+    # none holds the torn file
+    log = os.path.join(out, "_log")
+    named = {json.load(open(os.path.join(log, f)))["data"]
+             for f in os.listdir(log)}
+    vdirs = {d for d in os.listdir(out) if d.startswith("data_v")}
+    assert vdirs == named
+    assert not any("torn" in f for d in vdirs
+                   for f in os.listdir(os.path.join(out, d)))
+
+
+def _deliver_one_by_one(spark, tmp_path, nparts):
+    """Time-ordered event files in a staging dir plus an empty stream
+    input dir; ``deliver(i)`` moves file i into the input."""
+    import os
+
+    staged = _ts_ordered_files(spark, tmp_path, nparts=nparts)
+    names = sorted(os.listdir(staged))
+    in_dir = tmp_path / "deliver_in"
+    in_dir.mkdir()
+
+    def deliver(i):
+        os.replace(os.path.join(staged, names[i]), in_dir / names[i])
+
+    return str(in_dir), deliver
+
+
+@pytest.mark.parametrize("store", ["rollup", "cohort_retention"])
+def test_reader_survives_next_commit(spark, tmp_path, store):
+    """A DataFrame a reader took at version v still collects v's rows
+    after v + 1 commits: GC retains the version before the head.  The
+    cohort store's versions share segments; the rollup's do not."""
+    import binaryvectordb_spark.streaming.events as EV
+
+    write = getattr(EV, f"foreach_batch_{store}")
+    read = getattr(EV, f"read_{store}")
+    in_dir, deliver = _deliver_one_by_one(spark, tmp_path, 2)
+    out, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+
+    def run():
+        write(read_events_stream(spark, in_dir), out, ckpt).awaitTermination()
+
+    deliver(0)
+    run()
+    held = read(spark, out)
+    at_v0 = sorted(map(tuple, read(spark, out).collect()))
+    deliver(1)
+    run()
+    assert sorted(map(tuple, held.collect())) == at_v0
+    assert sorted(map(tuple, read(spark, out).collect())) != at_v0
+
+
+def test_rollup_crash_between_link_and_gc(spark, tmp_path, monkeypatch):
+    """A crash after a batch's manifest is linked and before its GC: the
+    batch stays committed and its replay is skipped; the next batch's
+    commit leaves on disk only the dirs the retained manifests name; the
+    answer equals the batch twin; and the log never holds more than the
+    two retained manifests."""
+    import json
+    import os
+
+    import pyspark.sql.utils as _u
+    from pyspark.sql import functions as F
+
+    import binaryvectordb_spark.streaming.events as EV
+    from binaryvectordb_spark.sources.tables import load_table
+
+    in_dir, deliver = _deliver_one_by_one(spark, tmp_path, 4)
+    out, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    log = os.path.join(out, "_log")
+
+    def run():
+        return EV.foreach_batch_rollup(read_events_stream(spark, in_dir),
+                                       out, ckpt)
+
+    for i in range(2):
+        deliver(i)
+        run().awaitTermination()
+    assert sorted(os.listdir(log)) == ["v0000000000.json",
+                                       "v0000000001.json"]
+
+    def crash(out_dir):
+        raise RuntimeError("crashed after the link, before GC")
+
+    deliver(2)
+    monkeypatch.setattr(EV, "_gc", crash)
+    with pytest.raises(_u.StreamingQueryException, match="before GC"):
+        run().awaitTermination()
+    monkeypatch.undo()
+    # batch 2 is committed; GC never ran, so v0 is still on disk
+    assert len(os.listdir(log)) == 3
+    v2 = os.path.join(out, "data_v2")
+    stamp = {f: os.path.getmtime(os.path.join(v2, f))
+             for f in os.listdir(v2)}
+
+    # the same checkpoint replays batch 2: skipped, nothing rewritten
+    run().awaitTermination()
+    assert len(os.listdir(log)) == 3
+    assert {f: os.path.getmtime(os.path.join(v2, f))
+            for f in os.listdir(v2)} == stamp
+
+    deliver(3)
+    run().awaitTermination()
+    assert sorted(os.listdir(log)) == ["v0000000002.json",
+                                       "v0000000003.json"]
+    named = {json.load(open(os.path.join(log, f)))["data"]
+             for f in os.listdir(log)}
+    assert {d for d in os.listdir(out) if d != "_log"} == named
+
+    cols = ["event_date", "event_type", "n_events", "value_cents"]
+    ev = load_table(spark, SF_SMOKE, "events")
+    want = _rows(ev.groupBy(F.to_date("ts").alias("event_date"),
+                            "event_type")
+                 .agg(F.count("*").alias("n_events"),
+                      F.sum(F.round(F.col("value") * 100).cast("long"))
+                      .alias("value_cents")), cols)
+    assert _rows(EV.read_rollup(spark, out), cols) == want
+
+
+@pytest.mark.parametrize("reader", [
+    "read_rollup", "read_transition_matrix", "read_cohort_retention",
+    "read_value_outliers", "read_kmv_ndv", "read_bottomk_sample"])
+def test_read_before_first_commit_names_the_dir(spark, tmp_path, reader):
+    """Reading a store no batch has committed to raises FileNotFoundError
+    naming its dir, for every store."""
+    import re
+
+    import binaryvectordb_spark.streaming.events as EV
+
+    out = tmp_path / "state"
+    out.mkdir()
+    with pytest.raises(FileNotFoundError, match=re.escape(str(out))):
+        getattr(EV, reader)(spark, str(out))
 
 
 def test_stateful_funnel_matches_batch(spark, tmp_path):
@@ -991,6 +1121,24 @@ def _open_matrix(all_ev, horizon):
             .agg(F.countDistinct("user_id").alias("n_active")))
 
 
+def test_cohort_read_after_an_empty_batch(spark, tmp_path):
+    """A cohort store whose committed batch wrote no fact (an empty
+    micro-batch) reads as an empty matrix, not as a store with no
+    commit."""
+    from binaryvectordb_spark.streaming.events import (
+        foreach_batch_cohort_retention,
+        read_cohort_retention,
+    )
+
+    in_dir, stage, _ = _mk_cohort_events(spark, tmp_path, [[]])
+    shutil.copy(f"{stage}/b0.parquet", f"{in_dir}/b0.parquet")
+    out = str(tmp_path / "state")
+    foreach_batch_cohort_retention(
+        read_events_stream(spark, in_dir), out,
+        str(tmp_path / "ck")).awaitTermination()
+    assert read_cohort_retention(spark, out).collect() == []
+
+
 @pytest.mark.slow
 def test_streaming_cohort_retention_horizon_bounds_state(spark, tmp_path):
     """The horizon-bounded cohort twin (VERDICT r11 item 5): facts past
@@ -1089,14 +1237,15 @@ def test_streaming_cohort_retention_horizon_bounds_state(spark, tmp_path):
 def test_streaming_cohort_retention_horizon_compaction_drops_closed(
         spark, tmp_path, monkeypatch):
     """Compaction under a horizon physically drops closed-cohort
-    partitions: with the fold threshold forced low, the final state
-    holds ONLY open cohort days on disk, and the matrix still equals
-    the open-window batch twin."""
+    partitions: with the fold threshold forced low, the segments the
+    head names hold ONLY open cohort days on disk, and the matrix still
+    equals the open-window batch twin."""
     import glob
     import os
     import shutil as _shutil
 
     import binaryvectordb_spark.streaming.events as EV
+    from binaryvectordb_spark.operators.segments import read_head
 
     monkeypatch.setattr(EV, "_COHORT_COMPACT_SEGMENTS", 1)
     H = 2
@@ -1113,9 +1262,10 @@ def test_streaming_cohort_retention_horizon_compaction_drops_closed(
     cols = ["cohort_day", "week_offset", "n_active"]
     assert (_rows(EV.read_cohort_retention(spark, out), cols)
             == _rows(_open_matrix(all_ev, H), cols))
+    head = read_head(os.path.join(out, "_log"))[1]
     days = {os.path.basename(p).split("=")[1]
-            for seg in glob.glob(f"{out}/facts_v*")
-            for p in glob.glob(f"{seg}/cohort_day=*")}
+            for seg in head["fact_segs"]
+            for p in glob.glob(f"{out}/{seg}/cohort_day=*")}
     assert days == {"2024-02-05", "2024-02-12"}, days
 
 
